@@ -714,44 +714,44 @@ object Maintenance {
     // pre-commit tmp garbage (swept on entry, as before); a crash
     // AFTER the commit replays to identical extents — the probe
     // excludes self-attributed hashes, the documented replay contract.
-    val extentsF = scala.concurrent.Future {
+    val (extents, _) = Overlap.both {
       labeledJobs(spark, "dup_spans: extents (probe + islands, overlapped)") {
         Dedup
           .extentsFromDupPositions(dup)
           .filter(col("n_tokens") >= minTokens)
           .localCheckpoint() // settled BEFORE the fold's commit (beforeCommit)
       }
-    }(scala.concurrent.ExecutionContext.global)
-    // per-h partial straight off the pinned window extremes — the
-    // map-side partial agg collapses each (physically h-clustered) pin
-    // partition to one row per h before the exchange (see the pin
-    // comment above)
-    val partial = pos
-      .select(col("h"), col("__mn").as("mn_doc"), col("__mx").as("mx_doc"))
-      .dropDuplicates("h")
-    labeledJobs(spark, "dup_spans: state fold") {
-      foldStatePartitionedByHash(
-        spark,
-        statePath,
-        appliedId,
-        partial,
-        stateBuckets,
-        batchHps,
-        maxStateSegments,
-        // ready, not result: if the extents computation failed, the
-        // commit still converges (replay recomputes identical extents
-        // against the post-fold state) and the real failure is
-        // rethrown by the Await.result below.
-        beforeCommit =
-          () => { scala.concurrent.Await.ready(extentsF, scala.concurrent.duration.Duration.Inf); () }
-      ) { (old, p) =>
-        old
-          .unionByName(p)
-          .groupBy(col("h"))
-          .agg(min(col("mn_doc")).as("mn_doc"), max(col("mx_doc")).as("mx_doc"))
+    } { extentsSettled =>
+      // per-h partial straight off the pinned window extremes — the
+      // map-side partial agg collapses each (physically h-clustered) pin
+      // partition to one row per h before the exchange (see the pin
+      // comment above)
+      val partial = pos
+        .select(col("h"), col("__mn").as("mn_doc"), col("__mx").as("mx_doc"))
+        .dropDuplicates("h")
+      labeledJobs(spark, "dup_spans: state fold") {
+        foldStatePartitionedByHash(
+          spark,
+          statePath,
+          appliedId,
+          partial,
+          stateBuckets,
+          batchHps,
+          maxStateSegments,
+          // wait, don't rethrow: if the extents computation failed, the
+          // commit still converges (replay recomputes identical extents
+          // against the post-fold state) and the real failure surfaces
+          // when the overlap ends.
+          beforeCommit = () => extentsSettled.await()
+        ) { (old, p) =>
+          old
+            .unionByName(p)
+            .groupBy(col("h"))
+            .agg(min(col("mn_doc")).as("mn_doc"), max(col("mx_doc")).as("mx_doc"))
+        }
       }
     }
-    scala.concurrent.Await.result(extentsF, scala.concurrent.duration.Duration.Inf)
+    extents
     } // withWriterLease
   }
 
@@ -1216,13 +1216,6 @@ object Maintenance {
     */
   private[operators] def leaseToken(appliedId: Option[Long]): String =
     appliedId.map(id => s"fold:$id").getOrElse(adhocToken("fold"))
-
-  /** Stress-harness entry (tools.CurateStress `lease` arm): one
-    * claim/release cycle under a fresh adhoc token — measures the
-    * claim's mutual exclusion on the local fs where the specs run.
-    */
-  private[graft] def leaseStressProbe[T](fs: HFs, statePath: String)(body: => T): T =
-    withWriterLease(fs, statePath, adhocToken("stress"), "leaseStress")(body)
 
   /** [[withWriterLease]] for callers outside the operators package
     * fencing on a streaming batch id — deterministic token, so a
@@ -2403,9 +2396,9 @@ object Maintenance {
 
 /** Driver-side filesystem-metadata call counter for the span-state
   * ingest path (probe prune, segment append, manifest reads/writes,
-  * tiering) — instrumentation only, read by `graft.tools.SpanStress`
-  * to demonstrate the O(touched buckets)-per-batch driver fan-out
-  * bound. No contract depends on it.
+  * tiering) — instrumentation only, read by `MaintenanceSpec` to pin
+  * the O(touched buckets)-per-batch driver fan-out bound. No contract
+  * depends on it.
   */
 private[graft] object SpanStateMeta {
   private val n = new java.util.concurrent.atomic.AtomicLong

@@ -87,17 +87,17 @@ object QualityModel {
       .groupBy(col("w1"), col("w2"))
       .agg(sum(col("cnt")).as("c12"))
       .localCheckpoint()
-    val pairW = scala.concurrent.Future {
+    Overlap.both {
       pair.write.parquet(new HPath(vDir, "pair").toString)
-    }(scala.concurrent.ExecutionContext.global)
-    // c1 = total occurrences of w1 as a bigram head — exactly q106's
-    // rollup, off the pin.
-    pair
-      .groupBy(col("w1"))
-      .agg(sum(col("c12")).as("c1"))
-      .write
-      .parquet(new HPath(vDir, "uni").toString)
-    scala.concurrent.Await.result(pairW, scala.concurrent.duration.Duration.Inf)
+    } { _ =>
+      // c1 = total occurrences of w1 as a bigram head — exactly q106's
+      // rollup, off the pin.
+      pair
+        .groupBy(col("w1"))
+        .agg(sum(col("c12")).as("c1"))
+        .write
+        .parquet(new HPath(vDir, "uni").toString)
+    }
     // Atomic pointer flip: tmp + rename WITH OVERWRITE — a
     // delete-then-rename pair would leave a window with no pointer on
     // disk, and a gate() resolving in it (over a model with no legacy

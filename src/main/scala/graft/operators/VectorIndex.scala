@@ -131,22 +131,22 @@ object VectorIndex {
     // directly (guide §2.6). Value parity with the old
     // write-then-read-back shape is exact: parquet stores the IEEE
     // bits, so the round-trip never changed a double.
-    val centW = scala.concurrent.Future {
+    Overlap.both {
       cent.write.mode("overwrite").parquet(s"$indexPath/centroids")
-    }(scala.concurrent.ExecutionContext.global)
-    // Co-locate each cluster's rows before the partitioned write: one
-    // N-row shuffle buys ~one file per cluster dir instead of
-    // shuffle-partitions × clusters tiny files (measured 10k files for
-    // 316 clusters without it — at warehouse scale that is millions of
-    // files per build). Cluster-size skew is bounded by the
-    // maxOverMedian/rebalance guard, so no writer task degenerates.
-    assignTo(v, cent.select(col("cent_id"), col("cent_emb"), col("cent_nrm")))
-      .repartition(col("cluster"))
-      .write
-      .mode("overwrite")
-      .partitionBy("cluster")
-      .parquet(s"$indexPath/assignments")
-    scala.concurrent.Await.result(centW, scala.concurrent.duration.Duration.Inf)
+    } { _ =>
+      // Co-locate each cluster's rows before the partitioned write: one
+      // N-row shuffle buys ~one file per cluster dir instead of
+      // shuffle-partitions × clusters tiny files (measured 10k files for
+      // 316 clusters without it — at warehouse scale that is millions of
+      // files per build). Cluster-size skew is bounded by the
+      // maxOverMedian/rebalance guard, so no writer task degenerates.
+      assignTo(v, cent.select(col("cent_id"), col("cent_emb"), col("cent_nrm")))
+        .repartition(col("cluster"))
+        .write
+        .mode("overwrite")
+        .partitionBy("cluster")
+        .parquet(s"$indexPath/assignments")
+    }
     maxOverMedian.foreach(bound => rebalance(spark, indexPath, bound))
   }
 

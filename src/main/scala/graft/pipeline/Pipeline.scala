@@ -99,8 +99,28 @@ object Pipeline {
       .schema(Schemas.logData)
       .option("mode", if (failFast) "FAILFAST" else "PERMISSIVE")
       .json(rawFile)
-    val events = nextSongEvents(logData)
+    writeUsersAndTime(
+      nextSongEvents(logData),
+      output,
+      singleFileOutput,
+      partitionTimeByMonth,
+      dynamicPartitionOverwrite
+    )
+  }
 
+  /** The EP2 users + time table writes over one batch of NextSong
+    * events — [[runIncremental]]'s per-file run and
+    * `StreamingPipeline.incrementalTables`' per-batch drain share them.
+    * `output` ends with a path separator; the flags are
+    * [[runIncremental]]'s.
+    */
+  private[graft] def writeUsersAndTime(
+      events: DataFrame,
+      output: String,
+      singleFileOutput: Boolean,
+      partitionTimeByMonth: Boolean,
+      dynamicPartitionOverwrite: Boolean
+  ): Unit = {
     val users = usersTable(events)
     val usersOut = if (singleFileOutput) users.coalesce(1) else users
     usersOut.write.mode("overwrite").parquet(s"${output}users_table.parquet")
@@ -330,7 +350,7 @@ object Pipeline {
       // span path keeps priority, the gate fills the tail). Measured:
       // the two batches' gate cost disappears from q108's critical
       // path.
-      val gatedF = scala.concurrent.Future {
+      val (gated, ext) = graft.operators.Overlap.both {
         graft.operators.Maintenance.labeledJobs(spark, "curate: quality gate (overlapped)") {
           val keep = graft.operators.QualityModel
             .gate(spark, settled, "doc_id", "text", modelPath)
@@ -340,26 +360,17 @@ object Pipeline {
           // for each of its two consumers (clean, output join).
           settled.join(keep, Seq("doc_id"), "left_semi").localCheckpoint()
         }
-      }(scala.concurrent.ExecutionContext.global)
-      // Span extents come from the RAW batch, before the gate — matching
-      // the batch rule, where q104's extents see the whole corpus: a doc
-      // the quality gate rejects still proves its spans are boilerplate,
-      // both for this batch's cleaning and (via the state fold) for
-      // every future batch.
-      val ext =
-        try
-          graft.operators.Maintenance.incrementalDupSpans(
-            spark, settled, "doc_id", "text", spanStatePath, Some(batchId),
-            stateBuckets = spanStateBuckets
-          )
-        catch {
-          case e: Throwable =>
-            // don't leave the gate's jobs running against a torn batch
-            scala.concurrent.Await.ready(gatedF, scala.concurrent.duration.Duration.Inf)
-            throw e
-        }
-      val gated =
-        scala.concurrent.Await.result(gatedF, scala.concurrent.duration.Duration.Inf)
+      } { _ =>
+        // Span extents come from the RAW batch, before the gate —
+        // matching the batch rule, where q104's extents see the whole
+        // corpus: a doc the quality gate rejects still proves its spans
+        // are boilerplate, both for this batch's cleaning and (via the
+        // state fold) for every future batch.
+        graft.operators.Maintenance.incrementalDupSpans(
+          spark, settled, "doc_id", "text", spanStatePath, Some(batchId),
+          stateBuckets = spanStateBuckets
+        )
+      }
       val cleaned = graft.operators.Dedup
         .spanClean(gated, "doc_id", "text", ext)
         .filter(

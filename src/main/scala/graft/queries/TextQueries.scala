@@ -275,7 +275,7 @@ object TextQueries {
       shingleTableDf(spark, dir).localCheckpoint()
     )
 
-  private def tokenInstances(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def tokenInstances(spark: SparkSession, dir: String): DataFrame =
     featureMemo.getOrElseUpdate(
       (sessionKey(spark), dir, "tokens"),
       tokenInstancesDf(spark, dir).localCheckpoint()

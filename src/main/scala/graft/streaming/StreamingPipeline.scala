@@ -34,6 +34,29 @@ object StreamingPipeline {
         f(batch, batchId)
       }
 
+  /** The ingest family's one stream skeleton: drain every file already
+    * in `source` (`Trigger.AvailableNow`), one `body(batch, batchId)`
+    * per micro-batch inside a [[perBatch]] scratch-pin boundary, with
+    * file tracking and batch ids checkpointed under `checkpoint`.
+    *
+    * Exactly-once contract: `foreachBatch` is at-least-once — a restart
+    * before the checkpoint commit replays the last batch under the SAME
+    * batch id. Every body composes that into exactly-once by keying its
+    * effects on the id: either as the applied id of a marker-guarded
+    * state fold (a replayed id no-ops, and a crashed writer's lease is
+    * re-entered under the same token), or as the key of an overwritten
+    * output partition (`ingest_batch=<id>`, `pack_batch=<id>`, …),
+    * which a replay rewrites with identical content.
+    */
+  private def drain(source: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit
+  ): org.apache.spark.sql.streaming.StreamingQuery =
+    source.writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(perBatch(body))
+      .start()
+
   /** Default events schema for the streaming source when the directory
     * is still empty at stream start (generators currently write `ts` as
     * µs timestamps without tz metadata → TIMESTAMP_NTZ). A file stream
@@ -251,9 +274,7 @@ object StreamingPipeline {
   /** Streaming materialized rollup: every micro-batch folds its
     * per-event-type value sums into the persistent rollup state via
     * [[graft.operators.Maintenance.refreshAggregate]], keyed by the
-    * `foreachBatch` batchId — the atomically-swapped id marker makes a
-    * retried batch a no-op, so the rollup is exactly-once end to end
-    * (engine-tracked input files + idempotent state fold).
+    * `foreachBatch` batchId ([[drain]]'s exactly-once contract).
     */
   def incrementalRollup(
       spark: SparkSession,
@@ -261,6 +282,7 @@ object StreamingPipeline {
       statePath: String,
       checkpoint: String
   ): org.apache.spark.sql.streaming.StreamingQuery =
+    // Not a drain: the default trigger keeps the rollup running once caught up.
     readEvents(spark, rawDir).writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch(perBatch { (batch: DataFrame, batchId: Long) =>
@@ -332,7 +354,7 @@ object StreamingPipeline {
     // every accepted row already flows through that action, so the
     // old trailing `accepted.count()` job is pure duplication.
     val obs = org.apache.spark.sql.Observation()
-    val corpusW = scala.concurrent.Future {
+    graft.operators.Overlap.both {
       graft.operators.Maintenance.labeledJobs(spark, "dedup_ingest: corpus write (overlapped)") {
         accepted
           .drop("__h")
@@ -341,16 +363,16 @@ object StreamingPipeline {
           .mode("overwrite")
           .parquet(s"$corpusPath/ingest_batch=$batchId")
       }
-    }(scala.concurrent.ExecutionContext.global)
-    graft.operators.Maintenance.labeledJobs(spark, "dedup_ingest: index write") {
-      accepted
-        .select(col("__h"))
-        .distinct()
-        .write
-        .mode("overwrite")
-        .parquet(s"$indexPath/ingest_batch=$batchId")
+    } { _ =>
+      graft.operators.Maintenance.labeledJobs(spark, "dedup_ingest: index write") {
+        accepted
+          .select(col("__h"))
+          .distinct()
+          .write
+          .mode("overwrite")
+          .parquet(s"$indexPath/ingest_batch=$batchId")
+      }
     }
-    scala.concurrent.Await.result(corpusW, scala.concurrent.duration.Duration.Inf)
     if (maxIndexParts > 0) compactIngestIndex(spark, indexPath, batchId, maxIndexParts)
     obs.get("n").asInstanceOf[Long]
     } // withBatchWriterLease
@@ -452,29 +474,17 @@ object StreamingPipeline {
       checkpoint: String,
       docsSchema: StructType
   ): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(docsSchema)
-      .json(rawDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(perBatch { (batch: DataFrame, batchId: Long) =>
-        dedupIngestBatch(spark, batch, corpusPath, indexPath, batchId)
-        ()
-      })
-      .start()
+    drain(spark.readStream.schema(docsSchema).json(rawDir), checkpoint) { (batch, batchId) =>
+      dedupIngestBatch(spark, batch, corpusPath, indexPath, batchId)
+    }
 
   /** Streaming distinct-cardinality telemetry: each arriving documents
     * file folds its per-language token sketches into the persistent
-    * [[graft.operators.Maintenance.refreshCardinality]] HLL state,
-    * keyed by the streaming batchId as the applied-id — so the
-    * foreachBatch at-least-once contract composes with the fold's
-    * marker into exactly-once: a replayed batch (restart before the
-    * checkpoint commit) no-ops instead of inflating the row counter,
-    * and the sketch union is idempotent by algebra besides. The state
-    * answers "distinct tokens ever seen per language" at any moment
-    * for a few KB per key — corpus-growth telemetry that would
-    * otherwise need a full rescan per refresh.
+    * [[graft.operators.Maintenance.refreshCardinality]] HLL state
+    * under [[drain]]'s contract (the sketch union is idempotent by
+    * algebra besides). The state answers "distinct tokens ever seen
+    * per language" at any moment for a few KB per key — corpus-growth
+    * telemetry that would otherwise need a full rescan per refresh.
     */
   def cardinalityIngest(
       spark: SparkSession,
@@ -483,32 +493,22 @@ object StreamingPipeline {
       checkpoint: String,
       docsSchema: StructType
   ): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(docsSchema)
-      .json(rawDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(perBatch { (batch: DataFrame, batchId: Long) =>
-        val inst = batch.select(
-          col("lang"),
-          explode(split(col("text"), "\\s+")).as("token")
-        )
-        graft.operators.Maintenance
-          .refreshCardinality(spark, inst, Seq("lang"), "token", statePath, Some(batchId))
-        ()
-      })
-      .start()
+    drain(spark.readStream.schema(docsSchema).json(rawDir), checkpoint) { (batch, batchId) =>
+      val inst = batch.select(
+        col("lang"),
+        explode(split(col("text"), "\\s+")).as("token")
+      )
+      graft.operators.Maintenance
+        .refreshCardinality(spark, inst, Seq("lang"), "token", statePath, Some(batchId))
+    }
 
   /** Streaming preference-pair maintenance: each arriving scored-
     * response file (`prompt_id`, `doc_id`, `score` rows — an RLHF
     * campaign's sampling runs landing as they finish) folds its
     * per-prompt extremes into the persistent
-    * [[graft.operators.Preference.pairIngest]] state, the streaming
-    * batchId as the applied-id — so the foreachBatch at-least-once
-    * contract composes with the fold's marker into exactly-once (and
-    * the max/min fold is idempotent by algebra besides). The state
-    * answers "current DPO pair table" at any moment
+    * [[graft.operators.Preference.pairIngest]] state under [[drain]]'s
+    * contract (the max/min fold is idempotent by algebra besides). The
+    * state answers "current DPO pair table" at any moment
     * ([[graft.operators.Preference.pairsFromState]]) without
     * re-aggregating the campaign's accumulated responses.
     */
@@ -519,27 +519,18 @@ object StreamingPipeline {
       checkpoint: String,
       respSchema: StructType
   ): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(respSchema)
-      .json(rawDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(perBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Preference
-          .pairIngest(spark, batch, "prompt_id", "doc_id", "score", statePath, Some(batchId))
-        ()
-      })
-      .start()
+    drain(spark.readStream.schema(respSchema).json(rawDir), checkpoint) { (batch, batchId) =>
+      graft.operators.Preference
+        .pairIngest(spark, batch, "prompt_id", "doc_id", "score", statePath, Some(batchId))
+    }
 
   /** Streaming arena-board maintenance: each arriving scored-response
     * file (`prompt_id`, `policy`, `score` rows — checkpoint sampling
     * runs landing as they finish) folds its per-(prompt, policy) best
     * scores into the persistent [[graft.operators.Preference.winIngest]]
-    * state, the streaming batchId as the applied-id — foreachBatch's
-    * at-least-once composes with the fold's marker into exactly-once
-    * (and the max fold is idempotent by algebra besides). The state
-    * answers "current head-to-head win matrix" at any moment
+    * state under [[drain]]'s contract (the max fold is idempotent by
+    * algebra besides). The state answers "current head-to-head win
+    * matrix" at any moment
     * ([[graft.operators.Preference.winMatrixFromState]]) without
     * re-aggregating the campaign's accumulated responses — completing
     * the arena family's batch (q160) / incremental (q161) / STREAMING
@@ -552,31 +543,21 @@ object StreamingPipeline {
       checkpoint: String,
       respSchema: StructType
   ): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(respSchema)
-      .json(rawDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(perBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Preference
-          .winIngest(spark, batch, "prompt_id", "policy", "score", statePath, Some(batchId))
-        ()
-      })
-      .start()
+    drain(spark.readStream.schema(respSchema).json(rawDir), checkpoint) { (batch, batchId) =>
+      graft.operators.Preference
+        .winIngest(spark, batch, "prompt_id", "policy", "score", statePath, Some(batchId))
+    }
 
   /** Streaming tree-membership maintenance: each arriving turn-batch
     * file (`conv_id`, `turn_id`, `parent_id` rows — a live turn store
     * landing appends as conversations grow) folds into the persistent
-    * [[graft.operators.TreeState]] membership state, the streaming
-    * batchId as the applied-id — foreachBatch's at-least-once composes
-    * with the fold's marker into exactly-once (a replayed batch is a
-    * no-op under its own id; the same rows under a NEW id are refused
-    * by the state's key-collision gate, so mis-delivery fails loudly
-    * instead of double-pathing). Files must land in CAUSAL order: a
-    * turn's parent must be in the state or its own batch, the fold's
-    * orphan gate enforces it. The state answers "current root→leaf
-    * path memberships" at any moment
+    * [[graft.operators.TreeState]] membership state under [[drain]]'s
+    * contract (the same rows under a NEW id are refused by the state's
+    * key-collision gate, so mis-delivery fails loudly instead of
+    * double-pathing). Files must land in CAUSAL order: a turn's parent
+    * must be in the state or its own batch, the fold's orphan gate
+    * enforces it. The state answers "current root→leaf path
+    * memberships" at any moment
     * ([[graft.operators.TreeState.memberships]], served by
     * `tree_render --paths_state` / `branch_pairs --paths_state`)
     * without re-running the pointer-doubling closure over the store.
@@ -647,22 +628,15 @@ object StreamingPipeline {
     // BACKFILL arm drops the cap deliberately: whole backlog, one
     // batch, one fold (see turnsBackfill).
     filesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader
-      .json(rawDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(perBatch { (batch: DataFrame, batchId: Long) =>
-        // pin the micro-batch ONCE: the fold issues several actions
-        // (gates, the conv-partitioned walk, stitches) and each would
-        // otherwise re-plan and re-read the streaming file source —
-        // measured 63 s/wave at a 6.5k-row wave before the pin
-        graft.operators.TreeState.fold(
-          spark, batch.localCheckpoint(), "conv_id", "turn_id", "parent_id",
-          statePath, Some(batchId), maxDepth, maxConvRows = maxConvRows)
-        ()
-      })
-      .start()
+    drain(reader.json(rawDir), checkpoint) { (batch, batchId) =>
+      // pin the micro-batch ONCE: the fold issues several actions
+      // (gates, the conv-partitioned walk, stitches) and each would
+      // otherwise re-plan and re-read the streaming file source —
+      // measured 63 s/wave at a 6.5k-row wave before the pin
+      graft.operators.TreeState.fold(
+        spark, batch.localCheckpoint(), "conv_id", "turn_id", "parent_id",
+        statePath, Some(batchId), maxDepth, maxConvRows = maxConvRows)
+    }
   }
 
   /** Streaming NEAR-dup monitoring: each arriving documents file probes
@@ -682,23 +656,15 @@ object StreamingPipeline {
       checkpoint: String,
       docsSchema: StructType
   ): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(docsSchema)
-      .json(rawDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(perBatch { (batch: DataFrame, batchId: Long) =>
-        // batchId as the lease's applied id: a crashed batch's replay
-        // carries the same id and re-enters its stale writer lease
-        graft.operators.NearDupIndex
-          .update(spark, batch, indexPath, appliedId = Some(batchId))
-          .write
-          .mode("overwrite")
-          .parquet(s"$pairsPath/ingest_batch=$batchId")
-        ()
-      })
-      .start()
+    drain(spark.readStream.schema(docsSchema).json(rawDir), checkpoint) { (batch, batchId) =>
+      // batchId as the lease's applied id: a crashed batch's replay
+      // carries the same id and re-enters its stale writer lease
+      graft.operators.NearDupIndex
+        .update(spark, batch, indexPath, appliedId = Some(batchId))
+        .write
+        .mode("overwrite")
+        .parquet(s"$pairsPath/ingest_batch=$batchId")
+    }
 
   /** One batch of streaming SEMANTIC dedup (SemDeDup at ingest): drop
     * every batch vector with an indexed neighbor at cosine ≥ `minCos`
@@ -787,45 +753,45 @@ object StreamingPipeline {
     // re-probe the mutated index). Independent effects: run the append
     // on a second driver thread so the telemetry write (and the
     // resolve chase, when enabled) back-fills its tail.
-    val appendW = scala.concurrent.Future {
+    graft.operators.Overlap.both {
       graft.operators.VectorIndex.appendAssigned(spark, accepted, indexPath)
-    }(scala.concurrent.ExecutionContext.global)
-    val telemetry0 = indexDrops
-      .select(col("vec_id"), col("dup_of"), col("cosine"))
-      .unionByName(batchDrops)
-    val telemetry =
-      if (!resolveSurvivors) telemetry0
-      else {
-        // Pointer-chase dup_of through the within-batch drop chain.
-        // Index drops are already terminal (their dup_of is an indexed
-        // survivor), so the mapping is batchDrops alone; the id-strictly-
-        // decreases invariant makes it acyclic and the loop terminate.
-        val m = batchDrops
-          .select(col("vec_id").as("s_from"), col("dup_of").as("s_to"))
-          .localCheckpoint()
-        var t = telemetry0.withColumn("survivor", col("dup_of")).localCheckpoint()
-        var hop = true
-        while (hop) {
-          val stepped = t
-            .join(m, t("survivor") === m("s_from"), "left")
-            .select(
-              col("vec_id"),
-              col("dup_of"),
-              col("cosine"),
-              coalesce(col("s_to"), col("survivor")).as("survivor")
-            )
+    } { _ =>
+      val telemetry0 = indexDrops
+        .select(col("vec_id"), col("dup_of"), col("cosine"))
+        .unionByName(batchDrops)
+      val telemetry =
+        if (!resolveSurvivors) telemetry0
+        else {
+          // Pointer-chase dup_of through the within-batch drop chain.
+          // Index drops are already terminal (their dup_of is an indexed
+          // survivor), so the mapping is batchDrops alone; the id-strictly-
+          // decreases invariant makes it acyclic and the loop terminate.
+          val m = batchDrops
+            .select(col("vec_id").as("s_from"), col("dup_of").as("s_to"))
             .localCheckpoint()
-          // 1-row probe, not a collect of the table: one more round only
-          // while some survivor still names a dropped row.
-          hop = stepped.join(m, stepped("survivor") === m("s_from"), "left_semi").count() > 0
-          t = stepped
+          var t = telemetry0.withColumn("survivor", col("dup_of")).localCheckpoint()
+          var hop = true
+          while (hop) {
+            val stepped = t
+              .join(m, t("survivor") === m("s_from"), "left")
+              .select(
+                col("vec_id"),
+                col("dup_of"),
+                col("cosine"),
+                coalesce(col("s_to"), col("survivor")).as("survivor")
+              )
+              .localCheckpoint()
+            // 1-row probe, not a collect of the table: one more round only
+            // while some survivor still names a dropped row.
+            hop = stepped.join(m, stepped("survivor") === m("s_from"), "left_semi").count() > 0
+            t = stepped
+          }
+          t
         }
-        t
-      }
-    telemetry.write
-      .mode("overwrite")
-      .parquet(s"$dropsPath/ingest_batch=$batchId")
-    scala.concurrent.Await.result(appendW, scala.concurrent.duration.Duration.Inf)
+      telemetry.write
+        .mode("overwrite")
+        .parquet(s"$dropsPath/ingest_batch=$batchId")
+    }
     accepted.count()
   }
 
@@ -888,35 +854,27 @@ object StreamingPipeline {
       docSchema: StructType,
       minTokens: Int = 5
   ): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .json(rawDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(perBatch { (batch: DataFrame, batchId: Long) =>
-        spanDedupIngestBatch(
-          spark,
-          batch.select(col("doc_id"), col("text")),
-          statePath,
-          extentsPath,
-          batchId,
-          minTokens
-        )
-        ()
-      })
-      .start()
+    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint) { (batch, batchId) =>
+      spanDedupIngestBatch(
+        spark,
+        batch.select(col("doc_id"), col("text")),
+        statePath,
+        extentsPath,
+        batchId,
+        minTokens
+      )
+    }
 
   /** Streaming CURATION: each arriving documents file runs the full
     * incremental curation composition
     * ([[graft.pipeline.Pipeline.curateIngest]] — frozen-LM gate → span
     * clean vs the durable span-hash state → min-token floor →
-    * cross-batch exact dedup), with the `foreachBatch` batchId keying
-    * every stage's exactly-once machinery. The capstone of the ingest
-    * family: where dedupIngest/nearDupIngest/semanticDedupIngest/
-    * spanDedupIngest each maintain ONE durable index, this maintains
-    * all the curation state and emits training-ready batches.
-    * The quality model retrains OUTSIDE the stream
+    * cross-batch exact dedup), with the batch id keying every stage
+    * ([[drain]]'s contract). The capstone of the ingest family: where
+    * dedupIngest/nearDupIngest/semanticDedupIngest/spanDedupIngest
+    * each maintain ONE durable index, this maintains all the curation
+    * state and emits training-ready batches. The quality model
+    * retrains OUTSIDE the stream
     * (`build_quality_model` on a schedule) — the stream only reads it.
     */
   def curateIngestStream(
@@ -930,35 +888,27 @@ object StreamingPipeline {
       docSchema: StructType,
       minKeepTokens: Int = 1
   ): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .json(rawDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(perBatch { (batch: DataFrame, batchId: Long) =>
-        // An idle trigger firing curates nothing and must touch
-        // nothing — every stage's state stays as-is and no empty
-        // output partition is written.
-        if (!batch.isEmpty)
-          graft.pipeline.Pipeline.curateIngest(
-            spark,
-            batch.select(col("doc_id"), col("text")),
-            modelPath,
-            spanStatePath,
-            dedupIndexPath,
-            outDir,
-            batchId,
-            minKeepTokens
-          )
-        ()
-      })
-      .start()
+    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint) { (batch, batchId) =>
+      // An idle trigger firing curates nothing and must touch
+      // nothing — every stage's state stays as-is and no empty
+      // output partition is written.
+      if (!batch.isEmpty)
+        graft.pipeline.Pipeline.curateIngest(
+          spark,
+          batch.select(col("doc_id"), col("text")),
+          modelPath,
+          spanStatePath,
+          dedupIndexPath,
+          outDir,
+          batchId,
+          minKeepTokens
+        )
+    }
 
   /** Streaming incremental packing: each arriving document file is laid
     * out after everything already packed
-    * ([[graft.operators.Packing.packIngest]] keyed by the foreachBatch
-    * id — replay-convergent), its manifest written batch-keyed. Emitted
+    * ([[graft.operators.Packing.packIngest]] keyed by the batch id,
+    * [[drain]]'s contract), its manifest written batch-keyed. Emitted
     * pack ids never move, so a training loader can tail `outDir` and
     * consume packs while the crawl still ingests. Idle trigger firings
     * touch nothing (no state row, no output partition). Typically fed
@@ -975,39 +925,40 @@ object StreamingPipeline {
       budget: Long = 2048L,
       nShards: Int = 8
   ): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .json(rawDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(perBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Packing
-            .packIngest(
-              spark,
-              batch.select(col("doc_id"), col("text")),
-              "doc_id",
-              "text",
-              statePath,
-              batchId,
-              budget,
-              nShards
-            )
-            .write
-            .mode("overwrite")
-            .parquet(s"$outDir/pack_batch=$batchId")
-        ()
-      })
-      .start()
+    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint)(
+      packBatch(spark, statePath, outDir, budget, nShards))
+
+  /** [[packIngestStream]]'s and [[packCuratedStream]]'s batch body. */
+  private def packBatch(
+      spark: SparkSession,
+      statePath: String,
+      outDir: String,
+      budget: Long,
+      nShards: Int
+  )(batch: DataFrame, batchId: Long): Unit =
+    if (!batch.isEmpty)
+      graft.operators.Packing
+        .packIngest(
+          spark,
+          batch.select(col("doc_id"), col("text")),
+          "doc_id",
+          "text",
+          statePath,
+          batchId,
+          budget,
+          nShards
+        )
+        .write
+        .mode("overwrite")
+        .parquet(s"$outDir/pack_batch=$batchId")
 
   /** Streaming MIXTURE-STRATIFIED packing: [[packIngestStream]] with
     * per-domain offset state ([[graft.operators.Packing.packIngestBy]]
     * per micro-batch) — every source's pack space grows append-only
     * independently, so a training schedule can draw pack counts per
-    * domain while the crawl still ingests. Same exactly-once shape:
-    * foreachBatch ids key the state, replay of a batch reuses its
-    * recorded per-domain bases.
+    * domain while the crawl still ingests. Batch ids key the state
+    * ([[drain]]'s contract): replay of a batch reuses its recorded
+    * per-domain bases.
     */
   def packIngestStreamBy(
       spark: SparkSession,
@@ -1020,32 +971,24 @@ object StreamingPipeline {
       budget: Long = 2048L,
       nShards: Int = 8
   ): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .json(rawDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(perBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Packing
-            .packIngestBy(
-              spark,
-              batch.select(col("doc_id"), col(groupCol), col("text")),
-              "doc_id",
-              "text",
-              groupCol,
-              statePath,
-              batchId,
-              budget,
-              nShards
-            )
-            .write
-            .mode("overwrite")
-            .parquet(s"$outDir/pack_batch=$batchId")
-        ()
-      })
-      .start()
+    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty)
+        graft.operators.Packing
+          .packIngestBy(
+            spark,
+            batch.select(col("doc_id"), col(groupCol), col("text")),
+            "doc_id",
+            "text",
+            groupCol,
+            statePath,
+            batchId,
+            budget,
+            nShards
+          )
+          .write
+          .mode("overwrite")
+          .parquet(s"$outDir/pack_batch=$batchId")
+    }
 
   /** Streaming fertility-drift telemetry — the production form of the
     * q123 monitor: per arriving document file, per-source whitespace vs
@@ -1056,8 +999,7 @@ object StreamingPipeline {
     * `build_bpe_model` pointer — serving posture: a monitor never
     * retrains mid-stream, so fertility is comparable across the whole
     * run (a retrain shows up as the next run's pointer version).
-    * Batch-keyed overwrite partitions make a crash replay converge
-    * (same exactly-once shape as every telemetry writer here); an idle
+    * Batch-keyed overwrite partitions ([[drain]]'s contract); an idle
     * trigger firing writes nothing. Per-batch cost is
     * [[graft.operators.Bpe.segmentCounts]]'s: the merge fold over the
     * batch's DISTINCT words + one join back + a per-source agg —
@@ -1072,30 +1014,22 @@ object StreamingPipeline {
       docSchema: StructType
   ): org.apache.spark.sql.streaming.StreamingQuery = {
     val merges = graft.operators.Bpe.loadMerges(spark, modelPath)
-    spark.readStream
-      .schema(docSchema)
-      .json(rawDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(perBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Bpe
-            .segmentCounts(batch.select(col("doc_id"), col("text")), "doc_id", "text", merges)
-            .join(batch.select(col("doc_id"), col("source")), Seq("doc_id"))
-            .groupBy(col("source"))
-            .agg(
-              count(lit(1)).as("n_docs"),
-              sum(col("n_tokens")).as("sum_ws"),
-              sum(col("n_bpe_tokens")).as("sum_bpe")
-            )
-            .withColumn("fert_milli", expr("(1000 * sum_bpe) div sum_ws"))
-            .write
-            .mode("overwrite")
-            .parquet(s"$outDir/ingest_batch=$batchId")
-        ()
-      })
-      .start()
+    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty)
+        graft.operators.Bpe
+          .segmentCounts(batch.select(col("doc_id"), col("text")), "doc_id", "text", merges)
+          .join(batch.select(col("doc_id"), col("source")), Seq("doc_id"))
+          .groupBy(col("source"))
+          .agg(
+            count(lit(1)).as("n_docs"),
+            sum(col("n_tokens")).as("sum_ws"),
+            sum(col("n_bpe_tokens")).as("sum_bpe")
+          )
+          .withColumn("fert_milli", expr("(1000 * sum_bpe) div sum_ws"))
+          .write
+          .mode("overwrite")
+          .parquet(s"$outDir/ingest_batch=$batchId")
+    }
   }
 
   /** Streaming decontamination — the eval-set member of the ingest
@@ -1103,12 +1037,11 @@ object StreamingPipeline {
     * against ITSELF; this guards it against a held-out benchmark): per
     * arriving document file, the
     * [[graft.operators.Dedup.decontamPurgeAgainst]] overlap report as
-    * a batch-keyed telemetry partition (`ingest_batch=N` overwrite —
-    * the family's exactly-once shape: a replayed batch rewrites its
-    * own partition). The eval shingle set is resolved ONCE at stream
-    * start and PINNED (`localCheckpoint`) — a benchmark doesn't change
-    * mid-run, and pinning means each micro-batch pays only its own
-    * explode + broadcast probe, never a re-derivation of the eval
+    * a batch-keyed telemetry partition (`ingest_batch=N` overwrite,
+    * [[drain]]'s contract). The eval shingle set is resolved ONCE at
+    * stream start and PINNED (`localCheckpoint`) — a benchmark doesn't
+    * change mid-run, and pinning means each micro-batch pays only its
+    * own explode + broadcast probe, never a re-derivation of the eval
     * side. Idle firings write nothing.
     */
   def decontamStream(
@@ -1123,39 +1056,31 @@ object StreamingPipeline {
     val evalSet = graft.operators.Dedup
       .evalShingles(spark.read.parquet(evalPath), "text")
       .localCheckpoint()
-    spark.readStream
-      .schema(docSchema)
-      .json(rawDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(perBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Dedup
-            .decontamPurgeAgainst(
-              batch.select(col("doc_id"), col("text")),
-              evalSet,
-              "doc_id",
-              "text",
-              threshold
-            )
-            .write
-            .mode("overwrite")
-            .parquet(s"$outDir/ingest_batch=$batchId")
-        ()
-      })
-      .start()
+    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty)
+        graft.operators.Dedup
+          .decontamPurgeAgainst(
+            batch.select(col("doc_id"), col("text")),
+            evalSet,
+            "doc_id",
+            "text",
+            threshold
+          )
+          .write
+          .mode("overwrite")
+          .parquet(s"$outDir/ingest_batch=$batchId")
+    }
   }
 
   /** Streaming FUZZY decontamination — the pair-attributed member of
     * the ingest-gate family: per arriving document file, the
     * [[graft.operators.Dedup.decontamFuzzyPinned]] near-dup report
     * (LSH-candidate eval items, verified whole-set Jaccard, verdict)
-    * as a batch-keyed telemetry partition, same exactly-once shape as
-    * [[decontamStream]]. The eval SHINGLE TABLE is resolved once at
-    * stream start and pinned; each micro-batch derives its own bands
-    * map-side and probes the pinned benchmark — the eval side is
-    * never re-read or re-shingled per batch.
+    * as a batch-keyed telemetry partition, as in [[decontamStream]].
+    * The eval SHINGLE TABLE is resolved once at stream start and
+    * pinned; each micro-batch derives its own bands map-side and probes
+    * the pinned benchmark — the eval side is never re-read or
+    * re-shingled per batch.
     */
   def decontamFuzzyStream(
       spark: SparkSession,
@@ -1171,40 +1096,31 @@ object StreamingPipeline {
     val evalSets = graft.operators.Dedup
       .shingleSets(spark.read.parquet(evalPath), "doc_id", "text")
       .localCheckpoint()
-    spark.readStream
-      .schema(docSchema)
-      .json(rawDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(perBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Dedup
-            .decontamFuzzyPinned(
-              graft.operators.Dedup
-                .shingleSets(batch.select(col("doc_id"), col("text")), "doc_id", "text"),
-              evalSets,
-              "doc_id",
-              threshold,
-              nHashes,
-              bandRows
-            )
-            .write
-            .mode("overwrite")
-            .parquet(s"$outDir/ingest_batch=$batchId")
-        ()
-      })
-      .start()
+    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty)
+        graft.operators.Dedup
+          .decontamFuzzyPinned(
+            graft.operators.Dedup
+              .shingleSets(batch.select(col("doc_id"), col("text")), "doc_id", "text"),
+            evalSets,
+            "doc_id",
+            threshold,
+            nHashes,
+            bandRows
+          )
+          .write
+          .mode("overwrite")
+          .parquet(s"$outDir/ingest_batch=$batchId")
+    }
   }
 
   /** Streaming SEMANTIC decontamination — the embedding tier's ingest
     * gate: per arriving embedding file (`{"vec_id","embedding"}`
     * JSON), each vector's best-cosine eval match and verdict as
-    * batch-keyed telemetry, same exactly-once shape as the other
-    * gates. The eval matrix is collected ONCE at stream start into
-    * the probe closure ([[graft.operators.Dedup.semanticProbe]]) —
-    * micro-batches rerun only their own compiled argmax loop, never
-    * the eval collect.
+    * batch-keyed telemetry, as in the other gates. The eval matrix is
+    * collected ONCE at stream start into the probe closure
+    * ([[graft.operators.Dedup.semanticProbe]]) — micro-batches rerun
+    * only their own compiled argmax loop, never the eval collect.
     */
   def decontamSemanticStream(
       spark: SparkSession,
@@ -1216,21 +1132,14 @@ object StreamingPipeline {
   ): org.apache.spark.sql.streaming.StreamingQuery = {
     val probe = graft.operators.Dedup
       .semanticProbe(spark.read.parquet(evalPath), "vec_id", "embedding", threshold)
-    spark.readStream
-      .schema(graft.schemas.Schemas.embeddingIngest)
-      .json(rawDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(perBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          probe(batch.select(col("vec_id"), col("embedding")))
-            .write
-            .mode("overwrite")
-            .parquet(s"$outDir/ingest_batch=$batchId")
-        ()
-      })
-      .start()
+    val source = spark.readStream.schema(graft.schemas.Schemas.embeddingIngest).json(rawDir)
+    drain(source, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty)
+        probe(batch.select(col("vec_id"), col("embedding")))
+          .write
+          .mode("overwrite")
+          .parquet(s"$outDir/ingest_batch=$batchId")
+    }
   }
 
   /** The curation→packing CHAIN consumer: tail a [[curateIngestStream]]
@@ -1238,10 +1147,9 @@ object StreamingPipeline {
     * and lay each newly accepted file out after everything already
     * packed — raw crawl files in, training-sequence manifests out,
     * with nothing in between but the two streams' checkpoints. Same
-    * foreachBatch-keyed [[graft.operators.Packing.packIngest]] as
-    * [[packIngestStream]]; only the source differs (parquet file
-    * stream over `curatedDir/ingest_batch=*`, schema-projected to
-    * (doc_id, text)).
+    * batch body as [[packIngestStream]]; only the source differs
+    * (parquet file stream over `curatedDir/ingest_batch=*`,
+    * schema-projected to (doc_id, text)).
     *
     * Operator discipline for the chain: the curator's exactly-once
     * contract allows its LATEST batch partition to be overwritten by a
@@ -1250,8 +1158,8 @@ object StreamingPipeline {
     * new ones, and packIngest would lay the docs out twice (it dedups
     * nothing; layout requires unique ids per ITS batch only, and the
     * re-read arrives as a new downstream batch). Run the consumer as
-    * AvailableNow drains AFTER the curator's drain completes (the spec
-    * and CurateStress shape), or lag it one sealed batch behind a
+    * AvailableNow drains AFTER the curator's drain completes (the
+    * spec's shape), or lag it one sealed batch behind a
     * continuously-running curator.
     */
   def packCuratedStream(
@@ -1263,38 +1171,12 @@ object StreamingPipeline {
       budget: Long = 2048L,
       nShards: Int = 8
   ): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(
-        StructType(
-          Seq(
-            org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)
-          )
-        )
-      )
-      .parquet(s"$curatedDir/ingest_batch=*")
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(perBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Packing
-            .packIngest(
-              spark,
-              batch.select(col("doc_id"), col("text")),
-              "doc_id",
-              "text",
-              statePath,
-              batchId,
-              budget,
-              nShards
-            )
-            .write
-            .mode("overwrite")
-            .parquet(s"$outDir/pack_batch=$batchId")
-        ()
-      })
-      .start()
+    drain(
+      spark.readStream
+        .schema(StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
+        .parquet(s"$curatedDir/ingest_batch=*"),
+      checkpoint
+    )(packBatch(spark, statePath, outDir, budget, nShards))
 
   /** Streaming semantic-dedup ingest: each arriving embeddings file is
     * SemDeDup'd against the persistent IVF index and within itself,
@@ -1312,29 +1194,22 @@ object StreamingPipeline {
       minCos: Double = 0.995,
       resolveSurvivors: Boolean = false
   ): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(embSchema)
-      .json(rawDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(perBatch { (batch: DataFrame, batchId: Long) =>
-        semanticDedupIngestBatch(
-          spark,
-          batch.select(col("vec_id"), col("embedding").cast("array<double>").as("emb")),
-          indexPath,
-          dropsPath,
-          batchId,
-          minCos,
-          resolveSurvivors
-        )
-        ()
-      })
-      .start()
+    drain(spark.readStream.schema(embSchema).json(rawDir), checkpoint) { (batch, batchId) =>
+      semanticDedupIngestBatch(
+        spark,
+        batch.select(col("vec_id"), col("embedding").cast("array<double>").as("emb")),
+        indexPath,
+        dropsPath,
+        batchId,
+        minCos,
+        resolveSurvivors
+      )
+    }
 
   /** Incremental star-schema maintenance: the reference's per-file
-    * users/time pipeline as a `foreachBatch` stream — every new file in
-    * `rawDir` updates the tables, with engine-managed file tracking.
+    * users/time pipeline as a [[drain]] — every new file in `rawDir`
+    * updates the tables (`Pipeline.runIncremental`'s writes), with
+    * engine-managed file tracking.
     */
   def incrementalTables(
       spark: SparkSession,
@@ -1342,22 +1217,16 @@ object StreamingPipeline {
       outDir: String,
       checkpoint: String
   ): org.apache.spark.sql.streaming.StreamingQuery = {
-    val logData = spark.readStream
-      .schema(graft.schemas.Schemas.logData)
-      .json(rawDir)
-    logData.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(perBatch { (batch: DataFrame, _: Long) =>
-        import graft.transforms.Transforms._
-        val ev = nextSongEvents(batch)
-        usersTable(ev).write.mode("overwrite").parquet(s"$outDir/users_table.parquet")
-        timeTable(withStartTime(ev)).write
-          .mode("overwrite")
-          .parquet(s"$outDir/time_table.parquet")
-      })
-      .start()
+    val logData = spark.readStream.schema(graft.schemas.Schemas.logData).json(rawDir)
+    drain(logData, checkpoint) { (batch, _) =>
+      graft.pipeline.Pipeline.writeUsersAndTime(
+        graft.transforms.Transforms.nextSongEvents(batch),
+        s"$outDir/",
+        singleFileOutput = false,
+        partitionTimeByMonth = false,
+        dynamicPartitionOverwrite = false
+      )
+    }
   }
 
   /** Streaming chunking: each arriving document JSON file is split
@@ -1371,12 +1240,9 @@ object StreamingPipeline {
     * stream starts: a later drain after a mid-campaign tokenizer
     * RETRAIN resolves a different version and is refused loudly
     * instead of silently mixing two coordinate systems in one chunk
-    * table.
-    *
-    * Exactly-once by overwrite-convergence: chunking is a pure
-    * per-row function of (batch, window, stride, frozen merges), so a
-    * replayed foreachBatch rewrites `chunk_batch=<id>` with identical
-    * bytes — the exact dedup family's established contract.
+    * table. Chunking is a pure per-row function of (batch, window,
+    * stride, frozen merges), so [[drain]]'s replay rewrites
+    * `chunk_batch=<id>` with identical bytes.
     */
   def chunkStream(
       spark: SparkSession,
@@ -1403,23 +1269,15 @@ object StreamingPipeline {
     // resolve the merges ONCE — every batch of this drain chunks
     // under the same frozen table
     val merges = modelPath.map(m => graft.operators.Bpe.loadMerges(spark, m))
-    spark.readStream
-      .schema(docSchema)
-      .json(rawDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(perBatch { (batch: DataFrame, batchId: Long) =>
-        val chunks = merges match {
-          case Some(ms) =>
-            graft.operators.Chunking.bpeChunks(batch, "doc_id", "text", ms, window, stride)
-          case None =>
-            graft.operators.Chunking.slidingChunks(batch, "doc_id", "text", window, stride)
-        }
-        chunks.write.mode("overwrite").parquet(s"$outDir/chunk_batch=$batchId")
-        ()
-      })
-      .start()
+    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint) { (batch, batchId) =>
+      val chunks = merges match {
+        case Some(ms) =>
+          graft.operators.Chunking.bpeChunks(batch, "doc_id", "text", ms, window, stride)
+        case None =>
+          graft.operators.Chunking.slidingChunks(batch, "doc_id", "text", window, stride)
+      }
+      chunks.write.mode("overwrite").parquet(s"$outDir/chunk_batch=$batchId")
+    }
   }
 
   /** Streaming DSIR scoring: each arriving document JSON file scores
@@ -1430,12 +1288,9 @@ object StreamingPipeline {
     * discipline, as with the frozen bigram-LM gate). The bucket
     * count comes from the weights' `_buckets` sidecar — REQUIRED
     * here: there is no interactive caller to catch a silent
-    * mis-bucketing.
-    *
-    * Exactly-once by overwrite-convergence: scoring is a pure
-    * function of (batch, frozen weights), so a replayed foreachBatch
-    * rewrites `score_batch=<id>` with identical bytes — the exact
-    * dedup family's established contract.
+    * mis-bucketing. Scoring is a pure function of (batch, frozen
+    * weights), so [[drain]]'s replay rewrites `score_batch=<id>` with
+    * identical bytes.
     */
   def dsirScore(
       spark: SparkSession,
@@ -1454,20 +1309,12 @@ object StreamingPipeline {
         )
       )
     val weights = spark.read.parquet(weightsPath)
-    spark.readStream
-      .schema(docSchema)
-      .json(rawDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(perBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Importance
-          .importanceScores(batch, "doc_id", "text", weights, buckets)
-          .write
-          .mode("overwrite")
-          .parquet(s"$outDir/score_batch=$batchId")
-        ()
-      })
-      .start()
+    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint) { (batch, batchId) =>
+      graft.operators.Importance
+        .importanceScores(batch, "doc_id", "text", weights, buckets)
+        .write
+        .mode("overwrite")
+        .parquet(s"$outDir/score_batch=$batchId")
+    }
   }
 }

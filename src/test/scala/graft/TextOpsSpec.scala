@@ -146,10 +146,12 @@ class TextOpsSpec extends AnyFunSuite {
     // The memo now points at the parquet reads — prove it by checking the
     // physical plan scans the state dir, not the documents table.
     assert(new java.io.File(shPath).exists() && new java.io.File(tokPath).exists())
-    // (q41 still scans documents.parquet once — the corpus-size count —
-    // but the token instances must come from the durable table.)
-    val plan = TextQueries.q41Tfidf(spark, sf).queryExecution.executedPlan.toString
-    assert(plan.contains(state), s"q41 should scan the materialized token table under $state:\n$plan")
+    // q41 pins its tf aggregate eagerly, so its own executed plan reads
+    // the pin (Scan ExistingRDD); the pinned subtree's input is the
+    // memoized token-instance table, which must scan the durable copy.
+    // (q41 still scans documents.parquet once — the corpus-size count.)
+    val plan = TextQueries.tokenInstances(spark, sf).queryExecution.executedPlan.toString
+    assert(plan.contains(state), s"q41's token instances should scan the materialized table under $state:\n$plan")
     val viaParquet = snap()
     assert(viaParquet == viaCheckpoint, "durable path must be result-identical")
     viaCheckpoint.foreach { case (q, s) => assert(s.nonEmpty, s"$q fixture empty") }
