@@ -14,13 +14,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Pipeline {
 
-  /** Full batch ETL (EP1): raw JSON under `input`, star-schema Parquet
-    * under `output`.
-    *
-    * Keeps the reference's write-then-reread materialization barrier for
-    * songs/artists: the fact table is built from the on-disk dimension
-    * tables, decoupling stage outputs (reference `sparkify_etl.py:173-176`).
-    */
   /** Cluster rows by their partition value before a `partitionBy`
     * write: each hive partition is then produced by one task instead of
     * by EVERY task — at 100 TB that is #partitions output files versus
@@ -31,6 +24,13 @@ object Pipeline {
   private def clusteredBy(df: org.apache.spark.sql.DataFrame, c: String) =
     df.repartition(org.apache.spark.sql.functions.col(c))
 
+  /** Full batch ETL (EP1): raw JSON under `input`, star-schema Parquet
+    * under `output`.
+    *
+    * Keeps the reference's write-then-reread materialization barrier for
+    * songs/artists: the fact table is built from the on-disk dimension
+    * tables, decoupling stage outputs (reference `sparkify_etl.py:173-176`).
+    */
   def runFullBatch(spark: SparkSession, input: String, output: String): Unit = {
     val songData = spark.read.schema(Schemas.songData).json(s"${input}song_data/*/*/*/*.json")
 
@@ -387,364 +387,34 @@ object Pipeline {
   }
 }
 
-/** CLI entry — parity with the reference job surface:
-  * `--bucket` (batch) or `--bucket --raw_file_name` (incremental),
+/** CLI entry — parity with the reference job surface: `--bucket`
+  * (EP1 full reload) or `--bucket --raw_file_name` (EP2 per-file run),
   * plus the table-maintenance verbs a scheduled operator of the same
-  * pipeline runs: `--maintenance compact --path P [--target_mb N]`,
-  * `--maintenance compact_partitions --path P [--target_mb N]
-  * [--min_files K]` — per-partition-dir read-optimize for batch-append
-  * layouts (IVF assignments, batch-keyed telemetry),
-  * `--maintenance expire --path P --before YYYYMM` — retention for
-  * `year=` and `year=/month=` layouts (the full-batch writes; a
-  * `month=`-only layout carries no year and is refused) — and
-  * `--maintenance materialize_features --data D --state S` (durable
-  * shared text-feature tables), and
-  * `--maintenance rebalance_vector_index --path P [--max_over_median N]`
-  * (IVF skew escalation — split clusters above N× the median size), and
-  * `--maintenance semantic_dedup_ingest --raw R --index I --drops D
-  * --checkpoint C [--min_cos X] [--resolve_survivors true]` (drain
-  * arriving embedding JSON files through streaming SemDeDup against
-  * the persistent IVF index; the optional flag resolves each drop's
-  * `dup_of` chain to the surviving representative), and
-  * `--maintenance dup_spans --batch B --state S --out O
-  * [--applied_id N] [--min_tokens K] [--check_doc_reuse true]`
-  * (incremental span-level dedup against the persistent span-hash
-  * state; the optional audit gate fails on re-used doc_ids), and
-  * `--maintenance span_state_compact --state S [--buckets N]
-  * [--target_task_mb M]` (read-optimize a segmented span state: merge
-  * every partition's segments to one; `--buckets` re-shards the state
-  * under a new bucket count), and
-  * `--maintenance span_state_report --state S [--target_task_mb M]`
-  * (manifest-driven sizing snapshot + re-shard recommendation), and
-  * `--maintenance drift_manifest --root R` (refresh a drifting
-  * archive's `_schemas` manifest so `Drift.readConformed` plans from
-  * one file read instead of per-batch footers), and
-  * `--maintenance pack_ingest --batch B --state S --out O
-  * --applied_id N [--budget T] [--shards K] [--bpe_model M]`
-  * (incremental sequence packing: the batch's docs laid out after
-  * everything already packed; emitted pack ids never move; with a
-  * frozen BPE model the stream is metered in model tokens), and
-  * `--maintenance pack_ingest_by --batch B --state S --out O
-  * --applied_id N [--group_col G] [--budget T] [--shards K]
-  * [--bpe_model M]` (incremental STRATIFIED packing: per-domain
-  * append-only pack spaces), and
-  * `--maintenance pack_stream --raw R --state S --out O --checkpoint C
-  * [--budget T] [--shards K]` (the same per arriving document JSON
-  * file, engine-tracked exactly-once), and
-  * `--maintenance pack_stream_by --raw R --state S --out O
-  * --checkpoint C [--group_col G] [--budget T] [--shards K]`
-  * (stratified packing per arriving file), and
-  * `--maintenance pack_slices --state S --manifests M --docs D --out O
-  * --from K --to L [--budget T] [--mask P]` (loader-side
-  * materialization of packs [K, L) — state-pruned manifest reads,
-  * O(packs × budget) explode; `--mask` excludes retired packs;
-  * `--budget` defaults to and must agree with the state's recorded
-  * `_budget` sidecar, as in every pack consumer below), and
-  * `--maintenance decontaminate --train T --eval E --out O
-  * [--threshold X] [--purged P]` (benchmark decontamination: per-train-
-  * doc eval-set shingle overlap report to O; with `--purged`, also the
-  * train corpus left-anti the contaminated ids), and
-  * `--maintenance decontam_fuzzy --train T --eval E --out O
-  * [--threshold X] [--purged P] [--nhashes N] [--bandrows R]` (the
-  * pair-attributed near-dup form: per train doc, LSH-candidate eval
-  * items and the worst verified whole-set Jaccard — the precision
-  * triage for `decontaminate`'s pooled report; same `--purged`
-  * contract; N/R dial banding recall — more bands of fewer rows
-  * catch lower-J dups at more verification pairs), and
-  * `--maintenance decontam_stream --raw R --eval E --out O
-  * --checkpoint C [--threshold X]` (the same per arriving document
-  * JSON file against a stream-start-pinned eval shingle set —
-  * batch-keyed telemetry, the ingest family's exactly-once shape), and
-  * `--maintenance decontam_fuzzy_stream --raw R --eval E --out O
-  * --checkpoint C [--threshold X] [--nhashes N] [--bandrows R]` (the
-  * pair-attributed near-dup gate: the same stream shape, reporting
-  * LSH-candidate eval items and verified whole-set Jaccard per
-  * arriving doc), and
-  * `--maintenance decontam_semantic --train T --eval E --out O
-  * [--threshold X] [--purged P]` (the embedding tier: per train
-  * vector, its best-cosine eval match and verdict — both parquets
-  * need (vec_id, embedding); same --purged contract), and
-  * `--maintenance decontam_semantic_stream --raw R --eval E --out O
-  * --checkpoint C [--threshold X]` (the embedding tier's ingest gate
-  * over {"vec_id","embedding"} JSON files, eval matrix collected once
-  * at stream start), and
-  * `--maintenance build_vocab --docs D --out O [--parts N]` (freeze
-  * the dense-id token dictionary from a corpus — the id space
-  * integer exports encode under), and
-  * `--maintenance pack_export --state S --manifests M --docs D
-  * --vocab V --out O --from K --to L [--budget T] [--shards N]
-  * [--mask P] [--unk_id U] [--loss_masks L]` (the trainer hand-off:
-  * materialize packs [K, L), encode under the frozen vocab, roll to
-  * one id-array row per pack, and export hash-sharded with a
-  * landed-data manifest; `--mask` withholds retired packs with the
-  * count printed; `--loss_masks` ships the window's mask_intervals
-  * rows as an `_loss_masks` sidecar in the landing dir, minus
-  * retired packs; OOV positions under the frozen vocab fail loudly
-  * unless `--unk_id` names the reserved id they map to), and
-  * `--maintenance retire_packs --manifests M --contam C --out P
-  * [--budget T] [--threshold X] [--group_col G]` (APPLY
-  * decontamination to an emitted pack space: audit contaminated doc
-  * ids against the manifests and write the retirement mask side-file
-  * the other verbs honor — never a re-pack; stratified manifests
-  * number packs per domain and must name the group column, masking by
-  * (group, pack_id)), and
-  * `--maintenance mask_intervals --manifests M --contam C --out P
-  * [--budget T] [--group_col G]` (the surgical composition partner:
-  * per (contaminated doc, pack), the pack-local half-open loss-mask
-  * interval the trainer zeroes loss on — keep the pack, mask the
-  * leaked positions; same --contam flexibility and stratified
-  * interlock as retire_packs), and
-  * `--maintenance pack_epochs --manifests M --out O [--epochs N]
-  * [--seed S] [--hex_width W] [--mask P]` (seeded per-epoch pack
-  * permutations — the multi-epoch visit-order schedule, recomputable
-  * by any worker from the seed; `--mask` drops retired packs with
-  * survivor ords dense; `--hex_width` sizes the rank buckets), and
-  * `--maintenance pack_boundaries --manifests M --out O [--budget T]`
-  * (the per-pack segment/boundary side-file — attention-reset
-  * metadata from pure manifest arithmetic), and
-  * `--maintenance pack_resume --schedule S --out O --step N --batch B`
-  * (loader restart: the not-yet-consumed epoch-major tail of a
-  * pack_epochs schedule after N optimizer steps of B packs — a filter
-  * over the schedule, manifest-sized at any corpus scale), and
-  * `--maintenance mixture_weights --manifests M --group_col G --out O
-  * [--alpha A]` (temperature-scaled sampling weights per group from
-  * the manifest's n_toks — p^alpha vs the largest group as
-  * micro-ints; alpha 0.5 is the IEEE-exact oracle-stable path), and
-  * `--maintenance pack_efficiency --manifests M --out O [--budget T]
-  * [--group_col G]` (per-group tail-pack waste + integer-exact
-  * wasted-compute fraction — the padding telemetry a mixture schedule
-  * reads when sizing budget/stratification), and
-  * `--maintenance apportion_budget --weights W --group_col G
-  * --budget B --out O [--weight_col C]` (mixture_weights rates ->
-  * hard per-group token quotas summing to B exactly — Hamilton
-  * largest-remainder over BigInt, the selectTokenBudget feed), and
-  * `--maintenance apportion_phases --weights W --group_col G --out O
-  * [--phase_col P] [--weight_col C] [--budget_col B]` (per-phase
-  * curriculum quotas from a (phase, group, weight, budget) table —
-  * each phase's quotas sum to its budget exactly), and
-  * `--maintenance pack_provenance --manifests M --attrs A
-  * --attr_cols C1[,C2…] --out O [--budget T]` (the governance
-  * side-file: per (pack, attribute values), contributing docs and
-  * token weight — manifest × doc-attribute join, license audits and
-  * takedown-to-pack resolution without reading pack data), and
-  * `--maintenance leakage_split --docs D --pairs P --out O
-  * [--heldout_per_mille N] [--seed S]` (cluster-atomic train/heldout
-  * split: near-dup components from the pair table, singletons their
-  * own cluster, the side chosen by hashing the COMPONENT so no
-  * near-dup pair straddles the boundary), and
-  * `--maintenance snapshot_diff --old A --new B --content_cols
-  * C1[,C2…] --out O [--id_col I]` (release diff: per-id added/
-  * removed/changed/unchanged via scan-side md5 fingerprints — text
-  * never shuffles; incremental re-processing consumes the
-  * added/changed slice), and
-  * `--maintenance efficiency_sweep --manifests M --budgets
-  * B1[,B2…] --out O [--group_col G]` (pack_efficiency at every
-  * candidate budget in one manifest pass — the sequence-length
-  * selection table), and
-  * `--maintenance cluster_best --docs D --pairs P --score_col S
-  * --out O` (quality-aware survivor selection: keep each near-dup
-  * cluster's argmax-score copy, ties to the smaller id, every doc
-  * labeled so drops stay auditable), and
-  * `--maintenance pref_pairs --responses R --out O [--prompt_col P]
-  * [--id_col I] [--score_col S] [--ratings T [--dispute_range N]
-  * [--rating_score_col C]] [--len_col L [--bucket_width W]]
-  * [--contaminated X [--contam_id_col I]] [--content_col C]`
-  * (post-training pair build: within-prompt response dedup (with
-  * --content_col) -> rater triage -> length debias -> DPO pairs ->
-  * pair decontamination, each stage optional, `_pref.json` auditing
-  * the per-stage counts), and
-  * `--maintenance pref_stream --raw R --state S --checkpoint C`
-  * (the pair build's streaming arm: tail scored-response JSON files
-  * into the persistent pairIngest state, exactly-once per file), and
-  * `--maintenance win_ingest --batch B --state S [--out O]
-  * [--prompt_col P] [--policy_col C] [--score_col X] [--applied_id N]`
-  * (incremental arena board: fold a batch of scored responses into
-  * the per-(prompt, policy) best state, optionally landing the
-  * current head-to-head matrix), and
-  * `--maintenance win_stream --raw R --state S --checkpoint C`
-  * (the arena board's streaming arm: tail scored-response JSON files
-  * into the winIngest state, exactly-once per file), and
-  * `--maintenance bt_ratings (--state S | --matrix M) [--iters N]
-  * [--out O]` (the arena LEADERBOARD: Bradley-Terry strengths fit
-  * from the incremental state or a landed matrix — exact integer MM
-  * iterations, ties as half-wins, rating-sorted), and
-  * `--maintenance decode_packs --packs P --vocab V --out O
-  * [--from K --to L]` (ids → text through the frozen vocab: the
-  * "what is IN pack k?" debugging verb; the range prunes before the
-  * decode explode), and
-  * `--maintenance dsir_weights --data D --target T --out W
-  * [--text_col C] [--buckets N]` (freeze a DSIR hashed-bigram weight
-  * table from a raw corpus + a curated seed corpus; the bucket count
-  * pins to a `_buckets` sidecar), and
-  * `--maintenance dsir_score --data D --weights W --out O [--k K]
-  * [--text_col C] [--id_col I] [--buckets N]` (score arriving
-  * documents against FROZEN weights — bucket count resolved from the
-  * sidecar, explicit disagreement refused — keeping the top-k with
-  * --k), and
-  * `--maintenance dsir_stream --raw R --weights W --out O
-  * --checkpoint C` (the scorer's streaming arm: tail document JSON
-  * files, score each against the frozen weights, land per-batch
-  * score dirs — exactly-once by overwrite-convergence), and
-  * `--maintenance vocab_coverage --docs D [--out O] [--targets
-  * 500,900,950,990] [--text_col C]` (tokenizer-sizing audit: per
-  * coverage target, the smallest number of token types covering that
-  * share of the token stream), and
-  * `--maintenance chunk --docs D --out O [--window W] [--stride S]
-  * [--id_col I] [--text_col C] [--model M]` (sliding-window chunking:
-  * the embedding/retrieval prep pass — overlapping token windows per
-  * document; with --model the windows are measured in frozen-BPE
-  * MODEL tokens and the out dir's `_space` sidecar pins the space +
-  * model version, refusing mismatched reruns loudly), and
-  * `--maintenance chunk_stream --raw R --out O --checkpoint C
-  * [--model M] [--window W] [--stride S]` (the chunker's streaming
-  * arm: arriving document JSON files chunk the moment they land,
-  * per-batch `chunk_batch=` dirs, exactly-once by
-  * overwrite-convergence; the `_space` sidecar refuses a drain under
-  * a mid-campaign tokenizer retrain), and
-  * `--maintenance tree_paths --turns T --out O [--conv_col C]
-  * [--turn_col K] [--parent_col P] [--max_depth N] [--max_conv_rows N]`
-  * (branched-conversation flattening: parent-pointer turns ->
-  * per-(path, turn) memberships with first-visit train flags;
-  * orphans, cycles, and cyclic islands refused loudly), and
-  * `--maintenance tree_state --batch B --state S [--applied_id N]
-  * [--conv_col C] [--turn_col K] [--parent_col P] [--max_depth N]
-  * [--buckets K] [--max_conv_rows N]` (conv-hash bucket count pinned
-  * at creation; max_conv_rows is the per-conversation walk-row guard
-  * — unit: buffered memberships + batch turns, not turns),
-  * `--maintenance tree_state_reshard --state S --buckets N` (re-pin a
-  * mis-sized bucket count; whole-root two-phase swap), and
-  * `--maintenance tree_state_report --state S` (per-bucket bytes),
-  * `--maintenance lease_report --state S` (read-only: who holds the
-  * writer lease — token, host, pid, age), and
-  * `--maintenance lease_break --state S [--min_age_sec N]` (loud,
-  * audited removal of a DEAD holder's lease; refuses while fresher
-  * than the threshold — default 900 s)
-  * (DURABLE tree memberships: fold an appended turn batch into the
-  * persistent membership state — new leaves add paths with prefixes
-  * read from the state, leaf extensions replace their paths,
-  * first-visit flags recomputed for exactly the affected turns;
-  * exactly-once by --applied_id; `tree_render --paths_state S` and
-  * `branch_pairs --paths_state S` then serve from the state instead
-  * of re-running the closure), and
-  * `--maintenance turns_stream --raw R --state S --checkpoint C
-  * [--max_depth N] [--max_conv_rows N]` (the tree family's streaming
-  * arm: tail turn-batch
-  * JSON files into the TreeState, exactly-once per file; files must
-  * land in causal order — the orphan gate refuses violations), and
-  * `--maintenance turns_backfill --raw R --state S --checkpoint C
-  * [--max_depth N] [--max_conv_rows N]` (cold-start arm: fold the ENTIRE existing backlog
-  * as ONE batch on the same checkpoint, then run turns_stream
-  * steady-state — N accumulated files cost one fold, not N serial
-  * per-file folds; the shared checkpoint hands off with nothing lost
-  * or double-folded), and
-  * `--maintenance dpo_release --turns T --out ROOT [--shards N]
-  * [--bpe_model M [--length_batches B]]
-  * [--eval E [--eval_text_col X] [--threshold F]]
-  * [--bad B [--bad_conv_col C] [--bad_turn_col K]] [--verify false]
-  * [+ branch_pairs column opts]` (the one-command DPO data release,
-  * the trilogy's third capstone: branched turns -> rendered
-  * sibling-regeneration triples -> optional MODEL-token coordinates
-  * (`--bpe_model`: frozen merge table adds prompt_toks/chosen_toks/
-  * rejected_toks, version pinned in the manifest, plus a per-side
-  * length-bias audit in token space) -> optional conv-keyed
-  * any-member pair decontamination (`--bad`, a pre-keyed verdict
-  * table) -> optional CONTENT decontamination (`--eval`: raw eval
-  * text, shingle containment >= threshold in the prompt, chosen, OR
-  * rejected member purges the pair) -> hash-sharded byte-stable
-  * export with content digests -> verify_export; `_dpo_release.json`
-  * audits landed counts; a root already holding triples/ is
-  * refused), and
-  * `--maintenance branch_pairs --turns T --out O [--render true
-  * [--paths_state S]] [--conv_col C] [--turn_col K] [--parent_col P]
-  * [--role_col R] [--content_col X] [--score_col S] [--resp_role A]
-  * [--max_depth N]`
-  * (tree-native DPO pairs: sibling response-role regenerations under
-  * one parent paired chosen/rejected by score; --render ships the
-  * root→parent prompt text and both contents — the triple export), and
-  * `--maintenance tree_render --turns T --out O [--paths_state S]
-  * [--conv_col C] [--turn_col K] [--parent_col P] [--role_col R]
-  * [--content_col X] [--train_role A] [--max_depth N]`
-  * (tree-aware SFT render prep:
-  * each root→leaf path becomes one synthetic conversation keyed by a
-  * dense path `doc_id`, with the EFFECTIVE role — train role on
-  * first-visit train-role memberships, 'context' elsewhere — so the
-  * flat SFT chain trains every turn exactly once), and
-  * `--maintenance sft_masks --turns T --out O [--conv_col C]
-  * [--turn_col K] [--role_col R] [--content_col X] [--train_role A]
-  * [--manifests M [--budget B] [--man_id_col I]]` (the SFT loss-mask
-  * side-file: conversation-local trainable-turn intervals, projected
-  * to pack-local [0, budget) coordinates when --manifests points at
-  * the conversation-atomic pack layout — budget validated against the
-  * `_budget` sidecar, as in every pack consumer), and
-  * `--maintenance sft_release --turns T --out ROOT [--budget B]
-  * [--shards N] [--export_shards N] [--train_role R] [--unk_id U]
-  * [--parent_col P [--max_depth N] [--paths_state S]] [--verify false]`
-  * (the one-command SFT data release: render conversations ->
-  * pack_ingest -> sft_masks -> build_vocab -> pack_export, each the
-  * existing verb; shards/_role_masks ships KEEP-loss intervals that
-  * select exactly the train-role tokens, `_sft_release.json` audits
-  * the landed counts. With --parent_col the turn store is a branched
-  * TREE: a tree_render stage flattens it to first-visit-masked path
-  * conversations first, so every turn's tokens are loss-on exactly
-  * once across the release while shared prefixes ride along as
-  * context; --paths_state serves the memberships from a durable
-  * TreeState instead of re-running the closure), and
-  * `--maintenance verify_export --path P [--out O]` (landing
-  * integrity: recompute per-shard counts + order-independent content
-  * digests from the landed files and compare against the export's
-  * `__manifest`; fails loudly naming any corrupt shard — the
-  * post-copy check and scheduled bitrot scan), and
-  * `--maintenance release --data D --eval E --out ROOT [--budget T]
-  * [--shards N] [--export_shards N] [--min_keep_tokens K]
-  * [--threshold F] [--epochs N] [--seed S] [--unk_id U]
-  * [--provenance true] [--verify false]
-  * [--dsir_target T --dsir_keep K [--dsir_buckets N]]` (the
-  * one-command pretraining data release: curate -> decontaminate ->
-  * [DSIR-select the K most target-like docs ->] pack -> freeze vocab
-  * -> export shards [-> epoch schedule], each
-  * step the existing verb called recursively so every interlock
-  * fires; `_release.json` audits the landed per-stage counts), and
-  * `--maintenance pack_curated_stream --curated C --state S --out O
-  * --checkpoint K [--budget T] [--shards N]` (the curation→packing
-  * chain consumer: tail a curated corpus' batch partitions into pack
-  * manifests), and
-  * `--maintenance build_bpe_model --data D --model M [--merges N]
-  * [--min_count C] [--retain R] [--driver_max_chars B]` (freeze a BPE
-  * merge table — versioned pointer, same serving protocol as the
-  * quality model; the trainer auto-selects the in-memory driver path
-  * when the pruned histogram fits B chars, 0 forces the distributed
-  * loop), and
-  * `--maintenance bpe_segment --batch B --model M --out O` (per-doc
-  * token counts under the frozen tokenizer), and
-  * `--maintenance fertility_stream --raw R --model M --out O
-  * --checkpoint C` (per-source fertility telemetry per arriving file
-  * under the frozen tokenizer — the drift dashboard feed), and
-  * `--maintenance build_quality_model --data D --model M [--retain N]`
-  * (freeze the LM quality model from a reference corpus; keep N
-  * predecessor versions for gate batches that outlive retrains), and
-  * `--maintenance curate_ingest --batch B --model M --span_state S
-  * --index I --out O --applied_id N [--min_keep_tokens K]`
-  * (incremental curation of one crawl batch: frozen-LM gate → span
-  * clean vs the durable state → floor → cross-batch exact dedup;
-  * replay of the same applied_id converges), and
-  * `--maintenance curate_stream --raw R --model M --span_state S
-  * --index I --out O --checkpoint C [--min_keep_tokens K]` (drain
-  * arriving document JSON files through the same composition,
-  * engine-tracked exactly-once), and
-  * `--maintenance span_dedup_ingest --raw R --state S --out O
-  * --checkpoint C [--min_tokens K]` (drain arriving document JSON
-  * files through streaming span-level dedup), and
-  * `--maintenance curate --data D --out O [--shards N]
-  * [--min_keep_tokens K]` (one-command corpus curation: quality gate →
-  * span clean → min-token floor (drops fully-cut/empty docs) → dedup →
-  * shard manifest).
+  * pipeline runs, `--maintenance VERB`. Each verb declares its flags
+  * and a one-line summary next to its body in the table below; `--help`
+  * prints them all, `--maintenance VERB --help` one verb.
   */
 object PipelineRunner {
-  def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.local("graft-pipeline")
-    run(args, spark)
-    spark.stop()
-  }
+  import Cli.{bool, opt, req, verb, Args, Verb}
+
+  /** Checks the command line before a session starts, stops the
+    * session however the run ends, and exits non-zero on any failure —
+    * an EP2 file quarantined to `failed/` included.
+    */
+  def main(args: Array[String]): Unit =
+    cli.parse(args).fold(println(_), { opts =>
+      val spark = graft.GraftSession.local("graft-pipeline")
+      try opts.verb.body(opts, spark)
+      finally spark.stop()
+    })
+
+  /** The CLI body against a caller-owned session (main wraps it with
+    * session lifecycle; tests drive verbs without losing the shared
+    * session to the final stop()).
+    */
+  def run(args: Array[String], spark: org.apache.spark.sql.SparkSession): Unit =
+    cli.parse(args).fold(println(_), opts => opts.verb.body(opts, spark))
+
 
   /** Optional frozen-BPE metering for the pack verbs: with a model,
     * join the batch against its per-doc frozen-tokenizer counts and
@@ -777,7 +447,7 @@ object PipelineRunner {
   private def resolveBudget(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
-      opts: Map[String, String]
+      opts: Args
   ): Long = {
     val explicit = opts.get("budget").map(_.toLong)
     val stored = graft.operators.Packing.storedBudget(spark, dir)
@@ -796,13 +466,6 @@ object PipelineRunner {
     }
   }
 
-  /** Per-stage observability for the release capstones: wall-clock and
-    * driver-heap-in-use after each composed verb, printed as
-    * `[release] stage <name>: <sec> s (driver heap <MiB> MiB)`. The
-    * numbers a scale soak records stage by stage — and what an
-    * operator tails in production to see WHERE a release run is
-    * spending its time without a Spark UI.
-    */
   /** Capstone audit manifests go through the ROOT's Hadoop FileSystem,
     * like every data path — a release rooted at `hdfs://`/`s3a://`
     * must land its `_*.json` next to its shards, not on the driver's
@@ -822,6 +485,13 @@ object PipelineRunner {
     )
   }
 
+  /** Per-stage observability for the release capstones: wall-clock and
+    * driver-heap-in-use after each composed verb, printed as
+    * `[release] stage <name>: <sec> s (driver heap <MiB> MiB)`. The
+    * numbers a scale soak records stage by stage — and what an
+    * operator tails in production to see WHERE a release run is
+    * spending its time without a Spark UI.
+    */
   private def timedStage[T](verb: String, stage: String)(f: => T): T = {
     val t0 = System.nanoTime()
     val out = f
@@ -857,2343 +527,2560 @@ object PipelineRunner {
     )
   }
 
-  /** The CLI body against a caller-owned session (main wraps it with
-    * session lifecycle; tests drive verbs without losing the shared
-    * session to the final stop()).
-    */
-  def run(args: Array[String], spark: org.apache.spark.sql.SparkSession): Unit = {
-    val opts = args
-      .sliding(2, 2)
-      .collect { case Array(k, v) => k.stripPrefix("--") -> v }
-      .toMap
-    opts.get("maintenance") match {
-      case Some("compact") =>
-        val path = opts.getOrElse("path", sys.error("--path required"))
-        val target = opts.getOrElse("target_mb", "128").toLong * 1024 * 1024
-        val n = graft.operators.Maintenance.compact(spark, path, target)
-        println(s"[maintenance] compacted $path -> $n file(s)")
-      case Some("expire") =>
-        val path = opts.getOrElse("path", sys.error("--path required"))
-        val before = opts.getOrElse("before", sys.error("--before YYYYMM required")).toInt
-        val deleted = graft.operators.Maintenance.expirePartitions(
+  private val etl = verb(
+    "etl",
+    "EP1 reload of raw/ into transformed/; with --raw_file_name, EP2 run of one file (moved to failed/ on error)"
+  )(
+    req("bucket", "URI"), opt("raw_file_name", "FILE"), bool("coalesce", true),
+    bool("partition_month", false), bool("dynamic_overwrite", false), bool("fail_fast", false)
+  ) { (opts, spark) =>
+    val bucket = opts("bucket")
+    opts.get("raw_file_name") match {
+      case Some(f) =>
+        val ok = Pipeline.runIncrementalQuarantined(
           spark,
-          path,
-          spec =>
-            (spec.get("year"), spec.get("month")) match {
-              // year=/month= nested layout: expire by year-month
-              case (Some(y), Some(m)) => y.toInt * 100 + m.toInt < before
-              // year=-only layout (full-batch writes): expire a whole
-              // year when even its December predates the cutoff; else
-              // recurse (a month level, if present, decides per month)
-              case (Some(y), None) => y.toInt * 100 + 12 < before
-              // month=-only layout carries no year — a YYYYMM cutoff
-              // cannot be applied to it; refuse loudly over guessing
-              case _ =>
-                sys.error(
-                  "expire needs a year= (optionally month=) layout; " +
-                    "month=-only layouts carry no year to compare against"
-                )
-            }
+          bucket,
+          f,
+          singleFileOutput = opts.bool("coalesce"),
+          partitionTimeByMonth = opts.bool("partition_month"),
+          dynamicPartitionOverwrite = opts.bool("dynamic_overwrite"),
+          failFast = opts.bool("fail_fast")
         )
-        println(s"[maintenance] expired ${deleted.length} partition(s)")
-      case Some("materialize_features") =>
-        // Durable parquet barrier for the shared text-feature tables —
-        // the scheduled twin of the per-session memo (SCALE.md).
-        val data = opts.getOrElse("data", sys.error("--data <sf dir> required"))
-        val state = opts.getOrElse("state", sys.error("--state <dir> required"))
-        val (sh, tok) = graft.queries.TextQueries.materializeFeatures(spark, data, state)
-        println(s"[maintenance] materialized features: $sh , $tok")
-      case Some("rebalance_vector_index") =>
-        // Skew escalation for a persistent IVF index: split clusters
-        // above --max_over_median x median(cluster size). The scheduled
-        // response when clusterStats drifts (VectorIndex.rebalance).
-        val path = opts.getOrElse("path", sys.error("--path <index dir> required"))
-        val bound = opts.getOrElse("max_over_median", "8").toDouble
-        val split = graft.operators.VectorIndex.rebalance(spark, path, bound)
-        println(s"[maintenance] rebalanced $path: $split cluster(s) split")
-      case Some("semantic_dedup_ingest") =>
-        // Streaming SemDeDup over arriving embedding files: probe the
-        // persistent IVF index, drop near-dups, append survivors —
-        // the scheduled twin of dedup/near-dup ingest
-        // (StreamingPipeline.semanticDedupIngest). Embedding JSON shape:
-        // {"vec_id": long, "embedding": [double, ...]}.
-        // --resolve_survivors true adds a `survivor` column to the drop
-        // telemetry: dup_of chased through the batch's drop chain to the
-        // row that was actually kept.
-        val raw = opts.getOrElse("raw", sys.error("--raw <json dir> required"))
-        val index = opts.getOrElse("index", sys.error("--index <ivf dir> required"))
-        val drops = opts.getOrElse("drops", sys.error("--drops <telemetry dir> required"))
-        val ckpt = opts.getOrElse("checkpoint", sys.error("--checkpoint <dir> required"))
-        val minCos = opts.getOrElse("min_cos", "0.995").toDouble
-        val resolve = opts.getOrElse("resolve_survivors", "false").toBoolean
-        graft.streaming.StreamingPipeline
-          .semanticDedupIngest(
-            spark, raw, index, drops, ckpt, graft.schemas.Schemas.embeddingIngest, minCos, resolve
-          )
-          .awaitTermination()
-        println(s"[maintenance] semantic dedup ingest drained $raw into $index")
-      case Some("curate") =>
-        // One-command corpus curation: quality gate -> span clean ->
-        // min-token floor -> exact dedup on cleaned text -> shard
-        // manifest (Pipeline.curateCorpus; each stage is an
-        // oracle-checked rule).
-        val data = opts.getOrElse("data", sys.error("--data <sf dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <dir> required"))
-        val shards = opts.getOrElse("shards", "8").toInt
-        val minKeep = opts.getOrElse("min_keep_tokens", "1").toInt
-        val gateMilliBits = opts.getOrElse("gate_millibits", "4400").toLong
-        val spanClean = !opts.get("span_clean").contains("false")
-        val (nIn, nOut) =
-          Pipeline.curateCorpus(spark, data, out, shards, minKeep, gateMilliBits, spanClean)
-        println(s"[maintenance] curated $data: $nIn -> $nOut docs in $out")
-      case Some("span_dedup_ingest") =>
-        // Streaming span-level dedup over arriving document JSON files:
-        // per-file extents against the persistent span-hash state,
-        // batch-keyed telemetry, hashes folded in
-        // (StreamingPipeline.spanDedupIngest). Document JSON shape:
-        // {"doc_id": long, "text": string}. Same doc-disjointness
-        // constraint as dup_spans: a re-used doc_id with changed text
-        // silently loses its cross-version duplicate spans — give
-        // re-crawled documents fresh ids.
-        val raw = opts.getOrElse("raw", sys.error("--raw <json dir> required"))
-        val state = opts.getOrElse("state", sys.error("--state <dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <extents dir> required"))
-        val ckpt = opts.getOrElse("checkpoint", sys.error("--checkpoint <dir> required"))
-        val minTokens = opts.getOrElse("min_tokens", "5").toInt
-        graft.streaming.StreamingPipeline
-          .spanDedupIngest(spark, raw, state, out, ckpt, graft.schemas.Schemas.documentIngest, minTokens)
-          .awaitTermination()
-        println(s"[maintenance] span dedup ingest drained $raw against $state")
-      case Some("dup_spans") =>
-        // Incremental span-level dedup: probe one batch of documents
-        // against the persistent span-hash state, emit the batch's
-        // duplicated extents as parquet, fold the batch's hashes in
-        // (Maintenance.incrementalDupSpans — exactly-once via
-        // --applied_id). Batch parquet shape: (doc_id, text).
-        // CONSTRAINT: exact for doc-disjoint batches. Re-using a
-        // doc_id with CHANGED text makes the self-attribution
-        // exclusion silently suppress that doc's cross-version
-        // duplicate spans — re-crawls that may rewrite a doc must
-        // assign a fresh doc_id (e.g. (url, crawl_ts) keyed).
-        // --check_doc_reuse true enforces it: the run fails listing
-        // offenders (costs a two-column full-state scan — audit
-        // schedule, not hot path).
-        val batchPath = opts.getOrElse("batch", sys.error("--batch <parquet dir> required"))
-        val state = opts.getOrElse("state", sys.error("--state <dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <extents dir> required"))
-        val applied = opts.get("applied_id").map(_.toLong)
-        val minTokens = opts.getOrElse("min_tokens", "5").toInt
-        val checkReuse = opts.getOrElse("check_doc_reuse", "false").toBoolean
-        graft.operators.Maintenance
-          .incrementalDupSpans(
-            spark,
-            spark.read.parquet(batchPath),
-            "doc_id",
-            "text",
-            state,
-            applied,
-            minTokens,
-            checkDocIdReuse = checkReuse
-          )
-          .write
-          .mode("overwrite")
-          .parquet(out)
-        println(s"[maintenance] dup spans: $batchPath probed against $state -> $out")
-      case Some("pack_ingest") =>
-        // Incremental sequence packing: lay one batch of documents out
-        // after everything already packed (Packing.packIngest — the
-        // persistent offset state makes emitted pack ids immutable),
-        // write the batch's manifest under out/pack_batch=<id>.
-        // Batch parquet shape: (doc_id, text). Replay of the same
-        // --applied_id converges (recorded base reused). With
-        // --bpe_model M, the stream is metered in FROZEN-BPE tokens
-        // (Bpe.segmentCountsFrozen joined as the layout weight) — pin
-        // one model version per state: offsets are cumulative, a
-        // drifting metric would re-meter history.
-        val batchPath = opts.getOrElse("batch", sys.error("--batch <parquet dir> required"))
-        val state = opts.getOrElse("state", sys.error("--state <dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <manifest dir> required"))
-        val applied = opts.getOrElse("applied_id", sys.error("--applied_id <N> required")).toLong
-        val budget = opts.getOrElse("budget", "2048").toLong
-        val shards = opts.getOrElse("shards", "8").toInt
-        val (batchDf, wcol) = withBpeWeights(spark, spark.read.parquet(batchPath), opts.get("bpe_model"))
-        graft.operators.Packing
-          .packIngest(
-            spark,
-            batchDf,
-            "doc_id",
-            "text",
-            state,
-            applied,
-            budget,
-            shards,
-            weightCol = wcol
-          )
-          .write
-          .mode("overwrite")
-          .parquet(s"$out/pack_batch=$applied")
-        // manifest root carries the same budget sidecar as the state,
-        // so manifest-only consumers (pack_boundaries) can validate too
-        graft.operators.Packing.recordBudget(spark, out, budget)
-        println(s"[maintenance] pack ingest: $batchPath appended to $state -> $out/pack_batch=$applied")
-      case Some("pack_ingest_by") =>
-        // Incremental STRATIFIED packing: same contract per domain
-        // (Packing.packIngestBy — per-domain append-only pack spaces).
-        // Batch parquet shape: (doc_id, <group_col>, text).
-        val batchPath = opts.getOrElse("batch", sys.error("--batch <parquet dir> required"))
-        val state = opts.getOrElse("state", sys.error("--state <dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <manifest dir> required"))
-        val applied = opts.getOrElse("applied_id", sys.error("--applied_id <N> required")).toLong
-        val group = opts.getOrElse("group_col", "source")
-        val budget = opts.getOrElse("budget", "2048").toLong
-        val shards = opts.getOrElse("shards", "8").toInt
-        val (batchDf, wcol) = withBpeWeights(spark, spark.read.parquet(batchPath), opts.get("bpe_model"))
-        graft.operators.Packing
-          .packIngestBy(
-            spark,
-            batchDf,
-            "doc_id",
-            "text",
-            group,
-            state,
-            applied,
-            budget,
-            shards,
-            weightCol = wcol
-          )
-          .write
-          .mode("overwrite")
-          .parquet(s"$out/pack_batch=$applied")
-        graft.operators.Packing.recordBudget(spark, out, budget)
-        println(
-          s"[maintenance] stratified pack ingest: $batchPath appended per-$group to $state -> $out/pack_batch=$applied"
-        )
-      case Some("build_quality_model") =>
-        // Freeze the LM quality model from a reference corpus — the
-        // scheduled retrain feeding curate_ingest's gate
-        // (QualityModel.build; immutable version dir + overwrite-rename
-        // pointer flip, --retain N predecessors kept for readers).
-        val data = opts.getOrElse("data", sys.error("--data <sf dir> required"))
-        val model = opts.getOrElse("model", sys.error("--model <dir> required"))
-        val retain = opts.getOrElse("retain", "1").toInt
-        graft.operators.QualityModel.build(
-          spark,
-          spark.read.parquet(s"$data/documents.parquet"),
-          "doc_id",
-          "text",
-          model,
-          retain
-        )
-        println(s"[maintenance] quality model frozen from $data into $model")
-      case Some("build_bpe_model") =>
-        // Freeze a BPE merge table from a reference corpus
-        // (Bpe.buildModel — same versioned-pointer serving protocol as
-        // the quality model). A frozen tokenizer keeps BPE token
-        // counts stable across a crawl.
-        val data = opts.getOrElse("data", sys.error("--data <sf dir> required"))
-        val model = opts.getOrElse("model", sys.error("--model <dir> required"))
-        val merges = opts.getOrElse("merges", "256").toInt
-        val minCount = opts.getOrElse("min_count", "1").toLong
-        val retain = opts.getOrElse("retain", "1").toInt
-        // --driver_max_chars: the trainer-path threshold (chars of
-        // pruned histogram the driver will hold); 0 forces the
-        // distributed per-round loop.
-        val dmc = opts.getOrElse("driver_max_chars", (16L << 20).toString).toLong
-        graft.operators.Bpe.buildModel(
-          spark,
-          spark.read.parquet(s"$data/documents.parquet"),
-          "text",
-          model,
-          merges,
-          minCount,
-          retain,
-          dmc
-        )
-        println(s"[maintenance] BPE model ($merges merges) frozen from $data into $model")
-      case Some("bpe_segment") =>
-        // Score a batch with a frozen tokenizer: per-doc whitespace vs
-        // BPE token counts (Bpe.segmentCountsFrozen) — the counts a
-        // pack-budget loop meters with (pack_ingest on n_bpe_tokens
-        // via Packing.layoutWeighted).
-        val batchPath = opts.getOrElse("batch", sys.error("--batch <parquet dir> required"))
-        val model = opts.getOrElse("model", sys.error("--model <dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <dir> required"))
-        graft.operators.Bpe
-          .segmentCountsFrozen(spark.read.parquet(batchPath), "doc_id", "text", model)
-          .write
-          .mode("overwrite")
-          .parquet(out)
-        println(s"[maintenance] BPE segment counts: $batchPath scored against $model -> $out")
-      case Some("curate_ingest") =>
-        // Incremental curation of one crawl batch against persistent
-        // state (Pipeline.curateIngest): frozen-LM gate -> span clean
-        // vs the durable span-hash state -> min-token floor ->
-        // cross-batch exact dedup. Batch parquet shape: (doc_id, text,
-        // ...); exactly-once via --applied_id (replays converge); same
-        // doc-disjointness contract as dup_spans.
-        val batchPath = opts.getOrElse("batch", sys.error("--batch <parquet dir> required"))
-        val model = opts.getOrElse("model", sys.error("--model <dir> required"))
-        val spanState = opts.getOrElse("span_state", sys.error("--span_state <dir> required"))
-        val index = opts.getOrElse("index", sys.error("--index <dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <dir> required"))
-        val applied = opts.getOrElse("applied_id", sys.error("--applied_id <n> required")).toLong
-        val minKeep = opts.getOrElse("min_keep_tokens", "1").toInt
-        val (nIn, nOut) = Pipeline.curateIngest(
-          spark,
-          spark.read.parquet(batchPath),
-          model,
-          spanState,
-          index,
-          out,
-          applied,
-          minKeep
-        )
-        println(s"[maintenance] curate ingest batch $applied: $nIn -> $nOut docs into $out")
-      case Some("curate_stream") =>
-        // Streaming curation over arriving document JSON files: the
-        // curate_ingest composition per micro-batch, foreachBatch ids
-        // keying every stage's exactly-once machinery
-        // (StreamingPipeline.curateIngestStream). Document JSON shape:
-        // {"doc_id": long, "text": string}; same doc-disjointness
-        // contract as dup_spans across files.
-        val raw = opts.getOrElse("raw", sys.error("--raw <json dir> required"))
-        val model = opts.getOrElse("model", sys.error("--model <dir> required"))
-        val spanState = opts.getOrElse("span_state", sys.error("--span_state <dir> required"))
-        val index = opts.getOrElse("index", sys.error("--index <dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <dir> required"))
-        val ckpt = opts.getOrElse("checkpoint", sys.error("--checkpoint <dir> required"))
-        val minKeep = opts.getOrElse("min_keep_tokens", "1").toInt
-        graft.streaming.StreamingPipeline
-          .curateIngestStream(
-            spark, raw, model, spanState, index, out, ckpt,
-            graft.schemas.Schemas.documentIngest, minKeep
-          )
-          .awaitTermination()
-        println(s"[maintenance] curate stream drained $raw into $out")
-      case Some("pack_stream") =>
-        // Streaming incremental packing over arriving document JSON
-        // files: packIngest per micro-batch, manifests batch-keyed
-        // (StreamingPipeline.packIngestStream). Document JSON shape:
-        // {"doc_id": long, "text": string}.
-        val raw = opts.getOrElse("raw", sys.error("--raw <json dir> required"))
-        val state = opts.getOrElse("state", sys.error("--state <dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <manifest dir> required"))
-        val ckpt = opts.getOrElse("checkpoint", sys.error("--checkpoint <dir> required"))
-        val budget = opts.getOrElse("budget", "2048").toLong
-        val shards = opts.getOrElse("shards", "8").toInt
-        graft.streaming.StreamingPipeline
-          .packIngestStream(
-            spark, raw, state, out, ckpt,
-            graft.schemas.Schemas.documentIngest, budget, shards
-          )
-          .awaitTermination()
-        println(s"[maintenance] pack stream drained $raw into $out")
-      case Some("pack_stream_by") =>
-        // Streaming stratified packing over arriving document JSON
-        // files (StreamingPipeline.packIngestStreamBy). JSON shape:
-        // {"doc_id": long, "source": string, "text": string}.
-        val raw = opts.getOrElse("raw", sys.error("--raw <json dir> required"))
-        val state = opts.getOrElse("state", sys.error("--state <dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <manifest dir> required"))
-        val ckpt = opts.getOrElse("checkpoint", sys.error("--checkpoint <dir> required"))
-        val group = opts.getOrElse("group_col", "source")
-        val budget = opts.getOrElse("budget", "2048").toLong
-        val shards = opts.getOrElse("shards", "8").toInt
-        graft.streaming.StreamingPipeline
-          .packIngestStreamBy(
-            spark, raw, state, out, ckpt,
-            graft.schemas.Schemas.documentIngestBy, group, budget, shards
-          )
-          .awaitTermination()
-        println(s"[maintenance] stratified pack stream drained $raw into $out")
-      case Some("fertility_stream") =>
-        // Streaming fertility-drift telemetry under a frozen BPE model
-        // (StreamingPipeline.fertilityStream): per arriving document
-        // JSON file, per-source whitespace vs model token totals as
-        // batch-keyed rows. JSON shape: {"doc_id","source","text"}.
-        val raw = opts.getOrElse("raw", sys.error("--raw <json dir> required"))
-        val model = opts.getOrElse("model", sys.error("--model <bpe model dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <telemetry dir> required"))
-        val ckpt = opts.getOrElse("checkpoint", sys.error("--checkpoint <dir> required"))
-        graft.streaming.StreamingPipeline
-          .fertilityStream(spark, raw, model, out, ckpt, graft.schemas.Schemas.documentIngestBy)
-          .awaitTermination()
-        println(s"[maintenance] fertility stream drained $raw into $out")
-      case Some("decontam_stream") =>
-        // Streaming decontamination against a frozen eval benchmark
-        // (StreamingPipeline.decontamStream): per arriving document
-        // JSON file, the per-doc eval-overlap report as batch-keyed
-        // telemetry. JSON shape: {"doc_id","text"}.
-        val raw = opts.getOrElse("raw", sys.error("--raw <json dir> required"))
-        val evalPath = opts.getOrElse("eval", sys.error("--eval <parquet dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <telemetry dir> required"))
-        val ckpt = opts.getOrElse("checkpoint", sys.error("--checkpoint <dir> required"))
-        val threshold = opts.getOrElse("threshold", "0.5").toDouble
-        graft.streaming.StreamingPipeline
-          .decontamStream(
-            spark, raw, evalPath, out, ckpt, graft.schemas.Schemas.documentIngest, threshold
-          )
-          .awaitTermination()
-        println(s"[maintenance] decontam stream drained $raw into $out")
-      case Some("decontam_fuzzy_stream") =>
-        // The pair-attributed near-dup ingest gate
-        // (StreamingPipeline.decontamFuzzyStream): per arriving document
-        // JSON file, the per-doc LSH eval-overlap report as batch-keyed
-        // telemetry. JSON shape: {"doc_id","text"}.
-        val raw = opts.getOrElse("raw", sys.error("--raw <json dir> required"))
-        val evalPath = opts.getOrElse("eval", sys.error("--eval <parquet dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <telemetry dir> required"))
-        val ckpt = opts.getOrElse("checkpoint", sys.error("--checkpoint <dir> required"))
-        val threshold = opts.getOrElse("threshold", "0.5").toDouble
-        val nHashes = opts.getOrElse("nhashes", "16").toInt
-        val bandRows = opts.getOrElse("bandrows", "4").toInt
-        graft.streaming.StreamingPipeline
-          .decontamFuzzyStream(
-            spark, raw, evalPath, out, ckpt, graft.schemas.Schemas.documentIngest, threshold,
-            nHashes, bandRows
-          )
-          .awaitTermination()
-        println(s"[maintenance] decontam fuzzy stream drained $raw into $out")
-      case Some("pack_curated_stream") =>
-        // The curation→packing chain consumer: tail a curate_stream /
-        // curate_ingest corpus' batch-keyed parquet partitions and lay
-        // each newly accepted file out after everything already packed
-        // (StreamingPipeline.packCuratedStream). Run AFTER the
-        // curator's drain (or lagged one sealed batch behind it — see
-        // the method's replay note).
-        val curated = opts.getOrElse("curated", sys.error("--curated <corpus dir> required"))
-        val state = opts.getOrElse("state", sys.error("--state <dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <manifest dir> required"))
-        val ckpt = opts.getOrElse("checkpoint", sys.error("--checkpoint <dir> required"))
-        val budget = opts.getOrElse("budget", "2048").toLong
-        val shards = opts.getOrElse("shards", "8").toInt
-        graft.streaming.StreamingPipeline
-          .packCuratedStream(spark, curated, state, out, ckpt, budget, shards)
-          .awaitTermination()
-        println(s"[maintenance] pack curated stream drained $curated into $out")
-      case Some("pack_slices") =>
-        // Loader-side pack materialization from an incremental manifest
-        // dir (Packing.materializePacks): the offset state prunes the
-        // batch-keyed manifest dirs to those overlapping the requested
-        // pack window BEFORE any file is opened, so a training job can
-        // read packs [from, to) at O(packs x budget) exploded tokens
-        // whatever the crawl age. Docs parquet shape: (doc_id, text).
-        // --budget defaults to (and must agree with) the state's
-        // recorded sidecar; --mask excludes retired packs
-        // (retire_packs' decision file).
-        val state = opts.getOrElse("state", sys.error("--state <dir> required"))
-        val manifests = opts.getOrElse("manifests", sys.error("--manifests <dir> required"))
-        val docsPath = opts.getOrElse("docs", sys.error("--docs <parquet dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val from = opts.getOrElse("from", sys.error("--from <pack id> required")).toLong
-        val to = opts.getOrElse("to", sys.error("--to <pack id excl> required")).toLong
-        val budget = resolveBudget(spark, state, opts)
-        val slices = graft.operators.Packing
-          .materializePacks(
-            spark,
-            state,
-            manifests,
-            spark.read.parquet(docsPath),
-            "doc_id",
-            "text",
-            from,
-            to,
-            budget,
-            mask = opts.get("mask").map(spark.read.parquet)
-          )
-        val n = Pipeline.writeCounted(slices, out)
-        println(s"[maintenance] pack slices [$from, $to): $n token rows from $manifests into $out")
-      case Some("decontaminate") =>
-        // Benchmark decontamination (Dedup.decontamPurge): report every
-        // train doc overlapping the eval corpus' shingle set; with
-        // --purged, also write the train corpus minus the contaminated
-        // ids. Both parquets need (doc_id, text).
-        val trainPath = opts.getOrElse("train", sys.error("--train <parquet dir> required"))
-        val evalPath = opts.getOrElse("eval", sys.error("--eval <parquet dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val threshold = opts.getOrElse("threshold", "0.5").toDouble
-        val train = spark.read.parquet(trainPath)
-        val report = graft.operators.Dedup
-          .decontamPurge(train, spark.read.parquet(evalPath), "doc_id", "text", threshold)
-          .localCheckpoint() // one computation serves the report write AND the purge anti-join
-        val n = Pipeline.writeCounted(report, out)
-        opts.get("purged").foreach { p =>
-          val kept = train.join(
-            report.filter(org.apache.spark.sql.functions.col("contaminated"))
-              .select(org.apache.spark.sql.functions.col("doc_id")),
-            Seq("doc_id"),
-            "left_anti"
-          )
-          val k = Pipeline.writeCounted(kept, p)
-          println(s"[maintenance] decontaminate: kept $k train docs into $p")
-        }
-        println(s"[maintenance] decontaminate: $n overlapping train docs reported at $out")
-      case Some("decontam_fuzzy") =>
-        // Pair-attributed near-dup decontamination (Dedup.decontamFuzzy):
-        // per train doc, the eval items it MinHash-LSH-collides with and
-        // the worst verified whole-set Jaccard. The high-precision triage
-        // for `decontaminate`'s pooled-overlap report (which dominates on
-        // recall but cannot attribute); same --purged anti-join contract.
-        val trainPath = opts.getOrElse("train", sys.error("--train <parquet dir> required"))
-        val evalPath = opts.getOrElse("eval", sys.error("--eval <parquet dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val threshold = opts.getOrElse("threshold", "0.5").toDouble
-        val nHashes = opts.getOrElse("nhashes", "16").toInt
-        val bandRows = opts.getOrElse("bandrows", "4").toInt
-        val train = spark.read.parquet(trainPath)
-        val report = graft.operators.Dedup
-          .decontamFuzzy(train, spark.read.parquet(evalPath), "doc_id", "text", threshold, nHashes, bandRows)
-          .localCheckpoint() // one computation serves the report write AND the purge anti-join
-        val n = Pipeline.writeCounted(report, out)
-        opts.get("purged").foreach { p =>
-          val kept = train.join(
-            report.filter(org.apache.spark.sql.functions.col("contaminated"))
-              .select(org.apache.spark.sql.functions.col("doc_id")),
-            Seq("doc_id"),
-            "left_anti"
-          )
-          val k = Pipeline.writeCounted(kept, p)
-          println(s"[maintenance] decontam_fuzzy: kept $k train docs into $p")
-        }
-        println(s"[maintenance] decontam_fuzzy: $n band-colliding train docs reported at $out")
-      case Some("decontam_semantic") =>
-        // The embedding tier (Dedup.decontamSemantic): per train
-        // vector, its best-cosine eval match and verdict. Both
-        // parquets need (vec_id, embedding); same --purged anti-join
-        // contract as the lexical tiers.
-        val trainPath = opts.getOrElse("train", sys.error("--train <parquet dir> required"))
-        val evalPath = opts.getOrElse("eval", sys.error("--eval <parquet dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val threshold = opts.getOrElse("threshold", "0.5").toDouble
-        val train = spark.read.parquet(trainPath)
-        val report = graft.operators.Dedup
-          .decontamSemantic(train, spark.read.parquet(evalPath), "vec_id", "embedding", threshold)
-          .localCheckpoint() // one computation serves the report write AND the purge anti-join
-        val n = Pipeline.writeCounted(report, out)
-        opts.get("purged").foreach { p =>
-          val kept = train.join(
-            report.filter(org.apache.spark.sql.functions.col("contaminated"))
-              .select(org.apache.spark.sql.functions.col("vec_id")),
-            Seq("vec_id"),
-            "left_anti"
-          )
-          val k = Pipeline.writeCounted(kept, p)
-          println(s"[maintenance] decontam_semantic: kept $k train vectors into $p")
-        }
-        println(s"[maintenance] decontam_semantic: $n train vectors audited at $out")
-      case Some("decontam_semantic_stream") =>
-        // The embedding tier's ingest gate
-        // (StreamingPipeline.decontamSemanticStream): per arriving
-        // embedding JSON file, each vector's best-cosine eval match as
-        // batch-keyed telemetry. JSON shape: {"vec_id","embedding"}.
-        val raw = opts.getOrElse("raw", sys.error("--raw <json dir> required"))
-        val evalPath = opts.getOrElse("eval", sys.error("--eval <parquet dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <telemetry dir> required"))
-        val ckpt = opts.getOrElse("checkpoint", sys.error("--checkpoint <dir> required"))
-        val threshold = opts.getOrElse("threshold", "0.5").toDouble
-        graft.streaming.StreamingPipeline
-          .decontamSemanticStream(spark, raw, evalPath, out, ckpt, threshold)
-          .awaitTermination()
-        println(s"[maintenance] decontam semantic stream drained $raw into $out")
-      case Some("retire_packs") =>
-        // APPLY decontamination to an already-emitted pack space:
-        // map the contaminated doc ids (--contam: a decontaminate
-        // report — rows with a `contaminated` column are filtered —
-        // or any bare doc_id parquet) onto the pack manifests
-        // (Packing.contamAudit: pure manifest arithmetic, no text
-        // read), decide retirement per pack (Packing.retirePacks;
-        // --threshold = max tolerated contaminated-position fraction,
-        // default 0 — any contamination retires), and write the mask
-        // side-file pack_slices/pack_export honor via --mask. Packs
-        // are never re-packed: emitted ids are immutable under a live
-        // trainer, so contamination handling is an exclusion layer.
-        val manifests = opts.getOrElse("manifests", sys.error("--manifests <dir> required"))
-        val contamPath = opts.getOrElse("contam", sys.error("--contam <parquet dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <mask parquet dir> required"))
-        val budget = resolveBudget(spark, manifests, opts)
-        val threshold = opts.getOrElse("threshold", "0.0").toDouble
-        val contamDf = spark.read.parquet(contamPath)
-        val ids =
-          if (contamDf.columns.contains("contaminated"))
-            contamDf
-              .filter(org.apache.spark.sql.functions.col("contaminated"))
-              .select(org.apache.spark.sql.functions.col("doc_id"))
-          else contamDf.select(org.apache.spark.sql.functions.col("doc_id"))
-        val man = spark.read.parquet(manifests)
-        // Stratified interlock: packIngestBy manifests number packs PER
-        // DOMAIN — auditing by pack_id alone would conflate domains and
-        // a pack_id-keyed mask would retire every domain's pack k. Any
-        // column beyond the global-stream manifest shape must be named
-        // as the grouping via --group_col (the mask is then keyed
-        // (group, pack_id)).
-        val groupCols = opts.get("group_col").map(_.split(",").toSeq).getOrElse(Nil)
-        val globalShape =
-          Set("doc_id", "shard", "start_tok", "n_toks", "first_pack", "last_pack", "n_packs", "pack_batch")
-        val extra = man.columns.filterNot(c => globalShape.contains(c) || groupCols.contains(c))
-        require(
-          extra.isEmpty,
-          s"retire_packs: manifest carries non-global columns ${extra.mkString(",")} — a stratified " +
-            "(per-domain) pack space numbers packs per domain; pass --group_col <col> so the mask is " +
-            "keyed (group, pack_id) instead of silently conflating domains"
-        )
-        val audit = graft.operators.Packing
-          .contamAudit(man, ids, "doc_id", budget, groupCols)
-        val mask = graft.operators.Packing.retirePacks(audit, budget, threshold, groupCols)
-        val n = Pipeline.writeCounted(mask, out)
-        val retired = spark.read
-          .parquet(out)
-          .filter(org.apache.spark.sql.functions.col("retired"))
-          .count()
-        println(
-          s"[maintenance] retire packs: $n contaminated pack(s) audited, $retired retired " +
-            s"(threshold $threshold) -> mask at $out"
-        )
-      case Some("mask_intervals") =>
-        // Position-level loss masks (Packing.maskIntervals): the
-        // surgical alternative retire_packs composes with — per
-        // (contaminated doc, pack it overlaps), the pack-local
-        // half-open token interval the trainer zeroes loss on.
-        // Same --contam flexibility and stratified --group_col
-        // interlock as retire_packs; the output is a
-        // contamination-sized side-file, never a re-pack.
-        val manifests = opts.getOrElse("manifests", sys.error("--manifests <dir> required"))
-        val contamPath = opts.getOrElse("contam", sys.error("--contam <parquet dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <mask parquet dir> required"))
-        val budget = resolveBudget(spark, manifests, opts)
-        val contamDf = spark.read.parquet(contamPath)
-        val ids =
-          if (contamDf.columns.contains("contaminated"))
-            contamDf
-              .filter(org.apache.spark.sql.functions.col("contaminated"))
-              .select(org.apache.spark.sql.functions.col("doc_id"))
-          else contamDf.select(org.apache.spark.sql.functions.col("doc_id"))
-        val man = spark.read.parquet(manifests)
-        val groupCols = opts.get("group_col").map(_.split(",").toSeq).getOrElse(Nil)
-        val globalShape =
-          Set("doc_id", "shard", "start_tok", "n_toks", "first_pack", "last_pack", "n_packs", "pack_batch")
-        val extra = man.columns.filterNot(c => globalShape.contains(c) || groupCols.contains(c))
-        require(
-          extra.isEmpty,
-          s"mask_intervals: manifest carries non-global columns ${extra.mkString(",")} — a stratified " +
-            "(per-domain) pack space numbers packs per domain; pass --group_col <col> so masks are " +
-            "keyed (group, pack_id) instead of silently conflating domains"
-        )
-        val masks = graft.operators.Packing
-          .maskIntervals(man, ids, "doc_id", budget, groupCols)
-        val n = Pipeline.writeCounted(masks, out)
-        println(s"[maintenance] mask intervals: $n pack-local loss-mask interval(s) -> $out")
-      case Some("build_vocab") =>
-        // Freeze the dense-id dictionary (Vocab.build) from a corpus
-        // parquet (needs a `text` column): the id space every integer
-        // export encodes under. Train once, serve frozen — the same
-        // posture as build_bpe_model, minus versioning (the table is a
-        // pure function of the corpus; re-running on the same corpus
-        // rewrites identical rows).
-        val docsPath = opts.getOrElse("docs", sys.error("--docs <parquet dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val parts = opts.getOrElse("parts", "32").toInt
-        val vocab = graft.operators.Vocab
-          .build(spark.read.parquet(docsPath).select(org.apache.spark.sql.functions.col("text")), "text", parts)
-        val n = Pipeline.writeCounted(vocab, out)
-        println(s"[maintenance] vocab: $n tokens from $docsPath into $out")
-      case Some("pack_export") =>
-        // The trainer hand-off: materialize packs [from, to) from the
-        // incremental manifests (state-pruned, like pack_slices),
-        // encode under the FROZEN vocab written by build_vocab, roll
-        // to one (pack_id, positions, token_ids) row per pack, and
-        // export hash-sharded (Scale.exportShards: shard =
-        // hash(pack_id) % n — stable shard contents under any input
-        // partitioning, manifest computed from landed data). A
-        // training job reads `shard=k/` and memory-maps its rows.
-        val state = opts.getOrElse("state", sys.error("--state <dir> required"))
-        val manifests = opts.getOrElse("manifests", sys.error("--manifests <dir> required"))
-        val docsPath = opts.getOrElse("docs", sys.error("--docs <parquet dir> required"))
-        val vocabPath = opts.getOrElse("vocab", sys.error("--vocab <parquet dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val from = opts.getOrElse("from", sys.error("--from <pack id> required")).toLong
-        val to = opts.getOrElse("to", sys.error("--to <pack id excl> required")).toLong
-        val budget = resolveBudget(spark, state, opts)
-        val shards = opts.getOrElse("shards", "8").toInt
-        val maskDf = opts.get("mask").map(spark.read.parquet)
-        val unkId = opts.get("unk_id").map(_.toLong)
-        val slices = graft.operators.Packing
-          .materializePacks(
-            spark,
-            state,
-            manifests,
-            spark.read.parquet(docsPath),
-            "doc_id",
-            "text",
-            from,
-            to,
-            budget,
-            mask = maskDf
-          )
-          .localCheckpoint() // one computation serves the OOV probe AND the export
-        val vocabDf = spark.read.parquet(vocabPath)
-        // OOV interlock: a token the frozen vocab doesn't know would
-        // otherwise VANISH from the export (inner-join drop), leaving
-        // only a silent hole in the positions array — with a vocab
-        // frozen on an older corpus snapshot that is invisible data
-        // loss. Count the misses; refuse unless the caller names the
-        // reserved unk id the gaps should map to.
-        val nOov = slices
-          .join(
-            vocabDf.select(org.apache.spark.sql.functions.col("token")),
-            Seq("token"),
-            "left_anti"
-          )
-          .count()
-        require(
-          nOov == 0L || unkId.isDefined,
-          s"pack export: $nOov token position(s) in [$from, $to) are OOV under $vocabPath - " +
-            "pass --unk_id <reserved id> to map them explicitly, or rebuild the vocab on the current corpus"
-        )
-        if (nOov > 0L)
-          println(s"[maintenance] pack export: $nOov OOV position(s) mapped to unk id ${unkId.get}")
-        val arrays = graft.operators.Vocab
-          .packArrays(slices, vocabDf, unkId)
-        val manifest = graft.operators.Scale.exportShards(arrays, "pack_id", shards, out)
-        val landed = manifest.agg(org.apache.spark.sql.functions.sum("n_rows")).head().getLong(0)
-        // holes accounted: a masked export states exactly which pack
-        // ids of the window were withheld, so the trainer side can
-        // reconcile landed == (to - from) - retired instead of
-        // guessing at a silent shortfall.
-        maskDf.foreach { mk =>
-          val retired = mk
-            .filter(org.apache.spark.sql.functions.col("retired"))
-            .filter(org.apache.spark.sql.functions.col("pack_id") >= from &&
-              org.apache.spark.sql.functions.col("pack_id") < to)
-            .count()
-          println(s"[maintenance] pack export: $retired retired pack(s) withheld from [$from, $to)")
-        }
-        // Ship the window's loss-mask intervals (a mask_intervals
-        // side-file) WITH the export, under an underscore dir root
-        // readers ignore — the trainer finds packs and masks in one
-        // landing. Intervals for retired (withheld) packs are dropped:
-        // they have no exported row to mask.
-        opts.get("loss_masks").foreach { lm =>
-          val windowed = spark.read
-            .parquet(lm)
-            .filter(org.apache.spark.sql.functions.col("pack_id") >= from &&
-              org.apache.spark.sql.functions.col("pack_id") < to)
-          val shipped = maskDf match {
-            case Some(mk) =>
-              windowed.join(
-                mk.filter(org.apache.spark.sql.functions.col("retired"))
-                  .select(org.apache.spark.sql.functions.col("pack_id")),
-                Seq("pack_id"),
-                "left_anti"
-              )
-            case None => windowed
-          }
-          val nm = Pipeline.writeCounted(shipped, s"$out/_loss_masks")
-          val tot = spark.read
-            .parquet(s"$out/_loss_masks")
-            .agg(
-              org.apache.spark.sql.functions.coalesce(
-                org.apache.spark.sql.functions.sum("n_mask_tokens"),
-                org.apache.spark.sql.functions.lit(0L)
-              )
-            )
-            .head()
-            .getLong(0)
-          println(
-            s"[maintenance] pack export: $nm loss-mask interval(s) ($tot tokens) shipped at $out/_loss_masks"
-          )
-        }
-        println(s"[maintenance] pack export [$from, $to): $landed packs in $shards shards at $out")
-      case Some("release") =>
-        // The one-command PRETRAINING DATA RELEASE: raw corpus dir ->
-        // trainer-ready shards, by composing the verbs a release
-        // pipeline runs stepwise — curate (quality gate -> span clean
-        // -> floor -> exact dedup), decontaminate against the eval
-        // corpus (report + purge), pack the survivors (batch 0 of an
-        // incremental pack space, so later crawls APPEND with the same
-        // state), freeze the vocab, export every emitted pack
-        // hash-sharded, and (optionally) write the multi-epoch visit
-        // schedule. Each step is the EXISTING verb called recursively
-        // — its interlocks (budget sidecar, OOV refusal, cardinality
-        // guards) all fire here too, and the layout under --out is
-        // exactly what the stepwise verbs would produce:
-        //   curated/ decontam_report/ clean/ pack_state/ manifests/
-        //   vocab/ shards/ [schedule/] [provenance/] _release.json
-        // _release.json carries the per-stage counts a release audit
-        // reads (docs in -> curated -> clean, packs, vocab size,
-        // landed rows) — all derived from landed data, not from
-        // in-flight counters.
-        val data = opts.getOrElse("data", sys.error("--data <sf dir with documents.parquet> required"))
-        val evalPath = opts.getOrElse("eval", sys.error("--eval <parquet dir> required"))
-        val root = opts.getOrElse("out", sys.error("--out <release root> required"))
-        requireFreshReleaseRoot(spark, root, "release")
-        val budget = opts.getOrElse("budget", "2048")
-        val shards = opts.getOrElse("shards", "8")
-        val exportShards = opts.getOrElse("export_shards", "8")
-        val minKeep = opts.getOrElse("min_keep_tokens", "1")
-        val threshold = opts.getOrElse("threshold", "0.5")
-        val gateMilliBits = opts.getOrElse("gate_millibits", "4400")
-        val spanClean = opts.getOrElse("span_clean", "true")
-        val unkArgs = opts.get("unk_id").toSeq.flatMap(u => Seq("--unk_id", u))
-        timedStage("release", "curate") { run(
-          Array("--maintenance", "curate", "--data", data, "--out", s"$root/curated",
-            "--shards", shards, "--min_keep_tokens", minKeep,
-            "--gate_millibits", gateMilliBits, "--span_clean", spanClean),
-          spark
-        ) }
-        timedStage("release", "decontaminate") { run(
-          Array("--maintenance", "decontaminate", "--train", s"$root/curated", "--eval", evalPath,
-            "--out", s"$root/decontam_report", "--purged", s"$root/clean", "--threshold", threshold),
-          spark
-        ) }
-        // Optional DSIR stage: with --dsir_target (a curated seed
-        // corpus) + --dsir_keep K, the release packs only the K most
-        // target-like clean documents — quality-targeted releases via
-        // the existing dsir_weights/dsir_score verbs (the _buckets
-        // sidecar interlock fires here too). NB the selection can only
-        // keep docs that HAVE a bigram (dsir_score's documented rule);
-        // the audit manifest records the selected count, so a
-        // surprising cut is visible, never silent.
-        val packInput = opts.get("dsir_target") match {
-          case Some(tgt) =>
-            val keep = opts.getOrElse(
-              "dsir_keep",
-              sys.error("--dsir_keep <k> required with --dsir_target")
-            )
-            timedStage("release", "dsir_select") {
-              run(
-                Array("--maintenance", "dsir_weights", "--data", s"$root/clean",
-                  "--target", tgt, "--out", s"$root/dsir_weights") ++
-                  opts.get("dsir_buckets").toSeq.flatMap(b => Seq("--buckets", b)),
-                spark
-              )
-              run(
-                Array("--maintenance", "dsir_score", "--data", s"$root/clean",
-                  "--weights", s"$root/dsir_weights", "--out", s"$root/dsir_scores",
-                  "--k", keep),
-                spark
-              )
-              import org.apache.spark.sql.functions.{col => cc}
-              val kept = spark.read.parquet(s"$root/dsir_scores").select(cc("doc_id"))
-              Pipeline.writeCounted(
-                spark.read.parquet(s"$root/clean").join(kept, Seq("doc_id"), "left_semi"),
-                s"$root/selected"
-              )
-            }
-            s"$root/selected"
-          case None => s"$root/clean"
-        }
-        timedStage("release", "pack_ingest") { run(
-          Array("--maintenance", "pack_ingest", "--batch", packInput, "--state", s"$root/pack_state",
-            "--out", s"$root/manifests", "--applied_id", "0", "--budget", budget, "--shards", shards),
-          spark
-        ) }
-        timedStage("release", "build_vocab") { run(
-          Array("--maintenance", "build_vocab", "--docs", packInput, "--out", s"$root/vocab"),
-          spark
-        ) }
-        import org.apache.spark.sql.functions.{col => c, max => mx, count => cnt, lit, sum => sm}
-        val man = spark.read.parquet(s"$root/manifests")
-        val lastRow = man.agg(mx(c("last_pack"))).head()
-        val nPacks = if (lastRow.isNullAt(0)) 0L else lastRow.getLong(0) + 1L
-        timedStage("release", "pack_export") { run(
-          Array("--maintenance", "pack_export", "--state", s"$root/pack_state",
-            "--manifests", s"$root/manifests", "--docs", packInput, "--vocab", s"$root/vocab",
-            "--out", s"$root/shards", "--from", "0", "--to", nPacks.toString,
-            "--shards", exportShards) ++ unkArgs,
-          spark
-        ) }
-        // post-landing integrity: the release's own shards re-read and
-        // digest-compared against the landed manifest before anything
-        // downstream trusts them (default on; --verify false skips)
-        if (!opts.get("verify").contains("false"))
-          timedStage("release", "verify_export") {
-            run(Array("--maintenance", "verify_export", "--path", s"$root/shards"), spark)
-          }
-        opts.get("epochs").foreach { e =>
-          run(
-            Array("--maintenance", "pack_epochs", "--manifests", s"$root/manifests",
-              "--out", s"$root/schedule", "--epochs", e,
-              "--seed", opts.getOrElse("seed", "release")),
-            spark
-          )
-        }
-        // Optional governance side-file: per-(pack, source) doc counts
-        // and exact token weights over the emitted pack space — the
-        // curated corpus keeps `source`, so the attribute table is the
-        // clean dir itself (provenance projects id + attrs only).
-        if (opts.get("provenance").contains("true")) {
-          run(
-            Array("--maintenance", "pack_provenance", "--manifests", s"$root/manifests",
-              "--attrs", packInput, "--attr_cols", "source",
-              "--out", s"$root/provenance"),
-            spark
-          )
-        }
-        // Release audit manifest — every number re-derived from what
-        // actually LANDED on disk.
-        val nIn = spark.read.parquet(s"$data/documents.parquet").count()
-        val nCurated = spark.read.parquet(s"$root/curated").count()
-        val nContam = spark.read
-          .parquet(s"$root/decontam_report")
-          .filter(c("contaminated"))
-          .count()
-        val nClean = spark.read.parquet(s"$root/clean").count()
-        val nVocab = spark.read.parquet(s"$root/vocab").count()
-        val totToks = man.agg(sm(c("n_toks"))).head().getLong(0)
-        val landedPacks = spark.read.parquet(s"$root/shards").agg(cnt(lit(1))).head().getLong(0)
-        // with the DSIR stage, the packed-corpus count rides along so a
-        // surprising selection cut is visible in the audit
-        val selectedField = opts.get("dsir_target") match {
-          case Some(_) => s""" "dsir_selected": ${spark.read.parquet(s"$root/selected").count()},"""
-          case None    => ""
-        }
-        val manifestJson =
-          s"""{"docs_in": $nIn, "curated": $nCurated, "contaminated": $nContam, "clean": $nClean,$selectedField
-             | "total_tokens": $totToks, "budget": $budget, "n_packs": $nPacks,
-             | "vocab_size": $nVocab, "landed_packs": $landedPacks,
-             | "export_shards": $exportShards}""".stripMargin.replace("\n", "")
-        writeManifest(spark, root, "_release.json", manifestJson)
-        println(
-          s"[maintenance] release at $root: $nIn docs -> $nCurated curated -> $nClean clean " +
-            s"($nContam contaminated purged) -> $nPacks packs ($totToks tokens) -> " +
-            s"$landedPacks exported in $exportShards shards, vocab $nVocab"
-        )
-      case Some("sft_release") =>
-        // The one-command SFT DATA RELEASE: a conversation-turns table
-        // -> trainer-ready packed shards whose `_role_masks` sidecar
-        // selects EXACTLY the train-role tokens. Composition, each
-        // step the existing verb (every interlock fires here too):
-        // render conversations to conv-atomic documents (turns joined
-        // by single spaces, ordered by the turn key) -> pack_ingest
-        // them as batch 0 of an incremental pack space -> sft_masks
-        // projected through those manifests -> build_vocab ->
-        // pack_export over every emitted pack. Layout under --out:
-        //   rendered/ pack_state/ manifests/ role_masks/ vocab/
-        //   shards/ (with shards/_role_masks) _sft_release.json
-        //
-        // `_role_masks` carries KEEP-loss intervals (positions the
-        // trainer computes loss ON — the train_role's tokens), the
-        // POLARITY OPPOSITE of pack_export's decontamination
-        // `_loss_masks` (positions zeroed). The rendering contract
-        // that makes the coordinates line up: tokens are whitespace
-        // tokens, turns contribute their own split counts, so content
-        // must not be empty or carry leading/trailing whitespace —
-        // enforced loudly up front (a violating turn would shift
-        // every later offset in its conversation).
-        import org.apache.spark.sql.functions.{
-          array_join, array_sort, col, collect_list, lit, struct, sum, transform
-        }
-        val turnsPath = opts.getOrElse("turns", sys.error("--turns <parquet> required"))
-        val root = opts.getOrElse("out", sys.error("--out <release root> required"))
-        requireFreshReleaseRoot(spark, root, "sft_release")
-        val budget = opts.getOrElse("budget", "2048")
-        val shards = opts.getOrElse("shards", "8")
-        val exportShards = opts.getOrElse("export_shards", "8")
-        val trainRole = opts.getOrElse("train_role", "assistant")
-        val convCol = opts.getOrElse("conv_col", "conv_id")
-        val turnCol = opts.getOrElse("turn_col", "turn_key")
-        val roleCol = opts.getOrElse("role_col", "role")
-        val contentCol = opts.getOrElse("content_col", "content")
-        val unkArgs = opts.get("unk_id").toSeq.flatMap(u => Seq("--unk_id", u))
-        val turns = spark.read.parquet(turnsPath)
-        val nBadWs = turns
-          .filter(col(contentCol).rlike("(^\\s)|(\\s$)") || col(contentCol) === "")
-          .count()
-        require(
-          nBadWs == 0L,
-          s"sft_release: $nBadWs turn(s) have empty content or leading/trailing whitespace — " +
-            "the render joins turns with single spaces, so such a turn would shift every later " +
-            "mask offset in its conversation; trim or drop them upstream"
-        )
-        // TREE MODE (--parent_col): the turn store is a branched tree —
-        // flatten it first with the tree_render verb (each root→leaf
-        // path becomes one synthetic conversation whose role column is
-        // the EFFECTIVE role: train-role on first-visit memberships
-        // only), then run the IDENTICAL chain over the path-turns
-        // table. The flat chain over a branched store would train
-        // nothing structurally wrong but couldn't exist (turns don't
-        // order linearly); the naive per-path flatten without
-        // first-visit masks would train every shared prefix once per
-        // leaf — the over-weighting tree_render exists to remove.
-        // Invariant the audit then shows: masked_tokens equals the
-        // train-role turns' token total COUNTED ONCE EACH, exactly as
-        // in flat mode, regardless of fan-out.
-        // The chain tuple carries the CONTENT column too: tree_render
-        // writes path_turns with canonical column names (content is
-        // literally 'content'), so a non-default --content_col must
-        // stop at the tree_render boundary — reusing the user's name
-        // downstream would throw on the canonical table.
-        val treeMode = opts.contains("parent_col")
-        val (chainTurnsPath, chainConv, chainTurn, chainRole, chainContent, chainTurns) =
-          if (treeMode) {
-            // release the walk's scratch pins once path_turns is on
-            // parquet (the dpo_release decontam lesson)
-            graft.operators.Maintenance.releasingScratchPins(spark) {
-              timedStage("sft_release", "tree_render") { run(
-                Array("--maintenance", "tree_render", "--turns", turnsPath,
-                  "--out", s"$root/path_turns", "--conv_col", convCol,
-                  "--turn_col", turnCol, "--parent_col", opts("parent_col"),
-                  "--role_col", roleCol, "--content_col", contentCol,
-                  "--train_role", trainRole) ++
-                  opts.get("max_depth").toSeq.flatMap(d => Seq("--max_depth", d)) ++
-                  // serve memberships from a durable TreeState instead of
-                  // re-running the closure (the campaign-scale posture)
-                  opts.get("paths_state").toSeq.flatMap(s => Seq("--paths_state", s)),
-                spark
-              ) }
-            }
-            (s"$root/path_turns", "doc_id", "turn_key", "role", "content",
-              spark.read.parquet(s"$root/path_turns"))
-          } else (turnsPath, convCol, turnCol, roleCol, contentCol, turns)
-        val rendered = chainTurns
-          .groupBy(col(chainConv).as("doc_id"))
-          .agg(
-            array_join(
-              transform(
-                array_sort(collect_list(struct(col(chainTurn), col(chainContent)))),
-                x => x.getField(chainContent)
-              ),
-              " "
-            ).as("text")
-          )
-        timedStage("sft_release", "render") {
-          rendered.write.mode("overwrite").parquet(s"$root/rendered")
-        }
-        timedStage("sft_release", "pack_ingest") { run(
-          Array("--maintenance", "pack_ingest", "--batch", s"$root/rendered",
-            "--state", s"$root/pack_state", "--out", s"$root/manifests",
-            "--applied_id", "0", "--budget", budget, "--shards", shards),
-          spark
-        ) }
-        timedStage("sft_release", "sft_masks") { run(
-          Array("--maintenance", "sft_masks", "--turns", chainTurnsPath,
-            "--manifests", s"$root/manifests", "--out", s"$root/role_masks",
-            "--man_id_col", "doc_id", "--conv_col", chainConv, "--turn_col", chainTurn,
-            "--role_col", chainRole, "--content_col", chainContent,
-            "--train_role", trainRole),
-          spark
-        ) }
-        timedStage("sft_release", "build_vocab") { run(
-          Array("--maintenance", "build_vocab", "--docs", s"$root/rendered",
-            "--out", s"$root/vocab"),
-          spark
-        ) }
-        val man = spark.read.parquet(s"$root/manifests")
-        val lastRow = man.agg(org.apache.spark.sql.functions.max(col("last_pack"))).head()
-        val nPacks = if (lastRow.isNullAt(0)) 0L else lastRow.getLong(0) + 1L
-        timedStage("sft_release", "pack_export") { run(
-          Array("--maintenance", "pack_export", "--state", s"$root/pack_state",
-            "--manifests", s"$root/manifests", "--docs", s"$root/rendered",
-            "--vocab", s"$root/vocab", "--out", s"$root/shards",
-            "--from", "0", "--to", nPacks.toString, "--shards", exportShards) ++ unkArgs,
-          spark
-        ) }
-        if (!opts.get("verify").contains("false"))
-          timedStage("sft_release", "verify_export") {
-            run(Array("--maintenance", "verify_export", "--path", s"$root/shards"), spark)
-          }
-        // Ship the role masks WITH the landing (underscore dir —
-        // parquet readers of shards/ ignore it).
-        val masks = spark.read.parquet(s"$root/role_masks")
-        Pipeline.writeCounted(masks, s"$root/shards/_role_masks")
-        // Audit manifest — every number from landed data. Turn counts
-        // are over the ORIGINAL turn store (in tree mode the path
-        // memberships multiply rows, but masked_tokens must still
-        // equal the original train-role turns' token total — the
-        // single-loss invariant the e2e spec checks).
-        val nTurns = turns.count()
-        val nDocs = spark.read.parquet(s"$root/rendered").count()
-        val nConvs = if (treeMode) turns.select(col(convCol)).distinct().count() else nDocs
-        val nTrainTurns = turns.filter(col(roleCol) === trainRole).count()
-        val totToks = man.agg(sum(col("n_toks"))).head().getLong(0)
-        val maskedToks = spark.read
-          .parquet(s"$root/shards/_role_masks")
-          .agg(org.apache.spark.sql.functions
-            .coalesce(sum(col("n_mask_tokens")), lit(0L)))
-          .head()
-          .getLong(0)
-        val nVocab = spark.read.parquet(s"$root/vocab").count()
-        val landedPacks = spark.read.parquet(s"$root/shards").count()
-        writeManifest(
-          spark,
-          root,
-          "_sft_release.json",
-          s"""{"mode": "${if (treeMode) "tree" else "flat"}", "turns_in": $nTurns,""" +
-            s""" "conversations": $nConvs, "paths": $nDocs, "train_turns": $nTrainTurns,""" +
-            s""" "train_role": "$trainRole", "total_tokens": $totToks,""" +
-            s""" "masked_tokens": $maskedToks, "budget": $budget, "n_packs": $nPacks,""" +
-            s""" "vocab_size": $nVocab, "landed_packs": $landedPacks}"""
-        )
-        println(
-          s"[maintenance] sft release at $root: $nTurns turns / $nConvs conversations" +
-            (if (treeMode) s" / $nDocs paths" else "") +
-            s" -> $nPacks packs ($totToks tokens, $maskedToks loss-on under " +
-            s"role=$trainRole) -> $landedPacks exported in $exportShards shards, vocab $nVocab"
-        )
-      case Some("pack_epochs") =>
-        // Multi-epoch visit-order schedule over an emitted pack space
-        // (Packing.epochOrder): seeded per-epoch permutations of pack
-        // ids. Reads any manifest parquet (the batch form or an
-        // incremental manifest root's batch-keyed partitions — offsets
-        // are global, so the union's max last_pack is the pack count).
-        val manifests = opts.getOrElse("manifests", sys.error("--manifests <dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val epochs = opts.getOrElse("epochs", "1").toInt
-        val seed = opts.getOrElse("seed", "graft")
-        val width = opts.getOrElse("hex_width", "2").toInt
-        val sched = graft.operators.Packing
-          .epochOrder(
-            spark.read.parquet(manifests),
-            epochs,
-            seed,
-            width,
-            mask = opts.get("mask").map(spark.read.parquet)
-          )
-        val n = Pipeline.writeCounted(sched, out)
-        println(s"[maintenance] epoch schedule: $n (epoch, ord, pack) rows from $manifests into $out")
-      case Some("pack_boundaries") =>
-        // Per-pack segment/boundary side-file (Packing.boundaries):
-        // attention-reset metadata per (pack, doc) overlap — manifest
-        // arithmetic only, no document text read.
-        val manifests = opts.getOrElse("manifests", sys.error("--manifests <dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        // _budget sidecar: underscore-prefixed, so the parquet read
-        // below ignores it as metadata while resolveBudget honors it.
-        val budget = resolveBudget(spark, manifests, opts)
-        val b = graft.operators.Packing
-          .boundaries(spark.read.parquet(manifests), "doc_id", budget)
-        val n = Pipeline.writeCounted(b, out)
-        println(s"[maintenance] pack boundaries: $n segment rows from $manifests into $out")
-      case Some("pack_resume") =>
-        // Loader restart arithmetic (Packing.resumeSlice): the
-        // not-yet-consumed tail of a pack_epochs schedule after
-        // --step optimizer steps of --batch packs each — a filter over
-        // the schedule, so restart cost is manifest-sized at any
-        // corpus scale.
-        val schedDir = opts.getOrElse("schedule", sys.error("--schedule <pack_epochs dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val step = opts.getOrElse("step", sys.error("--step <global step> required")).toLong
-        val batch = opts.getOrElse("batch", sys.error("--batch <packs per step> required")).toLong
-        val slice = graft.operators.Packing
-          .resumeSlice(spark.read.parquet(schedDir), step, batch)
-        val n = Pipeline.writeCounted(slice, out)
-        println(
-          s"[maintenance] resume slice: $n remaining schedule rows after step $step " +
-            s"(x$batch packs) from $schedDir into $out"
-        )
-      case Some("mixture_weights") =>
-        // Temperature-scaled mixture weights (Packing.temperatureWeights)
-        // over a stratified manifest's n_toks — per group, the p^alpha
-        // sampling weight / repeat factor vs the largest group as
-        // micro-ints. Manifest-fed: never re-reads text.
-        val manifests = opts.getOrElse("manifests", sys.error("--manifests <dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val groupCol = opts.getOrElse("group_col", sys.error("--group_col <column> required"))
-        val alpha = opts.getOrElse("alpha", "0.5").toDouble
-        val w = graft.operators.Packing.temperatureWeights(
-          spark.read.parquet(manifests),
-          groupCol,
-          org.apache.spark.sql.functions.col("n_toks"),
-          alpha
-        )
-        val n = Pipeline.writeCounted(w, out)
-        println(s"[maintenance] mixture weights: $n $groupCol rows (alpha=$alpha) from $manifests into $out")
-      case Some("apportion_budget") =>
-        // Exact integer apportionment (Packing.apportionBudget):
-        // mixture_weights output -> hard per-group token quotas
-        // summing to --budget exactly (Hamilton largest-remainder,
-        // BigInt, deterministic ties).
-        val weightsPath = opts.getOrElse("weights", sys.error("--weights <mixture_weights dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val groupCol = opts.getOrElse("group_col", sys.error("--group_col <column> required"))
-        val weightCol = opts.getOrElse("weight_col", "w_micro")
-        val budget = opts.getOrElse("budget", sys.error("--budget <total tokens> required")).toLong
-        val q = graft.operators.Packing.apportionBudget(
-          spark.read.parquet(weightsPath),
-          groupCol,
-          weightCol,
-          budget
-        )
-        val n = Pipeline.writeCounted(q, out)
-        println(s"[maintenance] apportioned $budget tokens over $n $groupCol quotas into $out")
-      case Some("apportion_phases") =>
-        // Multi-phase curriculum quotas (Packing.apportionBudgetBy):
-        // per-phase Hamilton apportionment from a (phase, group,
-        // weight, budget) table — each phase's quotas sum to its
-        // budget exactly.
-        val weightsPath = opts.getOrElse("weights", sys.error("--weights <parquet dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val phaseCol = opts.getOrElse("phase_col", "phase")
-        val groupCol = opts.getOrElse("group_col", sys.error("--group_col <column> required"))
-        val weightCol = opts.getOrElse("weight_col", "w_micro")
-        val budgetCol = opts.getOrElse("budget_col", "phase_budget")
-        val q = graft.operators.Packing.apportionBudgetBy(
-          spark.read.parquet(weightsPath),
-          phaseCol,
-          groupCol,
-          weightCol,
-          budgetCol
-        )
-        val n = Pipeline.writeCounted(q, out)
-        val phases = spark.read.parquet(out).select(phaseCol).distinct().count()
-        println(
-          s"[maintenance] apportioned $phases phase budget(s) over $n ($phaseCol, $groupCol) quotas into $out"
-        )
-      case Some("pack_efficiency") =>
-        // Pack-space waste accounting (Packing.packEfficiency): per
-        // group (or globally), the tail-pack waste and integer-exact
-        // wasted-compute fraction — one agg over the manifest.
-        val manifests = opts.getOrElse("manifests", sys.error("--manifests <dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val budget = resolveBudget(spark, manifests, opts)
-        val eff = graft.operators.Packing.packEfficiency(
-          spark.read.parquet(manifests),
-          budget,
-          opts.get("group_col").toSeq
-        )
-        val n = Pipeline.writeCounted(eff, out)
-        println(s"[maintenance] pack efficiency: $n group rows (budget=$budget) from $manifests into $out")
-      case Some("pack_provenance") =>
-        // Governance side-file (Packing.provenance): per (pack,
-        // attribute values), contributing docs + token weight —
-        // manifest × doc-attribute join, no pack data read. License
-        // audits and takedown-to-pack resolution read THIS table.
-        val manifests = opts.getOrElse("manifests", sys.error("--manifests <dir> required"))
-        val attrsPath =
-          opts.getOrElse("attrs", sys.error("--attrs <parquet with doc_id + attribute cols> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val attrCols = opts
-          .getOrElse("attr_cols", sys.error("--attr_cols <comma-separated columns> required"))
-          .split(",")
-          .map(_.trim)
-          .filter(_.nonEmpty)
-          .toSeq
-        val budget = resolveBudget(spark, manifests, opts)
-        val prov = graft.operators.Packing.provenance(
-          spark.read.parquet(manifests),
-          spark.read.parquet(attrsPath),
-          "doc_id",
-          budget,
-          attrCols
-        )
-        val n = Pipeline.writeCounted(prov, out)
-        println(
-          s"[maintenance] pack provenance: $n (pack, ${attrCols.mkString(",")}) rows " +
-            s"(budget=$budget) from $manifests into $out"
-        )
-      case Some("leakage_split") =>
-        // Cluster-atomic train/heldout split (Dedup.leakageFreeSplit):
-        // docs + near-dup pair table -> per-doc component + side, no
-        // near-dup pair ever straddling the boundary.
-        val docsPath = opts.getOrElse("docs", sys.error("--docs <parquet dir> required"))
-        val pairsPath = opts.getOrElse("pairs", sys.error("--pairs <parquet with doc_a, doc_b> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val perMille = opts.getOrElse("heldout_per_mille", "100").toInt
-        val seed = opts.getOrElse("seed", "split")
-        val sp = graft.operators.Dedup.leakageFreeSplit(
-          spark.read.parquet(docsPath),
-          spark.read.parquet(pairsPath),
-          "doc_id",
-          perMille,
-          seed
-        )
-        val n = Pipeline.writeCounted(sp, out)
-        val nHeld = spark.read
-          .parquet(out)
-          .filter(org.apache.spark.sql.functions.col("split") === "heldout")
-          .count()
-        println(
-          s"[maintenance] leakage-free split: $n docs, $nHeld heldout " +
-            s"($perMille per-mille target, seed=$seed) into $out"
-        )
-      case Some("snapshot_diff") =>
-        // Release diff (Maintenance.snapshotDiff): per-id added/
-        // removed/changed/unchanged between two snapshots — content
-        // compared by scan-side md5 fingerprints, so text never
-        // shuffles; downstream incremental jobs consume the
-        // added/changed slice instead of the full corpus.
-        val oldPath = opts.getOrElse("old", sys.error("--old <parquet dir> required"))
-        val newPath = opts.getOrElse("new", sys.error("--new <parquet dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val idCol = opts.getOrElse("id_col", "doc_id")
-        val cols = opts
-          .getOrElse("content_cols", sys.error("--content_cols <comma-separated columns> required"))
-          .split(",")
-          .map(_.trim)
-          .filter(_.nonEmpty)
-          .toSeq
-        val diff = graft.operators.Maintenance.snapshotDiff(
-          spark.read.parquet(oldPath),
-          spark.read.parquet(newPath),
-          idCol,
-          cols
-        )
-        val n = Pipeline.writeCounted(diff, out)
-        val byStatus = spark.read
-          .parquet(out)
-          .groupBy("status")
-          .count()
-          .collect()
-          .map(r => s"${r.getString(0)}=${r.getLong(1)}")
-          .sorted
-          .mkString(" ")
-        println(s"[maintenance] snapshot diff: $n ids ($byStatus) into $out")
-      case Some("efficiency_sweep") =>
-        // Budget sweep (Packing.efficiencySweep): the pack_efficiency
-        // arithmetic at every candidate budget in one manifest pass —
-        // the table a training run reads to pick its sequence length.
-        val manifests = opts.getOrElse("manifests", sys.error("--manifests <dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val budgets = opts
-          .getOrElse("budgets", sys.error("--budgets <comma-separated token budgets> required"))
-          .split(",")
-          .map(_.trim.toLong)
-          .toSeq
-        val sweep = graft.operators.Packing.efficiencySweep(
-          spark.read.parquet(manifests),
-          budgets,
-          opts.get("group_col").toSeq
-        )
-        val n = Pipeline.writeCounted(sweep, out)
-        println(
-          s"[maintenance] efficiency sweep: $n (group, budget) rows over " +
-            s"budgets ${budgets.sorted.mkString(",")} from $manifests into $out"
-        )
-      case Some("cluster_best") =>
-        // Quality-aware survivor selection (Dedup.keepBestOfCluster):
-        // keep each near-dup cluster's argmax-score copy (ties to the
-        // smaller id), labeling every doc so drops stay auditable.
-        val docsPath = opts.getOrElse("docs", sys.error("--docs <parquet with doc_id + score> required"))
-        val pairsPath = opts.getOrElse("pairs", sys.error("--pairs <parquet with doc_a, doc_b> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val scoreCol = opts.getOrElse("score_col", sys.error("--score_col <column> required"))
-        val best = graft.operators.Dedup.keepBestOfCluster(
-          spark.read.parquet(docsPath),
-          spark.read.parquet(pairsPath),
-          "doc_id",
-          scoreCol
-        )
-        val n = Pipeline.writeCounted(best, out)
-        val nKeep = spark.read
-          .parquet(out)
-          .filter(org.apache.spark.sql.functions.col("keep"))
-          .count()
-        println(
-          s"[maintenance] cluster best: $n docs labeled, $nKeep survivors " +
-            s"(score=$scoreCol) into $out"
-        )
-      case Some("pref_pairs") =>
-        // Post-training pair build (the q147-q152 family composed):
-        // optional rater triage (drop disputed responses), optional
-        // length debias (pair on the debiased micro score), pair
-        // construction, optional pair-level decontamination — each
-        // stage the library operator, with _pref.json auditing the
-        // landed per-stage counts.
-        import org.apache.spark.sql.functions.col
-        val respPath = opts.getOrElse("responses", sys.error("--responses <parquet> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val promptCol = opts.getOrElse("prompt_col", "prompt_id")
-        val idCol = opts.getOrElse("id_col", "doc_id")
-        val scoreCol = opts.getOrElse("score_col", "score")
-        val resp0 = spark.read.parquet(respPath)
-        val nResp = resp0.count()
-        // optional stage 0: within-prompt response dedup (identical
-        // sampled completions collapse to the argmax-score survivor
-        // before anything else sees them)
-        val (respD, nDupDropped) = opts.get("content_col") match {
-          case Some(cc) =>
-            val keepIds = graft.operators.Preference
-              .dedupResponses(resp0, promptCol, idCol, scoreCol, cc)
-              .filter(col("keep"))
-              .select(col(idCol))
-            val kept = resp0.join(keepIds, Seq(idCol))
-            (kept, nResp - kept.count())
-          case None => (resp0, 0L)
-        }
-        val (resp1, nDisputed) = opts.get("ratings") match {
-          case Some(rp) =>
-            val range = opts.getOrElse("dispute_range", "40").toLong
-            val ratingScoreCol = opts.getOrElse("rating_score_col", "score")
-            val triage = graft.operators.Preference
-              .raterAgreement(spark.read.parquet(rp), idCol, ratingScoreCol, range)
-            val disputed = triage.filter(col("disputed")).select(col(idCol))
-            val nD = disputed.count()
-            (respD.join(disputed, Seq(idCol), "left_anti"), nD)
-          case None => (respD, 0L)
-        }
-        val (resp2, pairScoreCol) = opts.get("len_col") match {
-          case Some(lc) =>
-            val bw = opts.getOrElse("bucket_width", "50").toLong
-            val deb = graft.operators.Preference
-              .lengthDebias(resp1, idCol, scoreCol, lc, bw)
-              .select(col(idCol), col("adj_micro"))
-            (resp1.join(deb, Seq(idCol)), "adj_micro")
-          case None => (resp1, scoreCol)
-        }
-        val pairs0 = graft.operators.Preference
-          .preferencePairs(resp2, promptCol, idCol, pairScoreCol)
-        val nPairs0 = pairs0.count()
-        val pairs = opts.get("contaminated") match {
-          case Some(cp) =>
-            graft.operators.Preference.purgePairs(
-              pairs0,
-              Seq("chosen_id", "rejected_id"),
-              spark.read.parquet(cp),
-              opts.getOrElse("contam_id_col", idCol)
-            )
-          case None => pairs0
-        }
-        val n = Pipeline.writeCounted(pairs, out)
-        writeManifest(
-          spark,
-          out,
-          "_pref.json",
-          s"""{"responses": $nResp, "dup_dropped": $nDupDropped, """ +
-            s""""disputed_dropped": $nDisputed, """ +
-            s""""pairs_built": $nPairs0, "pairs_kept": $n, """ +
-            s""""score_col": "$pairScoreCol"}"""
-        )
-        println(
-          s"[maintenance] pref pairs: $nResp responses ($nDupDropped duplicate, " +
-            s"$nDisputed disputed dropped) -> " +
-            s"$nPairs0 pairs built, $n kept after decontamination, into $out"
-        )
-      case Some("pref_stream") =>
-        // Streaming preference-pair maintenance
-        // (StreamingPipeline.prefIngest): tail a directory of scored-
-        // response JSON files into the persistent pairIngest state —
-        // the pref_pairs family's streaming arm. AvailableNow trigger:
-        // drains what exists, then returns (cron-friendly).
-        val raw = opts.getOrElse("raw", sys.error("--raw <response json dir> required"))
-        val state = opts.getOrElse("state", sys.error("--state <state dir> required"))
-        val ckpt = opts.getOrElse("checkpoint", sys.error("--checkpoint <dir> required"))
-        val respSchema = org.apache.spark.sql.types.StructType(
-          Seq(
-            org.apache.spark.sql.types
-              .StructField("prompt_id", org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types
-              .StructField("doc_id", org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types
-              .StructField("score", org.apache.spark.sql.types.LongType)
-          )
-        )
-        graft.streaming.StreamingPipeline
-          .prefIngest(spark, raw, state, ckpt, respSchema)
-          .awaitTermination()
-        val nPairs = graft.operators.Preference.pairsFromState(spark, state).count()
-        println(s"[maintenance] pref stream drained: state at $state now holds $nPairs pair(s)")
-      case Some(verb @ ("turns_stream" | "turns_backfill")) =>
-        // Streaming tree-membership maintenance
-        // (StreamingPipeline.turnsIngest): tail a directory of
-        // turn-batch JSON files into the persistent TreeState — the
-        // tree family's streaming arm (batch tree_paths / incremental
-        // tree_state / STREAMING triad). AvailableNow: drains what
-        // exists, then returns (cron-friendly). Files must land in
-        // causal order (parents before children); the fold's orphan
-        // gate refuses violations loudly.
-        // turns_backfill: the COLD-START arm — fold the whole existing
-        // backlog as ONE batch on the SAME checkpoint, then run
-        // turns_stream steady-state; a 100-file backlog costs one fold
-        // instead of 100 serial per-file folds (the file-=-batch
-        // contract is a steady-state discipline, not a replay tax).
-        val raw = opts.getOrElse("raw", sys.error("--raw <turn json dir> required"))
-        val state = opts.getOrElse("state", sys.error("--state <state dir> required"))
-        val ckpt = opts.getOrElse("checkpoint", sys.error("--checkpoint <dir> required"))
-        val turnSchema = org.apache.spark.sql.types.StructType(
-          Seq(
-            org.apache.spark.sql.types
-              .StructField("conv_id", org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types
-              .StructField("turn_id", org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types
-              .StructField("parent_id", org.apache.spark.sql.types.LongType)
-          )
-        )
-        val maxDepth = opts.getOrElse("max_depth", "10000").toInt
-        // walk-row guard, raisable from the CLI (r16): the unit is
-        // buffered walk rows (memberships ≈ paths × depth + batch
-        // turns), not turns — see ConvTree.guardConvRows
-        val maxConvRows = opts.getOrElse("max_conv_rows", "2000000").toInt
-        (if (verb == "turns_backfill")
-           graft.streaming.StreamingPipeline
-             .turnsBackfill(spark, raw, state, ckpt, turnSchema, maxDepth, maxConvRows)
-         else
-           graft.streaming.StreamingPipeline
-             .turnsIngest(spark, raw, state, ckpt, turnSchema, maxDepth, maxConvRows))
-          .awaitTermination()
-        // Empty-drain guard (the dsir_stream lesson): a drain that saw
-        // no files never created the state — report 0 instead of
-        // throwing on a missing parquet dir.
-        val stateHPath = new org.apache.hadoop.fs.Path(state)
-        val stateFs = stateHPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val nMemb =
-          if (stateFs.exists(stateHPath))
-            graft.operators.TreeState.memberships(spark, state).count()
-          else 0L
-        println(
-          s"[maintenance] $verb drained: state at $state now holds $nMemb membership row(s)"
-        )
-      case Some("win_stream") =>
-        // Streaming arena board (StreamingPipeline.winIngest): tail a
-        // directory of scored-response JSON files into the persistent
-        // winIngest state — the win_ingest verb's streaming arm.
-        // AvailableNow trigger: drains what exists, then returns.
-        val raw = opts.getOrElse("raw", sys.error("--raw <response json dir> required"))
-        val state = opts.getOrElse("state", sys.error("--state <state dir> required"))
-        val ckpt = opts.getOrElse("checkpoint", sys.error("--checkpoint <dir> required"))
-        val respSchema = org.apache.spark.sql.types.StructType(
-          Seq(
-            org.apache.spark.sql.types
-              .StructField("prompt_id", org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types
-              .StructField("policy", org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types
-              .StructField("score", org.apache.spark.sql.types.LongType)
-          )
-        )
-        graft.streaming.StreamingPipeline
-          .winIngest(spark, raw, state, ckpt, respSchema)
-          .awaitTermination()
-        val nPairs = graft.operators.Preference.winMatrixFromState(spark, state).count()
-        println(s"[maintenance] win stream drained: state at $state now boards $nPairs policy pair(s)")
-      case Some("win_ingest") =>
-        // Incremental arena board (Preference.winIngest): fold one
-        // batch of scored responses into the persistent per-(prompt,
-        // policy) best-score state, then (optionally) land the current
-        // head-to-head matrix. Exactly-once under --applied_id via the
-        // shared fold protocol; a replayed batch is a no-op by both
-        // the marker and the max semilattice.
-        val batchPath = opts.getOrElse("batch", sys.error("--batch <responses parquet> required"))
-        val state = opts.getOrElse("state", sys.error("--state <state dir> required"))
-        val promptCol = opts.getOrElse("prompt_col", "prompt_id")
-        val policyCol = opts.getOrElse("policy_col", "policy")
-        val scoreCol = opts.getOrElse("score_col", "score")
-        val appliedId = opts.get("applied_id").map(_.toLong)
-        graft.operators.Preference
-          .winIngest(
-            spark,
-            spark.read.parquet(batchPath),
-            promptCol,
-            policyCol,
-            scoreCol,
-            state,
-            appliedId
-          )
-          .count()
-        val matrix = graft.operators.Preference.winMatrixFromState(spark, state)
-        val landed = opts.get("out") match {
-          case Some(o) => Pipeline.writeCounted(matrix, o)
-          case None    => matrix.count()
-        }
-        println(
-          s"[maintenance] win ingest: state at $state; current matrix has $landed policy pair(s)"
-        )
-      case Some("bt_ratings") =>
-        // Arena LEADERBOARD (Preference.btRatings): Bradley-Terry
-        // strengths fit from either a win_ingest state (--state, the
-        // incremental arm's read) or a landed matrix parquet
-        // (--matrix, winMatrix's output shape). Exact integer MM
-        // iterations — same board from either arm, by the semilattice.
-        val iters = opts.getOrElse("iters", "10").toInt
-        val matrix = (opts.get("state"), opts.get("matrix")) match {
-          case (Some(s), None) =>
-            graft.operators.Preference.winMatrixFromState(spark, s)
-          case (None, Some(m)) => spark.read.parquet(m)
-          case _ => sys.error("exactly one of --state <dir> or --matrix <parquet> required")
-        }
-        val ratings = graft.operators.Preference
-          .btRatings(matrix, iters)
-          .orderBy(org.apache.spark.sql.functions.col("rating_micro").desc)
-        val landed = opts.get("out") match {
-          case Some(o) => Pipeline.writeCounted(ratings, o)
-          case None    => ratings.count()
-        }
-        println(
-          s"[maintenance] bt_ratings: $iters MM iteration(s) over the matrix; " +
-            s"$landed polic(ies) on the board"
-        )
-      case Some("dsir_weights") =>
-        // Freeze a DSIR hashed-bigram weight table (Importance
-        // .ngramImportanceWeightsFrom): raw corpus + separate curated
-        // target corpus -> O(buckets) parquet of smoothed target/raw
-        // micro-ratios. Freezing the weights is what makes later
-        // scoring stable across corpus snapshots (the frozen-model
-        // discipline, as with bigram-LM gates and BPE vocabs).
-        import org.apache.spark.sql.functions.col
-        val dataPath = opts.getOrElse("data", sys.error("--data <raw docs parquet> required"))
-        val targetPath = opts.getOrElse("target", sys.error("--target <seed docs parquet> required"))
-        val out = opts.getOrElse("out", sys.error("--out <weights parquet> required"))
-        val textCol = opts.getOrElse("text_col", "text")
-        val buckets = opts.getOrElse("buckets", "1024").toInt
-        val w = graft.operators.Importance.ngramImportanceWeightsFrom(
-          spark.read.parquet(dataPath),
-          spark.read.parquet(targetPath),
-          textCol,
-          buckets
-        )
-        val n = Pipeline.writeCounted(w, out)
-        graft.operators.Importance.recordBuckets(spark, out, buckets)
-        println(s"[maintenance] dsir_weights: $n bucket weight(s) frozen to $out")
-      case Some("dsir_score") =>
-        // Score (and optionally select) documents against a FROZEN
-        // DSIR weight table: per doc the bigram-occurrence weight sum
-        // + length-normalized mean; with --k, keep the deterministic
-        // top-k. New data scores against old weights without
-        // re-histogramming — the campaign's arriving-data gate.
-        import org.apache.spark.sql.functions.col
-        val dataPath = opts.getOrElse("data", sys.error("--data <docs parquet> required"))
-        val weightsPath = opts.getOrElse("weights", sys.error("--weights <parquet> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val textCol = opts.getOrElse("text_col", "text")
-        val idCol = opts.getOrElse("id_col", "doc_id")
-        // Bucket count resolves from the weights' _buckets sidecar —
-        // an explicit --buckets must AGREE (a mismatch hashes bigrams
-        // into the wrong buckets: silent garbage, so it fails loudly).
-        val stored = graft.operators.Importance.storedBuckets(spark, weightsPath)
-        val buckets = (opts.get("buckets").map(_.toInt), stored) match {
-          case (Some(b), Some(s)) =>
-            require(
-              b == s,
-              s"--buckets $b disagrees with the weights' recorded bucket count $s " +
-                s"($weightsPath/_buckets) — scoring would mis-bucket every bigram"
-            )
-            b
-          case (Some(b), None) => b
-          case (None, Some(s)) => s
-          case (None, None)    => 1024
-        }
-        val scored = graft.operators.Importance.importanceScores(
-          spark.read.parquet(dataPath),
-          idCol,
-          textCol,
-          spark.read.parquet(weightsPath),
-          buckets
-        )
-        val result = opts.get("k") match {
-          case Some(k) => graft.operators.Importance.selectByImportance(scored, idCol, k.toInt)
-          case None    => scored
-        }
-        val n = Pipeline.writeCounted(result, out)
-        println(s"[maintenance] dsir_score: $n doc(s) scored to $out" +
-          opts.get("k").map(k => s" (top-$k kept)").getOrElse(""))
-      case Some("dsir_stream") =>
-        // Streaming DSIR scoring (StreamingPipeline.dsirScore): tail a
-        // directory of document JSON files, score each against the
-        // FROZEN weight table, land per-batch score dirs. AvailableNow:
-        // drains what exists, then returns (cron-friendly).
-        val raw = opts.getOrElse("raw", sys.error("--raw <doc json dir> required"))
-        val weights = opts.getOrElse("weights", sys.error("--weights <frozen weights> required"))
-        val out = opts.getOrElse("out", sys.error("--out <score dir> required"))
-        val ckpt = opts.getOrElse("checkpoint", sys.error("--checkpoint <dir> required"))
-        val docSchema = org.apache.spark.sql.types.StructType(
-          Seq(
-            org.apache.spark.sql.types
-              .StructField("doc_id", org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types
-              .StructField("text", org.apache.spark.sql.types.StringType)
-          )
-        )
-        graft.streaming.StreamingPipeline
-          .dsirScore(spark, raw, weights, out, ckpt, docSchema)
-          .awaitTermination()
-        // A drain that landed ZERO batches (empty --raw dir) leaves no
-        // score_batch= children — reading the bare out dir would throw
-        // and turn a successful no-op drain into a CLI failure.
-        val outHPath = new org.apache.hadoop.fs.Path(out)
-        val outFs = outHPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val hasBatches = outFs.exists(outHPath) &&
-          outFs.listStatus(outHPath).exists(_.getPath.getName.startsWith("score_batch="))
-        val nScored =
-          if (hasBatches) spark.read.option("basePath", out).parquet(out).count() else 0L
-        println(s"[maintenance] dsir stream drained: $nScored scored doc row(s) under $out")
-      case Some("chunk_stream") =>
-        // Streaming chunking (StreamingPipeline.chunkStream): tail a
-        // directory of document JSON files, chunk each the moment it
-        // lands — frozen-BPE model tokens with --model, whitespace
-        // words without — into per-batch chunk dirs. AvailableNow:
-        // drains what exists, then returns (cron-friendly). The out
-        // dir's _space sidecar refuses a drain under a retrained
-        // tokenizer loudly.
-        val raw = opts.getOrElse("raw", sys.error("--raw <doc json dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <chunk dir> required"))
-        val ckpt = opts.getOrElse("checkpoint", sys.error("--checkpoint <dir> required"))
-        val window = opts.getOrElse("window", "512").toLong
-        val stride = opts.getOrElse("stride", "384").toLong
-        val docSchema = org.apache.spark.sql.types.StructType(
-          Seq(
-            org.apache.spark.sql.types
-              .StructField("doc_id", org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types
-              .StructField("text", org.apache.spark.sql.types.StringType)
-          )
-        )
-        graft.streaming.StreamingPipeline
-          .chunkStream(spark, raw, opts.get("model"), out, ckpt, docSchema, window, stride)
-          .awaitTermination()
-        val outHPath2 = new org.apache.hadoop.fs.Path(out)
-        val outFs2 = outHPath2.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val hasChunkBatches = outFs2.exists(outHPath2) &&
-          outFs2.listStatus(outHPath2).exists(_.getPath.getName.startsWith("chunk_batch="))
-        val nChunks =
-          if (hasChunkBatches) spark.read.option("basePath", out).parquet(out).count() else 0L
-        println(s"[maintenance] chunk stream drained: $nChunks chunk row(s) under $out")
-      case Some("vocab_coverage") =>
-        // Tokenizer-sizing audit (Vocab.coverageCurve): per coverage
-        // target, the smallest number of token types covering that
-        // share of the token stream.
-        val docsPath = opts.getOrElse("docs", sys.error("--docs <parquet dir> required"))
-        val textCol = opts.getOrElse("text_col", "text")
-        val targets = opts
-          .getOrElse("targets", "500,900,950,990")
-          .split(",")
-          .map(_.trim.toLong)
-          .toSeq
-        val curve = graft.operators.Vocab
-          .coverageCurve(spark.read.parquet(docsPath), textCol, targets)
-        val landed = opts.get("out") match {
-          case Some(o) => Pipeline.writeCounted(curve, o)
-          case None =>
-            curve.collect().sortBy(_.getLong(0)).foreach { r =>
-              println(
-                s"[maintenance]   ${r.getLong(0)} per-mille coverage: ${r.getLong(1)} " +
-                  s"of ${r.getLong(2)} types (stream ${r.getLong(3)} tokens)"
-              )
-            }
-            targets.length.toLong
-        }
-        println(s"[maintenance] vocab_coverage: $landed target row(s)")
-      case Some("chunk") =>
-        // Sliding-window chunking (Chunking.slidingChunks /
-        // bpeChunksFrozen): the embedding/retrieval and long-context
-        // prep pass — overlapping token windows per document, landed
-        // as the chunk table an encoder consumes. With --model the
-        // windows are measured in FROZEN-BPE model tokens (what the
-        // trained model actually consumes); the out dir's `_space`
-        // sidecar pins the token space + model version, and a rerun
-        // into the same dir under a different space is refused loudly
-        // BEFORE anything is overwritten.
-        val docsPath = opts.getOrElse("docs", sys.error("--docs <parquet dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val idCol = opts.getOrElse("id_col", "doc_id")
-        val textCol = opts.getOrElse("text_col", "text")
-        val window = opts.getOrElse("window", "512").toLong
-        val stride = opts.getOrElse("stride", "384").toLong
-        val modelOpt = opts.get("model")
-        val space = modelOpt match {
-          case Some(m) =>
-            val v = graft.operators.Bpe
-              .currentVersion(spark, m)
-              .getOrElse(sys.error(s"no frozen BPE model at $m (missing _current pointer)"))
-            s"bpe:v$v"
-          case None => "ws"
-        }
-        graft.operators.Chunking.recordSpace(spark, out, space)
-        val docsDf = spark.read.parquet(docsPath)
-        val chunks = modelOpt match {
-          case Some(m) =>
-            graft.operators.Chunking.bpeChunksFrozen(docsDf, idCol, textCol, m, window, stride)
-          case None =>
-            graft.operators.Chunking.slidingChunks(docsDf, idCol, textCol, window, stride)
-        }
-        // writeCounted's overwrite deletes the sidecar recorded above;
-        // re-record in a finally so a crash mid-write can't leave a
-        // chunk dir with data files but no space pin (a later rerun
-        // under a retrained tokenizer would be silently accepted as
-        // first-writer instead of refused).
-        val n =
-          try Pipeline.writeCounted(chunks, out)
-          finally graft.operators.Chunking.recordSpace(spark, out, space)
-        println(
-          s"[maintenance] chunk: $n chunk(s) (window $window, stride $stride, space $space) to $out"
-        )
-      case Some("tree_paths") =>
-        // Branched-conversation flattening (ConvTree.treePaths): a
-        // parent-pointer turn store -> per-(path, turn) memberships
-        // with first-visit train flags. The SFT prep step ahead of
-        // rendering/masking when conversations branch.
-        val turnsPath = opts.getOrElse("turns", sys.error("--turns <parquet> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val convCol = opts.getOrElse("conv_col", "conv_id")
-        val turnCol = opts.getOrElse("turn_col", "turn_id")
-        val parentCol = opts.getOrElse("parent_col", "parent_id")
-        val maxDepth = opts.getOrElse("max_depth", "10000").toInt
-        val paths = graft.operators.ConvTree
-          .treePaths(spark.read.parquet(turnsPath), convCol, turnCol, parentCol, maxDepth,
-            opts.getOrElse("max_conv_rows", "2000000").toInt)
-        val n = Pipeline.writeCounted(paths, out)
-        println(s"[maintenance] tree_paths: $n path-membership row(s) to $out")
-      case Some("tree_state") =>
-        // Durable tree-membership fold (TreeState.fold): an APPENDED
-        // turn batch folds into the persistent membership state — new
-        // leaves add paths (prefixes read from the state), extensions
-        // of current leaves replace their paths, first-visit flags
-        // recomputed for exactly the affected turns. Exactly-once by
-        // --applied_id (a replayed batch is a no-op). Every tree
-        // consumer (tree_render --paths_state, branch_pairs
-        // --paths_state) can then serve from the state instead of
-        // re-running the pointer-doubling closure over the full store.
-        val batchPath = opts.getOrElse("batch", sys.error("--batch <parquet> required"))
-        val state = opts.getOrElse("state", sys.error("--state <dir> required"))
-        val convCol = opts.getOrElse("conv_col", "conv_id")
-        val turnCol = opts.getOrElse("turn_col", "turn_id")
-        val parentCol = opts.getOrElse("parent_col", "parent_id")
-        val maxDepth = opts.getOrElse("max_depth", "10000").toInt
-        val folded = graft.operators.TreeState.fold(
-          spark,
-          spark.read.parquet(batchPath),
-          convCol, turnCol, parentCol,
-          state,
-          opts.get("applied_id").map(_.toLong),
-          maxDepth,
-          opts.getOrElse("buckets", "64").toInt,
-          opts.getOrElse("max_conv_rows", "2000000").toInt
-        )
-        println(
-          s"[maintenance] tree_state: folded $batchPath; state at $state now holds " +
-            s"${folded.count()} membership row(s)"
-        )
-      case Some("tree_state_reshard") =>
-        // Re-partition a tree-membership state under a new conv-hash
-        // bucket count (TreeState.reshard) — the escape hatch for a
-        // _buckets pin sized before the store's growth was known.
-        val state = opts.getOrElse("state", sys.error("--state <dir> required"))
-        val n = opts.getOrElse("buckets", sys.error("--buckets <n> required")).toInt
-        graft.operators.TreeState.reshard(spark, state, n)
-        println(s"[maintenance] tree_state_reshard: $state now partitioned over $n bucket(s)")
-      case Some("tree_state_report") =>
-        // Metadata-only per-bucket sizing report (TreeState.report).
-        val state = opts.getOrElse("state", sys.error("--state <dir> required"))
-        val rows = graft.operators.TreeState.report(spark, state)
-        val total = rows.map(_._2).sum
-        rows.foreach { case (s, bytes) => println(f"[tree_state_report] cv=$s%-6d $bytes%12d B") }
-        println(
-          f"[tree_state_report] ${rows.size}%d bucket(s), $total%d B total, " +
-            f"max ${rows.map(_._2).maxOption.getOrElse(0L)}%d B"
-        )
-      case Some("lease_report") =>
-        // Read-only writer-lease inspection (Maintenance.leaseReport):
-        // the first half of the mechanical runbook for a crashed
-        // holder. Prints the holder token + host/pid/created-at (with
-        // age) so an operator can check whether the holder process is
-        // actually dead before lease_break.
-        val state = opts.getOrElse("state", sys.error("--state <state dir> required"))
-        graft.operators.Maintenance.leaseReport(spark, state) match {
-          case None => println(s"[lease_report] no writer lease on $state")
-          case Some((token, fields)) =>
-            val age = fields.get("created_at").flatMap(_.toLongOption)
-              .map(c => s"${(System.currentTimeMillis() - c) / 1000}s ago")
-              .getOrElse("unknown (pre-r16 lease format)")
-            println(
-              s"[lease_report] $state is write-leased by '$token' " +
-                s"(host=${fields.getOrElse("host", "unknown")}, " +
-                s"pid=${fields.getOrElse("pid", "unknown")}, created $age). " +
-                "If the holder is live, wait; if it crashed with an applied id, retry it " +
-                "under ITS id; otherwise `--maintenance lease_break --state " + state + "`")
-        }
-      case Some("lease_break") =>
-        // Loud, audited removal of a DEAD holder's writer lease
-        // (Maintenance.leaseBreak) — refuses while the lease is
-        // fresher than --min_age_sec (default 900: a fresh lease is
-        // far more likely a live writer than a crash, and breaking a
-        // live writer re-opens the lost-batch race the fence closes).
-        val state = opts.getOrElse("state", sys.error("--state <state dir> required"))
-        val minAge = opts.getOrElse("min_age_sec", "900").toLong * 1000L
-        val (token, fields) = graft.operators.Maintenance.leaseBreak(spark, state, minAge)
-        println(
-          s"[lease_break] BROKE writer lease '$token' on $state " +
-            s"(host=${fields.getOrElse("host", "unknown")}, " +
-            s"pid=${fields.getOrElse("pid", "unknown")}, " +
-            s"created_at=${fields.getOrElse("created_at", "unknown")}) — " +
-            "verify the holder was dead; if it was live, its next mutation now races others")
-      case Some("dpo_release") =>
-        // The one-command DPO DATA RELEASE — the trilogy's third
-        // capstone (pretraining `release`, SFT `sft_release`,
-        // preference `dpo_release`): branched turn store -> rendered
-        // sibling-regeneration triples (the branch_pairs --render
-        // verb, every interlock firing) -> optional PAIR-LEVEL
-        // DECONTAMINATION (--bad B: a (conv, turn)-keyed verdict
-        // table — the decontam family's output shape for turn
-        // stores; a pair is dropped when EITHER member is listed,
-        // q152's any-member contract, conv-keyed because turn ids
-        // are only per-conversation unique) -> hash-sharded export
-        // keyed by the unique 'conv#parent' pair key (byte-stable
-        // re-exports, multiplicity-sensitive content digests) ->
-        // verify_export. `_dpo_release.json` audits landed counts.
-        // Layout under --out: triples/ [clean/] shards/ [batches/]
-        // _dpo_release.json
-        import org.apache.spark.sql.functions.{broadcast, col, concat, lit}
-        val turnsPath = opts.getOrElse("turns", sys.error("--turns <parquet> required"))
-        val root = opts.getOrElse("out", sys.error("--out <release root> required"))
-        val rootTriples = new org.apache.hadoop.fs.Path(s"$root/triples")
-        val rootFs = rootTriples.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        require(
-          !rootFs.exists(rootTriples),
-          s"dpo_release refuses to run into $root: it already holds a triples/ landing — " +
-            "a rerun would re-export shards over a landed release; use an empty --out root"
-        )
-        val shards = opts.getOrElse("shards", "8")
-        val passThrough = Seq(
-          "conv_col", "turn_col", "parent_col", "role_col",
-          "content_col", "score_col", "resp_role", "max_depth", "paths_state"
-        ).flatMap(k => opts.get(k).toSeq.flatMap(v => Seq(s"--$k", v)))
-        // The render stage pins scratch tables (the tree walk's
-        // membership pin, batch pins) that are DEAD once the triples
-        // land on parquet — released at the stage boundary (measured:
-        // the decontam pass ran 58-134 s under the stranded pins vs
-        // ~7 s without, at the 200k-triple store-scale soak).
-        graft.operators.Maintenance.releasingScratchPins(spark) {
-          timedStage("dpo_release", "branch_pairs") { run(
-            Array("--maintenance", "branch_pairs", "--turns", turnsPath,
-              "--out", s"$root/triples", "--render", "true") ++ passThrough,
-            spark
-          ) }
-        }
-        // Downstream stages run CPU-heavy per-row work over the triples
-        // (model-token metering, per-member shingle explodes — and
-        // purgeAnyOf evaluates its input once per member leg), all of
-        // it SCAN-side: when the landed triples collapsed to a couple
-        // of files (AQE coalescing a small landing), the whole
-        // decontam pass runs near-serial. Repartition ONLY when the
-        // scan yields fewer splits than the configured parallelism —
-        // on a real multi-split landing the gate is false and no
-        // shuffle is inserted (the standing small-local-files
-        // discipline; measured 58-134 s -> ~7 s on the 200k-triple
-        // store-scale soak).
-        val tripleScan = spark.read.parquet(s"$root/triples")
-        val tripleSplits = tripleScan.rdd.getNumPartitions
-        println(s"[dpo_release] triples scan: $tripleSplits split(s)")
-        val triples =
-          if (tripleSplits < spark.sparkContext.defaultParallelism)
-            tripleScan.repartition(spark.sparkContext.defaultParallelism)
-          else tripleScan
-        val nPairs = triples.count()
-        // MODEL-token coordinates (--bpe_model): the frozen merge
-        // table meters prompt/chosen/rejected in the tokenizer space
-        // the trainer optimizes — a pure per-row projection riding
-        // the already-materialized triples scan (zero added shuffle),
-        // version-pinned in the manifest (the chunk verb's _space
-        // discipline: a release must say which tokenizer it counted
-        // in, or a retrained table silently re-meters a re-export).
-        val tripleTextCols = Seq("prompt", "chosen", "rejected")
-        val bpeVersion = opts.get("bpe_model").flatMap(m =>
-          graft.operators.Bpe.currentVersion(spark, m))
-        val metered = opts.get("bpe_model") match {
-          case Some(m) =>
-            graft.operators.Bpe.withModelTokenCountsFrozen(triples, tripleTextCols, m)
-          case None => triples
-        }
-        val hasBad = opts.contains("bad")
-        val hasEval = opts.contains("eval")
-        // conv-keyed any-member purge: the verdict table names
-        // (conv, turn); either member listed poisons the pair
-        val afterBad = opts.get("bad").fold(metered) { b =>
-          val badConv = opts.getOrElse("bad_conv_col", "conv_id")
-          val badTurn = opts.getOrElse("bad_turn_col", "turn_id")
-          val bad = broadcast(
-            spark.read.parquet(b)
-              .select(col(badConv).as("conv_id"), col(badTurn).as("__bad_id"))
-              .distinct()
-          )
-          Seq("chosen_id", "rejected_id").foldLeft(metered) { (acc, m) =>
-            acc.join(
-              bad,
-              acc("conv_id") === bad("conv_id") && acc(m) === bad("__bad_id"),
-              "left_anti"
-            )
-          }
-        }
-        // content decontamination (--eval): raw eval TEXT, not a
-        // pre-keyed verdict — shingle containment >= threshold in ANY
-        // rendered member (prompt, chosen, rejected) purges the pair.
-        // Eval shingles broadcast; one member-stacked semi-join.
-        val cleaned = opts.get("eval").fold(afterBad) { e =>
-          graft.operators.Dedup.purgeAnyOf(
-            afterBad,
-            spark.read.parquet(e),
-            Seq("conv_id", "parent_id"),
-            tripleTextCols,
-            opts.getOrElse("eval_text_col", "text"),
-            opts.getOrElse("threshold", "0.5").toDouble
-          )
-        }
-        val (exportDf, nClean) =
-          if (hasBad || hasEval) {
-            val n = timedStage("dpo_release", "pair_decontam") {
-              Pipeline.writeCounted(cleaned, s"$root/clean")
-            }
-            (spark.read.parquet(s"$root/clean"), n)
-          } else (metered, nPairs)
-        // stage split for the audit: only needed when BOTH purges ran
-        // (one extra broadcast-anti count; otherwise derived free)
-        val nAfterBad =
-          if (!hasBad) nPairs
-          else if (!hasEval) nClean
-          else timedStage("dpo_release", "bad_purge_count") { afterBad.count() }
-        timedStage("dpo_release", "export") {
-          graft.operators.Scale.exportShards(
-            exportDf
-              .withColumn(
-                "pair_key",
-                concat(col("conv_id").cast("string"), lit("#"), col("parent_id").cast("string"))
-              ),
-            "pair_key",
-            shards.toInt,
-            s"$root/shards"
-          )
-        }
-        if (!opts.get("verify").contains("false"))
-          timedStage("dpo_release", "verify_export") {
-            run(Array("--maintenance", "verify_export", "--path", s"$root/shards"), spark)
-          }
-        // atomic length-grouped batch manifest (q183's layout): the
-        // loader-side artifact next to the shards — pairs sorted by
-        // total model-token length and cut into fixed-size padded
-        // batches; only (key, length) metadata enters the rank.
-        val batchesAudit = opts.get("length_batches").fold("") { n =>
-          require(
-            opts.contains("bpe_model"),
-            "dpo_release: --length_batches requires --bpe_model — the layout sorts by " +
-              "MODEL-token length, which only the frozen merge table defines"
-          )
-          val man = graft.operators.Packing.lengthGroupedBatches(
-            exportDf.withColumn(
-              "total_toks",
-              col("prompt_toks") + col("chosen_toks") + col("rejected_toks")
-            ),
-            Seq("conv_id", "parent_id"),
-            "total_toks",
-            n.toInt
-          )
-          val rows = timedStage("dpo_release", "length_batches") {
-            Pipeline.writeCounted(man, s"$root/batches")
-          }
-          val nBatches = (rows + n.toInt - 1) / n.toInt
-          s""", "batch_size": $n, "batches": $nBatches"""
-        }
-        // per-side length-bias audit in MODEL-token space (q181's
-        // composition over the landed export): does the rater pay for
-        // length in the space the trainer optimizes? Bounded: one
-        // 2-group agg over the export, O(1) collect.
-        val lengthAudit = if (opts.get("bpe_model").isEmpty) "" else {
-          val slopes = graft.operators.Preference
-            .lengthBiasSlope(
-              exportDf.select(
-                lit("chosen").as("side"),
-                col("chosen_toks").as("toks"),
-                col("chosen_score").as("score")
-              ).unionByName(exportDf.select(
-                lit("rejected").as("side"),
-                col("rejected_toks").as("toks"),
-                col("rejected_score").as("score")
-              )),
-              "side",
-              "toks",
-              "score"
-            )
-            .collect()
-            .map(r => s""""${r.getString(0)}": ${r.getLong(2)}""")
-            .mkString(", ")
-          s""", "bpe_model_version": ${bpeVersion.getOrElse(-1)},""" +
-            s""" "length_bias_slope_micro": {$slopes}"""
-        }
-        // turns_in is a parquet-footer count of the input store —
-        // metadata-cheap (no data pages read), documented as such.
-        val nTurns = spark.read.parquet(turnsPath).count()
-        val landed = spark.read.parquet(s"$root/shards").count()
-        writeManifest(
-          spark,
-          root,
-          "_dpo_release.json",
-          s"""{"turns_in": $nTurns, "pairs": $nPairs, "purged": ${nPairs - nClean},""" +
-            s""" "purged_bad": ${nPairs - nAfterBad}, "purged_eval": ${nAfterBad - nClean},""" +
-            s""" "clean_pairs": $nClean, "landed_rows": $landed, "shards": $shards""" +
-            s"""$batchesAudit$lengthAudit}"""
-        )
-        println(
-          s"[maintenance] dpo release at $root: $nTurns turns -> $nPairs triple(s)" +
-            (if (hasBad || hasEval)
-               s" (${nPairs - nAfterBad} bad-purged, ${nAfterBad - nClean} eval-purged)"
-             else "") +
-            s" -> $landed landed in $shards verified shards"
-        )
-      case Some("branch_pairs") =>
-        // Tree-native DPO pairs (Preference.branchPairs /
-        // ConvTree.branchPairsRendered): sibling response-role turns
-        // under the same parent are regenerations of one context;
-        // with per-turn scores each sibling group yields a pair.
-        // --render true additionally ships the textual prompt (the
-        // root→parent path) and the chosen/rejected contents — the
-        // trainer-ready triple export.
-        val turnsPath = opts.getOrElse("turns", sys.error("--turns <parquet> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val convCol = opts.getOrElse("conv_col", "conv_id")
-        val turnCol = opts.getOrElse("turn_col", "turn_id")
-        val parentCol = opts.getOrElse("parent_col", "parent_id")
-        val roleCol = opts.getOrElse("role_col", "role")
-        val contentCol = opts.getOrElse("content_col", "content")
-        val scoreCol = opts.getOrElse("score_col", "score")
-        val respRole = opts.getOrElse("resp_role", "assistant")
-        val turnsDf = spark.read.parquet(turnsPath)
-        // --paths_state serves the prompt render from the durable
-        // TreeState memberships instead of re-running the closure.
-        val result =
-          if (opts.get("render").contains("true"))
-            opts.get("paths_state") match {
-              case Some(st) =>
-                graft.operators.ConvTree.branchPairsRenderedFrom(
-                  graft.operators.TreeState.memberships(spark, st),
-                  turnsDf, convCol, turnCol, parentCol, roleCol, contentCol, scoreCol, respRole)
-              case None =>
-                graft.operators.ConvTree.branchPairsRendered(
-                  turnsDf, convCol, turnCol, parentCol, roleCol, contentCol, scoreCol, respRole,
-                  opts.getOrElse("max_depth", "10000").toInt)
-            }
-          else
-            graft.operators.Preference.branchPairs(
-              turnsDf, convCol, turnCol, parentCol, roleCol, scoreCol, respRole)
-        val n = Pipeline.writeCounted(result, out)
-        // The tie-drop contract made visible: a coarse-score rater
-        // pipeline (binary thumbs) silently loses every all-tied
-        // sibling group — print the shrinkage next to the pair count.
-        val tiesDropped = graft.operators.Preference.branchTiesDropped(
-          turnsDf, convCol, turnCol, parentCol, roleCol, scoreCol, respRole)
-        println(
-          s"[maintenance] branch_pairs: $n sibling-regeneration pair(s)" +
-            (if (opts.get("render").contains("true")) " (rendered triples)" else "") +
-            s" to $out ($tiesDropped all-tied group(s) dropped by the tie contract)"
-        )
-      case Some("tree_render") =>
-        // Tree-aware SFT render prep (ConvTree.renderPaths): a
-        // parent-pointer turn store -> a FLAT path-turns table the
-        // existing SFT chain consumes as-is — each root→leaf path
-        // becomes one synthetic conversation (`doc_id` = the path's
-        // dense rank over (conv, leaf), two-pass, no global sort;
-        // `turn_key` = the turn's position on the path; `role` = the
-        // EFFECTIVE role: the train role exactly on first-visit
-        // train-role memberships, 'context' everywhere else), so
-        // downstream role masking trains every turn's tokens exactly
-        // once while shared prefixes ride along in-context. Original
-        // (conv_id, path_id, turn_id, orig_role, train) ride along as
-        // provenance columns.
-        import org.apache.spark.sql.functions.{col, struct}
-        val turnsPath = opts.getOrElse("turns", sys.error("--turns <parquet> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val convCol = opts.getOrElse("conv_col", "conv_id")
-        val turnCol = opts.getOrElse("turn_col", "turn_id")
-        val parentCol = opts.getOrElse("parent_col", "parent_id")
-        val roleCol = opts.getOrElse("role_col", "role")
-        val contentCol = opts.getOrElse("content_col", "content")
-        val trainRole = opts.getOrElse("train_role", "assistant")
-        val maxDepth = opts.getOrElse("max_depth", "10000").toInt
-        // --paths_state serves the memberships from the durable
-        // TreeState instead of re-running the closure per render.
-        val rendered = opts.get("paths_state") match {
-          case Some(st) =>
-            graft.operators.ConvTree.renderPathsFrom(
-              graft.operators.TreeState.memberships(spark, st),
-              spark.read.parquet(turnsPath),
-              convCol, turnCol, roleCol, contentCol, trainRole)
-          case None =>
-            graft.operators.ConvTree.renderPaths(
-              spark.read.parquet(turnsPath),
-              convCol, turnCol, parentCol, roleCol, contentCol, trainRole, maxDepth)
-        }
-        val pathIds = graft.operators.Vocab
-          .withIds(
-            rendered.select(struct(col("conv_id"), col("path_id")).as("__path")).distinct(),
-            "__path",
-            nParts = 32
-          )
-          .select(
-            col("__path").getField("conv_id").as("conv_id"),
-            col("__path").getField("path_id").as("path_id"),
-            col("__path_id").as("doc_id")
-          )
-        val pathTurns = rendered
-          .join(pathIds, Seq("conv_id", "path_id"))
-          .select(
-            col("doc_id"),
-            col("pos").as("turn_key"),
-            col("eff_role").as("role"),
-            col("content"),
-            col("conv_id"),
-            col("path_id"),
-            col("turn_id"),
-            col("role").as("orig_role"),
-            col("train")
-          )
-        val n = Pipeline.writeCounted(pathTurns, out)
-        val nPaths = pathIds.count()
-        println(
-          s"[maintenance] tree_render: $n path-turn row(s) across $nPaths path(s) to $out " +
-            s"(train role $trainRole, first-visit-only)"
-        )
-      case Some("decode_packs") =>
-        // Pack DECODE (Vocab.decodePacks): a landed integer export (or
-        // any packArrays-shaped parquet) back to text through the
-        // frozen vocab — the incident-response debugging verb ("what
-        // is IN pack k?"). --from/--to prune to a pack-id range BEFORE
-        // the decode explode, so inspecting one pack costs one pack.
-        import org.apache.spark.sql.functions.col
-        val packsPath = opts.getOrElse("packs", sys.error("--packs <parquet dir> required"))
-        val vocabPath = opts.getOrElse("vocab", sys.error("--vocab <parquet dir> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val packsAll = spark.read.parquet(packsPath)
-        val packs = (opts.get("from").map(_.toLong), opts.get("to").map(_.toLong)) match {
-          case (Some(f), Some(t)) => packsAll.filter(col("pack_id") >= f && col("pack_id") < t)
-          case (None, None)       => packsAll
-          case _ => sys.error("--from and --to must be passed together")
-        }
-        val decoded = graft.operators.Vocab
-          .decodePacks(packs, spark.read.parquet(vocabPath))
-        val n = Pipeline.writeCounted(decoded, out)
-        println(s"[maintenance] decode_packs: $n pack(s) decoded to $out")
-      case Some("sft_masks") =>
-        // SFT loss-mask side-file (Preference.roleMaskIntervals, then
-        // optionally Packing.projectIntervals through a pack layout):
-        // per trainable turn its token interval — conversation-local
-        // without --manifests, pack-local [0, budget) with.
-        import org.apache.spark.sql.functions.col
-        val turnsPath = opts.getOrElse("turns", sys.error("--turns <parquet> required"))
-        val out = opts.getOrElse("out", sys.error("--out <parquet dir> required"))
-        val convCol = opts.getOrElse("conv_col", "conv_id")
-        val turnCol = opts.getOrElse("turn_col", "turn_key")
-        val roleCol = opts.getOrElse("role_col", "role")
-        val contentCol = opts.getOrElse("content_col", "content")
-        val trainRole = opts.getOrElse("train_role", "assistant")
-        val iv = graft.operators.Preference.roleMaskIntervals(
-          spark.read.parquet(turnsPath),
-          convCol,
-          turnCol,
-          roleCol,
-          contentCol,
-          trainRole
-        )
-        opts.get("manifests") match {
-          case Some(mp) =>
-            val budget = resolveBudget(spark, mp, opts)
-            // --man_id_col: the manifest's document-id column when the
-            // conversations were packed under a different key name
-            // (pack_ingest emits doc_id-keyed manifests).
-            val manIdCol = opts.getOrElse("man_id_col", "conv_id")
-            val manDf0 = spark.read.parquet(mp)
-            val manDf =
-              if (manIdCol == "conv_id") manDf0
-              else manDf0.withColumnRenamed(manIdCol, "conv_id")
-            val masks = graft.operators.Packing.projectIntervals(
-              manDf,
-              iv,
-              "conv_id",
-              budget,
-              carryCols = Seq(turnCol)
-            )
-            val n = Pipeline.writeCounted(masks, out)
-            println(
-              s"[maintenance] sft masks: $n pack-local [0, $budget) interval(s) " +
-                s"for role=$trainRole -> $out"
-            )
-          case None =>
-            val n = Pipeline.writeCounted(iv, out)
-            println(
-              s"[maintenance] sft masks: $n conversation-local interval(s) " +
-                s"for role=$trainRole -> $out"
-            )
-        }
-      case Some("verify_export") =>
-        // Landing integrity check (Scale.verifyExport): recompute each
-        // shard's row count and order-independent content digest from
-        // the landed files and compare against the export's own
-        // __manifest — the post-copy check a release pipeline runs,
-        // and a scheduled bitrot scan for cold shards. Exits nonzero
-        // (require) on any corrupt shard, naming it.
-        import org.apache.spark.sql.functions.col
-        val path = opts.getOrElse("path", sys.error("--path <export dir> required"))
-        val report = graft.operators.Scale.verifyExport(spark, path)
-        opts.get("out").foreach(o => Pipeline.writeCounted(report, o))
-        val bad = report.filter(!col("ok")).collect()
-        require(
-          bad.isEmpty,
-          s"verify_export: ${bad.length} corrupt shard(s) in $path: " +
-            bad.map(r => s"shard=${r.getInt(0)} rows ${r.getLong(2)}/${r.getLong(1)} " +
-              s"digest ${r.getLong(4)}/${r.getLong(3)}").mkString("; ")
-        )
-        val n = report.count()
-        println(s"[maintenance] verify_export: $n shard(s) in $path verified, all ok")
-      case Some("compact_partitions") =>
-        // Scheduled read-optimize for a hive-partitioned state dir
-        // whose partitions accumulate one file per ingest batch (the
-        // IVF assignments layout, batch-keyed telemetry, ...):
-        // Maintenance.compactPartitioned rewrites every dir above the
-        // file-count threshold in one job and swaps dirs in two
-        // renames each (crash-healed on the next run's entry; fenced
-        // by a `<path>.__writer` lease since r16). NOTE the lease is
-        // on the GIVEN path — when the dir belongs to a composite
-        // state whose ingest fences on its own root (the IVF index
-        // leases `<index>`, not `<index>/assignments`), schedule this
-        // verb in the ingest's quiet window or use the owner's
-        // compaction entry point (TextIndex.compactIndex root-fences
-        // for exactly this reason).
-        val path = opts.getOrElse("path", sys.error("--path <dir> required"))
-        val targetMb = opts.getOrElse("target_mb", "128").toLong
-        val minFiles = opts.getOrElse("min_files", "2").toInt
-        val n = graft.operators.Maintenance
-          .compactPartitioned(spark, path, targetMb * 1024 * 1024, minFiles)
-        println(s"[maintenance] compacted $n fragmented partition dir(s) in $path")
-      case Some("span_state_report") =>
-        // Sizing snapshot of a span state from its _segs manifests —
-        // pure metadata (Maintenance.spanStateReport); prints the
-        // re-shard recommendation under the SCALE.md sizing rule.
-        val state = opts.getOrElse("state", sys.error("--state <dir> required"))
-        val target = opts.getOrElse("target_task_mb", "512").toLong * 1024 * 1024
-        val r = graft.operators.Maintenance.spanStateReport(spark, state, target)
-        println(
-          s"[maintenance] span state report: buckets=${r.buckets} totalKiB=${r.totalBytes / 1024} " +
-            s"maxBucketKiB=${r.maxBucketBytes / 1024} p50BucketKiB=${r.p50BucketBytes / 1024} " +
-            s"maxSegments=${r.maxSegments} recommendedBuckets=${r.recommendedBuckets}" +
-            (if (r.recommendedBuckets > 2 * r.buckets || r.buckets > 2 * r.recommendedBuckets)
-               s" -- consider span_state_compact --buckets ${r.recommendedBuckets}"
-             else "")
-        )
-      case Some("span_state_compact") =>
-        // Read-optimize a segmented span-hash state: merge every
-        // partition's segments down to one (Maintenance.compactSpanState
-        // — crash-safe two-phase commit, idempotent to re-run).
-        // --buckets N RE-SHARDS the state under a new hash-prefix
-        // bucket count (the escape hatch for a creation-time
-        // mis-sizing; view/probes/marker invariant). --target_task_mb
-        // sizes writer tasks by bytes, never one-per-bucket.
-        val state = opts.getOrElse("state", sys.error("--state <dir> required"))
-        val nbOpt = opts.get("buckets").map(_.toInt)
-        val target = opts.getOrElse("target_task_mb", "512").toLong * 1024 * 1024
-        val (done, total) =
-          graft.operators.Maintenance.compactSpanState(spark, state, nbOpt, target)
-        println(s"[maintenance] span state compact: $done of $total partitions rewritten in $state")
-      case Some("drift_manifest") =>
-        // Refresh a drifting archive's `_schemas` manifest
-        // (Drift.writeSchemaManifest): after this, readConformed's
-        // plan-time driver cost is one small file read instead of a
-        // footer read per batch dir — the scheduled twin of the ingest
-        // job appending its own line.
-        val root = opts.getOrElse("root", sys.error("--root <archive dir> required"))
-        val n = graft.sources.Drift.writeSchemaManifest(spark, root)
-        println(s"[maintenance] drift manifest for $root: $n batch dir(s) recorded")
-      case Some(other) => sys.error(s"unknown --maintenance verb: $other")
+        if (!ok) sys.error(s"etl: $f failed and was quarantined to ${bucket}failed/")
       case None =>
-        val bucket = opts.getOrElse("bucket", sys.error("--bucket required"))
-        opts.get("raw_file_name") match {
-          case Some(f) =>
-            Pipeline.runIncrementalQuarantined(
-              spark,
-              bucket,
-              f,
-              singleFileOutput = opts.getOrElse("coalesce", "true").toBoolean,
-              partitionTimeByMonth = opts.getOrElse("partition_month", "false").toBoolean,
-              dynamicPartitionOverwrite = opts.getOrElse("dynamic_overwrite", "false").toBoolean,
-              failFast = opts.getOrElse("fail_fast", "false").toBoolean
-            )
-          case None =>
-            Pipeline.runFullBatch(spark, s"${bucket}raw/", s"${bucket}transformed/")
-        }
+        Pipeline.runFullBatch(spark, s"${bucket}raw/", s"${bucket}transformed/")
     }
   }
+
+  // turns_stream and turns_backfill share flags and body; the verb name
+  // picks the drain.
+  private val turnsFlags = Seq(
+    req("raw", "DIR"), req("state", "DIR"), req("checkpoint", "DIR"),
+    opt("max_depth", "N", "10000"), opt("max_conv_rows", "N", "2000000")
+  )
+
+  private val turnsDrain: (Args, org.apache.spark.sql.SparkSession) => Unit = { (opts, spark) =>
+    // Streaming tree-membership maintenance
+    // (StreamingPipeline.turnsIngest): tail a directory of
+    // turn-batch JSON files into the persistent TreeState — the
+    // tree family's streaming arm (batch tree_paths / incremental
+    // tree_state / STREAMING triad). AvailableNow: drains what
+    // exists, then returns (cron-friendly). Files must land in
+    // causal order (parents before children); the fold's orphan
+    // gate refuses violations loudly.
+    // turns_backfill: the COLD-START arm — fold the whole existing
+    // backlog as ONE batch on the SAME checkpoint, then run
+    // turns_stream steady-state; a 100-file backlog costs one fold
+    // instead of 100 serial per-file folds (the file-=-batch
+    // contract is a steady-state discipline, not a replay tax).
+    val raw = opts("raw")
+    val state = opts("state")
+    val ckpt = opts("checkpoint")
+    val turnSchema = org.apache.spark.sql.types.StructType(
+      Seq(
+        org.apache.spark.sql.types
+          .StructField("conv_id", org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types
+          .StructField("turn_id", org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types
+          .StructField("parent_id", org.apache.spark.sql.types.LongType)
+      )
+    )
+    val maxDepth = opts("max_depth").toInt
+    // walk-row guard, raisable from the CLI (r16): the unit is
+    // buffered walk rows (memberships ≈ paths × depth + batch
+    // turns), not turns — see ConvTree.guardConvRows
+    val maxConvRows = opts("max_conv_rows").toInt
+    (if (opts.verb.name == "turns_backfill")
+       graft.streaming.StreamingPipeline
+         .turnsBackfill(spark, raw, state, ckpt, turnSchema, maxDepth, maxConvRows)
+     else
+       graft.streaming.StreamingPipeline
+         .turnsIngest(spark, raw, state, ckpt, turnSchema, maxDepth, maxConvRows))
+      .awaitTermination()
+    // Empty-drain guard (the dsir_stream lesson): a drain that saw
+    // no files never created the state — report 0 instead of
+    // throwing on a missing parquet dir.
+    val stateHPath = new org.apache.hadoop.fs.Path(state)
+    val stateFs = stateHPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val nMemb =
+      if (stateFs.exists(stateHPath))
+        graft.operators.TreeState.memberships(spark, state).count()
+      else 0L
+    println(
+      s"[maintenance] ${opts.verb.name} drained: state at $state now holds $nMemb membership row(s)"
+    )
+  }
+
+  // dpo_release hands these to its branch_pairs stage when given.
+  private val dpoPassThrough = Seq(
+    opt("conv_col", "COL"), opt("turn_col", "COL"), opt("parent_col", "COL"), opt("role_col", "COL"),
+    opt("content_col", "COL"), opt("score_col", "COL"), opt("resp_role", "ROLE"), opt("max_depth", "N"),
+    opt("paths_state", "DIR")
+  )
+
+  private val verbs: Seq[Verb] = Seq(
+    verb("compact", "rewrite a table dir into files of about --target_mb MB")(
+      req("path", "DIR"), opt("target_mb", "MB", "128")) { (opts, spark) =>
+      val path = opts("path")
+      val target = opts("target_mb").toLong * 1024 * 1024
+      val n = graft.operators.Maintenance.compact(spark, path, target)
+      println(s"[maintenance] compacted $path -> $n file(s)")
+    },
+    verb("expire", "delete year= (or year=/month=) partitions older than --before YYYYMM")(
+      req("path", "DIR"), req("before", "YYYYMM")) { (opts, spark) =>
+      val path = opts("path")
+      val before = opts("before").toInt
+      val deleted = graft.operators.Maintenance.expirePartitions(
+        spark,
+        path,
+        spec =>
+          (spec.get("year"), spec.get("month")) match {
+            // year=/month= nested layout: expire by year-month
+            case (Some(y), Some(m)) => y.toInt * 100 + m.toInt < before
+            // year=-only layout (full-batch writes): expire a whole
+            // year when even its December predates the cutoff; else
+            // recurse (a month level, if present, decides per month)
+            case (Some(y), None) => y.toInt * 100 + 12 < before
+            // month=-only layout carries no year — a YYYYMM cutoff
+            // cannot be applied to it; refuse loudly over guessing
+            case _ =>
+              sys.error(
+                "expire needs a year= (optionally month=) layout; " +
+                  "month=-only layouts carry no year to compare against"
+              )
+          }
+      )
+      println(s"[maintenance] expired ${deleted.length} partition(s)")
+    },
+    verb("materialize_features", "write the shared text-feature tables as durable parquet under --state")(
+      req("data", "DIR"), req("state", "DIR")) { (opts, spark) =>
+      // Durable parquet barrier for the shared text-feature tables —
+      // the scheduled twin of the per-session memo (SCALE.md).
+      val data = opts("data")
+      val state = opts("state")
+      val (sh, tok) = graft.queries.TextQueries.materializeFeatures(spark, data, state)
+      println(s"[maintenance] materialized features: $sh , $tok")
+    },
+    verb("rebalance_vector_index", "split IVF clusters larger than --max_over_median x the median size")(
+      req("path", "DIR"), opt("max_over_median", "X", "8")) { (opts, spark) =>
+      // Skew escalation for a persistent IVF index: split clusters
+      // above --max_over_median x median(cluster size). The scheduled
+      // response when clusterStats drifts (VectorIndex.rebalance).
+      val path = opts("path")
+      val bound = opts("max_over_median").toDouble
+      val split = graft.operators.VectorIndex.rebalance(spark, path, bound)
+      println(s"[maintenance] rebalanced $path: $split cluster(s) split")
+    },
+    verb("semantic_dedup_ingest", "drain embedding JSON files through streaming SemDeDup against the IVF index")(
+      req("raw", "DIR"), req("index", "DIR"), req("drops", "DIR"), req("checkpoint", "DIR"),
+      opt("min_cos", "X", "0.995"), bool("resolve_survivors", false)) { (opts, spark) =>
+      // Streaming SemDeDup over arriving embedding files: probe the
+      // persistent IVF index, drop near-dups, append survivors —
+      // the scheduled twin of dedup/near-dup ingest
+      // (StreamingPipeline.semanticDedupIngest). Embedding JSON shape:
+      // {"vec_id": long, "embedding": [double, ...]}.
+      // --resolve_survivors true adds a `survivor` column to the drop
+      // telemetry: dup_of chased through the batch's drop chain to the
+      // row that was actually kept.
+      val raw = opts("raw")
+      val index = opts("index")
+      val drops = opts("drops")
+      val ckpt = opts("checkpoint")
+      val minCos = opts("min_cos").toDouble
+      val resolve = opts.bool("resolve_survivors")
+      graft.streaming.StreamingPipeline
+        .semanticDedupIngest(
+          spark, raw, index, drops, ckpt, graft.schemas.Schemas.embeddingIngest, minCos, resolve
+        )
+        .awaitTermination()
+      println(s"[maintenance] semantic dedup ingest drained $raw into $index")
+    },
+    verb("curate", "one-command curation: quality gate, span clean, token floor, exact dedup, shards")(
+      req("data", "DIR"), req("out", "DIR"), opt("shards", "N", "8"), opt("min_keep_tokens", "N", "1"),
+      opt("gate_millibits", "N", "4400"), bool("span_clean", true)) { (opts, spark) =>
+      // One-command corpus curation: quality gate -> span clean ->
+      // min-token floor -> exact dedup on cleaned text -> shard
+      // manifest (Pipeline.curateCorpus; each stage is an
+      // oracle-checked rule).
+      val data = opts("data")
+      val out = opts("out")
+      val shards = opts("shards").toInt
+      val minKeep = opts("min_keep_tokens").toInt
+      val gateMilliBits = opts("gate_millibits").toLong
+      val spanClean = opts.bool("span_clean")
+      val (nIn, nOut) =
+        Pipeline.curateCorpus(spark, data, out, shards, minKeep, gateMilliBits, spanClean)
+      println(s"[maintenance] curated $data: $nIn -> $nOut docs in $out")
+    },
+    verb("span_dedup_ingest", "drain document JSON files through streaming span-level dedup")(
+      req("raw", "DIR"), req("state", "DIR"), req("out", "DIR"), req("checkpoint", "DIR"),
+      opt("min_tokens", "N", "5")) { (opts, spark) =>
+      // Streaming span-level dedup over arriving document JSON files:
+      // per-file extents against the persistent span-hash state,
+      // batch-keyed telemetry, hashes folded in
+      // (StreamingPipeline.spanDedupIngest). Document JSON shape:
+      // {"doc_id": long, "text": string}. Same doc-disjointness
+      // constraint as dup_spans: a re-used doc_id with changed text
+      // silently loses its cross-version duplicate spans — give
+      // re-crawled documents fresh ids.
+      val raw = opts("raw")
+      val state = opts("state")
+      val out = opts("out")
+      val ckpt = opts("checkpoint")
+      val minTokens = opts("min_tokens").toInt
+      graft.streaming.StreamingPipeline
+        .spanDedupIngest(spark, raw, state, out, ckpt, graft.schemas.Schemas.documentIngest, minTokens)
+        .awaitTermination()
+      println(s"[maintenance] span dedup ingest drained $raw against $state")
+    },
+    verb("dup_spans", "span-level dedup of one batch against the persistent span-hash state")(
+      req("batch", "DIR"), req("state", "DIR"), req("out", "DIR"), opt("applied_id", "N"),
+      opt("min_tokens", "N", "5"), bool("check_doc_reuse", false)) { (opts, spark) =>
+      // Incremental span-level dedup: probe one batch of documents
+      // against the persistent span-hash state, emit the batch's
+      // duplicated extents as parquet, fold the batch's hashes in
+      // (Maintenance.incrementalDupSpans — exactly-once via
+      // --applied_id). Batch parquet shape: (doc_id, text).
+      // CONSTRAINT: exact for doc-disjoint batches. Re-using a
+      // doc_id with CHANGED text makes the self-attribution
+      // exclusion silently suppress that doc's cross-version
+      // duplicate spans — re-crawls that may rewrite a doc must
+      // assign a fresh doc_id (e.g. (url, crawl_ts) keyed).
+      // --check_doc_reuse true enforces it: the run fails listing
+      // offenders (costs a two-column full-state scan — audit
+      // schedule, not hot path).
+      val batchPath = opts("batch")
+      val state = opts("state")
+      val out = opts("out")
+      val applied = opts.get("applied_id").map(_.toLong)
+      val minTokens = opts("min_tokens").toInt
+      val checkReuse = opts.bool("check_doc_reuse")
+      graft.operators.Maintenance
+        .incrementalDupSpans(
+          spark,
+          spark.read.parquet(batchPath),
+          "doc_id",
+          "text",
+          state,
+          applied,
+          minTokens,
+          checkDocIdReuse = checkReuse
+        )
+        .write
+        .mode("overwrite")
+        .parquet(out)
+      println(s"[maintenance] dup spans: $batchPath probed against $state -> $out")
+    },
+    verb("pack_ingest", "pack one batch after everything already packed (emitted pack ids never move)")(
+      req("batch", "DIR"), req("state", "DIR"), req("out", "DIR"), req("applied_id", "N"),
+      opt("budget", "N", "2048"), opt("shards", "N", "8"), opt("bpe_model", "DIR")) { (opts, spark) =>
+      // Incremental sequence packing: lay one batch of documents out
+      // after everything already packed (Packing.packIngest — the
+      // persistent offset state makes emitted pack ids immutable),
+      // write the batch's manifest under out/pack_batch=<id>.
+      // Batch parquet shape: (doc_id, text). Replay of the same
+      // --applied_id converges (recorded base reused). With
+      // --bpe_model M, the stream is metered in FROZEN-BPE tokens
+      // (Bpe.segmentCountsFrozen joined as the layout weight) — pin
+      // one model version per state: offsets are cumulative, a
+      // drifting metric would re-meter history.
+      val batchPath = opts("batch")
+      val state = opts("state")
+      val out = opts("out")
+      val applied = opts("applied_id").toLong
+      val budget = opts("budget").toLong
+      val shards = opts("shards").toInt
+      val (batchDf, wcol) = withBpeWeights(spark, spark.read.parquet(batchPath), opts.get("bpe_model"))
+      graft.operators.Packing
+        .packIngest(
+          spark,
+          batchDf,
+          "doc_id",
+          "text",
+          state,
+          applied,
+          budget,
+          shards,
+          weightCol = wcol
+        )
+        .write
+        .mode("overwrite")
+        .parquet(s"$out/pack_batch=$applied")
+      // manifest root carries the same budget sidecar as the state,
+      // so manifest-only consumers (pack_boundaries) can validate too
+      graft.operators.Packing.recordBudget(spark, out, budget)
+      println(s"[maintenance] pack ingest: $batchPath appended to $state -> $out/pack_batch=$applied")
+    },
+    verb("pack_ingest_by", "pack_ingest with one append-only pack space per --group_col value")(
+      req("batch", "DIR"), req("state", "DIR"), req("out", "DIR"), req("applied_id", "N"),
+      opt("group_col", "COL", "source"), opt("budget", "N", "2048"), opt("shards", "N", "8"),
+      opt("bpe_model", "DIR")) { (opts, spark) =>
+      // Incremental STRATIFIED packing: same contract per domain
+      // (Packing.packIngestBy — per-domain append-only pack spaces).
+      // Batch parquet shape: (doc_id, <group_col>, text).
+      val batchPath = opts("batch")
+      val state = opts("state")
+      val out = opts("out")
+      val applied = opts("applied_id").toLong
+      val group = opts("group_col")
+      val budget = opts("budget").toLong
+      val shards = opts("shards").toInt
+      val (batchDf, wcol) = withBpeWeights(spark, spark.read.parquet(batchPath), opts.get("bpe_model"))
+      graft.operators.Packing
+        .packIngestBy(
+          spark,
+          batchDf,
+          "doc_id",
+          "text",
+          group,
+          state,
+          applied,
+          budget,
+          shards,
+          weightCol = wcol
+        )
+        .write
+        .mode("overwrite")
+        .parquet(s"$out/pack_batch=$applied")
+      graft.operators.Packing.recordBudget(spark, out, budget)
+      println(
+        s"[maintenance] stratified pack ingest: $batchPath appended per-$group to $state -> $out/pack_batch=$applied"
+      )
+    },
+    verb("build_quality_model", "freeze the LM quality model from a reference corpus")(
+      req("data", "DIR"), req("model", "DIR"), opt("retain", "N", "1")) { (opts, spark) =>
+      // Freeze the LM quality model from a reference corpus — the
+      // scheduled retrain feeding curate_ingest's gate
+      // (QualityModel.build; immutable version dir + overwrite-rename
+      // pointer flip, --retain N predecessors kept for readers).
+      val data = opts("data")
+      val model = opts("model")
+      val retain = opts("retain").toInt
+      graft.operators.QualityModel.build(
+        spark,
+        spark.read.parquet(s"$data/documents.parquet"),
+        "doc_id",
+        "text",
+        model,
+        retain
+      )
+      println(s"[maintenance] quality model frozen from $data into $model")
+    },
+    verb("build_bpe_model", "freeze a versioned BPE merge table from a reference corpus")(
+      req("data", "DIR"), req("model", "DIR"), opt("merges", "N", "256"), opt("min_count", "N", "1"),
+      opt("retain", "N", "1"), opt("driver_max_chars", "N", "16777216")) { (opts, spark) =>
+      // Freeze a BPE merge table from a reference corpus
+      // (Bpe.buildModel — same versioned-pointer serving protocol as
+      // the quality model). A frozen tokenizer keeps BPE token
+      // counts stable across a crawl.
+      val data = opts("data")
+      val model = opts("model")
+      val merges = opts("merges").toInt
+      val minCount = opts("min_count").toLong
+      val retain = opts("retain").toInt
+      // --driver_max_chars: the trainer-path threshold (chars of
+      // pruned histogram the driver will hold); 0 forces the
+      // distributed per-round loop.
+      val dmc = opts("driver_max_chars").toLong
+      graft.operators.Bpe.buildModel(
+        spark,
+        spark.read.parquet(s"$data/documents.parquet"),
+        "text",
+        model,
+        merges,
+        minCount,
+        retain,
+        dmc
+      )
+      println(s"[maintenance] BPE model ($merges merges) frozen from $data into $model")
+    },
+    verb("bpe_segment", "per-doc token counts of a batch under a frozen BPE model")(
+      req("batch", "DIR"), req("model", "DIR"), req("out", "DIR")) { (opts, spark) =>
+      // Score a batch with a frozen tokenizer: per-doc whitespace vs
+      // BPE token counts (Bpe.segmentCountsFrozen) — the counts a
+      // pack-budget loop meters with (pack_ingest on n_bpe_tokens
+      // via Packing.layoutWeighted).
+      val batchPath = opts("batch")
+      val model = opts("model")
+      val out = opts("out")
+      graft.operators.Bpe
+        .segmentCountsFrozen(spark.read.parquet(batchPath), "doc_id", "text", model)
+        .write
+        .mode("overwrite")
+        .parquet(out)
+      println(s"[maintenance] BPE segment counts: $batchPath scored against $model -> $out")
+    },
+    verb("curate_ingest", "incremental curation of one batch: frozen gate, span clean, floor, cross-batch dedup")(
+      req("batch", "DIR"), req("model", "DIR"), req("span_state", "DIR"), req("index", "DIR"),
+      req("out", "DIR"), req("applied_id", "N"), opt("min_keep_tokens", "N", "1")) { (opts, spark) =>
+      // Incremental curation of one crawl batch against persistent
+      // state (Pipeline.curateIngest): frozen-LM gate -> span clean
+      // vs the durable span-hash state -> min-token floor ->
+      // cross-batch exact dedup. Batch parquet shape: (doc_id, text,
+      // ...); exactly-once via --applied_id (replays converge); same
+      // doc-disjointness contract as dup_spans.
+      val batchPath = opts("batch")
+      val model = opts("model")
+      val spanState = opts("span_state")
+      val index = opts("index")
+      val out = opts("out")
+      val applied = opts("applied_id").toLong
+      val minKeep = opts("min_keep_tokens").toInt
+      val (nIn, nOut) = Pipeline.curateIngest(
+        spark,
+        spark.read.parquet(batchPath),
+        model,
+        spanState,
+        index,
+        out,
+        applied,
+        minKeep
+      )
+      println(s"[maintenance] curate ingest batch $applied: $nIn -> $nOut docs into $out")
+    },
+    verb("curate_stream", "drain document JSON files through the curate_ingest composition")(
+      req("raw", "DIR"), req("model", "DIR"), req("span_state", "DIR"), req("index", "DIR"),
+      req("out", "DIR"), req("checkpoint", "DIR"), opt("min_keep_tokens", "N", "1")) { (opts, spark) =>
+      // Streaming curation over arriving document JSON files: the
+      // curate_ingest composition per micro-batch, foreachBatch ids
+      // keying every stage's exactly-once machinery
+      // (StreamingPipeline.curateIngestStream). Document JSON shape:
+      // {"doc_id": long, "text": string}; same doc-disjointness
+      // contract as dup_spans across files.
+      val raw = opts("raw")
+      val model = opts("model")
+      val spanState = opts("span_state")
+      val index = opts("index")
+      val out = opts("out")
+      val ckpt = opts("checkpoint")
+      val minKeep = opts("min_keep_tokens").toInt
+      graft.streaming.StreamingPipeline
+        .curateIngestStream(
+          spark, raw, model, spanState, index, out, ckpt,
+          graft.schemas.Schemas.documentIngest, minKeep
+        )
+        .awaitTermination()
+      println(s"[maintenance] curate stream drained $raw into $out")
+    },
+    verb("pack_stream", "pack_ingest per arriving document JSON file")(
+      req("raw", "DIR"), req("state", "DIR"), req("out", "DIR"), req("checkpoint", "DIR"),
+      opt("budget", "N", "2048"), opt("shards", "N", "8")) { (opts, spark) =>
+      // Streaming incremental packing over arriving document JSON
+      // files: packIngest per micro-batch, manifests batch-keyed
+      // (StreamingPipeline.packIngestStream). Document JSON shape:
+      // {"doc_id": long, "text": string}.
+      val raw = opts("raw")
+      val state = opts("state")
+      val out = opts("out")
+      val ckpt = opts("checkpoint")
+      val budget = opts("budget").toLong
+      val shards = opts("shards").toInt
+      graft.streaming.StreamingPipeline
+        .packIngestStream(
+          spark, raw, state, out, ckpt,
+          graft.schemas.Schemas.documentIngest, budget, shards
+        )
+        .awaitTermination()
+      println(s"[maintenance] pack stream drained $raw into $out")
+    },
+    verb("pack_stream_by", "pack_ingest_by per arriving document JSON file")(
+      req("raw", "DIR"), req("state", "DIR"), req("out", "DIR"), req("checkpoint", "DIR"),
+      opt("group_col", "COL", "source"), opt("budget", "N", "2048"),
+      opt("shards", "N", "8")) { (opts, spark) =>
+      // Streaming stratified packing over arriving document JSON
+      // files (StreamingPipeline.packIngestStreamBy). JSON shape:
+      // {"doc_id": long, "source": string, "text": string}.
+      val raw = opts("raw")
+      val state = opts("state")
+      val out = opts("out")
+      val ckpt = opts("checkpoint")
+      val group = opts("group_col")
+      val budget = opts("budget").toLong
+      val shards = opts("shards").toInt
+      graft.streaming.StreamingPipeline
+        .packIngestStreamBy(
+          spark, raw, state, out, ckpt,
+          graft.schemas.Schemas.documentIngestBy, group, budget, shards
+        )
+        .awaitTermination()
+      println(s"[maintenance] stratified pack stream drained $raw into $out")
+    },
+    verb("fertility_stream", "per-source fertility telemetry per arriving file under a frozen BPE model")(
+      req("raw", "DIR"), req("model", "DIR"), req("out", "DIR"), req("checkpoint", "DIR")) { (opts, spark) =>
+      // Streaming fertility-drift telemetry under a frozen BPE model
+      // (StreamingPipeline.fertilityStream): per arriving document
+      // JSON file, per-source whitespace vs model token totals as
+      // batch-keyed rows. JSON shape: {"doc_id","source","text"}.
+      val raw = opts("raw")
+      val model = opts("model")
+      val out = opts("out")
+      val ckpt = opts("checkpoint")
+      graft.streaming.StreamingPipeline
+        .fertilityStream(spark, raw, model, out, ckpt, graft.schemas.Schemas.documentIngestBy)
+        .awaitTermination()
+      println(s"[maintenance] fertility stream drained $raw into $out")
+    },
+    verb("decontam_stream", "eval-overlap report per arriving document JSON file")(
+      req("raw", "DIR"), req("eval", "DIR"), req("out", "DIR"), req("checkpoint", "DIR"),
+      opt("threshold", "X", "0.5")) { (opts, spark) =>
+      // Streaming decontamination against a frozen eval benchmark
+      // (StreamingPipeline.decontamStream): per arriving document
+      // JSON file, the per-doc eval-overlap report as batch-keyed
+      // telemetry. JSON shape: {"doc_id","text"}.
+      val raw = opts("raw")
+      val evalPath = opts("eval")
+      val out = opts("out")
+      val ckpt = opts("checkpoint")
+      val threshold = opts("threshold").toDouble
+      graft.streaming.StreamingPipeline
+        .decontamStream(
+          spark, raw, evalPath, out, ckpt, graft.schemas.Schemas.documentIngest, threshold
+        )
+        .awaitTermination()
+      println(s"[maintenance] decontam stream drained $raw into $out")
+    },
+    verb("decontam_fuzzy_stream", "LSH near-dup eval report per arriving document JSON file")(
+      req("raw", "DIR"), req("eval", "DIR"), req("out", "DIR"), req("checkpoint", "DIR"),
+      opt("threshold", "X", "0.5"), opt("nhashes", "N", "16"), opt("bandrows", "N", "4")) { (opts, spark) =>
+      // The pair-attributed near-dup ingest gate
+      // (StreamingPipeline.decontamFuzzyStream): per arriving document
+      // JSON file, the per-doc LSH eval-overlap report as batch-keyed
+      // telemetry. JSON shape: {"doc_id","text"}.
+      val raw = opts("raw")
+      val evalPath = opts("eval")
+      val out = opts("out")
+      val ckpt = opts("checkpoint")
+      val threshold = opts("threshold").toDouble
+      val nHashes = opts("nhashes").toInt
+      val bandRows = opts("bandrows").toInt
+      graft.streaming.StreamingPipeline
+        .decontamFuzzyStream(
+          spark, raw, evalPath, out, ckpt, graft.schemas.Schemas.documentIngest, threshold,
+          nHashes, bandRows
+        )
+        .awaitTermination()
+      println(s"[maintenance] decontam fuzzy stream drained $raw into $out")
+    },
+    verb("pack_curated_stream", "pack a curated corpus' batch partitions as they land")(
+      req("curated", "DIR"), req("state", "DIR"), req("out", "DIR"), req("checkpoint", "DIR"),
+      opt("budget", "N", "2048"), opt("shards", "N", "8")) { (opts, spark) =>
+      // The curation→packing chain consumer: tail a curate_stream /
+      // curate_ingest corpus' batch-keyed parquet partitions and lay
+      // each newly accepted file out after everything already packed
+      // (StreamingPipeline.packCuratedStream). Run AFTER the
+      // curator's drain (or lagged one sealed batch behind it — see
+      // the method's replay note).
+      val curated = opts("curated")
+      val state = opts("state")
+      val out = opts("out")
+      val ckpt = opts("checkpoint")
+      val budget = opts("budget").toLong
+      val shards = opts("shards").toInt
+      graft.streaming.StreamingPipeline
+        .packCuratedStream(spark, curated, state, out, ckpt, budget, shards)
+        .awaitTermination()
+      println(s"[maintenance] pack curated stream drained $curated into $out")
+    },
+    verb("pack_slices", "materialize packs [--from, --to) from the incremental manifests")(
+      req("state", "DIR"), req("manifests", "DIR"), req("docs", "DIR"), req("out", "DIR"), req("from", "N"),
+      req("to", "N"), opt("budget", "N"), opt("mask", "DIR")) { (opts, spark) =>
+      // Loader-side pack materialization from an incremental manifest
+      // dir (Packing.materializePacks): the offset state prunes the
+      // batch-keyed manifest dirs to those overlapping the requested
+      // pack window BEFORE any file is opened, so a training job can
+      // read packs [from, to) at O(packs x budget) exploded tokens
+      // whatever the crawl age. Docs parquet shape: (doc_id, text).
+      // --budget defaults to (and must agree with) the state's
+      // recorded sidecar; --mask excludes retired packs
+      // (retire_packs' decision file).
+      val state = opts("state")
+      val manifests = opts("manifests")
+      val docsPath = opts("docs")
+      val out = opts("out")
+      val from = opts("from").toLong
+      val to = opts("to").toLong
+      val budget = resolveBudget(spark, state, opts)
+      val slices = graft.operators.Packing
+        .materializePacks(
+          spark,
+          state,
+          manifests,
+          spark.read.parquet(docsPath),
+          "doc_id",
+          "text",
+          from,
+          to,
+          budget,
+          mask = opts.get("mask").map(spark.read.parquet)
+        )
+      val n = Pipeline.writeCounted(slices, out)
+      println(s"[maintenance] pack slices [$from, $to): $n token rows from $manifests into $out")
+    },
+    verb("decontaminate", "report train docs overlapping the eval shingles; --purged writes the rest")(
+      req("train", "DIR"), req("eval", "DIR"), req("out", "DIR"), opt("threshold", "X", "0.5"),
+      opt("purged", "DIR")) { (opts, spark) =>
+      // Benchmark decontamination (Dedup.decontamPurge): report every
+      // train doc overlapping the eval corpus' shingle set; with
+      // --purged, also write the train corpus minus the contaminated
+      // ids. Both parquets need (doc_id, text).
+      val trainPath = opts("train")
+      val evalPath = opts("eval")
+      val out = opts("out")
+      val threshold = opts("threshold").toDouble
+      val train = spark.read.parquet(trainPath)
+      val report = graft.operators.Dedup
+        .decontamPurge(train, spark.read.parquet(evalPath), "doc_id", "text", threshold)
+        .localCheckpoint() // one computation serves the report write AND the purge anti-join
+      val n = Pipeline.writeCounted(report, out)
+      opts.get("purged").foreach { p =>
+        val kept = train.join(
+          report.filter(org.apache.spark.sql.functions.col("contaminated"))
+            .select(org.apache.spark.sql.functions.col("doc_id")),
+          Seq("doc_id"),
+          "left_anti"
+        )
+        val k = Pipeline.writeCounted(kept, p)
+        println(s"[maintenance] decontaminate: kept $k train docs into $p")
+      }
+      println(s"[maintenance] decontaminate: $n overlapping train docs reported at $out")
+    },
+    verb("decontam_fuzzy", "per train doc, LSH-candidate eval items and the worst verified Jaccard")(
+      req("train", "DIR"), req("eval", "DIR"), req("out", "DIR"), opt("threshold", "X", "0.5"),
+      opt("nhashes", "N", "16"), opt("bandrows", "N", "4"), opt("purged", "DIR")) { (opts, spark) =>
+      // Pair-attributed near-dup decontamination (Dedup.decontamFuzzy):
+      // per train doc, the eval items it MinHash-LSH-collides with and
+      // the worst verified whole-set Jaccard. The high-precision triage
+      // for `decontaminate`'s pooled-overlap report (which dominates on
+      // recall but cannot attribute); same --purged anti-join contract.
+      val trainPath = opts("train")
+      val evalPath = opts("eval")
+      val out = opts("out")
+      val threshold = opts("threshold").toDouble
+      val nHashes = opts("nhashes").toInt
+      val bandRows = opts("bandrows").toInt
+      val train = spark.read.parquet(trainPath)
+      val report = graft.operators.Dedup
+        .decontamFuzzy(train, spark.read.parquet(evalPath), "doc_id", "text", threshold, nHashes, bandRows)
+        .localCheckpoint() // one computation serves the report write AND the purge anti-join
+      val n = Pipeline.writeCounted(report, out)
+      opts.get("purged").foreach { p =>
+        val kept = train.join(
+          report.filter(org.apache.spark.sql.functions.col("contaminated"))
+            .select(org.apache.spark.sql.functions.col("doc_id")),
+          Seq("doc_id"),
+          "left_anti"
+        )
+        val k = Pipeline.writeCounted(kept, p)
+        println(s"[maintenance] decontam_fuzzy: kept $k train docs into $p")
+      }
+      println(s"[maintenance] decontam_fuzzy: $n band-colliding train docs reported at $out")
+    },
+    verb("decontam_semantic", "per train vector, its best-cosine eval match and verdict")(
+      req("train", "DIR"), req("eval", "DIR"), req("out", "DIR"), opt("threshold", "X", "0.5"),
+      opt("purged", "DIR")) { (opts, spark) =>
+      // The embedding tier (Dedup.decontamSemantic): per train
+      // vector, its best-cosine eval match and verdict. Both
+      // parquets need (vec_id, embedding); same --purged anti-join
+      // contract as the lexical tiers.
+      val trainPath = opts("train")
+      val evalPath = opts("eval")
+      val out = opts("out")
+      val threshold = opts("threshold").toDouble
+      val train = spark.read.parquet(trainPath)
+      val report = graft.operators.Dedup
+        .decontamSemantic(train, spark.read.parquet(evalPath), "vec_id", "embedding", threshold)
+        .localCheckpoint() // one computation serves the report write AND the purge anti-join
+      val n = Pipeline.writeCounted(report, out)
+      opts.get("purged").foreach { p =>
+        val kept = train.join(
+          report.filter(org.apache.spark.sql.functions.col("contaminated"))
+            .select(org.apache.spark.sql.functions.col("vec_id")),
+          Seq("vec_id"),
+          "left_anti"
+        )
+        val k = Pipeline.writeCounted(kept, p)
+        println(s"[maintenance] decontam_semantic: kept $k train vectors into $p")
+      }
+      println(s"[maintenance] decontam_semantic: $n train vectors audited at $out")
+    },
+    verb("decontam_semantic_stream", "best-cosine eval match per arriving embedding JSON file")(
+      req("raw", "DIR"), req("eval", "DIR"), req("out", "DIR"), req("checkpoint", "DIR"),
+      opt("threshold", "X", "0.5")) { (opts, spark) =>
+      // The embedding tier's ingest gate
+      // (StreamingPipeline.decontamSemanticStream): per arriving
+      // embedding JSON file, each vector's best-cosine eval match as
+      // batch-keyed telemetry. JSON shape: {"vec_id","embedding"}.
+      val raw = opts("raw")
+      val evalPath = opts("eval")
+      val out = opts("out")
+      val ckpt = opts("checkpoint")
+      val threshold = opts("threshold").toDouble
+      graft.streaming.StreamingPipeline
+        .decontamSemanticStream(spark, raw, evalPath, out, ckpt, threshold)
+        .awaitTermination()
+      println(s"[maintenance] decontam semantic stream drained $raw into $out")
+    },
+    verb("retire_packs", "audit contaminated docs against the manifests and write the retirement mask")(
+      req("manifests", "DIR"), req("contam", "DIR"), req("out", "DIR"), opt("budget", "N"),
+      opt("threshold", "X", "0.0"), opt("group_col", "COL")) { (opts, spark) =>
+      // APPLY decontamination to an already-emitted pack space:
+      // map the contaminated doc ids (--contam: a decontaminate
+      // report — rows with a `contaminated` column are filtered —
+      // or any bare doc_id parquet) onto the pack manifests
+      // (Packing.contamAudit: pure manifest arithmetic, no text
+      // read), decide retirement per pack (Packing.retirePacks;
+      // --threshold = max tolerated contaminated-position fraction,
+      // default 0 — any contamination retires), and write the mask
+      // side-file pack_slices/pack_export honor via --mask. Packs
+      // are never re-packed: emitted ids are immutable under a live
+      // trainer, so contamination handling is an exclusion layer.
+      val manifests = opts("manifests")
+      val contamPath = opts("contam")
+      val out = opts("out")
+      val budget = resolveBudget(spark, manifests, opts)
+      val threshold = opts("threshold").toDouble
+      val contamDf = spark.read.parquet(contamPath)
+      val ids =
+        if (contamDf.columns.contains("contaminated"))
+          contamDf
+            .filter(org.apache.spark.sql.functions.col("contaminated"))
+            .select(org.apache.spark.sql.functions.col("doc_id"))
+        else contamDf.select(org.apache.spark.sql.functions.col("doc_id"))
+      val man = spark.read.parquet(manifests)
+      // Stratified interlock: packIngestBy manifests number packs PER
+      // DOMAIN — auditing by pack_id alone would conflate domains and
+      // a pack_id-keyed mask would retire every domain's pack k. Any
+      // column beyond the global-stream manifest shape must be named
+      // as the grouping via --group_col (the mask is then keyed
+      // (group, pack_id)).
+      val groupCols = opts.get("group_col").map(_.split(",").toSeq).getOrElse(Nil)
+      val globalShape =
+        Set("doc_id", "shard", "start_tok", "n_toks", "first_pack", "last_pack", "n_packs", "pack_batch")
+      val extra = man.columns.filterNot(c => globalShape.contains(c) || groupCols.contains(c))
+      require(
+        extra.isEmpty,
+        s"retire_packs: manifest carries non-global columns ${extra.mkString(",")} — a stratified " +
+          "(per-domain) pack space numbers packs per domain; pass --group_col <col> so the mask is " +
+          "keyed (group, pack_id) instead of silently conflating domains"
+      )
+      val audit = graft.operators.Packing
+        .contamAudit(man, ids, "doc_id", budget, groupCols)
+      val mask = graft.operators.Packing.retirePacks(audit, budget, threshold, groupCols)
+      val n = Pipeline.writeCounted(mask, out)
+      val retired = spark.read
+        .parquet(out)
+        .filter(org.apache.spark.sql.functions.col("retired"))
+        .count()
+      println(
+        s"[maintenance] retire packs: $n contaminated pack(s) audited, $retired retired " +
+          s"(threshold $threshold) -> mask at $out"
+      )
+    },
+    verb("mask_intervals", "pack-local loss-mask intervals for contaminated docs")(
+      req("manifests", "DIR"), req("contam", "DIR"), req("out", "DIR"), opt("budget", "N"),
+      opt("group_col", "COL")) { (opts, spark) =>
+      // Position-level loss masks (Packing.maskIntervals): the
+      // surgical alternative retire_packs composes with — per
+      // (contaminated doc, pack it overlaps), the pack-local
+      // half-open token interval the trainer zeroes loss on.
+      // Same --contam flexibility and stratified --group_col
+      // interlock as retire_packs; the output is a
+      // contamination-sized side-file, never a re-pack.
+      val manifests = opts("manifests")
+      val contamPath = opts("contam")
+      val out = opts("out")
+      val budget = resolveBudget(spark, manifests, opts)
+      val contamDf = spark.read.parquet(contamPath)
+      val ids =
+        if (contamDf.columns.contains("contaminated"))
+          contamDf
+            .filter(org.apache.spark.sql.functions.col("contaminated"))
+            .select(org.apache.spark.sql.functions.col("doc_id"))
+        else contamDf.select(org.apache.spark.sql.functions.col("doc_id"))
+      val man = spark.read.parquet(manifests)
+      val groupCols = opts.get("group_col").map(_.split(",").toSeq).getOrElse(Nil)
+      val globalShape =
+        Set("doc_id", "shard", "start_tok", "n_toks", "first_pack", "last_pack", "n_packs", "pack_batch")
+      val extra = man.columns.filterNot(c => globalShape.contains(c) || groupCols.contains(c))
+      require(
+        extra.isEmpty,
+        s"mask_intervals: manifest carries non-global columns ${extra.mkString(",")} — a stratified " +
+          "(per-domain) pack space numbers packs per domain; pass --group_col <col> so masks are " +
+          "keyed (group, pack_id) instead of silently conflating domains"
+      )
+      val masks = graft.operators.Packing
+        .maskIntervals(man, ids, "doc_id", budget, groupCols)
+      val n = Pipeline.writeCounted(masks, out)
+      println(s"[maintenance] mask intervals: $n pack-local loss-mask interval(s) -> $out")
+    },
+    verb("build_vocab", "freeze the dense-id token dictionary from a corpus")(
+      req("docs", "DIR"), req("out", "DIR"), opt("parts", "N", "32")) { (opts, spark) =>
+      // Freeze the dense-id dictionary (Vocab.build) from a corpus
+      // parquet (needs a `text` column): the id space every integer
+      // export encodes under. Train once, serve frozen — the same
+      // posture as build_bpe_model, minus versioning (the table is a
+      // pure function of the corpus; re-running on the same corpus
+      // rewrites identical rows).
+      val docsPath = opts("docs")
+      val out = opts("out")
+      val parts = opts("parts").toInt
+      val vocab = graft.operators.Vocab
+        .build(spark.read.parquet(docsPath).select(org.apache.spark.sql.functions.col("text")), "text", parts)
+      val n = Pipeline.writeCounted(vocab, out)
+      println(s"[maintenance] vocab: $n tokens from $docsPath into $out")
+    },
+    verb("pack_export", "export packs [--from, --to) as id arrays in hash shards under the frozen vocab")(
+      req("state", "DIR"), req("manifests", "DIR"), req("docs", "DIR"), req("vocab", "DIR"),
+      req("out", "DIR"), req("from", "N"), req("to", "N"), opt("budget", "N"), opt("shards", "N", "8"),
+      opt("mask", "DIR"), opt("unk_id", "N"), opt("loss_masks", "DIR")) { (opts, spark) =>
+      // The trainer hand-off: materialize packs [from, to) from the
+      // incremental manifests (state-pruned, like pack_slices),
+      // encode under the FROZEN vocab written by build_vocab, roll
+      // to one (pack_id, positions, token_ids) row per pack, and
+      // export hash-sharded (Scale.exportShards: shard =
+      // hash(pack_id) % n — stable shard contents under any input
+      // partitioning, manifest computed from landed data). A
+      // training job reads `shard=k/` and memory-maps its rows.
+      val state = opts("state")
+      val manifests = opts("manifests")
+      val docsPath = opts("docs")
+      val vocabPath = opts("vocab")
+      val out = opts("out")
+      val from = opts("from").toLong
+      val to = opts("to").toLong
+      val budget = resolveBudget(spark, state, opts)
+      val shards = opts("shards").toInt
+      val maskDf = opts.get("mask").map(spark.read.parquet)
+      val unkId = opts.get("unk_id").map(_.toLong)
+      val slices = graft.operators.Packing
+        .materializePacks(
+          spark,
+          state,
+          manifests,
+          spark.read.parquet(docsPath),
+          "doc_id",
+          "text",
+          from,
+          to,
+          budget,
+          mask = maskDf
+        )
+        .localCheckpoint() // one computation serves the OOV probe AND the export
+      val vocabDf = spark.read.parquet(vocabPath)
+      // OOV interlock: a token the frozen vocab doesn't know would
+      // otherwise VANISH from the export (inner-join drop), leaving
+      // only a silent hole in the positions array — with a vocab
+      // frozen on an older corpus snapshot that is invisible data
+      // loss. Count the misses; refuse unless the caller names the
+      // reserved unk id the gaps should map to.
+      val nOov = slices
+        .join(
+          vocabDf.select(org.apache.spark.sql.functions.col("token")),
+          Seq("token"),
+          "left_anti"
+        )
+        .count()
+      require(
+        nOov == 0L || unkId.isDefined,
+        s"pack export: $nOov token position(s) in [$from, $to) are OOV under $vocabPath - " +
+          "pass --unk_id <reserved id> to map them explicitly, or rebuild the vocab on the current corpus"
+      )
+      if (nOov > 0L)
+        println(s"[maintenance] pack export: $nOov OOV position(s) mapped to unk id ${unkId.get}")
+      val arrays = graft.operators.Vocab
+        .packArrays(slices, vocabDf, unkId)
+      val manifest = graft.operators.Scale.exportShards(arrays, "pack_id", shards, out)
+      val landed = manifest.agg(org.apache.spark.sql.functions.sum("n_rows")).head().getLong(0)
+      // holes accounted: a masked export states exactly which pack
+      // ids of the window were withheld, so the trainer side can
+      // reconcile landed == (to - from) - retired instead of
+      // guessing at a silent shortfall.
+      maskDf.foreach { mk =>
+        val retired = mk
+          .filter(org.apache.spark.sql.functions.col("retired"))
+          .filter(org.apache.spark.sql.functions.col("pack_id") >= from &&
+            org.apache.spark.sql.functions.col("pack_id") < to)
+          .count()
+        println(s"[maintenance] pack export: $retired retired pack(s) withheld from [$from, $to)")
+      }
+      // Ship the window's loss-mask intervals (a mask_intervals
+      // side-file) WITH the export, under an underscore dir root
+      // readers ignore — the trainer finds packs and masks in one
+      // landing. Intervals for retired (withheld) packs are dropped:
+      // they have no exported row to mask.
+      opts.get("loss_masks").foreach { lm =>
+        val windowed = spark.read
+          .parquet(lm)
+          .filter(org.apache.spark.sql.functions.col("pack_id") >= from &&
+            org.apache.spark.sql.functions.col("pack_id") < to)
+        val shipped = maskDf match {
+          case Some(mk) =>
+            windowed.join(
+              mk.filter(org.apache.spark.sql.functions.col("retired"))
+                .select(org.apache.spark.sql.functions.col("pack_id")),
+              Seq("pack_id"),
+              "left_anti"
+            )
+          case None => windowed
+        }
+        val nm = Pipeline.writeCounted(shipped, s"$out/_loss_masks")
+        val tot = spark.read
+          .parquet(s"$out/_loss_masks")
+          .agg(
+            org.apache.spark.sql.functions.coalesce(
+              org.apache.spark.sql.functions.sum("n_mask_tokens"),
+              org.apache.spark.sql.functions.lit(0L)
+            )
+          )
+          .head()
+          .getLong(0)
+        println(
+          s"[maintenance] pack export: $nm loss-mask interval(s) ($tot tokens) shipped at $out/_loss_masks"
+        )
+      }
+      println(s"[maintenance] pack export [$from, $to): $landed packs in $shards shards at $out")
+    },
+    verb("release", "one-command pretraining release: curate, decontaminate, pack, vocab, export, verify")(
+      req("data", "DIR"), req("eval", "DIR"), req("out", "DIR"), opt("budget", "N", "2048"),
+      opt("shards", "N", "8"), opt("export_shards", "N", "8"), opt("min_keep_tokens", "N", "1"),
+      opt("threshold", "X", "0.5"), opt("gate_millibits", "N", "4400"), bool("span_clean", true),
+      opt("unk_id", "N"), opt("dsir_target", "DIR"), opt("dsir_keep", "N"), opt("dsir_buckets", "N"),
+      bool("verify", true), opt("epochs", "N"), opt("seed", "S", "release"),
+      bool("provenance", false)) { (opts, spark) =>
+      // The one-command PRETRAINING DATA RELEASE: raw corpus dir ->
+      // trainer-ready shards, by composing the verbs a release
+      // pipeline runs stepwise — curate (quality gate -> span clean
+      // -> floor -> exact dedup), decontaminate against the eval
+      // corpus (report + purge), pack the survivors (batch 0 of an
+      // incremental pack space, so later crawls APPEND with the same
+      // state), freeze the vocab, export every emitted pack
+      // hash-sharded, and (optionally) write the multi-epoch visit
+      // schedule. Each step is the EXISTING verb called recursively
+      // — its interlocks (budget sidecar, OOV refusal, cardinality
+      // guards) all fire here too, and the layout under --out is
+      // exactly what the stepwise verbs would produce:
+      //   curated/ decontam_report/ clean/ pack_state/ manifests/
+      //   vocab/ shards/ [schedule/] [provenance/] _release.json
+      // _release.json carries the per-stage counts a release audit
+      // reads (docs in -> curated -> clean, packs, vocab size,
+      // landed rows) — all derived from landed data, not from
+      // in-flight counters.
+      val data = opts("data")
+      val evalPath = opts("eval")
+      val root = opts("out")
+      requireFreshReleaseRoot(spark, root, "release")
+      val budget = opts("budget")
+      val shards = opts("shards")
+      val exportShards = opts("export_shards")
+      val minKeep = opts("min_keep_tokens")
+      val threshold = opts("threshold")
+      val gateMilliBits = opts("gate_millibits")
+      val spanClean = opts("span_clean")
+      val unkArgs = opts.get("unk_id").toSeq.flatMap(u => Seq("--unk_id", u))
+      timedStage("release", "curate") { run(
+        Array("--maintenance", "curate", "--data", data, "--out", s"$root/curated",
+          "--shards", shards, "--min_keep_tokens", minKeep,
+          "--gate_millibits", gateMilliBits, "--span_clean", spanClean),
+        spark
+      ) }
+      timedStage("release", "decontaminate") { run(
+        Array("--maintenance", "decontaminate", "--train", s"$root/curated", "--eval", evalPath,
+          "--out", s"$root/decontam_report", "--purged", s"$root/clean", "--threshold", threshold),
+        spark
+      ) }
+      // Optional DSIR stage: with --dsir_target (a curated seed
+      // corpus) + --dsir_keep K, the release packs only the K most
+      // target-like clean documents — quality-targeted releases via
+      // the existing dsir_weights/dsir_score verbs (the _buckets
+      // sidecar interlock fires here too). NB the selection can only
+      // keep docs that HAVE a bigram (dsir_score's documented rule);
+      // the audit manifest records the selected count, so a
+      // surprising cut is visible, never silent.
+      val packInput = opts.get("dsir_target") match {
+        case Some(tgt) =>
+          val keep = opts.get("dsir_keep").getOrElse(sys.error("release: --dsir_keep N required with --dsir_target"))
+          timedStage("release", "dsir_select") {
+            run(
+              Array("--maintenance", "dsir_weights", "--data", s"$root/clean",
+                "--target", tgt, "--out", s"$root/dsir_weights") ++
+                opts.get("dsir_buckets").toSeq.flatMap(b => Seq("--buckets", b)),
+              spark
+            )
+            run(
+              Array("--maintenance", "dsir_score", "--data", s"$root/clean",
+                "--weights", s"$root/dsir_weights", "--out", s"$root/dsir_scores",
+                "--k", keep),
+              spark
+            )
+            import org.apache.spark.sql.functions.{col => cc}
+            val kept = spark.read.parquet(s"$root/dsir_scores").select(cc("doc_id"))
+            Pipeline.writeCounted(
+              spark.read.parquet(s"$root/clean").join(kept, Seq("doc_id"), "left_semi"),
+              s"$root/selected"
+            )
+          }
+          s"$root/selected"
+        case None => s"$root/clean"
+      }
+      timedStage("release", "pack_ingest") { run(
+        Array("--maintenance", "pack_ingest", "--batch", packInput, "--state", s"$root/pack_state",
+          "--out", s"$root/manifests", "--applied_id", "0", "--budget", budget, "--shards", shards),
+        spark
+      ) }
+      timedStage("release", "build_vocab") { run(
+        Array("--maintenance", "build_vocab", "--docs", packInput, "--out", s"$root/vocab"),
+        spark
+      ) }
+      import org.apache.spark.sql.functions.{col => c, max => mx, count => cnt, lit, sum => sm}
+      val man = spark.read.parquet(s"$root/manifests")
+      val lastRow = man.agg(mx(c("last_pack"))).head()
+      val nPacks = if (lastRow.isNullAt(0)) 0L else lastRow.getLong(0) + 1L
+      timedStage("release", "pack_export") { run(
+        Array("--maintenance", "pack_export", "--state", s"$root/pack_state",
+          "--manifests", s"$root/manifests", "--docs", packInput, "--vocab", s"$root/vocab",
+          "--out", s"$root/shards", "--from", "0", "--to", nPacks.toString,
+          "--shards", exportShards) ++ unkArgs,
+        spark
+      ) }
+      // post-landing integrity: the release's own shards re-read and
+      // digest-compared against the landed manifest before anything
+      // downstream trusts them (default on; --verify false skips)
+      if (opts.bool("verify"))
+        timedStage("release", "verify_export") {
+          run(Array("--maintenance", "verify_export", "--path", s"$root/shards"), spark)
+        }
+      opts.get("epochs").foreach { e =>
+        run(
+          Array("--maintenance", "pack_epochs", "--manifests", s"$root/manifests",
+            "--out", s"$root/schedule", "--epochs", e,
+            "--seed", opts("seed")),
+          spark
+        )
+      }
+      // Optional governance side-file: per-(pack, source) doc counts
+      // and exact token weights over the emitted pack space — the
+      // curated corpus keeps `source`, so the attribute table is the
+      // clean dir itself (provenance projects id + attrs only).
+      if (opts.bool("provenance")) {
+        run(
+          Array("--maintenance", "pack_provenance", "--manifests", s"$root/manifests",
+            "--attrs", packInput, "--attr_cols", "source",
+            "--out", s"$root/provenance"),
+          spark
+        )
+      }
+      // Release audit manifest — every number re-derived from what
+      // actually LANDED on disk.
+      val nIn = spark.read.parquet(s"$data/documents.parquet").count()
+      val nCurated = spark.read.parquet(s"$root/curated").count()
+      val nContam = spark.read
+        .parquet(s"$root/decontam_report")
+        .filter(c("contaminated"))
+        .count()
+      val nClean = spark.read.parquet(s"$root/clean").count()
+      val nVocab = spark.read.parquet(s"$root/vocab").count()
+      val totToks = man.agg(sm(c("n_toks"))).head().getLong(0)
+      val landedPacks = spark.read.parquet(s"$root/shards").agg(cnt(lit(1))).head().getLong(0)
+      // with the DSIR stage, the packed-corpus count rides along so a
+      // surprising selection cut is visible in the audit
+      val selectedField = opts.get("dsir_target") match {
+        case Some(_) => s""" "dsir_selected": ${spark.read.parquet(s"$root/selected").count()},"""
+        case None    => ""
+      }
+      val manifestJson =
+        s"""{"docs_in": $nIn, "curated": $nCurated, "contaminated": $nContam, "clean": $nClean,$selectedField
+           | "total_tokens": $totToks, "budget": $budget, "n_packs": $nPacks,
+           | "vocab_size": $nVocab, "landed_packs": $landedPacks,
+           | "export_shards": $exportShards}""".stripMargin.replace("\n", "")
+      writeManifest(spark, root, "_release.json", manifestJson)
+      println(
+        s"[maintenance] release at $root: $nIn docs -> $nCurated curated -> $nClean clean " +
+          s"($nContam contaminated purged) -> $nPacks packs ($totToks tokens) -> " +
+          s"$landedPacks exported in $exportShards shards, vocab $nVocab"
+      )
+    },
+    verb("sft_release", "one-command SFT release: render, pack, role masks, vocab, export, verify")(
+      req("turns", "DIR"), req("out", "DIR"), opt("budget", "N", "2048"), opt("shards", "N", "8"),
+      opt("export_shards", "N", "8"), opt("train_role", "ROLE", "assistant"),
+      opt("conv_col", "COL", "conv_id"), opt("turn_col", "COL", "turn_key"), opt("role_col", "COL", "role"),
+      opt("content_col", "COL", "content"), opt("unk_id", "N"), opt("parent_col", "COL"),
+      opt("max_depth", "N"), opt("paths_state", "DIR"), bool("verify", true)) { (opts, spark) =>
+      // The one-command SFT DATA RELEASE: a conversation-turns table
+      // -> trainer-ready packed shards whose `_role_masks` sidecar
+      // selects EXACTLY the train-role tokens. Composition, each
+      // step the existing verb (every interlock fires here too):
+      // render conversations to conv-atomic documents (turns joined
+      // by single spaces, ordered by the turn key) -> pack_ingest
+      // them as batch 0 of an incremental pack space -> sft_masks
+      // projected through those manifests -> build_vocab ->
+      // pack_export over every emitted pack. Layout under --out:
+      //   rendered/ pack_state/ manifests/ role_masks/ vocab/
+      //   shards/ (with shards/_role_masks) _sft_release.json
+      //
+      // `_role_masks` carries KEEP-loss intervals (positions the
+      // trainer computes loss ON — the train_role's tokens), the
+      // POLARITY OPPOSITE of pack_export's decontamination
+      // `_loss_masks` (positions zeroed). The rendering contract
+      // that makes the coordinates line up: tokens are whitespace
+      // tokens, turns contribute their own split counts, so content
+      // must not be empty or carry leading/trailing whitespace —
+      // enforced loudly up front (a violating turn would shift
+      // every later offset in its conversation).
+      import org.apache.spark.sql.functions.{
+        array_join, array_sort, col, collect_list, lit, struct, sum, transform
+      }
+      val turnsPath = opts("turns")
+      val root = opts("out")
+      requireFreshReleaseRoot(spark, root, "sft_release")
+      val budget = opts("budget")
+      val shards = opts("shards")
+      val exportShards = opts("export_shards")
+      val trainRole = opts("train_role")
+      val convCol = opts("conv_col")
+      val turnCol = opts("turn_col")
+      val roleCol = opts("role_col")
+      val contentCol = opts("content_col")
+      val unkArgs = opts.get("unk_id").toSeq.flatMap(u => Seq("--unk_id", u))
+      val turns = spark.read.parquet(turnsPath)
+      val nBadWs = turns
+        .filter(col(contentCol).rlike("(^\\s)|(\\s$)") || col(contentCol) === "")
+        .count()
+      require(
+        nBadWs == 0L,
+        s"sft_release: $nBadWs turn(s) have empty content or leading/trailing whitespace — " +
+          "the render joins turns with single spaces, so such a turn would shift every later " +
+          "mask offset in its conversation; trim or drop them upstream"
+      )
+      // TREE MODE (--parent_col): the turn store is a branched tree —
+      // flatten it first with the tree_render verb (each root→leaf
+      // path becomes one synthetic conversation whose role column is
+      // the EFFECTIVE role: train-role on first-visit memberships
+      // only), then run the IDENTICAL chain over the path-turns
+      // table. The flat chain over a branched store would train
+      // nothing structurally wrong but couldn't exist (turns don't
+      // order linearly); the naive per-path flatten without
+      // first-visit masks would train every shared prefix once per
+      // leaf — the over-weighting tree_render exists to remove.
+      // Invariant the audit then shows: masked_tokens equals the
+      // train-role turns' token total COUNTED ONCE EACH, exactly as
+      // in flat mode, regardless of fan-out.
+      // The chain tuple carries the CONTENT column too: tree_render
+      // writes path_turns with canonical column names (content is
+      // literally 'content'), so a non-default --content_col must
+      // stop at the tree_render boundary — reusing the user's name
+      // downstream would throw on the canonical table.
+      val treeMode = opts.contains("parent_col")
+      val (chainTurnsPath, chainConv, chainTurn, chainRole, chainContent, chainTurns) =
+        if (treeMode) {
+          // release the walk's scratch pins once path_turns is on
+          // parquet (the dpo_release decontam lesson)
+          graft.operators.Maintenance.releasingScratchPins(spark) {
+            timedStage("sft_release", "tree_render") { run(
+              Array("--maintenance", "tree_render", "--turns", turnsPath,
+                "--out", s"$root/path_turns", "--conv_col", convCol,
+                "--turn_col", turnCol, "--parent_col", opts("parent_col"),
+                "--role_col", roleCol, "--content_col", contentCol,
+                "--train_role", trainRole) ++
+                opts.get("max_depth").toSeq.flatMap(d => Seq("--max_depth", d)) ++
+                // serve memberships from a durable TreeState instead of
+                // re-running the closure (the campaign-scale posture)
+                opts.get("paths_state").toSeq.flatMap(s => Seq("--paths_state", s)),
+              spark
+            ) }
+          }
+          (s"$root/path_turns", "doc_id", "turn_key", "role", "content",
+            spark.read.parquet(s"$root/path_turns"))
+        } else (turnsPath, convCol, turnCol, roleCol, contentCol, turns)
+      val rendered = chainTurns
+        .groupBy(col(chainConv).as("doc_id"))
+        .agg(
+          array_join(
+            transform(
+              array_sort(collect_list(struct(col(chainTurn), col(chainContent)))),
+              x => x.getField(chainContent)
+            ),
+            " "
+          ).as("text")
+        )
+      timedStage("sft_release", "render") {
+        rendered.write.mode("overwrite").parquet(s"$root/rendered")
+      }
+      timedStage("sft_release", "pack_ingest") { run(
+        Array("--maintenance", "pack_ingest", "--batch", s"$root/rendered",
+          "--state", s"$root/pack_state", "--out", s"$root/manifests",
+          "--applied_id", "0", "--budget", budget, "--shards", shards),
+        spark
+      ) }
+      timedStage("sft_release", "sft_masks") { run(
+        Array("--maintenance", "sft_masks", "--turns", chainTurnsPath,
+          "--manifests", s"$root/manifests", "--out", s"$root/role_masks",
+          "--man_id_col", "doc_id", "--conv_col", chainConv, "--turn_col", chainTurn,
+          "--role_col", chainRole, "--content_col", chainContent,
+          "--train_role", trainRole),
+        spark
+      ) }
+      timedStage("sft_release", "build_vocab") { run(
+        Array("--maintenance", "build_vocab", "--docs", s"$root/rendered",
+          "--out", s"$root/vocab"),
+        spark
+      ) }
+      val man = spark.read.parquet(s"$root/manifests")
+      val lastRow = man.agg(org.apache.spark.sql.functions.max(col("last_pack"))).head()
+      val nPacks = if (lastRow.isNullAt(0)) 0L else lastRow.getLong(0) + 1L
+      timedStage("sft_release", "pack_export") { run(
+        Array("--maintenance", "pack_export", "--state", s"$root/pack_state",
+          "--manifests", s"$root/manifests", "--docs", s"$root/rendered",
+          "--vocab", s"$root/vocab", "--out", s"$root/shards",
+          "--from", "0", "--to", nPacks.toString, "--shards", exportShards) ++ unkArgs,
+        spark
+      ) }
+      if (opts.bool("verify"))
+        timedStage("sft_release", "verify_export") {
+          run(Array("--maintenance", "verify_export", "--path", s"$root/shards"), spark)
+        }
+      // Ship the role masks WITH the landing (underscore dir —
+      // parquet readers of shards/ ignore it).
+      val masks = spark.read.parquet(s"$root/role_masks")
+      Pipeline.writeCounted(masks, s"$root/shards/_role_masks")
+      // Audit manifest — every number from landed data. Turn counts
+      // are over the ORIGINAL turn store (in tree mode the path
+      // memberships multiply rows, but masked_tokens must still
+      // equal the original train-role turns' token total — the
+      // single-loss invariant the e2e spec checks).
+      val nTurns = turns.count()
+      val nDocs = spark.read.parquet(s"$root/rendered").count()
+      val nConvs = if (treeMode) turns.select(col(convCol)).distinct().count() else nDocs
+      val nTrainTurns = turns.filter(col(roleCol) === trainRole).count()
+      val totToks = man.agg(sum(col("n_toks"))).head().getLong(0)
+      val maskedToks = spark.read
+        .parquet(s"$root/shards/_role_masks")
+        .agg(org.apache.spark.sql.functions
+          .coalesce(sum(col("n_mask_tokens")), lit(0L)))
+        .head()
+        .getLong(0)
+      val nVocab = spark.read.parquet(s"$root/vocab").count()
+      val landedPacks = spark.read.parquet(s"$root/shards").count()
+      writeManifest(
+        spark,
+        root,
+        "_sft_release.json",
+        s"""{"mode": "${if (treeMode) "tree" else "flat"}", "turns_in": $nTurns,""" +
+          s""" "conversations": $nConvs, "paths": $nDocs, "train_turns": $nTrainTurns,""" +
+          s""" "train_role": "$trainRole", "total_tokens": $totToks,""" +
+          s""" "masked_tokens": $maskedToks, "budget": $budget, "n_packs": $nPacks,""" +
+          s""" "vocab_size": $nVocab, "landed_packs": $landedPacks}"""
+      )
+      println(
+        s"[maintenance] sft release at $root: $nTurns turns / $nConvs conversations" +
+          (if (treeMode) s" / $nDocs paths" else "") +
+          s" -> $nPacks packs ($totToks tokens, $maskedToks loss-on under " +
+          s"role=$trainRole) -> $landedPacks exported in $exportShards shards, vocab $nVocab"
+      )
+    },
+    verb("pack_epochs", "seeded per-epoch pack permutations (the multi-epoch visit order)")(
+      req("manifests", "DIR"), req("out", "DIR"), opt("epochs", "N", "1"), opt("seed", "S", "graft"),
+      opt("hex_width", "N", "2"), opt("mask", "DIR")) { (opts, spark) =>
+      // Multi-epoch visit-order schedule over an emitted pack space
+      // (Packing.epochOrder): seeded per-epoch permutations of pack
+      // ids. Reads any manifest parquet (the batch form or an
+      // incremental manifest root's batch-keyed partitions — offsets
+      // are global, so the union's max last_pack is the pack count).
+      val manifests = opts("manifests")
+      val out = opts("out")
+      val epochs = opts("epochs").toInt
+      val seed = opts("seed")
+      val width = opts("hex_width").toInt
+      val sched = graft.operators.Packing
+        .epochOrder(
+          spark.read.parquet(manifests),
+          epochs,
+          seed,
+          width,
+          mask = opts.get("mask").map(spark.read.parquet)
+        )
+      val n = Pipeline.writeCounted(sched, out)
+      println(s"[maintenance] epoch schedule: $n (epoch, ord, pack) rows from $manifests into $out")
+    },
+    verb("pack_boundaries", "per-pack segment boundaries from manifest arithmetic")(
+      req("manifests", "DIR"), req("out", "DIR"), opt("budget", "N")) { (opts, spark) =>
+      // Per-pack segment/boundary side-file (Packing.boundaries):
+      // attention-reset metadata per (pack, doc) overlap — manifest
+      // arithmetic only, no document text read.
+      val manifests = opts("manifests")
+      val out = opts("out")
+      // _budget sidecar: underscore-prefixed, so the parquet read
+      // below ignores it as metadata while resolveBudget honors it.
+      val budget = resolveBudget(spark, manifests, opts)
+      val b = graft.operators.Packing
+        .boundaries(spark.read.parquet(manifests), "doc_id", budget)
+      val n = Pipeline.writeCounted(b, out)
+      println(s"[maintenance] pack boundaries: $n segment rows from $manifests into $out")
+    },
+    verb("pack_resume", "the not-yet-consumed schedule tail after --step steps of --batch packs")(
+      req("schedule", "DIR"), req("out", "DIR"), req("step", "N"), req("batch", "N")) { (opts, spark) =>
+      // Loader restart arithmetic (Packing.resumeSlice): the
+      // not-yet-consumed tail of a pack_epochs schedule after
+      // --step optimizer steps of --batch packs each — a filter over
+      // the schedule, so restart cost is manifest-sized at any
+      // corpus scale.
+      val schedDir = opts("schedule")
+      val out = opts("out")
+      val step = opts("step").toLong
+      val batch = opts("batch").toLong
+      val slice = graft.operators.Packing
+        .resumeSlice(spark.read.parquet(schedDir), step, batch)
+      val n = Pipeline.writeCounted(slice, out)
+      println(
+        s"[maintenance] resume slice: $n remaining schedule rows after step $step " +
+          s"(x$batch packs) from $schedDir into $out"
+      )
+    },
+    verb("mixture_weights", "temperature-scaled sampling weights per group from the manifest")(
+      req("manifests", "DIR"), req("out", "DIR"), req("group_col", "COL"),
+      opt("alpha", "X", "0.5")) { (opts, spark) =>
+      // Temperature-scaled mixture weights (Packing.temperatureWeights)
+      // over a stratified manifest's n_toks — per group, the p^alpha
+      // sampling weight / repeat factor vs the largest group as
+      // micro-ints. Manifest-fed: never re-reads text.
+      val manifests = opts("manifests")
+      val out = opts("out")
+      val groupCol = opts("group_col")
+      val alpha = opts("alpha").toDouble
+      val w = graft.operators.Packing.temperatureWeights(
+        spark.read.parquet(manifests),
+        groupCol,
+        org.apache.spark.sql.functions.col("n_toks"),
+        alpha
+      )
+      val n = Pipeline.writeCounted(w, out)
+      println(s"[maintenance] mixture weights: $n $groupCol rows (alpha=$alpha) from $manifests into $out")
+    },
+    verb("apportion_budget", "mixture weights to per-group token quotas summing to --budget exactly")(
+      req("weights", "DIR"), req("out", "DIR"), req("group_col", "COL"), opt("weight_col", "COL", "w_micro"),
+      req("budget", "N")) { (opts, spark) =>
+      // Exact integer apportionment (Packing.apportionBudget):
+      // mixture_weights output -> hard per-group token quotas
+      // summing to --budget exactly (Hamilton largest-remainder,
+      // BigInt, deterministic ties).
+      val weightsPath = opts("weights")
+      val out = opts("out")
+      val groupCol = opts("group_col")
+      val weightCol = opts("weight_col")
+      val budget = opts("budget").toLong
+      val q = graft.operators.Packing.apportionBudget(
+        spark.read.parquet(weightsPath),
+        groupCol,
+        weightCol,
+        budget
+      )
+      val n = Pipeline.writeCounted(q, out)
+      println(s"[maintenance] apportioned $budget tokens over $n $groupCol quotas into $out")
+    },
+    verb("apportion_phases", "per-phase curriculum quotas, each phase summing to its budget exactly")(
+      req("weights", "DIR"), req("out", "DIR"), opt("phase_col", "COL", "phase"), req("group_col", "COL"),
+      opt("weight_col", "COL", "w_micro"), opt("budget_col", "COL", "phase_budget")) { (opts, spark) =>
+      // Multi-phase curriculum quotas (Packing.apportionBudgetBy):
+      // per-phase Hamilton apportionment from a (phase, group,
+      // weight, budget) table — each phase's quotas sum to its
+      // budget exactly.
+      val weightsPath = opts("weights")
+      val out = opts("out")
+      val phaseCol = opts("phase_col")
+      val groupCol = opts("group_col")
+      val weightCol = opts("weight_col")
+      val budgetCol = opts("budget_col")
+      val q = graft.operators.Packing.apportionBudgetBy(
+        spark.read.parquet(weightsPath),
+        phaseCol,
+        groupCol,
+        weightCol,
+        budgetCol
+      )
+      val n = Pipeline.writeCounted(q, out)
+      val phases = spark.read.parquet(out).select(phaseCol).distinct().count()
+      println(
+        s"[maintenance] apportioned $phases phase budget(s) over $n ($phaseCol, $groupCol) quotas into $out"
+      )
+    },
+    verb("pack_efficiency", "per-group tail-pack waste and wasted-compute fraction")(
+      req("manifests", "DIR"), req("out", "DIR"), opt("budget", "N"),
+      opt("group_col", "COL")) { (opts, spark) =>
+      // Pack-space waste accounting (Packing.packEfficiency): per
+      // group (or globally), the tail-pack waste and integer-exact
+      // wasted-compute fraction — one agg over the manifest.
+      val manifests = opts("manifests")
+      val out = opts("out")
+      val budget = resolveBudget(spark, manifests, opts)
+      val eff = graft.operators.Packing.packEfficiency(
+        spark.read.parquet(manifests),
+        budget,
+        opts.get("group_col").toSeq
+      )
+      val n = Pipeline.writeCounted(eff, out)
+      println(s"[maintenance] pack efficiency: $n group rows (budget=$budget) from $manifests into $out")
+    },
+    verb("pack_provenance", "per (pack, attribute values): contributing docs and token weight")(
+      req("manifests", "DIR"), req("attrs", "DIR"), req("out", "DIR"), req("attr_cols", "COL,.."),
+      opt("budget", "N")) { (opts, spark) =>
+      // Governance side-file (Packing.provenance): per (pack,
+      // attribute values), contributing docs + token weight —
+      // manifest × doc-attribute join, no pack data read. License
+      // audits and takedown-to-pack resolution read THIS table.
+      val manifests = opts("manifests")
+      val attrsPath = opts("attrs")
+      val out = opts("out")
+      val attrCols = opts("attr_cols")
+        .split(",")
+        .map(_.trim)
+        .filter(_.nonEmpty)
+        .toSeq
+      val budget = resolveBudget(spark, manifests, opts)
+      val prov = graft.operators.Packing.provenance(
+        spark.read.parquet(manifests),
+        spark.read.parquet(attrsPath),
+        "doc_id",
+        budget,
+        attrCols
+      )
+      val n = Pipeline.writeCounted(prov, out)
+      println(
+        s"[maintenance] pack provenance: $n (pack, ${attrCols.mkString(",")}) rows " +
+          s"(budget=$budget) from $manifests into $out"
+      )
+    },
+    verb("leakage_split", "cluster-atomic train/heldout split over the near-dup pair graph")(
+      req("docs", "DIR"), req("pairs", "DIR"), req("out", "DIR"), opt("heldout_per_mille", "N", "100"),
+      opt("seed", "S", "split")) { (opts, spark) =>
+      // Cluster-atomic train/heldout split (Dedup.leakageFreeSplit):
+      // docs + near-dup pair table -> per-doc component + side, no
+      // near-dup pair ever straddling the boundary.
+      val docsPath = opts("docs")
+      val pairsPath = opts("pairs")
+      val out = opts("out")
+      val perMille = opts("heldout_per_mille").toInt
+      val seed = opts("seed")
+      val sp = graft.operators.Dedup.leakageFreeSplit(
+        spark.read.parquet(docsPath),
+        spark.read.parquet(pairsPath),
+        "doc_id",
+        perMille,
+        seed
+      )
+      val n = Pipeline.writeCounted(sp, out)
+      val nHeld = spark.read
+        .parquet(out)
+        .filter(org.apache.spark.sql.functions.col("split") === "heldout")
+        .count()
+      println(
+        s"[maintenance] leakage-free split: $n docs, $nHeld heldout " +
+          s"($perMille per-mille target, seed=$seed) into $out"
+      )
+    },
+    verb("snapshot_diff", "per-id added/removed/changed/unchanged between two snapshots")(
+      req("old", "DIR"), req("new", "DIR"), req("out", "DIR"), opt("id_col", "COL", "doc_id"),
+      req("content_cols", "COL,..")) { (opts, spark) =>
+      // Release diff (Maintenance.snapshotDiff): per-id added/
+      // removed/changed/unchanged between two snapshots — content
+      // compared by scan-side md5 fingerprints, so text never
+      // shuffles; downstream incremental jobs consume the
+      // added/changed slice instead of the full corpus.
+      val oldPath = opts("old")
+      val newPath = opts("new")
+      val out = opts("out")
+      val idCol = opts("id_col")
+      val cols = opts("content_cols")
+        .split(",")
+        .map(_.trim)
+        .filter(_.nonEmpty)
+        .toSeq
+      val diff = graft.operators.Maintenance.snapshotDiff(
+        spark.read.parquet(oldPath),
+        spark.read.parquet(newPath),
+        idCol,
+        cols
+      )
+      val n = Pipeline.writeCounted(diff, out)
+      val byStatus = spark.read
+        .parquet(out)
+        .groupBy("status")
+        .count()
+        .collect()
+        .map(r => s"${r.getString(0)}=${r.getLong(1)}")
+        .sorted
+        .mkString(" ")
+      println(s"[maintenance] snapshot diff: $n ids ($byStatus) into $out")
+    },
+    verb("efficiency_sweep", "pack_efficiency at every candidate budget in one manifest pass")(
+      req("manifests", "DIR"), req("out", "DIR"), req("budgets", "N,.."),
+      opt("group_col", "COL")) { (opts, spark) =>
+      // Budget sweep (Packing.efficiencySweep): the pack_efficiency
+      // arithmetic at every candidate budget in one manifest pass —
+      // the table a training run reads to pick its sequence length.
+      val manifests = opts("manifests")
+      val out = opts("out")
+      val budgets = opts("budgets")
+        .split(",")
+        .map(_.trim.toLong)
+        .toSeq
+      val sweep = graft.operators.Packing.efficiencySweep(
+        spark.read.parquet(manifests),
+        budgets,
+        opts.get("group_col").toSeq
+      )
+      val n = Pipeline.writeCounted(sweep, out)
+      println(
+        s"[maintenance] efficiency sweep: $n (group, budget) rows over " +
+          s"budgets ${budgets.sorted.mkString(",")} from $manifests into $out"
+      )
+    },
+    verb("cluster_best", "keep each near-dup cluster's best-scoring doc, label every doc")(
+      req("docs", "DIR"), req("pairs", "DIR"), req("out", "DIR"), req("score_col", "COL")) { (opts, spark) =>
+      // Quality-aware survivor selection (Dedup.keepBestOfCluster):
+      // keep each near-dup cluster's argmax-score copy (ties to the
+      // smaller id), labeling every doc so drops stay auditable.
+      val docsPath = opts("docs")
+      val pairsPath = opts("pairs")
+      val out = opts("out")
+      val scoreCol = opts("score_col")
+      val best = graft.operators.Dedup.keepBestOfCluster(
+        spark.read.parquet(docsPath),
+        spark.read.parquet(pairsPath),
+        "doc_id",
+        scoreCol
+      )
+      val n = Pipeline.writeCounted(best, out)
+      val nKeep = spark.read
+        .parquet(out)
+        .filter(org.apache.spark.sql.functions.col("keep"))
+        .count()
+      println(
+        s"[maintenance] cluster best: $n docs labeled, $nKeep survivors " +
+          s"(score=$scoreCol) into $out"
+      )
+    },
+    verb("pref_pairs", "DPO pair build: response dedup, rater triage, length debias, pair decontamination")(
+      req("responses", "DIR"), req("out", "DIR"), opt("prompt_col", "COL", "prompt_id"),
+      opt("id_col", "COL", "doc_id"), opt("score_col", "COL", "score"), opt("content_col", "COL"),
+      opt("ratings", "DIR"), opt("dispute_range", "N", "40"), opt("rating_score_col", "COL", "score"),
+      opt("len_col", "COL"), opt("bucket_width", "N", "50"), opt("contaminated", "DIR"),
+      opt("contam_id_col", "COL")) { (opts, spark) =>
+      // Post-training pair build (the q147-q152 family composed):
+      // optional rater triage (drop disputed responses), optional
+      // length debias (pair on the debiased micro score), pair
+      // construction, optional pair-level decontamination — each
+      // stage the library operator, with _pref.json auditing the
+      // landed per-stage counts.
+      import org.apache.spark.sql.functions.col
+      val respPath = opts("responses")
+      val out = opts("out")
+      val promptCol = opts("prompt_col")
+      val idCol = opts("id_col")
+      val scoreCol = opts("score_col")
+      val resp0 = spark.read.parquet(respPath)
+      val nResp = resp0.count()
+      // optional stage 0: within-prompt response dedup (identical
+      // sampled completions collapse to the argmax-score survivor
+      // before anything else sees them)
+      val (respD, nDupDropped) = opts.get("content_col") match {
+        case Some(cc) =>
+          val keepIds = graft.operators.Preference
+            .dedupResponses(resp0, promptCol, idCol, scoreCol, cc)
+            .filter(col("keep"))
+            .select(col(idCol))
+          val kept = resp0.join(keepIds, Seq(idCol))
+          (kept, nResp - kept.count())
+        case None => (resp0, 0L)
+      }
+      val (resp1, nDisputed) = opts.get("ratings") match {
+        case Some(rp) =>
+          val range = opts("dispute_range").toLong
+          val ratingScoreCol = opts("rating_score_col")
+          val triage = graft.operators.Preference
+            .raterAgreement(spark.read.parquet(rp), idCol, ratingScoreCol, range)
+          val disputed = triage.filter(col("disputed")).select(col(idCol))
+          val nD = disputed.count()
+          (respD.join(disputed, Seq(idCol), "left_anti"), nD)
+        case None => (respD, 0L)
+      }
+      val (resp2, pairScoreCol) = opts.get("len_col") match {
+        case Some(lc) =>
+          val bw = opts("bucket_width").toLong
+          val deb = graft.operators.Preference
+            .lengthDebias(resp1, idCol, scoreCol, lc, bw)
+            .select(col(idCol), col("adj_micro"))
+          (resp1.join(deb, Seq(idCol)), "adj_micro")
+        case None => (resp1, scoreCol)
+      }
+      val pairs0 = graft.operators.Preference
+        .preferencePairs(resp2, promptCol, idCol, pairScoreCol)
+      val nPairs0 = pairs0.count()
+      val pairs = opts.get("contaminated") match {
+        case Some(cp) =>
+          graft.operators.Preference.purgePairs(
+            pairs0,
+            Seq("chosen_id", "rejected_id"),
+            spark.read.parquet(cp),
+            opts.get("contam_id_col").getOrElse(idCol)
+          )
+        case None => pairs0
+      }
+      val n = Pipeline.writeCounted(pairs, out)
+      writeManifest(
+        spark,
+        out,
+        "_pref.json",
+        s"""{"responses": $nResp, "dup_dropped": $nDupDropped, """ +
+          s""""disputed_dropped": $nDisputed, """ +
+          s""""pairs_built": $nPairs0, "pairs_kept": $n, """ +
+          s""""score_col": "$pairScoreCol"}"""
+      )
+      println(
+        s"[maintenance] pref pairs: $nResp responses ($nDupDropped duplicate, " +
+          s"$nDisputed disputed dropped) -> " +
+          s"$nPairs0 pairs built, $n kept after decontamination, into $out"
+      )
+    },
+    verb("pref_stream", "fold arriving scored-response JSON files into the pair state")(
+      req("raw", "DIR"), req("state", "DIR"), req("checkpoint", "DIR")) { (opts, spark) =>
+      // Streaming preference-pair maintenance
+      // (StreamingPipeline.prefIngest): tail a directory of scored-
+      // response JSON files into the persistent pairIngest state —
+      // the pref_pairs family's streaming arm. AvailableNow trigger:
+      // drains what exists, then returns (cron-friendly).
+      val raw = opts("raw")
+      val state = opts("state")
+      val ckpt = opts("checkpoint")
+      val respSchema = org.apache.spark.sql.types.StructType(
+        Seq(
+          org.apache.spark.sql.types
+            .StructField("prompt_id", org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types
+            .StructField("doc_id", org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types
+            .StructField("score", org.apache.spark.sql.types.LongType)
+        )
+      )
+      graft.streaming.StreamingPipeline
+        .prefIngest(spark, raw, state, ckpt, respSchema)
+        .awaitTermination()
+      val nPairs = graft.operators.Preference.pairsFromState(spark, state).count()
+      println(s"[maintenance] pref stream drained: state at $state now holds $nPairs pair(s)")
+    },
+    verb("turns_stream", "fold arriving turn-batch JSON files into the tree-membership state")(
+      turnsFlags: _*
+    )(turnsDrain),
+    verb("turns_backfill", "fold the whole turn backlog as one batch, then continue as turns_stream")(
+      turnsFlags: _*
+    )(turnsDrain),
+    verb("win_stream", "fold arriving scored-response JSON files into the arena board state")(
+      req("raw", "DIR"), req("state", "DIR"), req("checkpoint", "DIR")) { (opts, spark) =>
+      // Streaming arena board (StreamingPipeline.winIngest): tail a
+      // directory of scored-response JSON files into the persistent
+      // winIngest state — the win_ingest verb's streaming arm.
+      // AvailableNow trigger: drains what exists, then returns.
+      val raw = opts("raw")
+      val state = opts("state")
+      val ckpt = opts("checkpoint")
+      val respSchema = org.apache.spark.sql.types.StructType(
+        Seq(
+          org.apache.spark.sql.types
+            .StructField("prompt_id", org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types
+            .StructField("policy", org.apache.spark.sql.types.StringType),
+          org.apache.spark.sql.types
+            .StructField("score", org.apache.spark.sql.types.LongType)
+        )
+      )
+      graft.streaming.StreamingPipeline
+        .winIngest(spark, raw, state, ckpt, respSchema)
+        .awaitTermination()
+      val nPairs = graft.operators.Preference.winMatrixFromState(spark, state).count()
+      println(s"[maintenance] win stream drained: state at $state now boards $nPairs policy pair(s)")
+    },
+    verb("win_ingest", "fold one batch of scored responses into the arena board state")(
+      req("batch", "DIR"), req("state", "DIR"), opt("prompt_col", "COL", "prompt_id"),
+      opt("policy_col", "COL", "policy"), opt("score_col", "COL", "score"), opt("applied_id", "N"),
+      opt("out", "DIR")) { (opts, spark) =>
+      // Incremental arena board (Preference.winIngest): fold one
+      // batch of scored responses into the persistent per-(prompt,
+      // policy) best-score state, then (optionally) land the current
+      // head-to-head matrix. Exactly-once under --applied_id via the
+      // shared fold protocol; a replayed batch is a no-op by both
+      // the marker and the max semilattice.
+      val batchPath = opts("batch")
+      val state = opts("state")
+      val promptCol = opts("prompt_col")
+      val policyCol = opts("policy_col")
+      val scoreCol = opts("score_col")
+      val appliedId = opts.get("applied_id").map(_.toLong)
+      graft.operators.Preference
+        .winIngest(
+          spark,
+          spark.read.parquet(batchPath),
+          promptCol,
+          policyCol,
+          scoreCol,
+          state,
+          appliedId
+        )
+        .count()
+      val matrix = graft.operators.Preference.winMatrixFromState(spark, state)
+      val landed = opts.get("out") match {
+        case Some(o) => Pipeline.writeCounted(matrix, o)
+        case None    => matrix.count()
+      }
+      println(
+        s"[maintenance] win ingest: state at $state; current matrix has $landed policy pair(s)"
+      )
+    },
+    verb("bt_ratings", "Bradley-Terry leaderboard from exactly one of --state or --matrix")(
+      opt("iters", "N", "10"), opt("state", "DIR"), opt("matrix", "DIR"),
+      opt("out", "DIR")) { (opts, spark) =>
+      // Arena LEADERBOARD (Preference.btRatings): Bradley-Terry
+      // strengths fit from either a win_ingest state (--state, the
+      // incremental arm's read) or a landed matrix parquet
+      // (--matrix, winMatrix's output shape). Exact integer MM
+      // iterations — same board from either arm, by the semilattice.
+      val iters = opts("iters").toInt
+      val matrix = (opts.get("state"), opts.get("matrix")) match {
+        case (Some(s), None) =>
+          graft.operators.Preference.winMatrixFromState(spark, s)
+        case (None, Some(m)) => spark.read.parquet(m)
+        case _ => sys.error("exactly one of --state <dir> or --matrix <parquet> required")
+      }
+      val ratings = graft.operators.Preference
+        .btRatings(matrix, iters)
+        .orderBy(org.apache.spark.sql.functions.col("rating_micro").desc)
+      val landed = opts.get("out") match {
+        case Some(o) => Pipeline.writeCounted(ratings, o)
+        case None    => ratings.count()
+      }
+      println(
+        s"[maintenance] bt_ratings: $iters MM iteration(s) over the matrix; " +
+          s"$landed polic(ies) on the board"
+      )
+    },
+    verb("dsir_weights", "freeze a DSIR hashed-bigram weight table from a raw and a target corpus")(
+      req("data", "DIR"), req("target", "DIR"), req("out", "DIR"), opt("text_col", "COL", "text"),
+      opt("buckets", "N", "1024")) { (opts, spark) =>
+      // Freeze a DSIR hashed-bigram weight table (Importance
+      // .ngramImportanceWeightsFrom): raw corpus + separate curated
+      // target corpus -> O(buckets) parquet of smoothed target/raw
+      // micro-ratios. Freezing the weights is what makes later
+      // scoring stable across corpus snapshots (the frozen-model
+      // discipline, as with bigram-LM gates and BPE vocabs).
+      import org.apache.spark.sql.functions.col
+      val dataPath = opts("data")
+      val targetPath = opts("target")
+      val out = opts("out")
+      val textCol = opts("text_col")
+      val buckets = opts("buckets").toInt
+      val w = graft.operators.Importance.ngramImportanceWeightsFrom(
+        spark.read.parquet(dataPath),
+        spark.read.parquet(targetPath),
+        textCol,
+        buckets
+      )
+      val n = Pipeline.writeCounted(w, out)
+      graft.operators.Importance.recordBuckets(spark, out, buckets)
+      println(s"[maintenance] dsir_weights: $n bucket weight(s) frozen to $out")
+    },
+    verb("dsir_score", "score docs against frozen DSIR weights; --k keeps the top k")(
+      req("data", "DIR"), req("weights", "DIR"), req("out", "DIR"), opt("text_col", "COL", "text"),
+      opt("id_col", "COL", "doc_id"), opt("buckets", "N"), opt("k", "N")) { (opts, spark) =>
+      // Score (and optionally select) documents against a FROZEN
+      // DSIR weight table: per doc the bigram-occurrence weight sum
+      // + length-normalized mean; with --k, keep the deterministic
+      // top-k. New data scores against old weights without
+      // re-histogramming — the campaign's arriving-data gate.
+      import org.apache.spark.sql.functions.col
+      val dataPath = opts("data")
+      val weightsPath = opts("weights")
+      val out = opts("out")
+      val textCol = opts("text_col")
+      val idCol = opts("id_col")
+      // Bucket count resolves from the weights' _buckets sidecar —
+      // an explicit --buckets must AGREE (a mismatch hashes bigrams
+      // into the wrong buckets: silent garbage, so it fails loudly).
+      val stored = graft.operators.Importance.storedBuckets(spark, weightsPath)
+      val buckets = (opts.get("buckets").map(_.toInt), stored) match {
+        case (Some(b), Some(s)) =>
+          require(
+            b == s,
+            s"--buckets $b disagrees with the weights' recorded bucket count $s " +
+              s"($weightsPath/_buckets) — scoring would mis-bucket every bigram"
+          )
+          b
+        case (Some(b), None) => b
+        case (None, Some(s)) => s
+        case (None, None)    => 1024
+      }
+      val scored = graft.operators.Importance.importanceScores(
+        spark.read.parquet(dataPath),
+        idCol,
+        textCol,
+        spark.read.parquet(weightsPath),
+        buckets
+      )
+      val result = opts.get("k") match {
+        case Some(k) => graft.operators.Importance.selectByImportance(scored, idCol, k.toInt)
+        case None    => scored
+      }
+      val n = Pipeline.writeCounted(result, out)
+      println(s"[maintenance] dsir_score: $n doc(s) scored to $out" +
+        opts.get("k").map(k => s" (top-$k kept)").getOrElse(""))
+    },
+    verb("dsir_stream", "DSIR-score each arriving document JSON file")(
+      req("raw", "DIR"), req("weights", "DIR"), req("out", "DIR"),
+      req("checkpoint", "DIR")) { (opts, spark) =>
+      // Streaming DSIR scoring (StreamingPipeline.dsirScore): tail a
+      // directory of document JSON files, score each against the
+      // FROZEN weight table, land per-batch score dirs. AvailableNow:
+      // drains what exists, then returns (cron-friendly).
+      val raw = opts("raw")
+      val weights = opts("weights")
+      val out = opts("out")
+      val ckpt = opts("checkpoint")
+      graft.streaming.StreamingPipeline
+        .dsirScore(spark, raw, weights, out, ckpt, graft.schemas.Schemas.documentIngest)
+        .awaitTermination()
+      // A drain that landed ZERO batches (empty --raw dir) leaves no
+      // score_batch= children — reading the bare out dir would throw
+      // and turn a successful no-op drain into a CLI failure.
+      val outHPath = new org.apache.hadoop.fs.Path(out)
+      val outFs = outHPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val hasBatches = outFs.exists(outHPath) &&
+        outFs.listStatus(outHPath).exists(_.getPath.getName.startsWith("score_batch="))
+      val nScored =
+        if (hasBatches) spark.read.option("basePath", out).parquet(out).count() else 0L
+      println(s"[maintenance] dsir stream drained: $nScored scored doc row(s) under $out")
+    },
+    verb("chunk_stream", "chunk each arriving document JSON file into sliding token windows")(
+      req("raw", "DIR"), req("out", "DIR"), req("checkpoint", "DIR"), opt("window", "N", "512"),
+      opt("stride", "N", "384"), opt("model", "DIR")) { (opts, spark) =>
+      // Streaming chunking (StreamingPipeline.chunkStream): tail a
+      // directory of document JSON files, chunk each the moment it
+      // lands — frozen-BPE model tokens with --model, whitespace
+      // words without — into per-batch chunk dirs. AvailableNow:
+      // drains what exists, then returns (cron-friendly). The out
+      // dir's _space sidecar refuses a drain under a retrained
+      // tokenizer loudly.
+      val raw = opts("raw")
+      val out = opts("out")
+      val ckpt = opts("checkpoint")
+      val window = opts("window").toLong
+      val stride = opts("stride").toLong
+      graft.streaming.StreamingPipeline
+        .chunkStream(
+          spark, raw, opts.get("model"), out, ckpt, graft.schemas.Schemas.documentIngest, window, stride
+        )
+        .awaitTermination()
+      val outHPath2 = new org.apache.hadoop.fs.Path(out)
+      val outFs2 = outHPath2.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val hasChunkBatches = outFs2.exists(outHPath2) &&
+        outFs2.listStatus(outHPath2).exists(_.getPath.getName.startsWith("chunk_batch="))
+      val nChunks =
+        if (hasChunkBatches) spark.read.option("basePath", out).parquet(out).count() else 0L
+      println(s"[maintenance] chunk stream drained: $nChunks chunk row(s) under $out")
+    },
+    verb("vocab_coverage", "smallest number of token types covering each target share of tokens")(
+      req("docs", "DIR"), opt("text_col", "COL", "text"), opt("targets", "N,..", "500,900,950,990"),
+      opt("out", "DIR")) { (opts, spark) =>
+      // Tokenizer-sizing audit (Vocab.coverageCurve): per coverage
+      // target, the smallest number of token types covering that
+      // share of the token stream.
+      val docsPath = opts("docs")
+      val textCol = opts("text_col")
+      val targets = opts("targets")
+        .split(",")
+        .map(_.trim.toLong)
+        .toSeq
+      val curve = graft.operators.Vocab
+        .coverageCurve(spark.read.parquet(docsPath), textCol, targets)
+      val landed = opts.get("out") match {
+        case Some(o) => Pipeline.writeCounted(curve, o)
+        case None =>
+          curve.collect().sortBy(_.getLong(0)).foreach { r =>
+            println(
+              s"[maintenance]   ${r.getLong(0)} per-mille coverage: ${r.getLong(1)} " +
+                s"of ${r.getLong(2)} types (stream ${r.getLong(3)} tokens)"
+            )
+          }
+          targets.length.toLong
+      }
+      println(s"[maintenance] vocab_coverage: $landed target row(s)")
+    },
+    verb("chunk", "sliding-window chunking, in frozen-BPE tokens with --model")(
+      req("docs", "DIR"), req("out", "DIR"), opt("id_col", "COL", "doc_id"), opt("text_col", "COL", "text"),
+      opt("window", "N", "512"), opt("stride", "N", "384"), opt("model", "DIR")) { (opts, spark) =>
+      // Sliding-window chunking (Chunking.slidingChunks /
+      // bpeChunksFrozen): the embedding/retrieval and long-context
+      // prep pass — overlapping token windows per document, landed
+      // as the chunk table an encoder consumes. With --model the
+      // windows are measured in FROZEN-BPE model tokens (what the
+      // trained model actually consumes); the out dir's `_space`
+      // sidecar pins the token space + model version, and a rerun
+      // into the same dir under a different space is refused loudly
+      // BEFORE anything is overwritten.
+      val docsPath = opts("docs")
+      val out = opts("out")
+      val idCol = opts("id_col")
+      val textCol = opts("text_col")
+      val window = opts("window").toLong
+      val stride = opts("stride").toLong
+      val modelOpt = opts.get("model")
+      val space = modelOpt match {
+        case Some(m) =>
+          val v = graft.operators.Bpe
+            .currentVersion(spark, m)
+            .getOrElse(sys.error(s"no frozen BPE model at $m (missing _current pointer)"))
+          s"bpe:v$v"
+        case None => "ws"
+      }
+      graft.operators.Chunking.recordSpace(spark, out, space)
+      val docsDf = spark.read.parquet(docsPath)
+      val chunks = modelOpt match {
+        case Some(m) =>
+          graft.operators.Chunking.bpeChunksFrozen(docsDf, idCol, textCol, m, window, stride)
+        case None =>
+          graft.operators.Chunking.slidingChunks(docsDf, idCol, textCol, window, stride)
+      }
+      // writeCounted's overwrite deletes the sidecar recorded above;
+      // re-record in a finally so a crash mid-write can't leave a
+      // chunk dir with data files but no space pin (a later rerun
+      // under a retrained tokenizer would be silently accepted as
+      // first-writer instead of refused).
+      val n =
+        try Pipeline.writeCounted(chunks, out)
+        finally graft.operators.Chunking.recordSpace(spark, out, space)
+      println(
+        s"[maintenance] chunk: $n chunk(s) (window $window, stride $stride, space $space) to $out"
+      )
+    },
+    verb("tree_paths", "flatten parent-pointer turns into per-(path, turn) memberships")(
+      req("turns", "DIR"), req("out", "DIR"), opt("conv_col", "COL", "conv_id"),
+      opt("turn_col", "COL", "turn_id"), opt("parent_col", "COL", "parent_id"),
+      opt("max_depth", "N", "10000"), opt("max_conv_rows", "N", "2000000")) { (opts, spark) =>
+      // Branched-conversation flattening (ConvTree.treePaths): a
+      // parent-pointer turn store -> per-(path, turn) memberships
+      // with first-visit train flags. The SFT prep step ahead of
+      // rendering/masking when conversations branch.
+      val turnsPath = opts("turns")
+      val out = opts("out")
+      val convCol = opts("conv_col")
+      val turnCol = opts("turn_col")
+      val parentCol = opts("parent_col")
+      val maxDepth = opts("max_depth").toInt
+      val paths = graft.operators.ConvTree
+        .treePaths(spark.read.parquet(turnsPath), convCol, turnCol, parentCol, maxDepth,
+          opts("max_conv_rows").toInt)
+      val n = Pipeline.writeCounted(paths, out)
+      println(s"[maintenance] tree_paths: $n path-membership row(s) to $out")
+    },
+    verb("tree_state", "fold an appended turn batch into the durable tree-membership state")(
+      req("batch", "DIR"), req("state", "DIR"), opt("conv_col", "COL", "conv_id"),
+      opt("turn_col", "COL", "turn_id"), opt("parent_col", "COL", "parent_id"),
+      opt("max_depth", "N", "10000"), opt("applied_id", "N"), opt("buckets", "N", "64"),
+      opt("max_conv_rows", "N", "2000000")) { (opts, spark) =>
+      // Durable tree-membership fold (TreeState.fold): an APPENDED
+      // turn batch folds into the persistent membership state — new
+      // leaves add paths (prefixes read from the state), extensions
+      // of current leaves replace their paths, first-visit flags
+      // recomputed for exactly the affected turns. Exactly-once by
+      // --applied_id (a replayed batch is a no-op). Every tree
+      // consumer (tree_render --paths_state, branch_pairs
+      // --paths_state) can then serve from the state instead of
+      // re-running the pointer-doubling closure over the full store.
+      val batchPath = opts("batch")
+      val state = opts("state")
+      val convCol = opts("conv_col")
+      val turnCol = opts("turn_col")
+      val parentCol = opts("parent_col")
+      val maxDepth = opts("max_depth").toInt
+      val folded = graft.operators.TreeState.fold(
+        spark,
+        spark.read.parquet(batchPath),
+        convCol, turnCol, parentCol,
+        state,
+        opts.get("applied_id").map(_.toLong),
+        maxDepth,
+        opts("buckets").toInt,
+        opts("max_conv_rows").toInt
+      )
+      println(
+        s"[maintenance] tree_state: folded $batchPath; state at $state now holds " +
+          s"${folded.count()} membership row(s)"
+      )
+    },
+    verb("tree_state_reshard", "re-partition a tree state under a new bucket count")(
+      req("state", "DIR"), req("buckets", "N")) { (opts, spark) =>
+      // Re-partition a tree-membership state under a new conv-hash
+      // bucket count (TreeState.reshard) — the escape hatch for a
+      // _buckets pin sized before the store's growth was known.
+      val state = opts("state")
+      val n = opts("buckets").toInt
+      graft.operators.TreeState.reshard(spark, state, n)
+      println(s"[maintenance] tree_state_reshard: $state now partitioned over $n bucket(s)")
+    },
+    verb("tree_state_report", "per-bucket bytes of a tree state")(req("state", "DIR")) { (opts, spark) =>
+      // Metadata-only per-bucket sizing report (TreeState.report).
+      val state = opts("state")
+      val rows = graft.operators.TreeState.report(spark, state)
+      val total = rows.map(_._2).sum
+      rows.foreach { case (s, bytes) => println(f"[tree_state_report] cv=$s%-6d $bytes%12d B") }
+      println(
+        f"[tree_state_report] ${rows.size}%d bucket(s), $total%d B total, " +
+          f"max ${rows.map(_._2).maxOption.getOrElse(0L)}%d B"
+      )
+    },
+    verb("lease_report", "who holds a state's writer lease")(req("state", "DIR")) { (opts, spark) =>
+      // Read-only writer-lease inspection (Maintenance.leaseReport):
+      // the first half of the mechanical runbook for a crashed
+      // holder. Prints the holder token + host/pid/created-at (with
+      // age) so an operator can check whether the holder process is
+      // actually dead before lease_break.
+      val state = opts("state")
+      graft.operators.Maintenance.leaseReport(spark, state) match {
+        case None => println(s"[lease_report] no writer lease on $state")
+        case Some((token, fields)) =>
+          val age = fields.get("created_at").flatMap(_.toLongOption)
+            .map(c => s"${(System.currentTimeMillis() - c) / 1000}s ago")
+            .getOrElse("unknown (pre-r16 lease format)")
+          println(
+            s"[lease_report] $state is write-leased by '$token' " +
+              s"(host=${fields.getOrElse("host", "unknown")}, " +
+              s"pid=${fields.getOrElse("pid", "unknown")}, created $age). " +
+              "If the holder is live, wait; if it crashed with an applied id, retry it " +
+              "under ITS id; otherwise `--maintenance lease_break --state " + state + "`")
+      }
+    },
+    verb("lease_break", "remove a dead holder's writer lease older than --min_age_sec")(
+      req("state", "DIR"), opt("min_age_sec", "SEC", "900")) { (opts, spark) =>
+      // Loud, audited removal of a DEAD holder's writer lease
+      // (Maintenance.leaseBreak) — refuses while the lease is
+      // fresher than --min_age_sec (default 900: a fresh lease is
+      // far more likely a live writer than a crash, and breaking a
+      // live writer re-opens the lost-batch race the fence closes).
+      val state = opts("state")
+      val minAge = opts("min_age_sec").toLong * 1000L
+      val (token, fields) = graft.operators.Maintenance.leaseBreak(spark, state, minAge)
+      println(
+        s"[lease_break] BROKE writer lease '$token' on $state " +
+          s"(host=${fields.getOrElse("host", "unknown")}, " +
+          s"pid=${fields.getOrElse("pid", "unknown")}, " +
+          s"created_at=${fields.getOrElse("created_at", "unknown")}) — " +
+          "verify the holder was dead; if it was live, its next mutation now races others")
+    },
+    verb("dpo_release", "one-command DPO release: rendered pairs, decontamination, export, verify")(
+      Seq(
+        req("turns", "DIR"), req("out", "DIR"), opt("shards", "N", "8"), opt("bpe_model", "DIR"),
+        opt("length_batches", "N"), opt("bad", "DIR"), opt("bad_conv_col", "COL", "conv_id"),
+        opt("bad_turn_col", "COL", "turn_id"), opt("eval", "DIR"), opt("eval_text_col", "COL", "text"),
+        opt("threshold", "X", "0.5"), bool("verify", true)
+      ) ++ dpoPassThrough: _*
+    ) { (opts, spark) =>
+      // The one-command DPO DATA RELEASE — the trilogy's third
+      // capstone (pretraining `release`, SFT `sft_release`,
+      // preference `dpo_release`): branched turn store -> rendered
+      // sibling-regeneration triples (the branch_pairs --render
+      // verb, every interlock firing) -> optional PAIR-LEVEL
+      // DECONTAMINATION (--bad B: a (conv, turn)-keyed verdict
+      // table — the decontam family's output shape for turn
+      // stores; a pair is dropped when EITHER member is listed,
+      // q152's any-member contract, conv-keyed because turn ids
+      // are only per-conversation unique) -> hash-sharded export
+      // keyed by the unique 'conv#parent' pair key (byte-stable
+      // re-exports, multiplicity-sensitive content digests) ->
+      // verify_export. `_dpo_release.json` audits landed counts.
+      // Layout under --out: triples/ [clean/] shards/ [batches/]
+      // _dpo_release.json
+      import org.apache.spark.sql.functions.{broadcast, col, concat, lit}
+      val turnsPath = opts("turns")
+      val root = opts("out")
+      val rootTriples = new org.apache.hadoop.fs.Path(s"$root/triples")
+      val rootFs = rootTriples.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      require(
+        !rootFs.exists(rootTriples),
+        s"dpo_release refuses to run into $root: it already holds a triples/ landing — " +
+          "a rerun would re-export shards over a landed release; use an empty --out root"
+      )
+      val shards = opts("shards")
+      val passThrough =
+        dpoPassThrough.flatMap(f => opts.get(f.name).toSeq.flatMap(v => Seq(s"--${f.name}", v)))
+      // The render stage pins scratch tables (the tree walk's
+      // membership pin, batch pins) that are DEAD once the triples
+      // land on parquet — released at the stage boundary (measured:
+      // the decontam pass ran 58-134 s under the stranded pins vs
+      // ~7 s without, at the 200k-triple store-scale soak).
+      graft.operators.Maintenance.releasingScratchPins(spark) {
+        timedStage("dpo_release", "branch_pairs") { run(
+          Array("--maintenance", "branch_pairs", "--turns", turnsPath,
+            "--out", s"$root/triples", "--render", "true") ++ passThrough,
+          spark
+        ) }
+      }
+      // Downstream stages run CPU-heavy per-row work over the triples
+      // (model-token metering, per-member shingle explodes — and
+      // purgeAnyOf evaluates its input once per member leg), all of
+      // it SCAN-side: when the landed triples collapsed to a couple
+      // of files (AQE coalescing a small landing), the whole
+      // decontam pass runs near-serial. Repartition ONLY when the
+      // scan yields fewer splits than the configured parallelism —
+      // on a real multi-split landing the gate is false and no
+      // shuffle is inserted (the standing small-local-files
+      // discipline; measured 58-134 s -> ~7 s on the 200k-triple
+      // store-scale soak).
+      val tripleScan = spark.read.parquet(s"$root/triples")
+      val tripleSplits = tripleScan.rdd.getNumPartitions
+      println(s"[dpo_release] triples scan: $tripleSplits split(s)")
+      val triples =
+        if (tripleSplits < spark.sparkContext.defaultParallelism)
+          tripleScan.repartition(spark.sparkContext.defaultParallelism)
+        else tripleScan
+      val nPairs = triples.count()
+      // MODEL-token coordinates (--bpe_model): the frozen merge
+      // table meters prompt/chosen/rejected in the tokenizer space
+      // the trainer optimizes — a pure per-row projection riding
+      // the already-materialized triples scan (zero added shuffle),
+      // version-pinned in the manifest (the chunk verb's _space
+      // discipline: a release must say which tokenizer it counted
+      // in, or a retrained table silently re-meters a re-export).
+      val tripleTextCols = Seq("prompt", "chosen", "rejected")
+      val bpeVersion = opts.get("bpe_model").flatMap(m =>
+        graft.operators.Bpe.currentVersion(spark, m))
+      val metered = opts.get("bpe_model") match {
+        case Some(m) =>
+          graft.operators.Bpe.withModelTokenCountsFrozen(triples, tripleTextCols, m)
+        case None => triples
+      }
+      val hasBad = opts.contains("bad")
+      val hasEval = opts.contains("eval")
+      // conv-keyed any-member purge: the verdict table names
+      // (conv, turn); either member listed poisons the pair
+      val afterBad = opts.get("bad").fold(metered) { b =>
+        val badConv = opts("bad_conv_col")
+        val badTurn = opts("bad_turn_col")
+        val bad = broadcast(
+          spark.read.parquet(b)
+            .select(col(badConv).as("conv_id"), col(badTurn).as("__bad_id"))
+            .distinct()
+        )
+        Seq("chosen_id", "rejected_id").foldLeft(metered) { (acc, m) =>
+          acc.join(
+            bad,
+            acc("conv_id") === bad("conv_id") && acc(m) === bad("__bad_id"),
+            "left_anti"
+          )
+        }
+      }
+      // content decontamination (--eval): raw eval TEXT, not a
+      // pre-keyed verdict — shingle containment >= threshold in ANY
+      // rendered member (prompt, chosen, rejected) purges the pair.
+      // Eval shingles broadcast; one member-stacked semi-join.
+      val cleaned = opts.get("eval").fold(afterBad) { e =>
+        graft.operators.Dedup.purgeAnyOf(
+          afterBad,
+          spark.read.parquet(e),
+          Seq("conv_id", "parent_id"),
+          tripleTextCols,
+          opts("eval_text_col"),
+          opts("threshold").toDouble
+        )
+      }
+      val (exportDf, nClean) =
+        if (hasBad || hasEval) {
+          val n = timedStage("dpo_release", "pair_decontam") {
+            Pipeline.writeCounted(cleaned, s"$root/clean")
+          }
+          (spark.read.parquet(s"$root/clean"), n)
+        } else (metered, nPairs)
+      // stage split for the audit: only needed when BOTH purges ran
+      // (one extra broadcast-anti count; otherwise derived free)
+      val nAfterBad =
+        if (!hasBad) nPairs
+        else if (!hasEval) nClean
+        else timedStage("dpo_release", "bad_purge_count") { afterBad.count() }
+      timedStage("dpo_release", "export") {
+        graft.operators.Scale.exportShards(
+          exportDf
+            .withColumn(
+              "pair_key",
+              concat(col("conv_id").cast("string"), lit("#"), col("parent_id").cast("string"))
+            ),
+          "pair_key",
+          shards.toInt,
+          s"$root/shards"
+        )
+      }
+      if (opts.bool("verify"))
+        timedStage("dpo_release", "verify_export") {
+          run(Array("--maintenance", "verify_export", "--path", s"$root/shards"), spark)
+        }
+      // atomic length-grouped batch manifest (q183's layout): the
+      // loader-side artifact next to the shards — pairs sorted by
+      // total model-token length and cut into fixed-size padded
+      // batches; only (key, length) metadata enters the rank.
+      val batchesAudit = opts.get("length_batches").fold("") { n =>
+        require(
+          opts.contains("bpe_model"),
+          "dpo_release: --length_batches requires --bpe_model — the layout sorts by " +
+            "MODEL-token length, which only the frozen merge table defines"
+        )
+        val man = graft.operators.Packing.lengthGroupedBatches(
+          exportDf.withColumn(
+            "total_toks",
+            col("prompt_toks") + col("chosen_toks") + col("rejected_toks")
+          ),
+          Seq("conv_id", "parent_id"),
+          "total_toks",
+          n.toInt
+        )
+        val rows = timedStage("dpo_release", "length_batches") {
+          Pipeline.writeCounted(man, s"$root/batches")
+        }
+        val nBatches = (rows + n.toInt - 1) / n.toInt
+        s""", "batch_size": $n, "batches": $nBatches"""
+      }
+      // per-side length-bias audit in MODEL-token space (q181's
+      // composition over the landed export): does the rater pay for
+      // length in the space the trainer optimizes? Bounded: one
+      // 2-group agg over the export, O(1) collect.
+      val lengthAudit = if (opts.get("bpe_model").isEmpty) "" else {
+        val slopes = graft.operators.Preference
+          .lengthBiasSlope(
+            exportDf.select(
+              lit("chosen").as("side"),
+              col("chosen_toks").as("toks"),
+              col("chosen_score").as("score")
+            ).unionByName(exportDf.select(
+              lit("rejected").as("side"),
+              col("rejected_toks").as("toks"),
+              col("rejected_score").as("score")
+            )),
+            "side",
+            "toks",
+            "score"
+          )
+          .collect()
+          .map(r => s""""${r.getString(0)}": ${r.getLong(2)}""")
+          .mkString(", ")
+        s""", "bpe_model_version": ${bpeVersion.getOrElse(-1)},""" +
+          s""" "length_bias_slope_micro": {$slopes}"""
+      }
+      // turns_in is a parquet-footer count of the input store —
+      // metadata-cheap (no data pages read), documented as such.
+      val nTurns = spark.read.parquet(turnsPath).count()
+      val landed = spark.read.parquet(s"$root/shards").count()
+      writeManifest(
+        spark,
+        root,
+        "_dpo_release.json",
+        s"""{"turns_in": $nTurns, "pairs": $nPairs, "purged": ${nPairs - nClean},""" +
+          s""" "purged_bad": ${nPairs - nAfterBad}, "purged_eval": ${nAfterBad - nClean},""" +
+          s""" "clean_pairs": $nClean, "landed_rows": $landed, "shards": $shards""" +
+          s"""$batchesAudit$lengthAudit}"""
+      )
+      println(
+        s"[maintenance] dpo release at $root: $nTurns turns -> $nPairs triple(s)" +
+          (if (hasBad || hasEval)
+             s" (${nPairs - nAfterBad} bad-purged, ${nAfterBad - nClean} eval-purged)"
+           else "") +
+          s" -> $landed landed in $shards verified shards"
+      )
+    },
+    verb("branch_pairs", "sibling-regeneration DPO pairs from a branched turn store")(
+      req("turns", "DIR"), req("out", "DIR"), opt("conv_col", "COL", "conv_id"),
+      opt("turn_col", "COL", "turn_id"), opt("parent_col", "COL", "parent_id"),
+      opt("role_col", "COL", "role"), opt("content_col", "COL", "content"), opt("score_col", "COL", "score"),
+      opt("resp_role", "ROLE", "assistant"), bool("render", false), opt("paths_state", "DIR"),
+      opt("max_depth", "N", "10000")) { (opts, spark) =>
+      // Tree-native DPO pairs (Preference.branchPairs /
+      // ConvTree.branchPairsRendered): sibling response-role turns
+      // under the same parent are regenerations of one context;
+      // with per-turn scores each sibling group yields a pair.
+      // --render true additionally ships the textual prompt (the
+      // root→parent path) and the chosen/rejected contents — the
+      // trainer-ready triple export.
+      val turnsPath = opts("turns")
+      val out = opts("out")
+      val convCol = opts("conv_col")
+      val turnCol = opts("turn_col")
+      val parentCol = opts("parent_col")
+      val roleCol = opts("role_col")
+      val contentCol = opts("content_col")
+      val scoreCol = opts("score_col")
+      val respRole = opts("resp_role")
+      val turnsDf = spark.read.parquet(turnsPath)
+      // --paths_state serves the prompt render from the durable
+      // TreeState memberships instead of re-running the closure.
+      val result =
+        if (opts.bool("render"))
+          opts.get("paths_state") match {
+            case Some(st) =>
+              graft.operators.ConvTree.branchPairsRenderedFrom(
+                graft.operators.TreeState.memberships(spark, st),
+                turnsDf, convCol, turnCol, parentCol, roleCol, contentCol, scoreCol, respRole)
+            case None =>
+              graft.operators.ConvTree.branchPairsRendered(
+                turnsDf, convCol, turnCol, parentCol, roleCol, contentCol, scoreCol, respRole,
+                opts("max_depth").toInt)
+          }
+        else
+          graft.operators.Preference.branchPairs(
+            turnsDf, convCol, turnCol, parentCol, roleCol, scoreCol, respRole)
+      val n = Pipeline.writeCounted(result, out)
+      // The tie-drop contract made visible: a coarse-score rater
+      // pipeline (binary thumbs) silently loses every all-tied
+      // sibling group — print the shrinkage next to the pair count.
+      val tiesDropped = graft.operators.Preference.branchTiesDropped(
+        turnsDf, convCol, turnCol, parentCol, roleCol, scoreCol, respRole)
+      println(
+        s"[maintenance] branch_pairs: $n sibling-regeneration pair(s)" +
+          (if (opts.bool("render")) " (rendered triples)" else "") +
+          s" to $out ($tiesDropped all-tied group(s) dropped by the tie contract)"
+      )
+    },
+    verb("tree_render", "render each root-to-leaf path as one conversation with first-visit roles")(
+      req("turns", "DIR"), req("out", "DIR"), opt("conv_col", "COL", "conv_id"),
+      opt("turn_col", "COL", "turn_id"), opt("parent_col", "COL", "parent_id"),
+      opt("role_col", "COL", "role"), opt("content_col", "COL", "content"),
+      opt("train_role", "ROLE", "assistant"), opt("max_depth", "N", "10000"),
+      opt("paths_state", "DIR")) { (opts, spark) =>
+      // Tree-aware SFT render prep (ConvTree.renderPaths): a
+      // parent-pointer turn store -> a FLAT path-turns table the
+      // existing SFT chain consumes as-is — each root→leaf path
+      // becomes one synthetic conversation (`doc_id` = the path's
+      // dense rank over (conv, leaf), two-pass, no global sort;
+      // `turn_key` = the turn's position on the path; `role` = the
+      // EFFECTIVE role: the train role exactly on first-visit
+      // train-role memberships, 'context' everywhere else), so
+      // downstream role masking trains every turn's tokens exactly
+      // once while shared prefixes ride along in-context. Original
+      // (conv_id, path_id, turn_id, orig_role, train) ride along as
+      // provenance columns.
+      import org.apache.spark.sql.functions.{col, struct}
+      val turnsPath = opts("turns")
+      val out = opts("out")
+      val convCol = opts("conv_col")
+      val turnCol = opts("turn_col")
+      val parentCol = opts("parent_col")
+      val roleCol = opts("role_col")
+      val contentCol = opts("content_col")
+      val trainRole = opts("train_role")
+      val maxDepth = opts("max_depth").toInt
+      // --paths_state serves the memberships from the durable
+      // TreeState instead of re-running the closure per render.
+      val rendered = opts.get("paths_state") match {
+        case Some(st) =>
+          graft.operators.ConvTree.renderPathsFrom(
+            graft.operators.TreeState.memberships(spark, st),
+            spark.read.parquet(turnsPath),
+            convCol, turnCol, roleCol, contentCol, trainRole)
+        case None =>
+          graft.operators.ConvTree.renderPaths(
+            spark.read.parquet(turnsPath),
+            convCol, turnCol, parentCol, roleCol, contentCol, trainRole, maxDepth)
+      }
+      val pathIds = graft.operators.Vocab
+        .withIds(
+          rendered.select(struct(col("conv_id"), col("path_id")).as("__path")).distinct(),
+          "__path",
+          nParts = 32
+        )
+        .select(
+          col("__path").getField("conv_id").as("conv_id"),
+          col("__path").getField("path_id").as("path_id"),
+          col("__path_id").as("doc_id")
+        )
+      val pathTurns = rendered
+        .join(pathIds, Seq("conv_id", "path_id"))
+        .select(
+          col("doc_id"),
+          col("pos").as("turn_key"),
+          col("eff_role").as("role"),
+          col("content"),
+          col("conv_id"),
+          col("path_id"),
+          col("turn_id"),
+          col("role").as("orig_role"),
+          col("train")
+        )
+      val n = Pipeline.writeCounted(pathTurns, out)
+      val nPaths = pathIds.count()
+      println(
+        s"[maintenance] tree_render: $n path-turn row(s) across $nPaths path(s) to $out " +
+          s"(train role $trainRole, first-visit-only)"
+      )
+    },
+    verb("decode_packs", "decode exported packs back to text through the frozen vocab")(
+      req("packs", "DIR"), req("vocab", "DIR"), req("out", "DIR"), opt("from", "N"),
+      opt("to", "N")) { (opts, spark) =>
+      // Pack DECODE (Vocab.decodePacks): a landed integer export (or
+      // any packArrays-shaped parquet) back to text through the
+      // frozen vocab — the incident-response debugging verb ("what
+      // is IN pack k?"). --from/--to prune to a pack-id range BEFORE
+      // the decode explode, so inspecting one pack costs one pack.
+      import org.apache.spark.sql.functions.col
+      val packsPath = opts("packs")
+      val vocabPath = opts("vocab")
+      val out = opts("out")
+      val packsAll = spark.read.parquet(packsPath)
+      val packs = (opts.get("from").map(_.toLong), opts.get("to").map(_.toLong)) match {
+        case (Some(f), Some(t)) => packsAll.filter(col("pack_id") >= f && col("pack_id") < t)
+        case (None, None)       => packsAll
+        case _ => sys.error("--from and --to must be passed together")
+      }
+      val decoded = graft.operators.Vocab
+        .decodePacks(packs, spark.read.parquet(vocabPath))
+      val n = Pipeline.writeCounted(decoded, out)
+      println(s"[maintenance] decode_packs: $n pack(s) decoded to $out")
+    },
+    verb("sft_masks", "trainable-turn loss-mask intervals, pack-local with --manifests")(
+      req("turns", "DIR"), req("out", "DIR"), opt("conv_col", "COL", "conv_id"),
+      opt("turn_col", "COL", "turn_key"), opt("role_col", "COL", "role"),
+      opt("content_col", "COL", "content"), opt("train_role", "ROLE", "assistant"), opt("manifests", "DIR"),
+      opt("budget", "N"), opt("man_id_col", "COL", "conv_id")) { (opts, spark) =>
+      // SFT loss-mask side-file (Preference.roleMaskIntervals, then
+      // optionally Packing.projectIntervals through a pack layout):
+      // per trainable turn its token interval — conversation-local
+      // without --manifests, pack-local [0, budget) with.
+      import org.apache.spark.sql.functions.col
+      val turnsPath = opts("turns")
+      val out = opts("out")
+      val convCol = opts("conv_col")
+      val turnCol = opts("turn_col")
+      val roleCol = opts("role_col")
+      val contentCol = opts("content_col")
+      val trainRole = opts("train_role")
+      val iv = graft.operators.Preference.roleMaskIntervals(
+        spark.read.parquet(turnsPath),
+        convCol,
+        turnCol,
+        roleCol,
+        contentCol,
+        trainRole
+      )
+      opts.get("manifests") match {
+        case Some(mp) =>
+          val budget = resolveBudget(spark, mp, opts)
+          // --man_id_col: the manifest's document-id column when the
+          // conversations were packed under a different key name
+          // (pack_ingest emits doc_id-keyed manifests).
+          val manIdCol = opts("man_id_col")
+          val manDf0 = spark.read.parquet(mp)
+          val manDf =
+            if (manIdCol == "conv_id") manDf0
+            else manDf0.withColumnRenamed(manIdCol, "conv_id")
+          val masks = graft.operators.Packing.projectIntervals(
+            manDf,
+            iv,
+            "conv_id",
+            budget,
+            carryCols = Seq(turnCol)
+          )
+          val n = Pipeline.writeCounted(masks, out)
+          println(
+            s"[maintenance] sft masks: $n pack-local [0, $budget) interval(s) " +
+              s"for role=$trainRole -> $out"
+          )
+        case None =>
+          val n = Pipeline.writeCounted(iv, out)
+          println(
+            s"[maintenance] sft masks: $n conversation-local interval(s) " +
+              s"for role=$trainRole -> $out"
+          )
+      }
+    },
+    verb("verify_export", "recompute landed shard counts and digests against the export manifest")(
+      req("path", "DIR"), opt("out", "DIR")) { (opts, spark) =>
+      // Landing integrity check (Scale.verifyExport): recompute each
+      // shard's row count and order-independent content digest from
+      // the landed files and compare against the export's own
+      // __manifest — the post-copy check a release pipeline runs,
+      // and a scheduled bitrot scan for cold shards. Exits nonzero
+      // (require) on any corrupt shard, naming it.
+      import org.apache.spark.sql.functions.col
+      val path = opts("path")
+      val report = graft.operators.Scale.verifyExport(spark, path)
+      opts.get("out").foreach(o => Pipeline.writeCounted(report, o))
+      val bad = report.filter(!col("ok")).collect()
+      require(
+        bad.isEmpty,
+        s"verify_export: ${bad.length} corrupt shard(s) in $path: " +
+          bad.map(r => s"shard=${r.getInt(0)} rows ${r.getLong(2)}/${r.getLong(1)} " +
+            s"digest ${r.getLong(4)}/${r.getLong(3)}").mkString("; ")
+      )
+      val n = report.count()
+      println(s"[maintenance] verify_export: $n shard(s) in $path verified, all ok")
+    },
+    verb("compact_partitions", "compact every partition dir holding at least --min_files files")(
+      req("path", "DIR"), opt("target_mb", "MB", "128"), opt("min_files", "N", "2")) { (opts, spark) =>
+      // Scheduled read-optimize for a hive-partitioned state dir
+      // whose partitions accumulate one file per ingest batch (the
+      // IVF assignments layout, batch-keyed telemetry, ...):
+      // Maintenance.compactPartitioned rewrites every dir above the
+      // file-count threshold in one job and swaps dirs in two
+      // renames each (crash-healed on the next run's entry; fenced
+      // by a `<path>.__writer` lease since r16). NOTE the lease is
+      // on the GIVEN path — when the dir belongs to a composite
+      // state whose ingest fences on its own root (the IVF index
+      // leases `<index>`, not `<index>/assignments`), schedule this
+      // verb in the ingest's quiet window or use the owner's
+      // compaction entry point (TextIndex.compactIndex root-fences
+      // for exactly this reason).
+      val path = opts("path")
+      val targetMb = opts("target_mb").toLong
+      val minFiles = opts("min_files").toInt
+      val n = graft.operators.Maintenance
+        .compactPartitioned(spark, path, targetMb * 1024 * 1024, minFiles)
+      println(s"[maintenance] compacted $n fragmented partition dir(s) in $path")
+    },
+    verb("span_state_report", "sizing snapshot and re-shard advice for a span state")(
+      req("state", "DIR"), opt("target_task_mb", "MB", "512")) { (opts, spark) =>
+      // Sizing snapshot of a span state from its _segs manifests —
+      // pure metadata (Maintenance.spanStateReport); prints the
+      // re-shard recommendation under the SCALE.md sizing rule.
+      val state = opts("state")
+      val target = opts("target_task_mb").toLong * 1024 * 1024
+      val r = graft.operators.Maintenance.spanStateReport(spark, state, target)
+      println(
+        s"[maintenance] span state report: buckets=${r.buckets} totalKiB=${r.totalBytes / 1024} " +
+          s"maxBucketKiB=${r.maxBucketBytes / 1024} p50BucketKiB=${r.p50BucketBytes / 1024} " +
+          s"maxSegments=${r.maxSegments} recommendedBuckets=${r.recommendedBuckets}" +
+          (if (r.recommendedBuckets > 2 * r.buckets || r.buckets > 2 * r.recommendedBuckets)
+             s" -- consider span_state_compact --buckets ${r.recommendedBuckets}"
+           else "")
+      )
+    },
+    verb("span_state_compact", "merge a span state's segments; --buckets re-shards it")(
+      req("state", "DIR"), opt("buckets", "N"), opt("target_task_mb", "MB", "512")) { (opts, spark) =>
+      // Read-optimize a segmented span-hash state: merge every
+      // partition's segments down to one (Maintenance.compactSpanState
+      // — crash-safe two-phase commit, idempotent to re-run).
+      // --buckets N RE-SHARDS the state under a new hash-prefix
+      // bucket count (the escape hatch for a creation-time
+      // mis-sizing; view/probes/marker invariant). --target_task_mb
+      // sizes writer tasks by bytes, never one-per-bucket.
+      val state = opts("state")
+      val nbOpt = opts.get("buckets").map(_.toInt)
+      val target = opts("target_task_mb").toLong * 1024 * 1024
+      val (done, total) =
+        graft.operators.Maintenance.compactSpanState(spark, state, nbOpt, target)
+      println(s"[maintenance] span state compact: $done of $total partitions rewritten in $state")
+    },
+    verb("drift_manifest", "refresh a drifting archive's _schemas manifest")(
+      req("root", "DIR")) { (opts, spark) =>
+      // Refresh a drifting archive's `_schemas` manifest
+      // (Drift.writeSchemaManifest): after this, readConformed's
+      // plan-time driver cost is one small file read instead of a
+      // footer read per batch dir — the scheduled twin of the ingest
+      // job appending its own line.
+      val root = opts("root")
+      val n = graft.sources.Drift.writeSchemaManifest(spark, root)
+      println(s"[maintenance] drift manifest for $root: $n batch dir(s) recorded")
+    }
+  )
+
+  private val cli = new Cli.Table("maintenance", etl, verbs)
 }

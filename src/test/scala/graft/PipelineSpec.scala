@@ -186,6 +186,22 @@ class PipelineSpec extends AnyFunSuite {
     )
   }
 
+  test("CLI: a quarantined EP2 file fails the run and still lands in failed/") {
+    val root = Files.createTempDirectory("graft-quar-cli").toString + "/"
+    val rawDir = java.nio.file.Paths.get(root, "raw")
+    Files.createDirectories(rawDir)
+    Files.writeString(rawDir.resolve("bad.json"), logJson.head.take(40))
+    val e = intercept[RuntimeException] {
+      graft.pipeline.PipelineRunner.run(
+        Array("--bucket", root, "--raw_file_name", "bad.json", "--fail_fast", "true"),
+        spark
+      )
+    }
+    assert(e.getMessage.contains("bad.json") && e.getMessage.contains("quarantined"), e.getMessage)
+    assert(!Files.exists(rawDir.resolve("bad.json")), "raw file removed from raw/")
+    assert(Files.exists(java.nio.file.Paths.get(root, "failed", "bad.json")), "raw file moved to failed/")
+  }
+
   test("incremental success leaves the raw file in raw/ (no quarantine)") {
     val root = Files.createTempDirectory("graft-quar-ok").toString + "/"
     val rawDir = java.nio.file.Paths.get(root, "raw")

@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guards against regrowth of hand-rolled driver-thread overlaps and
-  * stream skeletons in `src/main`: every overlap goes through
-  * `graft.operators.Overlap`, and every AvailableNow stream starts in
-  * `StreamingPipeline.drain`.
+/** Guards against regrowth of hand-rolled driver-thread overlaps,
+  * stream skeletons and flag parsing in `src/main`: every overlap goes
+  * through `graft.operators.Overlap`, every AvailableNow stream starts
+  * in `StreamingPipeline.drain`, and every command-line flag is parsed
+  * by `graft.pipeline.Cli`.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -49,5 +50,16 @@ class SourceGuardSpec extends AnyFunSuite {
     val drainEnd = text.indexOf("\n\n", drainStart)
     assert(drainStart >= 0 && hits.head._2 > drainStart && hits.head._2 < drainEnd,
       "the one AvailableNow trigger must sit inside drain")
+  }
+
+  test("command-line flags are parsed only by Cli") {
+    val getOrElse = "opts\\s*\\.getOrElse".r
+    val pairs = "\\.(sliding\\(\\s*2\\s*,\\s*2\\s*\\)|grouped\\(\\s*2\\s*\\))".r
+    val hits = sources.collect {
+      case (file, text) if getOrElse.findFirstIn(text).isDefined => s"$file: opts.getOrElse"
+      case (file, text) if file != "graft/pipeline/Cli.scala" && pairs.findFirstIn(text).isDefined =>
+        s"$file: pair parsing"
+    }
+    assert(hits.isEmpty, s"declare flags on the verb and read them through Cli.Args:\n${hits.mkString("\n")}")
   }
 }
