@@ -10,13 +10,7 @@ import org.apache.spark.sql.functions._
 object ProfileCurate {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-profile-curate")
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val verbose = sys.env.contains("PROF_VERBOSE")
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()

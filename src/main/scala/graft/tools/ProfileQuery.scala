@@ -12,13 +12,7 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.lift(1).map(_.split(",").toSet).getOrElse(Set.empty[String])
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-profile-query")
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     @volatile var record = false
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {

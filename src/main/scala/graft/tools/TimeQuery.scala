@@ -11,13 +11,7 @@ object TimeQuery {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.lift(1).map(_.split(",").toSet).getOrElse(Set.empty[String])
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-time-query")
     val qs = SparkEntry.queries.filter { case (n, _) => names.isEmpty || names.contains(n) }
     qs.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       // warmup (JIT/codegen) at the smallest sf, like Bench

@@ -3,9 +3,12 @@ package graft
 import graft.pipeline.Pipeline
 import graft.schemas.Schemas
 import graft.transforms.Transforms._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
 
 /** End-to-end + semantic-corner tests on reference-shaped JSON fixtures
   * (FIXTURES.md §A). Fixtures are authored inline and written to a temp
@@ -153,6 +156,53 @@ class PipelineSpec extends AnyFunSuite {
       .select("song_id", "title", "artist_id", "name", "duration")
     assert(dim.filter("artist_id = 'ARX2'").count() == 1)
     assert(dim.columns.count(_ == "artist_id") == 1, "USING join coalesces the key")
+  }
+
+  test("EP1 over 40 song files lists them in one wave of at most defaultParallelism tasks") {
+    val in = Files.createTempDirectory("graft-listing").resolve("raw")
+    // 40 leaf files: above the 32-path threshold, so the song read
+    // launches a listing job.
+    (0 until 40).foreach { i =>
+      val dir = in.resolve(s"song_data/A/B${i % 4}/C${i % 3}")
+      Files.createDirectories(dir)
+      val a = i % 7
+      Files.writeString(
+        dir.resolve(s"TR$i.json"),
+        s"""{"artist_id":"AR$a","artist_latitude":null,"artist_longitude":null,"artist_location":"L$a","artist_name":"Artist $a","song_id":"SO$i","title":"Song $i","duration":${100.0 + i},"year":${2000 + i % 5}}"""
+      )
+    }
+    val logDir = in.resolve("log_data/2018/11")
+    Files.createDirectories(logDir)
+    Files.writeString(logDir.resolve("events.json"), logJson.mkString("\n"))
+    val out = in.resolveSibling("transformed").toString + "/"
+
+    val sc = spark.sparkContext
+    val marker = "pipeline-spec: listener drained"
+    val listingTasks = new ConcurrentLinkedQueue[Int]()
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val desc = Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+        if (desc.exists(_.startsWith("Listing leaf files"))) listingTasks.add(js.stageInfos.map(_.numTasks).sum)
+        if (desc.contains(marker)) markerSeen.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      Pipeline.runFullBatch(spark, in.toString + "/", out)
+      // Listener events arrive in order: once the marker job's start is
+      // seen, every listing job's start has been seen too.
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "listener events not delivered")
+    } finally sc.removeSparkListener(listener)
+
+    val tasks = listingTasks.asScala.toSeq
+    assert(tasks.nonEmpty, "expected a listing job for 40 song files")
+    assert(tasks.forall(_ <= sc.defaultParallelism), s"listing tasks per job $tasks exceed ${sc.defaultParallelism} slots")
+    assert(Pipeline.readTable(spark, out, "songs_table").count() == 40)
+    assert(Pipeline.readTable(spark, out, "artists_table").count() == 7)
   }
 
   test("incremental job: coalesce(1) single part + month partitioning") {

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Guards against regrowth of hand-rolled driver-thread overlaps,
   * stream skeletons and flag parsing in `src/main`: every overlap goes
   * through `graft.operators.Overlap`, every AvailableNow stream starts
-  * in `StreamingPipeline.drain`, and every command-line flag is parsed
-  * by `graft.pipeline.Cli`.
+  * in `StreamingPipeline.drain`, every command-line flag is parsed
+  * by `graft.pipeline.Cli`, and every session is built on
+  * `GraftSession`'s production conf.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -61,5 +62,15 @@ class SourceGuardSpec extends AnyFunSuite {
         s"$file: pair parsing"
     }
     assert(hits.isEmpty, s"declare flags on the verb and read them through Cli.Args:\n${hits.mkString("\n")}")
+  }
+
+  test("SparkSession.builder() is called only by GraftSession, Bench and Verify") {
+    val builder = "SparkSession\\s*\\.\\s*builder\\b".r
+    val callers = sources.collect { case (file, text) if builder.findFirstIn(text).isDefined => file }
+    // Bench's session is the benchmark harness and Verify's is the
+    // oracle dump; every other session starts from GraftSession.builder.
+    val allowed = Seq("graft/Bench.scala", "graft/GraftSession.scala", "graft/Verify.scala")
+    assert(callers.contains("graft/GraftSession.scala"), s"the pattern no longer finds GraftSession's builder: $callers")
+    assert(callers.forall(allowed.contains), s"build sessions with graft.GraftSession instead:\n${callers.diff(allowed).mkString("\n")}")
   }
 }
