@@ -14,14 +14,17 @@ object Maintenance {
   /** Label the driver actions `body` issues (guide §1.5) so the UI /
     * ProfileQuery attribute each job to its operator stage instead of
     * an anonymous AQE-stage frame. Thread-local: concurrent overlapped
-    * actions on other threads are unaffected.
+    * actions on other threads are unaffected. On exit, normal or not,
+    * the caller's own label (or its absence) is restored, so a nested
+    * block never erases an outer one.
     */
   private[graft] def labeledJobs[T](
       spark: org.apache.spark.sql.SparkSession, desc: String)(body: => T): T = {
     val sc = spark.sparkContext
+    val outer = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(desc)
     try body
-    finally sc.setJobDescription(null)
+    finally sc.setLocalProperty("spark.job.description", outer)
   }
 
   /** Hadoop `FileSystem.rename` signals failure by returning false, not

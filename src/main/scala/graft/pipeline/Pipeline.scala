@@ -527,6 +527,62 @@ object PipelineRunner {
     )
   }
 
+  /** The release capstones' shared tail under `root`: `pack_ingest` of
+    * `docs` as batch 0 of a fresh pack space, `afterPack` (a stage that
+    * reads the new manifests), `build_vocab`, `pack_export` of every
+    * emitted pack and, unless `--verify false`, `verify_export`. Each
+    * step is the verb called recursively, so its interlocks fire and
+    * its stage line names the calling capstone. Returns the manifests
+    * and the pack count.
+    */
+  private def packAndExport(spark: SparkSession, opts: Args, root: String, docs: String)(
+      afterPack: => Unit = ()
+  ): (DataFrame, Long) = {
+    val capstone = opts.verb.name
+    timedStage(capstone, "pack_ingest") { run(
+      Array("--maintenance", "pack_ingest", "--batch", docs, "--state", s"$root/pack_state",
+        "--out", s"$root/manifests", "--applied_id", "0", "--budget", opts("budget"),
+        "--shards", opts("shards")),
+      spark
+    ) }
+    afterPack
+    timedStage(capstone, "build_vocab") { run(
+      Array("--maintenance", "build_vocab", "--docs", docs, "--out", s"$root/vocab"),
+      spark
+    ) }
+    val man = spark.read.parquet(s"$root/manifests")
+    val lastRow = man.agg(org.apache.spark.sql.functions.max("last_pack")).head()
+    val nPacks = if (lastRow.isNullAt(0)) 0L else lastRow.getLong(0) + 1L
+    timedStage(capstone, "pack_export") { run(
+      Array("--maintenance", "pack_export", "--state", s"$root/pack_state",
+        "--manifests", s"$root/manifests", "--docs", docs, "--vocab", s"$root/vocab",
+        "--out", s"$root/shards", "--from", "0", "--to", nPacks.toString,
+        "--shards", opts("export_shards")) ++ opts.get("unk_id").toSeq.flatMap(u => Seq("--unk_id", u)),
+      spark
+    ) }
+    // post-landing integrity: the release's own shards re-read and
+    // digest-compared against the landed manifest before anything
+    // downstream trusts them (default on; --verify false skips)
+    if (opts.bool("verify"))
+      timedStage(capstone, "verify_export") {
+        run(Array("--maintenance", "verify_export", "--path", s"$root/shards"), spark)
+      }
+    (man, nPacks)
+  }
+
+  /** Empty-drain guard for the stream verbs: a drain over an empty
+    * `--raw` runs no batch, so it creates neither a fold's state nor
+    * any `<prefix>_batch=` partition. `count` runs only once `dir`
+    * holds a child named `batchPrefix*` (any child by default);
+    * otherwise the successful no-op drain reports 0 instead of failing
+    * on the missing dir.
+    */
+  private def drainedCount(spark: SparkSession, dir: String, batchPrefix: String = "")(count: => Long): Long = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith(batchPrefix))) count else 0L
+  }
+
   private val etl = verb(
     "etl",
     "EP1 reload of raw/ into transformed/; with --raw_file_name, EP2 run of one file (moved to failed/ on error)"
@@ -576,16 +632,7 @@ object PipelineRunner {
     val raw = opts("raw")
     val state = opts("state")
     val ckpt = opts("checkpoint")
-    val turnSchema = org.apache.spark.sql.types.StructType(
-      Seq(
-        org.apache.spark.sql.types
-          .StructField("conv_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types
-          .StructField("turn_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types
-          .StructField("parent_id", org.apache.spark.sql.types.LongType)
-      )
-    )
+    val turnSchema = graft.schemas.Schemas.turnBatch
     val maxDepth = opts("max_depth").toInt
     // walk-row guard, raisable from the CLI (r16): the unit is
     // buffered walk rows (memberships ≈ paths × depth + batch
@@ -598,15 +645,7 @@ object PipelineRunner {
        graft.streaming.StreamingPipeline
          .turnsIngest(spark, raw, state, ckpt, turnSchema, maxDepth, maxConvRows))
       .awaitTermination()
-    // Empty-drain guard (the dsir_stream lesson): a drain that saw
-    // no files never created the state — report 0 instead of
-    // throwing on a missing parquet dir.
-    val stateHPath = new org.apache.hadoop.fs.Path(state)
-    val stateFs = stateHPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nMemb =
-      if (stateFs.exists(stateHPath))
-        graft.operators.TreeState.memberships(spark, state).count()
-      else 0L
+    val nMemb = drainedCount(spark, state)(graft.operators.TreeState.memberships(spark, state).count())
     println(
       s"[maintenance] ${opts.verb.name} drained: state at $state now holds $nMemb membership row(s)"
     )
@@ -618,6 +657,151 @@ object PipelineRunner {
     opt("content_col", "COL"), opt("score_col", "COL"), opt("resp_role", "ROLE"), opt("max_depth", "N"),
     opt("paths_state", "DIR")
   )
+
+  // pack_ingest and pack_ingest_by share one body; the _by verb adds
+  // --group_col and packs per group.
+  private def packIngestVerb(opts: Args, spark: SparkSession): Unit = {
+    val batchPath = opts("batch")
+    val state = opts("state")
+    val out = opts("out")
+    val applied = opts("applied_id").toLong
+    val group = if (opts.verb.name == "pack_ingest_by") Some(opts("group_col")) else None
+    val budget = opts("budget").toLong
+    val shards = opts("shards").toInt
+    val (batchDf, wcol) = withBpeWeights(spark, spark.read.parquet(batchPath), opts.get("bpe_model"))
+    val packing = graft.operators.Packing
+    val manifest = group match {
+      case Some(g) =>
+        packing.packIngestBy(spark, batchDf, "doc_id", "text", g, state, applied, budget, shards, weightCol = wcol)
+      case None =>
+        packing.packIngest(spark, batchDf, "doc_id", "text", state, applied, budget, shards, weightCol = wcol)
+    }
+    manifest.write.mode("overwrite").parquet(s"$out/pack_batch=$applied")
+    // manifest root carries the same budget sidecar as the state,
+    // so manifest-only consumers (pack_boundaries) can validate too
+    packing.recordBudget(spark, out, budget)
+    println(group match {
+      case Some(g) =>
+        s"[maintenance] stratified pack ingest: $batchPath appended per-$g to $state -> $out/pack_batch=$applied"
+      case None => s"[maintenance] pack ingest: $batchPath appended to $state -> $out/pack_batch=$applied"
+    })
+  }
+
+  // pack_stream and pack_stream_by share one body; the _by verb adds
+  // --group_col and reads the per-source document shape.
+  private def packStreamVerb(opts: Args, spark: SparkSession): Unit = {
+    val raw = opts("raw")
+    val state = opts("state")
+    val out = opts("out")
+    val ckpt = opts("checkpoint")
+    val budget = opts("budget").toLong
+    val shards = opts("shards").toInt
+    val stratified = opts.verb.name == "pack_stream_by"
+    (if (stratified)
+       graft.streaming.StreamingPipeline.packIngestStreamBy(
+         spark, raw, state, out, ckpt, Schemas.documentIngestBy, opts("group_col"), budget, shards
+       )
+     else
+       graft.streaming.StreamingPipeline.packIngestStream(
+         spark, raw, state, out, ckpt, Schemas.documentIngest, budget, shards
+       ))
+      .awaitTermination()
+    println(s"[maintenance] ${if (stratified) "stratified " else ""}pack stream drained $raw into $out")
+  }
+
+  // decontaminate, decontam_fuzzy and decontam_semantic share one body:
+  // the verb name picks the Dedup tier and its key column; the report
+  // is pinned once, written, and with --purged the contaminated keys
+  // are anti-joined out of the train set.
+  private def decontamVerb(opts: Args, spark: SparkSession): Unit = {
+    val name = opts.verb.name
+    val out = opts("out")
+    val threshold = opts("threshold").toDouble
+    val train = spark.read.parquet(opts("train"))
+    val evalDf = spark.read.parquet(opts("eval"))
+    val dedup = graft.operators.Dedup
+    val (key, unit, reported, report) = name match {
+      case "decontaminate" =>
+        ("doc_id", "train docs", "overlapping train docs reported",
+          dedup.decontamPurge(train, evalDf, "doc_id", "text", threshold))
+      case "decontam_fuzzy" =>
+        ("doc_id", "train docs", "band-colliding train docs reported",
+          dedup.decontamFuzzy(
+            train, evalDf, "doc_id", "text", threshold, opts("nhashes").toInt, opts("bandrows").toInt))
+      case _ =>
+        ("vec_id", "train vectors", "train vectors audited",
+          dedup.decontamSemantic(train, evalDf, "vec_id", "embedding", threshold))
+    }
+    val pinned = report.localCheckpoint() // one computation serves the report write AND the purge anti-join
+    val n = Pipeline.writeCounted(pinned, out)
+    opts.get("purged").foreach { p =>
+      import org.apache.spark.sql.functions.col
+      val kept = train.join(pinned.filter(col("contaminated")).select(col(key)), Seq(key), "left_anti")
+      val k = Pipeline.writeCounted(kept, p)
+      println(s"[maintenance] $name: kept $k $unit into $p")
+    }
+    println(s"[maintenance] $name: $n $reported at $out")
+  }
+
+  // decontam_stream, decontam_fuzzy_stream and decontam_semantic_stream
+  // share one body; the verb name picks the StreamingPipeline gate.
+  private def decontamStreamVerb(opts: Args, spark: SparkSession): Unit = {
+    val name = opts.verb.name
+    val raw = opts("raw")
+    val evalPath = opts("eval")
+    val out = opts("out")
+    val ckpt = opts("checkpoint")
+    val threshold = opts("threshold").toDouble
+    val sp = graft.streaming.StreamingPipeline
+    (name match {
+      case "decontam_stream" =>
+        sp.decontamStream(spark, raw, evalPath, out, ckpt, Schemas.documentIngest, threshold)
+      case "decontam_fuzzy_stream" =>
+        sp.decontamFuzzyStream(
+          spark, raw, evalPath, out, ckpt, Schemas.documentIngest, threshold,
+          opts("nhashes").toInt, opts("bandrows").toInt
+        )
+      case _ => sp.decontamSemanticStream(spark, raw, evalPath, out, ckpt, threshold)
+    }).awaitTermination()
+    println(s"[maintenance] ${name.replace('_', ' ')} drained $raw into $out")
+  }
+
+  /** retire_packs' and mask_intervals' shared input: the manifests, the
+    * contaminated doc ids (--contam: a decontaminate report — rows with
+    * a `contaminated` column are filtered — or any bare doc_id parquet),
+    * the --group_col columns and the budget.
+    *
+    * Stratified interlock: packIngestBy manifests number packs PER
+    * DOMAIN — auditing by pack_id alone would conflate domains and a
+    * pack_id-keyed mask would retire every domain's pack k. Any column
+    * beyond the global-stream manifest shape must be named as the
+    * grouping via --group_col (the output is then keyed
+    * (group, pack_id)).
+    */
+  private def contamAgainstManifests(
+      opts: Args,
+      spark: SparkSession
+  ): (DataFrame, DataFrame, Seq[String], Long) = {
+    import org.apache.spark.sql.functions.col
+    val manifests = opts("manifests")
+    val budget = resolveBudget(spark, manifests, opts)
+    val contamDf = spark.read.parquet(opts("contam"))
+    val ids =
+      if (contamDf.columns.contains("contaminated")) contamDf.filter(col("contaminated")).select(col("doc_id"))
+      else contamDf.select(col("doc_id"))
+    val man = spark.read.parquet(manifests)
+    val groupCols = opts.get("group_col").map(_.split(",").toSeq).getOrElse(Nil)
+    val globalShape =
+      Set("doc_id", "shard", "start_tok", "n_toks", "first_pack", "last_pack", "n_packs", "pack_batch")
+    val extra = man.columns.filterNot(c => globalShape.contains(c) || groupCols.contains(c))
+    require(
+      extra.isEmpty,
+      s"${opts.verb.name}: manifest carries non-global columns ${extra.mkString(",")} — a stratified " +
+        "(per-domain) pack space numbers packs per domain; pass --group_col <col> so the output is " +
+        "keyed (group, pack_id) instead of silently conflating domains"
+    )
+    (man, ids, groupCols, budget)
+  }
 
   private val verbs: Seq[Verb] = Seq(
     verb("compact", "rewrite a table dir into files of about --target_mb MB")(
@@ -772,82 +956,26 @@ object PipelineRunner {
         .parquet(out)
       println(s"[maintenance] dup spans: $batchPath probed against $state -> $out")
     },
+    // Incremental sequence packing: lay one batch of documents out
+    // after everything already packed (Packing.packIngest — the
+    // persistent offset state makes emitted pack ids immutable),
+    // write the batch's manifest under out/pack_batch=<id>.
+    // Batch parquet shape: (doc_id, text). Replay of the same
+    // --applied_id converges (recorded base reused). With
+    // --bpe_model M, the stream is metered in FROZEN-BPE tokens
+    // (Bpe.segmentCountsFrozen joined as the layout weight) — pin
+    // one model version per state: offsets are cumulative, a
+    // drifting metric would re-meter history.
     verb("pack_ingest", "pack one batch after everything already packed (emitted pack ids never move)")(
       req("batch", "DIR"), req("state", "DIR"), req("out", "DIR"), req("applied_id", "N"),
-      opt("budget", "N", "2048"), opt("shards", "N", "8"), opt("bpe_model", "DIR")) { (opts, spark) =>
-      // Incremental sequence packing: lay one batch of documents out
-      // after everything already packed (Packing.packIngest — the
-      // persistent offset state makes emitted pack ids immutable),
-      // write the batch's manifest under out/pack_batch=<id>.
-      // Batch parquet shape: (doc_id, text). Replay of the same
-      // --applied_id converges (recorded base reused). With
-      // --bpe_model M, the stream is metered in FROZEN-BPE tokens
-      // (Bpe.segmentCountsFrozen joined as the layout weight) — pin
-      // one model version per state: offsets are cumulative, a
-      // drifting metric would re-meter history.
-      val batchPath = opts("batch")
-      val state = opts("state")
-      val out = opts("out")
-      val applied = opts("applied_id").toLong
-      val budget = opts("budget").toLong
-      val shards = opts("shards").toInt
-      val (batchDf, wcol) = withBpeWeights(spark, spark.read.parquet(batchPath), opts.get("bpe_model"))
-      graft.operators.Packing
-        .packIngest(
-          spark,
-          batchDf,
-          "doc_id",
-          "text",
-          state,
-          applied,
-          budget,
-          shards,
-          weightCol = wcol
-        )
-        .write
-        .mode("overwrite")
-        .parquet(s"$out/pack_batch=$applied")
-      // manifest root carries the same budget sidecar as the state,
-      // so manifest-only consumers (pack_boundaries) can validate too
-      graft.operators.Packing.recordBudget(spark, out, budget)
-      println(s"[maintenance] pack ingest: $batchPath appended to $state -> $out/pack_batch=$applied")
-    },
+      opt("budget", "N", "2048"), opt("shards", "N", "8"), opt("bpe_model", "DIR"))(packIngestVerb),
+    // Incremental STRATIFIED packing: same contract per domain
+    // (Packing.packIngestBy — per-domain append-only pack spaces).
+    // Batch parquet shape: (doc_id, <group_col>, text).
     verb("pack_ingest_by", "pack_ingest with one append-only pack space per --group_col value")(
       req("batch", "DIR"), req("state", "DIR"), req("out", "DIR"), req("applied_id", "N"),
       opt("group_col", "COL", "source"), opt("budget", "N", "2048"), opt("shards", "N", "8"),
-      opt("bpe_model", "DIR")) { (opts, spark) =>
-      // Incremental STRATIFIED packing: same contract per domain
-      // (Packing.packIngestBy — per-domain append-only pack spaces).
-      // Batch parquet shape: (doc_id, <group_col>, text).
-      val batchPath = opts("batch")
-      val state = opts("state")
-      val out = opts("out")
-      val applied = opts("applied_id").toLong
-      val group = opts("group_col")
-      val budget = opts("budget").toLong
-      val shards = opts("shards").toInt
-      val (batchDf, wcol) = withBpeWeights(spark, spark.read.parquet(batchPath), opts.get("bpe_model"))
-      graft.operators.Packing
-        .packIngestBy(
-          spark,
-          batchDf,
-          "doc_id",
-          "text",
-          group,
-          state,
-          applied,
-          budget,
-          shards,
-          weightCol = wcol
-        )
-        .write
-        .mode("overwrite")
-        .parquet(s"$out/pack_batch=$applied")
-      graft.operators.Packing.recordBudget(spark, out, budget)
-      println(
-        s"[maintenance] stratified pack ingest: $batchPath appended per-$group to $state -> $out/pack_batch=$applied"
-      )
-    },
+      opt("bpe_model", "DIR"))(packIngestVerb),
     verb("build_quality_model", "freeze the LM quality model from a reference corpus")(
       req("data", "DIR"), req("model", "DIR"), opt("retain", "N", "1")) { (opts, spark) =>
       // Freeze the LM quality model from a reference corpus — the
@@ -963,49 +1091,20 @@ object PipelineRunner {
         .awaitTermination()
       println(s"[maintenance] curate stream drained $raw into $out")
     },
+    // Streaming incremental packing over arriving document JSON
+    // files: packIngest per micro-batch, manifests batch-keyed
+    // (StreamingPipeline.packIngestStream). Document JSON shape:
+    // {"doc_id": long, "text": string}.
     verb("pack_stream", "pack_ingest per arriving document JSON file")(
       req("raw", "DIR"), req("state", "DIR"), req("out", "DIR"), req("checkpoint", "DIR"),
-      opt("budget", "N", "2048"), opt("shards", "N", "8")) { (opts, spark) =>
-      // Streaming incremental packing over arriving document JSON
-      // files: packIngest per micro-batch, manifests batch-keyed
-      // (StreamingPipeline.packIngestStream). Document JSON shape:
-      // {"doc_id": long, "text": string}.
-      val raw = opts("raw")
-      val state = opts("state")
-      val out = opts("out")
-      val ckpt = opts("checkpoint")
-      val budget = opts("budget").toLong
-      val shards = opts("shards").toInt
-      graft.streaming.StreamingPipeline
-        .packIngestStream(
-          spark, raw, state, out, ckpt,
-          graft.schemas.Schemas.documentIngest, budget, shards
-        )
-        .awaitTermination()
-      println(s"[maintenance] pack stream drained $raw into $out")
-    },
+      opt("budget", "N", "2048"), opt("shards", "N", "8"))(packStreamVerb),
+    // Streaming stratified packing over arriving document JSON
+    // files (StreamingPipeline.packIngestStreamBy). JSON shape:
+    // {"doc_id": long, "source": string, "text": string}.
     verb("pack_stream_by", "pack_ingest_by per arriving document JSON file")(
       req("raw", "DIR"), req("state", "DIR"), req("out", "DIR"), req("checkpoint", "DIR"),
       opt("group_col", "COL", "source"), opt("budget", "N", "2048"),
-      opt("shards", "N", "8")) { (opts, spark) =>
-      // Streaming stratified packing over arriving document JSON
-      // files (StreamingPipeline.packIngestStreamBy). JSON shape:
-      // {"doc_id": long, "source": string, "text": string}.
-      val raw = opts("raw")
-      val state = opts("state")
-      val out = opts("out")
-      val ckpt = opts("checkpoint")
-      val group = opts("group_col")
-      val budget = opts("budget").toLong
-      val shards = opts("shards").toInt
-      graft.streaming.StreamingPipeline
-        .packIngestStreamBy(
-          spark, raw, state, out, ckpt,
-          graft.schemas.Schemas.documentIngestBy, group, budget, shards
-        )
-        .awaitTermination()
-      println(s"[maintenance] stratified pack stream drained $raw into $out")
-    },
+      opt("shards", "N", "8"))(packStreamVerb),
     verb("fertility_stream", "per-source fertility telemetry per arriving file under a frozen BPE model")(
       req("raw", "DIR"), req("model", "DIR"), req("out", "DIR"), req("checkpoint", "DIR")) { (opts, spark) =>
       // Streaming fertility-drift telemetry under a frozen BPE model
@@ -1021,47 +1120,20 @@ object PipelineRunner {
         .awaitTermination()
       println(s"[maintenance] fertility stream drained $raw into $out")
     },
+    // Streaming decontamination against a frozen eval benchmark
+    // (StreamingPipeline.decontamStream): per arriving document
+    // JSON file, the per-doc eval-overlap report as batch-keyed
+    // telemetry. JSON shape: {"doc_id","text"}.
     verb("decontam_stream", "eval-overlap report per arriving document JSON file")(
       req("raw", "DIR"), req("eval", "DIR"), req("out", "DIR"), req("checkpoint", "DIR"),
-      opt("threshold", "X", "0.5")) { (opts, spark) =>
-      // Streaming decontamination against a frozen eval benchmark
-      // (StreamingPipeline.decontamStream): per arriving document
-      // JSON file, the per-doc eval-overlap report as batch-keyed
-      // telemetry. JSON shape: {"doc_id","text"}.
-      val raw = opts("raw")
-      val evalPath = opts("eval")
-      val out = opts("out")
-      val ckpt = opts("checkpoint")
-      val threshold = opts("threshold").toDouble
-      graft.streaming.StreamingPipeline
-        .decontamStream(
-          spark, raw, evalPath, out, ckpt, graft.schemas.Schemas.documentIngest, threshold
-        )
-        .awaitTermination()
-      println(s"[maintenance] decontam stream drained $raw into $out")
-    },
+      opt("threshold", "X", "0.5"))(decontamStreamVerb),
+    // The pair-attributed near-dup ingest gate
+    // (StreamingPipeline.decontamFuzzyStream): per arriving document
+    // JSON file, the per-doc LSH eval-overlap report as batch-keyed
+    // telemetry. JSON shape: {"doc_id","text"}.
     verb("decontam_fuzzy_stream", "LSH near-dup eval report per arriving document JSON file")(
       req("raw", "DIR"), req("eval", "DIR"), req("out", "DIR"), req("checkpoint", "DIR"),
-      opt("threshold", "X", "0.5"), opt("nhashes", "N", "16"), opt("bandrows", "N", "4")) { (opts, spark) =>
-      // The pair-attributed near-dup ingest gate
-      // (StreamingPipeline.decontamFuzzyStream): per arriving document
-      // JSON file, the per-doc LSH eval-overlap report as batch-keyed
-      // telemetry. JSON shape: {"doc_id","text"}.
-      val raw = opts("raw")
-      val evalPath = opts("eval")
-      val out = opts("out")
-      val ckpt = opts("checkpoint")
-      val threshold = opts("threshold").toDouble
-      val nHashes = opts("nhashes").toInt
-      val bandRows = opts("bandrows").toInt
-      graft.streaming.StreamingPipeline
-        .decontamFuzzyStream(
-          spark, raw, evalPath, out, ckpt, graft.schemas.Schemas.documentIngest, threshold,
-          nHashes, bandRows
-        )
-        .awaitTermination()
-      println(s"[maintenance] decontam fuzzy stream drained $raw into $out")
-    },
+      opt("threshold", "X", "0.5"), opt("nhashes", "N", "16"), opt("bandrows", "N", "4"))(decontamStreamVerb),
     verb("pack_curated_stream", "pack a curated corpus' batch partitions as they land")(
       req("curated", "DIR"), req("state", "DIR"), req("out", "DIR"), req("checkpoint", "DIR"),
       opt("budget", "N", "2048"), opt("shards", "N", "8")) { (opts, spark) =>
@@ -1117,110 +1189,35 @@ object PipelineRunner {
       val n = Pipeline.writeCounted(slices, out)
       println(s"[maintenance] pack slices [$from, $to): $n token rows from $manifests into $out")
     },
+    // Benchmark decontamination (Dedup.decontamPurge): report every
+    // train doc overlapping the eval corpus' shingle set; with
+    // --purged, also write the train corpus minus the contaminated
+    // ids. Both parquets need (doc_id, text).
     verb("decontaminate", "report train docs overlapping the eval shingles; --purged writes the rest")(
       req("train", "DIR"), req("eval", "DIR"), req("out", "DIR"), opt("threshold", "X", "0.5"),
-      opt("purged", "DIR")) { (opts, spark) =>
-      // Benchmark decontamination (Dedup.decontamPurge): report every
-      // train doc overlapping the eval corpus' shingle set; with
-      // --purged, also write the train corpus minus the contaminated
-      // ids. Both parquets need (doc_id, text).
-      val trainPath = opts("train")
-      val evalPath = opts("eval")
-      val out = opts("out")
-      val threshold = opts("threshold").toDouble
-      val train = spark.read.parquet(trainPath)
-      val report = graft.operators.Dedup
-        .decontamPurge(train, spark.read.parquet(evalPath), "doc_id", "text", threshold)
-        .localCheckpoint() // one computation serves the report write AND the purge anti-join
-      val n = Pipeline.writeCounted(report, out)
-      opts.get("purged").foreach { p =>
-        val kept = train.join(
-          report.filter(org.apache.spark.sql.functions.col("contaminated"))
-            .select(org.apache.spark.sql.functions.col("doc_id")),
-          Seq("doc_id"),
-          "left_anti"
-        )
-        val k = Pipeline.writeCounted(kept, p)
-        println(s"[maintenance] decontaminate: kept $k train docs into $p")
-      }
-      println(s"[maintenance] decontaminate: $n overlapping train docs reported at $out")
-    },
+      opt("purged", "DIR"))(decontamVerb),
+    // Pair-attributed near-dup decontamination (Dedup.decontamFuzzy):
+    // per train doc, the eval items it MinHash-LSH-collides with and
+    // the worst verified whole-set Jaccard. The high-precision triage
+    // for `decontaminate`'s pooled-overlap report (which dominates on
+    // recall but cannot attribute); same --purged anti-join contract.
     verb("decontam_fuzzy", "per train doc, LSH-candidate eval items and the worst verified Jaccard")(
       req("train", "DIR"), req("eval", "DIR"), req("out", "DIR"), opt("threshold", "X", "0.5"),
-      opt("nhashes", "N", "16"), opt("bandrows", "N", "4"), opt("purged", "DIR")) { (opts, spark) =>
-      // Pair-attributed near-dup decontamination (Dedup.decontamFuzzy):
-      // per train doc, the eval items it MinHash-LSH-collides with and
-      // the worst verified whole-set Jaccard. The high-precision triage
-      // for `decontaminate`'s pooled-overlap report (which dominates on
-      // recall but cannot attribute); same --purged anti-join contract.
-      val trainPath = opts("train")
-      val evalPath = opts("eval")
-      val out = opts("out")
-      val threshold = opts("threshold").toDouble
-      val nHashes = opts("nhashes").toInt
-      val bandRows = opts("bandrows").toInt
-      val train = spark.read.parquet(trainPath)
-      val report = graft.operators.Dedup
-        .decontamFuzzy(train, spark.read.parquet(evalPath), "doc_id", "text", threshold, nHashes, bandRows)
-        .localCheckpoint() // one computation serves the report write AND the purge anti-join
-      val n = Pipeline.writeCounted(report, out)
-      opts.get("purged").foreach { p =>
-        val kept = train.join(
-          report.filter(org.apache.spark.sql.functions.col("contaminated"))
-            .select(org.apache.spark.sql.functions.col("doc_id")),
-          Seq("doc_id"),
-          "left_anti"
-        )
-        val k = Pipeline.writeCounted(kept, p)
-        println(s"[maintenance] decontam_fuzzy: kept $k train docs into $p")
-      }
-      println(s"[maintenance] decontam_fuzzy: $n band-colliding train docs reported at $out")
-    },
+      opt("nhashes", "N", "16"), opt("bandrows", "N", "4"), opt("purged", "DIR"))(decontamVerb),
+    // The embedding tier (Dedup.decontamSemantic): per train
+    // vector, its best-cosine eval match and verdict. Both
+    // parquets need (vec_id, embedding); same --purged anti-join
+    // contract as the lexical tiers.
     verb("decontam_semantic", "per train vector, its best-cosine eval match and verdict")(
       req("train", "DIR"), req("eval", "DIR"), req("out", "DIR"), opt("threshold", "X", "0.5"),
-      opt("purged", "DIR")) { (opts, spark) =>
-      // The embedding tier (Dedup.decontamSemantic): per train
-      // vector, its best-cosine eval match and verdict. Both
-      // parquets need (vec_id, embedding); same --purged anti-join
-      // contract as the lexical tiers.
-      val trainPath = opts("train")
-      val evalPath = opts("eval")
-      val out = opts("out")
-      val threshold = opts("threshold").toDouble
-      val train = spark.read.parquet(trainPath)
-      val report = graft.operators.Dedup
-        .decontamSemantic(train, spark.read.parquet(evalPath), "vec_id", "embedding", threshold)
-        .localCheckpoint() // one computation serves the report write AND the purge anti-join
-      val n = Pipeline.writeCounted(report, out)
-      opts.get("purged").foreach { p =>
-        val kept = train.join(
-          report.filter(org.apache.spark.sql.functions.col("contaminated"))
-            .select(org.apache.spark.sql.functions.col("vec_id")),
-          Seq("vec_id"),
-          "left_anti"
-        )
-        val k = Pipeline.writeCounted(kept, p)
-        println(s"[maintenance] decontam_semantic: kept $k train vectors into $p")
-      }
-      println(s"[maintenance] decontam_semantic: $n train vectors audited at $out")
-    },
+      opt("purged", "DIR"))(decontamVerb),
+    // The embedding tier's ingest gate
+    // (StreamingPipeline.decontamSemanticStream): per arriving
+    // embedding JSON file, each vector's best-cosine eval match as
+    // batch-keyed telemetry. JSON shape: {"vec_id","embedding"}.
     verb("decontam_semantic_stream", "best-cosine eval match per arriving embedding JSON file")(
       req("raw", "DIR"), req("eval", "DIR"), req("out", "DIR"), req("checkpoint", "DIR"),
-      opt("threshold", "X", "0.5")) { (opts, spark) =>
-      // The embedding tier's ingest gate
-      // (StreamingPipeline.decontamSemanticStream): per arriving
-      // embedding JSON file, each vector's best-cosine eval match as
-      // batch-keyed telemetry. JSON shape: {"vec_id","embedding"}.
-      val raw = opts("raw")
-      val evalPath = opts("eval")
-      val out = opts("out")
-      val ckpt = opts("checkpoint")
-      val threshold = opts("threshold").toDouble
-      graft.streaming.StreamingPipeline
-        .decontamSemanticStream(spark, raw, evalPath, out, ckpt, threshold)
-        .awaitTermination()
-      println(s"[maintenance] decontam semantic stream drained $raw into $out")
-    },
+      opt("threshold", "X", "0.5"))(decontamStreamVerb),
     verb("retire_packs", "audit contaminated docs against the manifests and write the retirement mask")(
       req("manifests", "DIR"), req("contam", "DIR"), req("out", "DIR"), opt("budget", "N"),
       opt("threshold", "X", "0.0"), opt("group_col", "COL")) { (opts, spark) =>
@@ -1235,35 +1232,9 @@ object PipelineRunner {
       // side-file pack_slices/pack_export honor via --mask. Packs
       // are never re-packed: emitted ids are immutable under a live
       // trainer, so contamination handling is an exclusion layer.
-      val manifests = opts("manifests")
-      val contamPath = opts("contam")
       val out = opts("out")
-      val budget = resolveBudget(spark, manifests, opts)
       val threshold = opts("threshold").toDouble
-      val contamDf = spark.read.parquet(contamPath)
-      val ids =
-        if (contamDf.columns.contains("contaminated"))
-          contamDf
-            .filter(org.apache.spark.sql.functions.col("contaminated"))
-            .select(org.apache.spark.sql.functions.col("doc_id"))
-        else contamDf.select(org.apache.spark.sql.functions.col("doc_id"))
-      val man = spark.read.parquet(manifests)
-      // Stratified interlock: packIngestBy manifests number packs PER
-      // DOMAIN — auditing by pack_id alone would conflate domains and
-      // a pack_id-keyed mask would retire every domain's pack k. Any
-      // column beyond the global-stream manifest shape must be named
-      // as the grouping via --group_col (the mask is then keyed
-      // (group, pack_id)).
-      val groupCols = opts.get("group_col").map(_.split(",").toSeq).getOrElse(Nil)
-      val globalShape =
-        Set("doc_id", "shard", "start_tok", "n_toks", "first_pack", "last_pack", "n_packs", "pack_batch")
-      val extra = man.columns.filterNot(c => globalShape.contains(c) || groupCols.contains(c))
-      require(
-        extra.isEmpty,
-        s"retire_packs: manifest carries non-global columns ${extra.mkString(",")} — a stratified " +
-          "(per-domain) pack space numbers packs per domain; pass --group_col <col> so the mask is " +
-          "keyed (group, pack_id) instead of silently conflating domains"
-      )
+      val (man, ids, groupCols, budget) = contamAgainstManifests(opts, spark)
       val audit = graft.operators.Packing
         .contamAudit(man, ids, "doc_id", budget, groupCols)
       val mask = graft.operators.Packing.retirePacks(audit, budget, threshold, groupCols)
@@ -1287,28 +1258,8 @@ object PipelineRunner {
       // Same --contam flexibility and stratified --group_col
       // interlock as retire_packs; the output is a
       // contamination-sized side-file, never a re-pack.
-      val manifests = opts("manifests")
-      val contamPath = opts("contam")
       val out = opts("out")
-      val budget = resolveBudget(spark, manifests, opts)
-      val contamDf = spark.read.parquet(contamPath)
-      val ids =
-        if (contamDf.columns.contains("contaminated"))
-          contamDf
-            .filter(org.apache.spark.sql.functions.col("contaminated"))
-            .select(org.apache.spark.sql.functions.col("doc_id"))
-        else contamDf.select(org.apache.spark.sql.functions.col("doc_id"))
-      val man = spark.read.parquet(manifests)
-      val groupCols = opts.get("group_col").map(_.split(",").toSeq).getOrElse(Nil)
-      val globalShape =
-        Set("doc_id", "shard", "start_tok", "n_toks", "first_pack", "last_pack", "n_packs", "pack_batch")
-      val extra = man.columns.filterNot(c => globalShape.contains(c) || groupCols.contains(c))
-      require(
-        extra.isEmpty,
-        s"mask_intervals: manifest carries non-global columns ${extra.mkString(",")} — a stratified " +
-          "(per-domain) pack space numbers packs per domain; pass --group_col <col> so masks are " +
-          "keyed (group, pack_id) instead of silently conflating domains"
-      )
+      val (man, ids, groupCols, budget) = contamAgainstManifests(opts, spark)
       val masks = graft.operators.Packing
         .maskIntervals(man, ids, "doc_id", budget, groupCols)
       val n = Pipeline.writeCounted(masks, out)
@@ -1477,7 +1428,6 @@ object PipelineRunner {
       val threshold = opts("threshold")
       val gateMilliBits = opts("gate_millibits")
       val spanClean = opts("span_clean")
-      val unkArgs = opts.get("unk_id").toSeq.flatMap(u => Seq("--unk_id", u))
       timedStage("release", "curate") { run(
         Array("--maintenance", "curate", "--data", data, "--out", s"$root/curated",
           "--shards", shards, "--min_keep_tokens", minKeep,
@@ -1523,33 +1473,8 @@ object PipelineRunner {
           s"$root/selected"
         case None => s"$root/clean"
       }
-      timedStage("release", "pack_ingest") { run(
-        Array("--maintenance", "pack_ingest", "--batch", packInput, "--state", s"$root/pack_state",
-          "--out", s"$root/manifests", "--applied_id", "0", "--budget", budget, "--shards", shards),
-        spark
-      ) }
-      timedStage("release", "build_vocab") { run(
-        Array("--maintenance", "build_vocab", "--docs", packInput, "--out", s"$root/vocab"),
-        spark
-      ) }
-      import org.apache.spark.sql.functions.{col => c, max => mx, count => cnt, lit, sum => sm}
-      val man = spark.read.parquet(s"$root/manifests")
-      val lastRow = man.agg(mx(c("last_pack"))).head()
-      val nPacks = if (lastRow.isNullAt(0)) 0L else lastRow.getLong(0) + 1L
-      timedStage("release", "pack_export") { run(
-        Array("--maintenance", "pack_export", "--state", s"$root/pack_state",
-          "--manifests", s"$root/manifests", "--docs", packInput, "--vocab", s"$root/vocab",
-          "--out", s"$root/shards", "--from", "0", "--to", nPacks.toString,
-          "--shards", exportShards) ++ unkArgs,
-        spark
-      ) }
-      // post-landing integrity: the release's own shards re-read and
-      // digest-compared against the landed manifest before anything
-      // downstream trusts them (default on; --verify false skips)
-      if (opts.bool("verify"))
-        timedStage("release", "verify_export") {
-          run(Array("--maintenance", "verify_export", "--path", s"$root/shards"), spark)
-        }
+      val (man, nPacks) = packAndExport(spark, opts, root, packInput)()
+      import org.apache.spark.sql.functions.{col => c, count => cnt, lit, sum => sm}
       opts.get("epochs").foreach { e =>
         run(
           Array("--maintenance", "pack_epochs", "--manifests", s"$root/manifests",
@@ -1634,14 +1559,12 @@ object PipelineRunner {
       val root = opts("out")
       requireFreshReleaseRoot(spark, root, "sft_release")
       val budget = opts("budget")
-      val shards = opts("shards")
       val exportShards = opts("export_shards")
       val trainRole = opts("train_role")
       val convCol = opts("conv_col")
       val turnCol = opts("turn_col")
       val roleCol = opts("role_col")
       val contentCol = opts("content_col")
-      val unkArgs = opts.get("unk_id").toSeq.flatMap(u => Seq("--unk_id", u))
       val turns = spark.read.parquet(turnsPath)
       val nBadWs = turns
         .filter(col(contentCol).rlike("(^\\s)|(\\s$)") || col(contentCol) === "")
@@ -1706,39 +1629,16 @@ object PipelineRunner {
       timedStage("sft_release", "render") {
         rendered.write.mode("overwrite").parquet(s"$root/rendered")
       }
-      timedStage("sft_release", "pack_ingest") { run(
-        Array("--maintenance", "pack_ingest", "--batch", s"$root/rendered",
-          "--state", s"$root/pack_state", "--out", s"$root/manifests",
-          "--applied_id", "0", "--budget", budget, "--shards", shards),
-        spark
-      ) }
-      timedStage("sft_release", "sft_masks") { run(
-        Array("--maintenance", "sft_masks", "--turns", chainTurnsPath,
-          "--manifests", s"$root/manifests", "--out", s"$root/role_masks",
-          "--man_id_col", "doc_id", "--conv_col", chainConv, "--turn_col", chainTurn,
-          "--role_col", chainRole, "--content_col", chainContent,
-          "--train_role", trainRole),
-        spark
-      ) }
-      timedStage("sft_release", "build_vocab") { run(
-        Array("--maintenance", "build_vocab", "--docs", s"$root/rendered",
-          "--out", s"$root/vocab"),
-        spark
-      ) }
-      val man = spark.read.parquet(s"$root/manifests")
-      val lastRow = man.agg(org.apache.spark.sql.functions.max(col("last_pack"))).head()
-      val nPacks = if (lastRow.isNullAt(0)) 0L else lastRow.getLong(0) + 1L
-      timedStage("sft_release", "pack_export") { run(
-        Array("--maintenance", "pack_export", "--state", s"$root/pack_state",
-          "--manifests", s"$root/manifests", "--docs", s"$root/rendered",
-          "--vocab", s"$root/vocab", "--out", s"$root/shards",
-          "--from", "0", "--to", nPacks.toString, "--shards", exportShards) ++ unkArgs,
-        spark
-      ) }
-      if (opts.bool("verify"))
-        timedStage("sft_release", "verify_export") {
-          run(Array("--maintenance", "verify_export", "--path", s"$root/shards"), spark)
-        }
+      val (man, nPacks) = packAndExport(spark, opts, root, s"$root/rendered") {
+        timedStage("sft_release", "sft_masks") { run(
+          Array("--maintenance", "sft_masks", "--turns", chainTurnsPath,
+            "--manifests", s"$root/manifests", "--out", s"$root/role_masks",
+            "--man_id_col", "doc_id", "--conv_col", chainConv, "--turn_col", chainTurn,
+            "--role_col", chainRole, "--content_col", chainContent,
+            "--train_role", trainRole),
+          spark
+        ) }
+      }
       // Ship the role masks WITH the landing (underscore dir —
       // parquet readers of shards/ ignore it).
       val masks = spark.read.parquet(s"$root/role_masks")
@@ -2151,20 +2051,10 @@ object PipelineRunner {
       val raw = opts("raw")
       val state = opts("state")
       val ckpt = opts("checkpoint")
-      val respSchema = org.apache.spark.sql.types.StructType(
-        Seq(
-          org.apache.spark.sql.types
-            .StructField("prompt_id", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types
-            .StructField("doc_id", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types
-            .StructField("score", org.apache.spark.sql.types.LongType)
-        )
-      )
       graft.streaming.StreamingPipeline
-        .prefIngest(spark, raw, state, ckpt, respSchema)
+        .prefIngest(spark, raw, state, ckpt, Schemas.prefResponses)
         .awaitTermination()
-      val nPairs = graft.operators.Preference.pairsFromState(spark, state).count()
+      val nPairs = drainedCount(spark, state)(graft.operators.Preference.pairsFromState(spark, state).count())
       println(s"[maintenance] pref stream drained: state at $state now holds $nPairs pair(s)")
     },
     verb("turns_stream", "fold arriving turn-batch JSON files into the tree-membership state")(
@@ -2182,20 +2072,10 @@ object PipelineRunner {
       val raw = opts("raw")
       val state = opts("state")
       val ckpt = opts("checkpoint")
-      val respSchema = org.apache.spark.sql.types.StructType(
-        Seq(
-          org.apache.spark.sql.types
-            .StructField("prompt_id", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types
-            .StructField("policy", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types
-            .StructField("score", org.apache.spark.sql.types.LongType)
-        )
-      )
       graft.streaming.StreamingPipeline
-        .winIngest(spark, raw, state, ckpt, respSchema)
+        .winIngest(spark, raw, state, ckpt, Schemas.winResponses)
         .awaitTermination()
-      val nPairs = graft.operators.Preference.winMatrixFromState(spark, state).count()
+      val nPairs = drainedCount(spark, state)(graft.operators.Preference.winMatrixFromState(spark, state).count())
       println(s"[maintenance] win stream drained: state at $state now boards $nPairs policy pair(s)")
     },
     verb("win_ingest", "fold one batch of scored responses into the arena board state")(
@@ -2345,15 +2225,7 @@ object PipelineRunner {
       graft.streaming.StreamingPipeline
         .dsirScore(spark, raw, weights, out, ckpt, graft.schemas.Schemas.documentIngest)
         .awaitTermination()
-      // A drain that landed ZERO batches (empty --raw dir) leaves no
-      // score_batch= children — reading the bare out dir would throw
-      // and turn a successful no-op drain into a CLI failure.
-      val outHPath = new org.apache.hadoop.fs.Path(out)
-      val outFs = outHPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val hasBatches = outFs.exists(outHPath) &&
-        outFs.listStatus(outHPath).exists(_.getPath.getName.startsWith("score_batch="))
-      val nScored =
-        if (hasBatches) spark.read.option("basePath", out).parquet(out).count() else 0L
+      val nScored = drainedCount(spark, out, "score_batch=")(spark.read.option("basePath", out).parquet(out).count())
       println(s"[maintenance] dsir stream drained: $nScored scored doc row(s) under $out")
     },
     verb("chunk_stream", "chunk each arriving document JSON file into sliding token windows")(
@@ -2376,12 +2248,7 @@ object PipelineRunner {
           spark, raw, opts.get("model"), out, ckpt, graft.schemas.Schemas.documentIngest, window, stride
         )
         .awaitTermination()
-      val outHPath2 = new org.apache.hadoop.fs.Path(out)
-      val outFs2 = outHPath2.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val hasChunkBatches = outFs2.exists(outHPath2) &&
-        outFs2.listStatus(outHPath2).exists(_.getPath.getName.startsWith("chunk_batch="))
-      val nChunks =
-        if (hasChunkBatches) spark.read.option("basePath", out).parquet(out).count() else 0L
+      val nChunks = drainedCount(spark, out, "chunk_batch=")(spark.read.option("basePath", out).parquet(out).count())
       println(s"[maintenance] chunk stream drained: $nChunks chunk row(s) under $out")
     },
     verb("vocab_coverage", "smallest number of token types covering each target share of tokens")(

@@ -89,4 +89,39 @@ object Schemas {
       StructField("text", StringType)
     )
   )
+
+  /** Turn-batch JSON shape (`{"conv_id", "turn_id", "parent_id"}`, all
+    * long) — the `turns_stream` / `turns_backfill` source folded into
+    * the tree-membership state.
+    */
+  val turnBatch: StructType = StructType(
+    Seq(
+      StructField("conv_id", LongType),
+      StructField("turn_id", LongType),
+      StructField("parent_id", LongType)
+    )
+  )
+
+  /** Scored-response JSON shape (`{"prompt_id", "doc_id", "score"}`,
+    * all long) — the `pref_stream` source folded into the pair state.
+    */
+  val prefResponses: StructType = StructType(
+    Seq(
+      StructField("prompt_id", LongType),
+      StructField("doc_id", LongType),
+      StructField("score", LongType)
+    )
+  )
+
+  /** Per-policy scored-response JSON shape (`{"prompt_id": long,
+    * "policy": string, "score": long}`) — the `win_stream` source folded
+    * into the arena board state.
+    */
+  val winResponses: StructType = StructType(
+    Seq(
+      StructField("prompt_id", LongType),
+      StructField("policy", StringType),
+      StructField("score", LongType)
+    )
+  )
 }

@@ -57,6 +57,17 @@ object StreamingPipeline {
       .foreachBatch(perBatch(body))
       .start()
 
+  /** The body of the arms whose output is one overwritten partition per
+    * micro-batch: `f(batch, batchId)` lands as
+    * `outDir/<prefix>_batch=<id>` ([[drain]]'s contract), and an idle
+    * trigger firing (an empty micro-batch) writes nothing.
+    */
+  private def batchKeyed(outDir: String, prefix: String)(
+      f: (DataFrame, Long) => DataFrame
+  ): (DataFrame, Long) => Unit =
+    (batch, batchId) =>
+      if (!batch.isEmpty) f(batch, batchId).write.mode("overwrite").parquet(s"$outDir/${prefix}_batch=$batchId")
+
   /** Default events schema for the streaming source when the directory
     * is still empty at stream start (generators currently write `ts` as
     * µs timestamps without tz metadata → TIMESTAMP_NTZ). A file stream
@@ -935,8 +946,8 @@ object StreamingPipeline {
       outDir: String,
       budget: Long,
       nShards: Int
-  )(batch: DataFrame, batchId: Long): Unit =
-    if (!batch.isEmpty)
+  ): (DataFrame, Long) => Unit =
+    batchKeyed(outDir, "pack") { (batch, batchId) =>
       graft.operators.Packing
         .packIngest(
           spark,
@@ -948,9 +959,7 @@ object StreamingPipeline {
           budget,
           nShards
         )
-        .write
-        .mode("overwrite")
-        .parquet(s"$outDir/pack_batch=$batchId")
+    }
 
   /** Streaming MIXTURE-STRATIFIED packing: [[packIngestStream]] with
     * per-domain offset state ([[graft.operators.Packing.packIngestBy]]
@@ -971,24 +980,20 @@ object StreamingPipeline {
       budget: Long = 2048L,
       nShards: Int = 8
   ): org.apache.spark.sql.streaming.StreamingQuery =
-    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint) { (batch, batchId) =>
-      if (!batch.isEmpty)
-        graft.operators.Packing
-          .packIngestBy(
-            spark,
-            batch.select(col("doc_id"), col(groupCol), col("text")),
-            "doc_id",
-            "text",
-            groupCol,
-            statePath,
-            batchId,
-            budget,
-            nShards
-          )
-          .write
-          .mode("overwrite")
-          .parquet(s"$outDir/pack_batch=$batchId")
-    }
+    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint)(batchKeyed(outDir, "pack") { (batch, batchId) =>
+      graft.operators.Packing
+        .packIngestBy(
+          spark,
+          batch.select(col("doc_id"), col(groupCol), col("text")),
+          "doc_id",
+          "text",
+          groupCol,
+          statePath,
+          batchId,
+          budget,
+          nShards
+        )
+    })
 
   /** Streaming fertility-drift telemetry — the production form of the
     * q123 monitor: per arriving document file, per-source whitespace vs
@@ -1014,22 +1019,18 @@ object StreamingPipeline {
       docSchema: StructType
   ): org.apache.spark.sql.streaming.StreamingQuery = {
     val merges = graft.operators.Bpe.loadMerges(spark, modelPath)
-    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint) { (batch, batchId) =>
-      if (!batch.isEmpty)
-        graft.operators.Bpe
-          .segmentCounts(batch.select(col("doc_id"), col("text")), "doc_id", "text", merges)
-          .join(batch.select(col("doc_id"), col("source")), Seq("doc_id"))
-          .groupBy(col("source"))
-          .agg(
-            count(lit(1)).as("n_docs"),
-            sum(col("n_tokens")).as("sum_ws"),
-            sum(col("n_bpe_tokens")).as("sum_bpe")
-          )
-          .withColumn("fert_milli", expr("(1000 * sum_bpe) div sum_ws"))
-          .write
-          .mode("overwrite")
-          .parquet(s"$outDir/ingest_batch=$batchId")
-    }
+    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint)(batchKeyed(outDir, "ingest") { (batch, _) =>
+      graft.operators.Bpe
+        .segmentCounts(batch.select(col("doc_id"), col("text")), "doc_id", "text", merges)
+        .join(batch.select(col("doc_id"), col("source")), Seq("doc_id"))
+        .groupBy(col("source"))
+        .agg(
+          count(lit(1)).as("n_docs"),
+          sum(col("n_tokens")).as("sum_ws"),
+          sum(col("n_bpe_tokens")).as("sum_bpe")
+        )
+        .withColumn("fert_milli", expr("(1000 * sum_bpe) div sum_ws"))
+    })
   }
 
   /** Streaming decontamination — the eval-set member of the ingest
@@ -1056,20 +1057,16 @@ object StreamingPipeline {
     val evalSet = graft.operators.Dedup
       .evalShingles(spark.read.parquet(evalPath), "text")
       .localCheckpoint()
-    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint) { (batch, batchId) =>
-      if (!batch.isEmpty)
-        graft.operators.Dedup
-          .decontamPurgeAgainst(
-            batch.select(col("doc_id"), col("text")),
-            evalSet,
-            "doc_id",
-            "text",
-            threshold
-          )
-          .write
-          .mode("overwrite")
-          .parquet(s"$outDir/ingest_batch=$batchId")
-    }
+    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint)(batchKeyed(outDir, "ingest") { (batch, _) =>
+      graft.operators.Dedup
+        .decontamPurgeAgainst(
+          batch.select(col("doc_id"), col("text")),
+          evalSet,
+          "doc_id",
+          "text",
+          threshold
+        )
+    })
   }
 
   /** Streaming FUZZY decontamination — the pair-attributed member of
@@ -1096,22 +1093,18 @@ object StreamingPipeline {
     val evalSets = graft.operators.Dedup
       .shingleSets(spark.read.parquet(evalPath), "doc_id", "text")
       .localCheckpoint()
-    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint) { (batch, batchId) =>
-      if (!batch.isEmpty)
-        graft.operators.Dedup
-          .decontamFuzzyPinned(
-            graft.operators.Dedup
-              .shingleSets(batch.select(col("doc_id"), col("text")), "doc_id", "text"),
-            evalSets,
-            "doc_id",
-            threshold,
-            nHashes,
-            bandRows
-          )
-          .write
-          .mode("overwrite")
-          .parquet(s"$outDir/ingest_batch=$batchId")
-    }
+    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint)(batchKeyed(outDir, "ingest") { (batch, _) =>
+      graft.operators.Dedup
+        .decontamFuzzyPinned(
+          graft.operators.Dedup
+            .shingleSets(batch.select(col("doc_id"), col("text")), "doc_id", "text"),
+          evalSets,
+          "doc_id",
+          threshold,
+          nHashes,
+          bandRows
+        )
+    })
   }
 
   /** Streaming SEMANTIC decontamination — the embedding tier's ingest
@@ -1133,13 +1126,9 @@ object StreamingPipeline {
     val probe = graft.operators.Dedup
       .semanticProbe(spark.read.parquet(evalPath), "vec_id", "embedding", threshold)
     val source = spark.readStream.schema(graft.schemas.Schemas.embeddingIngest).json(rawDir)
-    drain(source, checkpoint) { (batch, batchId) =>
-      if (!batch.isEmpty)
-        probe(batch.select(col("vec_id"), col("embedding")))
-          .write
-          .mode("overwrite")
-          .parquet(s"$outDir/ingest_batch=$batchId")
-    }
+    drain(source, checkpoint)(batchKeyed(outDir, "ingest") { (batch, _) =>
+      probe(batch.select(col("vec_id"), col("embedding")))
+    })
   }
 
   /** The curation→packing CHAIN consumer: tail a [[curateIngestStream]]
@@ -1269,15 +1258,14 @@ object StreamingPipeline {
     // resolve the merges ONCE — every batch of this drain chunks
     // under the same frozen table
     val merges = modelPath.map(m => graft.operators.Bpe.loadMerges(spark, m))
-    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint) { (batch, batchId) =>
-      val chunks = merges match {
+    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint)(batchKeyed(outDir, "chunk") { (batch, _) =>
+      merges match {
         case Some(ms) =>
           graft.operators.Chunking.bpeChunks(batch, "doc_id", "text", ms, window, stride)
         case None =>
           graft.operators.Chunking.slidingChunks(batch, "doc_id", "text", window, stride)
       }
-      chunks.write.mode("overwrite").parquet(s"$outDir/chunk_batch=$batchId")
-    }
+    })
   }
 
   /** Streaming DSIR scoring: each arriving document JSON file scores
@@ -1309,12 +1297,8 @@ object StreamingPipeline {
         )
       )
     val weights = spark.read.parquet(weightsPath)
-    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint) { (batch, batchId) =>
-      graft.operators.Importance
-        .importanceScores(batch, "doc_id", "text", weights, buckets)
-        .write
-        .mode("overwrite")
-        .parquet(s"$outDir/score_batch=$batchId")
-    }
+    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint)(batchKeyed(outDir, "score") { (batch, _) =>
+      graft.operators.Importance.importanceScores(batch, "doc_id", "text", weights, buckets)
+    })
   }
 }

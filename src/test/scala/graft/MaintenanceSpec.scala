@@ -1,10 +1,13 @@
 package graft
 
 import graft.operators.Maintenance
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
 
 class MaintenanceSpec extends AnyFunSuite {
 
@@ -12,6 +15,43 @@ class MaintenanceSpec extends AnyFunSuite {
     .builder("graft-maint-test", "local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .getOrCreate()
+
+  test("labeledJobs labels its own jobs and restores the caller's label on return and on throw") {
+    val sc = spark.sparkContext
+    val prefix = "maintenance-spec: "
+    val marker = prefix + "listener drained"
+    val labels = new ConcurrentLinkedQueue[String]()
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).foreach { d =>
+          if (d == marker) markerSeen.countDown()
+          else if (d.startsWith(prefix)) labels.add(d.stripPrefix(prefix))
+        }
+    }
+    def job(): Unit = sc.parallelize(Seq(1), 1).count()
+    def current: String = sc.getLocalProperty("spark.job.description")
+    sc.addSparkListener(listener)
+    sc.setJobDescription(prefix + "outer")
+    try {
+      Maintenance.labeledJobs(spark, prefix + "inner ok")(job())
+      assert(current == prefix + "outer", "a nested block that returns must restore the outer label")
+      intercept[IllegalStateException] {
+        Maintenance.labeledJobs(spark, prefix + "inner throws") { job(); throw new IllegalStateException("boom") }
+      }
+      assert(current == prefix + "outer", "a nested block that throws must restore the outer label")
+      job()
+      // Listener events arrive in order: once the marker job's start is
+      // seen, every earlier job's start has been seen too.
+      sc.setJobDescription(marker)
+      job()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "listener events not delivered")
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+    assert(labels.asScala.toSeq == Seq("inner ok", "inner throws", "outer"))
+  }
 
   test("compact rewrites many small files into the size-targeted count, preserving data") {
     val dir = Files.createTempDirectory("graft-compact").toString + "/docs"

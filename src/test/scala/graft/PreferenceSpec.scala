@@ -630,6 +630,23 @@ class PreferenceSpec extends AnyFunSuite {
     assert(board() == Map(("p0", "p1") -> ((0L, 1L, 1L))), "drained restart adds nothing")
   }
 
+  test("pref_stream and win_stream over an empty --raw dir drain nothing and report 0") {
+    for ((verb, reported) <- Seq(
+        "pref_stream" -> "now holds 0 pair(s)",
+        "win_stream" -> "now boards 0 policy pair(s)")) {
+      val root = java.nio.file.Files.createTempDirectory(s"graft-$verb-empty").toString
+      new java.io.File(s"$root/raw").mkdirs()
+      val buf = new java.io.ByteArrayOutputStream()
+      Console.withOut(buf)(graft.pipeline.PipelineRunner.run(
+        Array("--maintenance", verb,
+          "--raw", s"$root/raw", "--state", s"$root/state",
+          "--checkpoint", s"$root/ckpt"),
+        spark))
+      assert(buf.toString("UTF-8").contains(reported), s"$verb printed: $buf")
+      assert(!new java.io.File(s"$root/state").exists(), s"$verb created a state from no file")
+    }
+  }
+
   test("sft_release: the shipped mask selects EXACTLY the assistant tokens, every conversation") {
     val root = java.nio.file.Files.createTempDirectory("graft-sft-release").toString
     val turns = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(

@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * stream skeletons and flag parsing in `src/main`: every overlap goes
   * through `graft.operators.Overlap`, every AvailableNow stream starts
   * in `StreamingPipeline.drain`, every command-line flag is parsed
-  * by `graft.pipeline.Cli`, and every session is built on
-  * `GraftSession`'s production conf.
+  * by `graft.pipeline.Cli`, every session is built on
+  * `GraftSession`'s production conf, and every CLI read schema is
+  * declared in `graft.schemas.Schemas`.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -72,5 +73,12 @@ class SourceGuardSpec extends AnyFunSuite {
     val allowed = Seq("graft/Bench.scala", "graft/GraftSession.scala", "graft/Verify.scala")
     assert(callers.contains("graft/GraftSession.scala"), s"the pattern no longer finds GraftSession's builder: $callers")
     assert(callers.forall(allowed.contains), s"build sessions with graft.GraftSession instead:\n${callers.diff(allowed).mkString("\n")}")
+  }
+
+  test("PipelineRunner's verbs declare no inline StructType; read schemas live in Schemas") {
+    val pipeline = "graft/pipeline/Pipeline.scala"
+    val text = sources.toMap.apply(pipeline)
+    val hits = "\\bStructType\\s*\\(".r.findAllMatchIn(text).map(m => text.take(m.start).count(_ == '\n') + 1).toSeq
+    assert(hits.isEmpty, s"declare the schema in graft.schemas.Schemas: $pipeline lines ${hits.mkString(", ")}")
   }
 }
