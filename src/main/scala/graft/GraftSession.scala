@@ -11,6 +11,19 @@ import org.apache.spark.sql.SparkSession
   * reference `spark-jobs/sparkify_etl.py:146-149`), shuffle
   * partitions sized to the local core count rather than the 200 default,
   * and file-listing jobs capped at the task slots so they run in one wave.
+  *
+  * `file://` goes through [[graft.sources.ForklessLocalFileSystem]]
+  * (`FileSystem` API) and [[graft.sources.ForklessLocalFs]]
+  * (`FileContext`). Without libhadoop the stock local FS forks
+  * `/bin/chmod` for every file, `.crc` sidecar and directory it
+  * creates, and `readlink` for every `FileContext.rename`; these set
+  * the same modes in-process and keep the `.crc` checksums. Without
+  * these two settings `file://` resolves to Hive's
+  * `ProxyLocalFileSystem` (hive-exec's ServiceLoader entry), a filter
+  * over the same checksummed `LocalFileSystem`. `gs://` is unaffected.
+  * Hadoop caches one `FileSystem` per scheme and user, not per conf:
+  * a `file://` instance created in this JVM before the first session
+  * (from a plain `new Configuration()`) stays the stock one.
   */
 object GraftSession {
 
@@ -59,6 +72,8 @@ object GraftSession {
       // S11 parity: fewer GCS metadata ops on commit when running
       // against gs:// paths (no-op on local FS).
       .config("spark.hadoop.fs.gs.implicit.dir.repair.enable", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.ForklessLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.ForklessLocalFs].getName)
     if (master.nonEmpty) b.master(master) else b
   }
 

@@ -150,6 +150,8 @@ object Pipeline {
     * Hadoop FS rename — a same-filesystem metadata move, no byte copy —
     * so the next scheduler tick doesn't re-feed a poisoned input.
     * Returns true on success, false when the file was quarantined.
+    * Throws when the move itself fails (the file is still in `raw/`),
+    * with the run's own failure attached as suppressed.
     */
   def runIncrementalQuarantined(
       spark: SparkSession,
@@ -177,8 +179,14 @@ object Pipeline {
         val src = new org.apache.hadoop.fs.Path(rawPath)
         val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val failedDir = new org.apache.hadoop.fs.Path(s"${bucket}failed/")
-        fs.mkdirs(failedDir)
-        fs.rename(src, new org.apache.hadoop.fs.Path(failedDir, rawFileName))
+        try {
+          if (!fs.mkdirs(failedDir)) throw new java.io.IOException(s"mkdirs failed: $failedDir")
+          graft.operators.Maintenance.renameOrFail(fs, src, new org.apache.hadoop.fs.Path(failedDir, rawFileName))
+        } catch {
+          case q: Throwable =>
+            q.addSuppressed(e)
+            throw q
+        }
         System.err.println(s"[pipeline] quarantined $rawFileName -> failed/: ${e.getMessage}")
         false
     }

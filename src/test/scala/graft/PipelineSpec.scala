@@ -252,6 +252,26 @@ class PipelineSpec extends AnyFunSuite {
     assert(Files.exists(java.nio.file.Paths.get(root, "failed", "bad.json")), "raw file moved to failed/")
   }
 
+  test("quarantine throws, naming both paths, when the FS refuses the rename") {
+    val root = Files.createTempDirectory("graft-quar-refused").toString + "/"
+    val rawDir = java.nio.file.Paths.get(root, "raw")
+    Files.createDirectories(rawDir)
+    Files.writeString(rawDir.resolve("bad.json"), "{this is not json at all")
+    val hc = spark.sparkContext.hadoopConfiguration
+    val impl = hc.get("fs.file.impl")
+    hc.set("fs.file.impl", classOf[RenameRefusingFs].getName)
+    hc.setBoolean("fs.file.impl.disable.cache", true)
+    val e =
+      try intercept[java.io.IOException](Pipeline.runIncrementalQuarantined(spark, root, "bad.json", failFast = true))
+      finally {
+        if (impl == null) hc.unset("fs.file.impl") else hc.set("fs.file.impl", impl)
+        hc.unset("fs.file.impl.disable.cache")
+      }
+    assert(e.getMessage.contains(s"${root}raw/bad.json") && e.getMessage.contains(s"${root}failed/bad.json"), e.getMessage)
+    assert(e.getSuppressed.nonEmpty, "the read failure rides along as suppressed")
+    assert(Files.exists(rawDir.resolve("bad.json")), "the file the FS refused to move is still in raw/")
+  }
+
   test("incremental success leaves the raw file in raw/ (no quarantine)") {
     val root = Files.createTempDirectory("graft-quar-ok").toString + "/"
     val rawDir = java.nio.file.Paths.get(root, "raw")
@@ -644,4 +664,11 @@ class PipelineSpec extends AnyFunSuite {
       "--out", s"file:$base/pref"), spark)
     assert(manifest(s"$base/pref/_pref.json").contains(""""pairs_kept": 1"""))
   }
+}
+
+/** The session's local FS, except that `rename` returns false, as HDFS
+  * or GCS do when the target already exists.
+  */
+class RenameRefusingFs extends org.apache.hadoop.fs.FilterFileSystem(new graft.sources.ForklessLocalFileSystem) {
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean = false
 }
