@@ -27,6 +27,7 @@ object Bench {
       // rep starts only after the previous rep's dead shuffles are
       // actually gone, not merely enqueued.
       .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
+      .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Optional durable-feature mode (SPARK_GRAFT_FEATURES_DIR): write the

@@ -24,6 +24,16 @@ import org.apache.spark.sql.SparkSession
   * Hadoop caches one `FileSystem` per scheme and user, not per conf:
   * a `file://` instance created in this JVM before the first session
   * (from a plain `new Configuration()`) stays the stock one.
+  *
+  * Every session it builds carries [[graft.functions.GraftExtensions]]:
+  * the native `graft_*` functions and the range-join optimizer rule
+  * (a no-op until `spark.graft.rangeJoin.bucketWidth` is set). The
+  * sessions derived from it (`newSession()`, and the `cloneSession()`
+  * each `foreachBatch` micro-batch runs on) inherit them, so no
+  * operator registers anything. Caveat: `getOrCreate` returns an
+  * already-active session unchanged, with the extensions it was built
+  * with — a session built outside this builder needs
+  * `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 object GraftSession {
 
@@ -74,13 +84,17 @@ object GraftSession {
       .config("spark.hadoop.fs.gs.implicit.dir.repair.enable", "false")
       .config("spark.hadoop.fs.file.impl", classOf[graft.sources.ForklessLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.ForklessLocalFs].getName)
+      .withExtensions(new graft.functions.GraftExtensions)
     if (master.nonEmpty) b.master(master) else b
   }
 
-  /** Session for local runs and tests. */
+  /** Session for the command-line entry points. The master spark-submit
+    * passes (`spark.master`) wins; `local[SPARK_GRAFT_CPUS]` is the
+    * fallback for a plain `java`/`sbt run` launch.
+    */
   def local(appName: String = "graft"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = builder(appName, s"local[$cpus]").getOrCreate()
+    val s = builder(appName, sys.props.getOrElse("spark.master", s"local[$cpus]")).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,12 +14,7 @@ object Verify {
       require(unknown.isEmpty, s"filter names unknown queries: ${unknown.mkString(",")}")
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-verify", s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Optional durable-feature mode: materialize the shared text-feature
     // tables (shingles, token instances) to parquet under the given dir

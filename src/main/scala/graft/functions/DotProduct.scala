@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.functions.call_function
 
 /** Native codegen'd dot product over two `array<double>` columns.
@@ -80,86 +80,11 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
   ): Expression = copy(left = newLeft, right = newRight)
 }
 
-/** Registration + Column-API surface for the engine's native functions. */
+/** Column-API surface for the engine's native functions. */
 object GraftFunctions {
 
-  val dotInfo = new ExpressionInfo(classOf[DotProduct].getName, "graft_dot")
-
-  /** Register into an existing session (local/test path). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      exprs => DotProduct(exprs(0), exprs(1)),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash",
-      exprs =>
-        MinHashSignature(
-          exprs(0),
-          exprs(1).eval().asInstanceOf[Number].intValue()
-        ),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash",
-      exprs =>
-        SimHash(
-          exprs(0),
-          exprs(1).eval().asInstanceOf[Number].intValue()
-        ),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_quantize",
-      exprs => Quantize(exprs(0)),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains",
-      exprs => BloomContains(exprs(0), exprs(1).eval().asInstanceOf[Array[Byte]]),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_l2",
-      exprs => SquaredL2(exprs(0), exprs(1)),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
-      exprs => ShingleHashes(exprs(0)),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles_pos",
-      exprs => ShingleHashes(exprs(0), positional = true),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_tdigest",
-      buildTDigest,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_argmax_cos",
-      ArgmaxCosine.build,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bpe_apply",
-      BpeApplyMerges.build,
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bpe_count",
-      BpeCountTokens.build,
-      "built-in"
-    )
-  }
-
-  /** `graft_tdigest(value, compression, p1, p2, …)` builder shared by
-    * the temp-function and extensions registration paths. SQL numeric
-    * literals arrive as Decimal, Column-API lits as primitives —
+  /** `graft_tdigest(value, compression, p1, p2, …)` builder. SQL
+    * numeric literals arrive as Decimal, Column-API lits as primitives —
     * accept both.
     */
   private[functions] val buildTDigest: Seq[Expression] => Expression = { exprs =>
@@ -191,8 +116,8 @@ object GraftFunctions {
     )
   }
 
-  /** Column-API forms; require [[register]] (or the extensions class)
-    * to have run against the session first.
+  /** Column-API forms; they resolve in any session built with
+    * [[GraftExtensions]], which [[graft.GraftSession.builder]] installs.
     */
   def graft_dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
@@ -279,99 +204,42 @@ object GraftFunctions {
   }
 }
 
-/** SparkSessionExtensions installer for cluster deployments:
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
+/** Installs the native functions and the [[graft.plans.RangeJoinRewrite]]
+  * optimizer rule into a session. [[graft.GraftSession.builder]] applies
+  * it to every session it builds; `spark.sql.extensions=graft.functions.
+  * GraftExtensions` is needed only for sessions built outside it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction(
-      (
-        FunctionIdentifier("graft_dot"),
-        GraftFunctions.dotInfo,
-        (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("graft_minhash"),
-        new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash"),
-        (exprs: Seq[Expression]) =>
-          MinHashSignature(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue())
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("graft_simhash"),
-        new ExpressionInfo(classOf[SimHash].getName, "graft_simhash"),
-        (exprs: Seq[Expression]) =>
-          SimHash(exprs(0), exprs(1).eval().asInstanceOf[Number].intValue())
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("graft_quantize"),
-        new ExpressionInfo(classOf[Quantize].getName, "graft_quantize"),
-        (exprs: Seq[Expression]) => Quantize(exprs(0))
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("graft_l2"),
-        new ExpressionInfo(classOf[SquaredL2].getName, "graft_l2"),
-        (exprs: Seq[Expression]) => SquaredL2(exprs(0), exprs(1))
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("graft_bloom_contains"),
-        new ExpressionInfo(classOf[BloomContains].getName, "graft_bloom_contains"),
-        (exprs: Seq[Expression]) =>
-          BloomContains(exprs(0), exprs(1).eval().asInstanceOf[Array[Byte]])
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("graft_shingles"),
-        new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingles"),
-        (exprs: Seq[Expression]) => ShingleHashes(exprs(0))
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("graft_shingles_pos"),
-        new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingles_pos"),
-        (exprs: Seq[Expression]) => ShingleHashes(exprs(0), positional = true)
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("graft_tdigest"),
-        new ExpressionInfo(classOf[TDigestAgg].getName, "graft_tdigest"),
-        GraftFunctions.buildTDigest
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("graft_argmax_cos"),
-        new ExpressionInfo(classOf[ArgmaxCosine].getName, "graft_argmax_cos"),
-        ArgmaxCosine.build
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("graft_bpe_apply"),
-        new ExpressionInfo(classOf[BpeApplyMerges].getName, "graft_bpe_apply"),
-        BpeApplyMerges.build
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("graft_bpe_count"),
-        new ExpressionInfo(classOf[BpeCountTokens].getName, "graft_bpe_count"),
-        BpeCountTokens.build
-      )
-    )
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
     // Gated on spark.graft.rangeJoin.bucketWidth — a no-op until set.
     e.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
   }
+}
+
+object GraftExtensions {
+
+  private def intArg(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
+
+  /** One row per native function: SQL name, expression class, builder. */
+  private val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", classOf[DotProduct], es => DotProduct(es(0), es(1))),
+    ("graft_minhash", classOf[MinHashSignature], es => MinHashSignature(es(0), intArg(es(1)))),
+    ("graft_simhash", classOf[SimHash], es => SimHash(es(0), intArg(es(1)))),
+    ("graft_quantize", classOf[Quantize], es => Quantize(es(0))),
+    ("graft_l2", classOf[SquaredL2], es => SquaredL2(es(0), es(1))),
+    (
+      "graft_bloom_contains",
+      classOf[BloomContains],
+      es => BloomContains(es(0), es(1).eval().asInstanceOf[Array[Byte]])
+    ),
+    ("graft_shingles", classOf[ShingleHashes], es => ShingleHashes(es(0))),
+    ("graft_shingles_pos", classOf[ShingleHashes], es => ShingleHashes(es(0), positional = true)),
+    ("graft_tdigest", classOf[TDigestAgg], GraftFunctions.buildTDigest),
+    ("graft_argmax_cos", classOf[ArgmaxCosine], ArgmaxCosine.build),
+    ("graft_bpe_apply", classOf[BpeApplyMerges], BpeApplyMerges.build),
+    ("graft_bpe_count", classOf[BpeCountTokens], BpeCountTokens.build)
+  )
 }

@@ -344,8 +344,8 @@ object Bpe {
     * loop touches only pairs present in the word — O(len · log len)
     * per word, merge-count-flat — and is spec-proved bit-identical to
     * the fold (BpeSpec, fixed + random corpora at 8 and ~1k merges).
-    * Requires [[graft.functions.GraftFunctions.register]] on the
-    * session (every DataFrame-level entry point here does it).
+    * Resolves in any [[graft.GraftSession]] session, which installs
+    * the native functions.
     */
   def applyMerges(sym: Column, merges: Seq[(String, String)]): Column =
     if (merges.isEmpty) sym
@@ -501,7 +501,6 @@ object Bpe {
       nShards: Int
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val window = budget * nPacks
     // Pinned: the segmented vocabulary feeds BOTH the weights agg and
     // the final join — unpinned, each use recomputes the corpus-sized
@@ -562,8 +561,8 @@ object Bpe {
     * the zero-shuffle map wins at any corpus size; counters that
     * don't need order should keep using [[segmentCounts]].
     *
-    * Requires [[graft.functions.GraftFunctions.register]] on the
-    * session (DataFrame-level callers do it).
+    * Resolves in any [[graft.GraftSession]] session, which installs
+    * the native functions.
     */
   def modelTokens(textCol: Column, merges: Seq[(String, String)]): Column =
     flatten(
@@ -584,9 +583,9 @@ object Bpe {
     * route would explode the rendered corpus to its token stream and
     * shuffle it twice to regroup — two rendered-corpus-sized shuffles
     * to save CPU the per-word native apply (O(len·log len),
-    * merge-count-flat) spends locally. Requires
-    * [[graft.functions.GraftFunctions.register]] on the session
-    * (DataFrame-level callers do it).
+    * merge-count-flat) spends locally. Resolves in any
+    * [[graft.GraftSession]] session, which installs the native
+    * functions.
     */
   def modelTokenCount(textCol: Column, merges: Seq[(String, String)]): Column =
     if (merges.isEmpty)
@@ -627,7 +626,6 @@ object Bpe {
       textCols: Seq[String],
       merges: Seq[(String, String)]
   ): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     textCols.foldLeft(df)((acc, c) =>
       acc.withColumn(s"${c}_toks", modelTokenCount(col(c), merges)))
   }
@@ -651,7 +649,6 @@ object Bpe {
     * make [[packSlices]] output a trainer-ready integer sequence.
     */
   def symbols(docs: DataFrame, textCol: String, merges: Seq[(String, String)]): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     wordHistogram(docs, textCol)
       .select(explode(symsOf(applyMerges(col("sym"), merges))).as("token"))
       .distinct()
@@ -681,7 +678,6 @@ object Bpe {
       textCol: String,
       merges: Seq[(String, String)]
   ): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(
         col(idCol),
         size(filter(split(col(textCol), "\\s+"), w => w =!= lit(""))).cast("long").as("__nt"),
@@ -705,7 +701,6 @@ object Bpe {
       textCol: String,
       merges: Seq[(String, String)]
   ): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val vocab = wordHistogram(df, textCol)
       .select(col("word"), size(symsOf(applyMerges(col("sym"), merges))).as("n_sym"))
     df.select(col(idCol), explode(split(col(textCol), "\\s+")).as("word"))

@@ -59,7 +59,6 @@ object Chunking {
       window: Long,
       stride: Long
   ): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     chunksOf(
       docs.select(col(idCol), Bpe.modelTokens(col(textCol), merges).as("__toks")),
       idCol,

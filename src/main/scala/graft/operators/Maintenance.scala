@@ -167,11 +167,6 @@ object Maintenance {
           // incl. null text). Sizing comes from `indexSizeHint` when the
           // ingest loop maintains a row count (at real scale it should —
           // the fallback count() is an extra 1-column index scan).
-          graft.functions.GraftFunctions.register(spark)
-          // And on the batch's own session: inside foreachBatch the
-          // batch belongs to a per-stream clone whose registry snapshot
-          // may predate this call on the outer session.
-          graft.functions.GraftFunctions.register(batch.sparkSession)
           val n = indexSizeHint.getOrElse(index.count())
           val bf = index.stat.bloomFilter("__h", math.max(n, 1024L), bloomFpp)
           // NULL-safe split: a null text gives a null hash, the probe
@@ -505,12 +500,6 @@ object Maintenance {
       maxStateSegments: Int = 8,
       checkDocIdReuse: Boolean = false
   ): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    // And on the batch's own session: inside foreachBatch the batch
-    // DataFrame belongs to a per-stream CLONE whose function-registry
-    // snapshot may predate this call on the outer session — analysis
-    // of the shingle expression runs against the clone.
-    graft.functions.GraftFunctions.register(batch.sparkSession)
     val fsPath = new HPath(statePath)
     val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Single-writer fence around the WHOLE ingest (heal + probe +

@@ -26,7 +26,6 @@ object NearDupIndex {
 
   /** (doc_id, sig) from raw documents (id + text columns). */
   def signatures(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val sh = graft.queries.TextQueries
       .withShingles(docs.select(col(idCol).as("doc_id"), col(textCol).as("text")))
     sh.select(

@@ -862,7 +862,6 @@ object Dedup {
     * the pinned copy instead of re-deriving it per micro-batch.
     */
   def evalShingles(evalDocs: DataFrame, textCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(evalDocs.sparkSession)
     val toks = split(col(textCol), "\\s+")
     evalDocs
       .filter(size(toks) >= 3)
@@ -879,7 +878,6 @@ object Dedup {
       textCol: String,
       threshold: Double = 0.5
   ): DataFrame = {
-    graft.functions.GraftFunctions.register(train.sparkSession)
     val toks = split(col(textCol), "\\s+")
     train
       .filter(size(toks) >= 3)
@@ -918,7 +916,6 @@ object Dedup {
       textCols: Seq[String],
       threshold: Double = 0.5
   ): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // __member keys the verdict agg: two members of one pair with
     // equal shingle-set sizes must NOT pool their overlaps (a merged
     // group would inflate containment past what either member earns)
@@ -967,7 +964,6 @@ object Dedup {
     * table skips the re-derivation (the q133 query path).
     */
   def shingleSets(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val toks = split(col(textCol), "\\s+")
     docs
       .filter(size(toks) >= 3)
@@ -1070,7 +1066,6 @@ object Dedup {
       nHashes > 0 && bandRows > 0 && nHashes % bandRows == 0,
       s"nHashes ($nHashes) must be a positive multiple of bandRows ($bandRows)"
     )
-    graft.functions.GraftFunctions.register(trainSh.sparkSession)
     def banded(sh: DataFrame, outId: String, keepSets: Boolean): DataFrame = {
       val base = sh
         .select(col(idCol).as(outId), col("sh_ints"))
@@ -1174,7 +1169,6 @@ object Dedup {
       embCol: String,
       threshold: Double = 0.5
   ): DataFrame => DataFrame = {
-    graft.functions.GraftFunctions.register(evalVecs.sparkSession)
     def normed(df: DataFrame, outId: String): DataFrame = {
       val emb = col(embCol).cast("array<double>")
       df.select(col(idCol).as(outId), emb.as("emb"))

@@ -115,11 +115,6 @@ object VectorIndex {
       isCentroid: Column,
       maxOverMedian: Option[Double] = None
   ): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    // Also on the input's own session: inside foreachBatch the batch
-    // DataFrame belongs to a per-stream CLONE whose function registry
-    // snapshot may predate this call on the outer session.
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     val v = withNorm(vectors.select(col("vec_id"), col("emb")))
     val cent = v
       .filter(isCentroid)
@@ -181,7 +176,6 @@ object VectorIndex {
       maxOverMedian: Double
   ): Int = {
     require(maxOverMedian >= 1.0, s"maxOverMedian must be >= 1, got $maxOverMedian")
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val leaseFs = new org.apache.hadoop.fs.Path(indexPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -300,8 +294,6 @@ object VectorIndex {
     * anti-joined away, so a replayed batch cannot double-append.
     */
   def append(spark: SparkSession, batch: DataFrame, indexPath: String): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    graft.functions.GraftFunctions.register(batch.sparkSession) // foreachBatch clone
     val cent = spark.read.parquet(s"$indexPath/centroids")
     val fresh = withNorm(batch.select(col("vec_id"), col("emb")))
     appendAssigned(spark, assignTo(fresh, cent), indexPath)
@@ -383,8 +375,6 @@ object VectorIndex {
       iters: Int = 2
   ): Seq[Long] = {
     require(k > 0 && iters > 0, "k and iters must be positive")
-    graft.functions.GraftFunctions.register(spark)
-    graft.functions.GraftFunctions.register(vectors.sparkSession) // foreachBatch clone
     import spark.implicits._
     val scale = 1048576L // 2^20: float 24-bit mantissa x 2^20 stays exact
     val e = vectors.select(col("vec_id"), col("emb"))
@@ -456,8 +446,6 @@ object VectorIndex {
     * blocking primitive ingest-time dedup shares with [[append]].
     */
   def assignBatch(spark: SparkSession, batch: DataFrame, indexPath: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    graft.functions.GraftFunctions.register(batch.sparkSession) // foreachBatch clone
     val v = withNorm(batch.select(col("vec_id"), col("emb")))
     assignTo(v, spark.read.parquet(s"$indexPath/centroids"))
   }
@@ -495,8 +483,6 @@ object VectorIndex {
       indexPath: String,
       minCosine: Double
   ): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    graft.functions.GraftFunctions.register(assigned.sparkSession) // foreachBatch clone
     // Bounded collect: distinct probed clusters <= K centroids.
     val probed = assigned.select("cluster").distinct().collect().map(_.getLong(0))
     val asgnRaw = spark.read.parquet(s"$indexPath/assignments")
@@ -550,8 +536,6 @@ object VectorIndex {
       nProbe: Int = 1
   ): DataFrame = {
     require(topK > 0 && nProbe > 0, "topK and nProbe must be positive")
-    graft.functions.GraftFunctions.register(spark)
-    graft.functions.GraftFunctions.register(queries.sparkSession) // foreachBatch clone
     val cent = spark.read.parquet(s"$indexPath/centroids")
     val q = withNorm(queries.select(col("vec_id").as("query_id"), col("emb")))
       .select(col("query_id"), col("emb").as("q_emb"), col("nrm").as("q_nrm"))

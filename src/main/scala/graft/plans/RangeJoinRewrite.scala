@@ -43,13 +43,12 @@ import org.apache.spark.sql.types.LongType
   *     seconds/days);
   *   - value references only one side, both bounds only the other.
   *
-  * Enabled by setting `spark.graft.rangeJoin.bucketWidth` (positive
-  * long, in value units) and registering the rule — locally via
-  * `spark.experimental.extraOptimizations`, on a cluster via
-  * `spark.sql.extensions=graft.functions.GraftExtensions`. Width
-  * choice: on the order of the typical interval; replication is
-  * `(hi−lo)/W + 1` per interval row. The rule is idempotent (the
-  * rewritten join has an equi conjunct and no longer matches).
+  * Installed in every session by [[graft.functions.GraftExtensions]]
+  * and a no-op until `spark.graft.rangeJoin.bucketWidth` (positive
+  * long, in value units) is set. Width choice: on the order of the
+  * typical interval; replication is `(hi−lo)/W + 1` per interval
+  * row. The rule is idempotent (the rewritten join has an equi
+  * conjunct and no longer matches).
   */
 object RangeJoinRewrite extends Rule[LogicalPlan] {
 

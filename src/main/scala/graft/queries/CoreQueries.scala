@@ -906,7 +906,6 @@ object CoreQueries {
     * matter.
     */
   def q88SketchQuantiles(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val li = t(spark, dir, "lineitem")
       .select(col("l_returnflag"), col("l_quantity").cast("double").as("v"))
     val hist = li.groupBy(col("l_returnflag"), col("v")).agg(count(lit(1)).as("cnt"))

@@ -148,7 +148,6 @@ object TextQueries {
     // form had to dodge with zip_with-over-slices. The cheap token-count
     // pre-filter replaces the empty-shingles guard (tokens>=3 ⟺
     // shingles non-empty).
-    graft.functions.GraftFunctions.register(d.sparkSession)
     val toks = tokens(col("text"))
     d.filter(size(toks) >= 3)
       .withColumn("sh_ints", graft.functions.GraftFunctions.graft_shingles(toks))
@@ -442,7 +441,6 @@ object TextQueries {
     // Both band sides and both verification joins read the shared
     // materialized shingle table — the md5+shingle chain runs once per
     // session, not four times per query.
-    graft.functions.GraftFunctions.register(spark)
     val sh = shingleTable(spark, dir).select(col("doc_id"), col("sh_ints"))
     // graft_minhash == the HOF form
     //   transform(sequence(0,15), i -> array_min(transform(sh_ints,
@@ -1309,7 +1307,6 @@ object TextQueries {
     * queries bucket on a prefix at scale.
     */
   def q23SimHash(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val d = docs(spark, dir)
     // Summing ±1 over every token INSTANCE equals count-weighted votes
     // over distinct tokens — no frequency map needed. The vote loop is
@@ -1478,7 +1475,6 @@ object TextQueries {
   }
 
   private[graft] def dupPositionsDf(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     dupPositionsOf(docs(spark, dir))
   }
 

@@ -29,7 +29,6 @@ object VectorQueries {
 
   /** Embeddings with the L2 norm precomputed per vector. */
   private def emb(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     spark.read
       .parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("emb"))
@@ -454,7 +453,6 @@ object VectorQueries {
     * smaller cent_id), and candidates exclude only the query itself.
     */
   def q96IvfIndexProbe(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val vectors = spark.read
       .parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
@@ -495,7 +493,6 @@ object VectorQueries {
     * scratch dirs are deleted after materialization.
     */
   def q97SemanticDedupIngest(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val vectors = spark.read
       .parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))

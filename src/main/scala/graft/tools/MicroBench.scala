@@ -10,7 +10,6 @@ object MicroBench {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = graft.GraftSession.local("graft-microbench")
-    graft.functions.GraftFunctions.register(spark)
 
     val e = spark.read
       .parquet(s"$dir/embeddings.parquet")

@@ -24,7 +24,6 @@ object VectorStress {
     val Array(src, out, rest @ _*) = args
     val reps = rest.headOption.map(_.toInt).getOrElse(50)
     val spark = graft.GraftSession.local("graft-vector-stress")
-    graft.functions.GraftFunctions.register(spark)
     spark.sparkContext.setLogLevel("WARN")
     def time[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime()

@@ -21,7 +21,6 @@ class BloomSpec extends AnyFunSuite {
 
   test("no false negatives on string keys; absent keys mostly rejected") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val keys = (0 until 2000).map(i => s"key_$i")
     val df = keys.toDF("k")
     val bf = df.stat.bloomFilter("k", 2000, 0.01)
@@ -35,7 +34,6 @@ class BloomSpec extends AnyFunSuite {
 
   test("no false negatives on long keys") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = (0L until 5000L).toDF("k")
     val bf = df.stat.bloomFilter("k", 5000, 0.01)
     val misses = df

@@ -296,7 +296,6 @@ class BpeSpec extends AnyFunSuite {
     * fold it replaces, over a corpus' char-level symbol strings.
     */
   private def assertApplyEquiv(words: Seq[String], merges: Seq[(String, String)]): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     val df = words
       .map(w => (w, w.toVector.map(_.toString).mkString("|", "||", "|")))
       .toDF("word", "sym")
@@ -348,7 +347,6 @@ class BpeSpec extends AnyFunSuite {
     // survivable depth), and the full 1k table against the driver
     // reference fold, which carries the same per-pass semantics.
     assertApplyEquiv(ws.distinct.take(40), merges.take(256))
-    graft.functions.GraftFunctions.register(spark)
     val sample = ws.distinct.take(80)
     val sdf = sample
       .map(w => (w, w.toVector.map(_.toString).mkString("|", "||", "|")))

@@ -39,7 +39,6 @@ class ClusterGuardSpec extends AnyFunSuite {
     */
   private def corpus: DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     def vec(theta: Double): Seq[Double] =
       Seq(math.cos(theta), math.sin(theta), 0.0, 0.0)
     def theta(i: Long): Double = 0.15 * ((i * 37) % 997) / 997.0
@@ -97,7 +96,6 @@ class ClusterGuardSpec extends AnyFunSuite {
 
   test("total embedding collapse: identical vectors reduce to one representative, not one n² block") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // The adversarial case the guard exists for: a mega-cluster whose
     // vectors are IDENTICAL. Cosine to every sub-seed is 1.0, every
     // tie-break picks the same seed — without the exact-dup pre-pass the

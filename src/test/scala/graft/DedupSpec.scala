@@ -282,7 +282,6 @@ class DedupSpec extends AnyFunSuite {
 
   test("decontamSemantic equals the broadcast-cross-join + max_by reference shape") {
     import org.apache.spark.sql.functions.{broadcast, max_by, sqrt, struct}
-    graft.functions.GraftFunctions.register(spark)
     val e = spark.read
       .parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))

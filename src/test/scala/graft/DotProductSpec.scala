@@ -14,7 +14,6 @@ class DotProductSpec extends AnyFunSuite {
 
   test("graft_dot matches the HOF fold bit-for-bit (incl codegen path)") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(
       (Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)),
       (Seq(0.1, -0.2, 0.3), Seq(-0.7, 0.11, 1e-3)),
@@ -37,7 +36,6 @@ class DotProductSpec extends AnyFunSuite {
 
   test("graft_l2 matches the HOF squared-diff fold bit-for-bit") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val rows = (0 until 50).map(_ => (Seq.fill(64)(rnd.nextDouble() - 0.5), Seq.fill(64)(rnd.nextDouble() - 0.5))) :+
       ((Seq.empty[Double], Seq.empty[Double]))
@@ -62,7 +60,6 @@ class DotProductSpec extends AnyFunSuite {
   }
 
   test("null array propagates null") {
-    GraftFunctions.register(spark)
     val row = spark
       .sql("SELECT graft_dot(CAST(NULL AS ARRAY<DOUBLE>), array(1.0d)) AS d")
       .collect()(0)

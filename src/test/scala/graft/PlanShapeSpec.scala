@@ -457,7 +457,6 @@ class PlanShapeSpec extends AnyFunSuite {
     // wide rows. The only windows allowed are the seed-rank row_number
     // (over the pruned O(n/cap) candidate pool) and the exact-dup
     // rep-min (one corpus shuffle, unordered frame).
-    graft.functions.GraftFunctions.register(spark)
     val e = spark.read
       .parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))

@@ -336,7 +336,6 @@ class PropertySpec extends AnyFunSuite {
     // (cap = MaxValue), including the single-doc mega-repeat case where
     // a hot span is NOT a cross-doc duplicate.
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val tokGen = Gen.oneOf("a", "b", "c", "d", "e")
     val docGen = for {
       n <- Gen.choose(0, 20)
@@ -826,7 +825,6 @@ class PropertySpec extends AnyFunSuite {
           out.result()
         }
         .mkString("|", "||", "|")
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(20260814L)
     for (trial <- 0 until 8) {

@@ -14,7 +14,6 @@ class SimHashSpec extends AnyFunSuite {
 
   test("graft_simhash equals the interpreted HOF vote chain exactly") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(
       Seq(1L, 2L, 3L, 268435455L),          // boundary 28-bit value
       Seq(0L),                              // all-zero hash: all votes -1
@@ -52,7 +51,6 @@ class SimHashSpec extends AnyFunSuite {
 
   test("graft_quantize equals the HOF range-quantize chain exactly") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(
       Seq(0.0, 0.5, 1.0, -3.25, 7.5),
       Seq(2.5, 2.5, 2.5), // constant vector: span 0 → zero checksum/err
@@ -96,7 +94,6 @@ class SimHashSpec extends AnyFunSuite {
   }
 
   test("all three native functions resolve through the session registry") {
-    GraftFunctions.register(spark)
     val row = spark
       .sql(
         """SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d,

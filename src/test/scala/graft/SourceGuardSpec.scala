@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * through `graft.operators.Overlap`, every AvailableNow stream starts
   * in `StreamingPipeline.drain`, every command-line flag is parsed
   * by `graft.pipeline.Cli`, every session is built on
-  * `GraftSession`'s production conf, and every CLI read schema is
+  * `GraftSession`'s production conf, every native function is
+  * installed by `GraftExtensions`, and every CLI read schema is
   * declared in `graft.schemas.Schemas`.
   */
 class SourceGuardSpec extends AnyFunSuite {
@@ -65,14 +66,26 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"declare flags on the verb and read them through Cli.Args:\n${hits.mkString("\n")}")
   }
 
-  test("SparkSession.builder() is called only by GraftSession, Bench and Verify") {
+  test("SparkSession.builder() is called only by GraftSession and Bench") {
     val builder = "SparkSession\\s*\\.\\s*builder\\b".r
     val callers = sources.collect { case (file, text) if builder.findFirstIn(text).isDefined => file }
-    // Bench's session is the benchmark harness and Verify's is the
-    // oracle dump; every other session starts from GraftSession.builder.
-    val allowed = Seq("graft/Bench.scala", "graft/GraftSession.scala", "graft/Verify.scala")
+    // Bench's session is the benchmark harness; every other session
+    // starts from GraftSession.builder.
+    val allowed = Seq("graft/Bench.scala", "graft/GraftSession.scala")
     assert(callers.contains("graft/GraftSession.scala"), s"the pattern no longer finds GraftSession's builder: $callers")
     assert(callers.forall(allowed.contains), s"build sessions with graft.GraftSession instead:\n${callers.diff(allowed).mkString("\n")}")
+  }
+
+  test("native functions are installed only by GraftExtensions, never registered per call") {
+    val banned = Seq(
+      "GraftFunctions.register" -> "GraftFunctions\\s*\\.\\s*register\\b".r,
+      "createOrReplaceTempFunction" -> "\\bcreateOrReplaceTempFunction\\b".r
+    )
+    val hits = for {
+      (file, text) <- sources
+      (name, pat) <- banned if pat.findFirstIn(text).isDefined
+    } yield s"$file: $name"
+    assert(hits.isEmpty, s"list the function in GraftExtensions; GraftSession installs it:\n${hits.mkString("\n")}")
   }
 
   test("PipelineRunner's verbs declare no inline StructType; read schemas live in Schemas") {

@@ -52,7 +52,6 @@ class StreamingSpec extends AnyFunSuite {
     // survive the streaming state store across micro-batches, and the
     // final estimates must match the batch digest within sketch bounds.
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val events = StreamingPipeline.readEvents(spark, streamDir)
     val q = events
       .groupBy(col("event_type"))

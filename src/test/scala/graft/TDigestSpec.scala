@@ -90,7 +90,6 @@ class TDigestSpec extends AnyFunSuite {
 
   test("graft_tdigest in a grouped agg is partition-layout invariant within bounds") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(3)
     val rows = (1 to 30000).map(i => (s"g${i % 3}", rnd.nextDouble() * 100.0))
     val df = rows.toDF("g", "v")
@@ -138,7 +137,6 @@ class TDigestSpec extends AnyFunSuite {
   }
 
   test("graft_tdigest is callable from SQL and casts integer inputs") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     (1 to 1000).toDF("v").createOrReplaceTempView("tdig_in")
     val Array(p50) = spark

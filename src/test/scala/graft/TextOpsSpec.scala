@@ -334,7 +334,6 @@ class TextOpsSpec extends AnyFunSuite {
     // max per-hash df is the doc-unique 1), yet the result must be
     // EXACTLY the duplicated position set: position 2 in every doc.
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val n = 2000
     val d = (1 to n)
       .map(i => (i.toLong, s"u${i}a u${i}b boiler plate row u${i}c"))

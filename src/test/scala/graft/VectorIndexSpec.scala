@@ -46,7 +46,6 @@ class VectorIndexSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
       .toSet
 
-    graft.functions.GraftFunctions.register(spark)
     val e = vectors.withColumn("nrm", sqrt(dot(col("emb"), col("emb"))))
     val q = e
       .filter(col("vec_id") < 3)
@@ -123,7 +122,6 @@ class VectorIndexSpec extends AnyFunSuite {
     // neighbors) instead of quantizer quality.
     val queryIds = Seq(7L, 23L, 57L, 211L, 333L)
     val qs = vectors.filter(col("vec_id").isin(queryIds: _*))
-    graft.functions.GraftFunctions.register(spark)
     val e = vectors.withColumn("nrm", sqrt(dot(col("emb"), col("emb"))))
     val q = e
       .filter(col("vec_id").isin(queryIds: _*))
@@ -190,7 +188,6 @@ class VectorIndexSpec extends AnyFunSuite {
     // allow 3x, which still bounds probe candidates at ~cap, not ~n.
     assert(stats.values.max <= 60, s"probe candidates must be bounded after rebuild: $stats")
     // A full probe of the rebalanced index is still exactly brute force.
-    graft.functions.GraftFunctions.register(spark)
     val e = df.withColumn("nrm", sqrt(dot(col("emb"), col("emb"))))
     val queryIds = Seq(7L, 23L, 200L)
     val got = VectorIndex
