@@ -8,9 +8,11 @@ import org.apache.spark.sql.SparkSession
   * 1000-executor posture in mind: AQE on (runtime shuffle coalescing +
   * skew-join splitting), UTC session timezone (reproduces the reference's
   * `datetime.fromtimestamp` on a UTC cluster — see
-  * reference `spark-jobs/sparkify_etl.py:146-149`), shuffle
-  * partitions sized to the local core count rather than the 200 default,
-  * and file-listing jobs capped at the task slots so they run in one wave.
+  * reference `spark-jobs/sparkify_etl.py:146-149`), and shuffle widths
+  * and file-listing jobs sized to the session's cores rather than the
+  * 200 default. The cores are N for a `local[N]` master, otherwise
+  * `SPARK_GRAFT_CPUS` (default 32): a `local[4]` session runs 4 shuffle
+  * partitions whatever the environment says.
   *
   * `file://` goes through [[graft.sources.ForklessLocalFileSystem]]
   * (`FileSystem` API) and [[graft.sources.ForklessLocalFs]]
@@ -40,17 +42,14 @@ object GraftSession {
   private val LocalCores = """local\[(\d+)\]""".r
 
   def builder(appName: String = "graft", master: String = ""): SparkSession.Builder = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Task slots: N for a local[N] master (test suites pin local[2] or
-    // local[4] whatever SPARK_GRAFT_CPUS says), else the configured cores.
-    val slots = master match {
+    val cores = master match {
       case LocalCores(n) => n
-      case _             => cpus
+      case _             => sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     }
     val b = SparkSession
       .builder()
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // Volume-adaptive shuffle width: AQE can only coalesce DOWN from
@@ -62,7 +61,7 @@ object GraftSession {
       // fixture-scale plans keep their task counts while corpus-scale
       // stages get the width the volume needs. 8x cores locally mirrors
       // the 2-5x-cores guidance a real cluster runs with.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", (cpus.toInt * 8).toString)
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", (cores.toInt * 8).toString)
       // One-wave source listing: a read of more than 32 root paths
       // lists them in a Spark job with one task per path (EP1's song
       // glob: 160 one-stat tasks; the songs table read-back: ~48).
@@ -71,10 +70,9 @@ object GraftSession {
       // is unchanged and only their launch cost goes (traced etl_batch
       // on 4 cores: listing 1.2 -> 0.1 s per reload). The 32-path
       // threshold stays: below it listing runs on the driver, which
-      // costs seconds per read against gs://. On a cluster the cap is
-      // SPARK_GRAFT_CPUS, the cores the shuffle width is sized to;
-      // nothing else needs setting.
-      .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", slots)
+      // costs seconds per read against gs://. The cap is the same
+      // cores the shuffle width is sized to; nothing else needs setting.
+      .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", cores)
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -80,7 +80,8 @@ object Maintenance {
   ): Int = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     val fsPath = new org.apache.hadoop.fs.Path(path)
-    val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = DurableRoot.compacted(spark, path, "compact")
+    val fs = root.fs
     val tmp = new org.apache.hadoop.fs.Path(s"$path.__compact_tmp")
     val old = new org.apache.hadoop.fs.Path(s"$path.__compact_old")
     // Fenced like every other whole-dir rewriter (r16): run against a
@@ -88,10 +89,9 @@ object Maintenance {
     // unfenced compact would race the very renames the leases
     // serialize. Single-shot adhoc token — a crashed compact leaves no
     // partial state in place (the swap is last), so the retry runbook
-    // is lease_break + re-run, not token re-entry.
-    withWriterLease(fs, path, adhocToken("compact"), "compact") {
-      // Restore state stranded by a prior crash BEFORE reading the input.
-      recoverSwap(fs, fsPath, old)
+    // is lease_break + re-run, not token re-entry. The write heals a
+    // prior crash's strands BEFORE reading the input.
+    root.write(DurableRoot.adhocToken("compact")) {
       val bytes = fs.getContentSummary(fsPath).getLength
       val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
 
@@ -140,8 +140,7 @@ object Maintenance {
       indexSizeHint: Option[Long] = None,
       maxIndexFiles: Int = 64
   ): DataFrame = {
-    val leaseFs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = DurableRoot.leaseOnly(spark, indexPath, "incrementalDedup")
     // Single-writer fence (r16): two concurrent batches sharing a
     // content hash both pass the index probe and both get ACCEPTED —
     // the duplicate lands in the output corpus silently, the very
@@ -150,9 +149,9 @@ object Maintenance {
     // reads. Adhoc token: the operator has no applied id (callers
     // wanting replay convergence use the batch-keyed streaming arm),
     // so the crash runbook is lease_break + re-run.
-    withWriterLease(leaseFs, indexPath, adhocToken("dedup"), "incrementalDedup") {
+    root.write(DurableRoot.adhocToken("dedup")) {
     val hashed = batch.withColumn("__h", md5(col(textCol)))
-    val indexExists = leaseFs.exists(new org.apache.hadoop.fs.Path(indexPath))
+    val indexExists = root.fs.exists(new org.apache.hadoop.fs.Path(indexPath))
     val fresh =
       if (indexExists) {
         val index = spark.read.parquet(indexPath)
@@ -202,7 +201,7 @@ object Maintenance {
       .parquet(indexPath)
     if (maxIndexFiles > 0) tierIndexFiles(spark, indexPath, maxIndexFiles)
     accepted.drop("__h")
-    } // withWriterLease
+    } // root.write
   }
 
   /** Size-tiered self-compaction for a flat set-semantics index
@@ -310,7 +309,8 @@ object Maintenance {
   ): Int = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     val root = new HPath(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val durable = DurableRoot.compacted(spark, path, "compactPartitioned")
+    val fs = durable.fs
     val tmpRoot = new HPath(s"$path.__pcompact_tmp")
     val oldRoot = new HPath(s"$path.__pcompact_old")
     // Fenced like compact (r16): the merge reads victim dirs, swaps the
@@ -318,14 +318,9 @@ object Maintenance {
     // append, a file landed in a victim dir after the read is deleted
     // with it (silently lost rows); racing a second compaction, the
     // two interleave per-dir renames. Adhoc token: single-shot
-    // maintenance, crash runbook = lease_break + re-run (entry healing
-    // below makes the re-run idempotent).
-    withWriterLease(fs, path, adhocToken("pcompact"), "compactPartitioned") {
-    // Heal a prior crash BEFORE reading: restore dirs stranded mid-swap
-    // (missing from the root), drop the rest, then clear tmp garbage
-    // (every tmp dir is either unswapped — its data still lives in the
-    // root — or already swapped in; both are safe to delete).
-    recoverPartitionedCompact(fs, root, tmpRoot, oldRoot)
+    // maintenance, crash runbook = lease_break + re-run (the write's
+    // entry heal makes the re-run idempotent).
+    durable.write(DurableRoot.adhocToken("pcompact")) {
     if (!fs.exists(root)) return 0
     val victims = fs
       .listStatus(root)
@@ -374,16 +369,18 @@ object Maintenance {
     deleteOrFail(fs, oldRoot)
     deleteOrFail(fs, tmpRoot)
     victims.length
-    } // withWriterLease
+    } // durable.write
   }
 
-  /** [[compactPartitioned]]'s entry healing, shared with reader-side
-    * gates: restore partition dirs stranded mid-swap (present in the
-    * old root, missing from the live one), drop the rest of the old
-    * root, clear tmp garbage. Without it a crashed partitioned
-    * compaction leaves swapped-out dirs MISSING from the root — a
-    * reader then silently sees fewer partitions (missing rows), the
-    * worst failure mode of the family.
+  /** [[compactPartitioned]]'s entry healing ([[DurableRoot.compacted]]):
+    * restore partition dirs stranded mid-swap (present in the old root,
+    * missing from the live one), drop the rest of the old root, clear
+    * tmp garbage (every tmp dir is either unswapped — its data still
+    * lives in the root — or already swapped in; both are safe to
+    * delete). Without it a crashed partitioned compaction leaves
+    * swapped-out dirs MISSING from the root — a reader then silently
+    * sees fewer partitions (missing rows), the worst failure mode of
+    * the family.
     */
   private[operators] def recoverPartitionedCompact(
       fs: HFs,
@@ -399,35 +396,6 @@ object Maintenance {
       deleteOrFail(fs, oldRoot)
     }
     deleteOrFail(fs, tmpRoot)
-  }
-
-  /** Reader-side entry healing for a dataset maintained by [[compact]]
-    * (whole-dir `.__compact_*` swap) and/or [[compactPartitioned]]
-    * (per-dir `.__pcompact_*` swaps) — the TextIndex serving gate:
-    * with no lease on the path, heal both strand shapes (a crashed
-    * whole-dir compact leaves the TARGET renamed away — every read
-    * fails; a crashed partitioned one leaves dirs missing — reads
-    * silently lose rows); under a live lease with leftovers, refuse
-    * (the writer is mid-swap); nothing stranded, read normally.
-    */
-  private[graft] def healCompactForRead(
-      spark: SparkSession,
-      path: String,
-      family: String
-  ): Unit = {
-    val root = new HPath(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cOld = new HPath(s"$path.__compact_old")
-    val pTmp = new HPath(s"$path.__pcompact_tmp")
-    val pOld = new HPath(s"$path.__pcompact_old")
-    readTextFile(fs, new HPath(s"$path.__writer")) match {
-      case None =>
-        recoverSwap(fs, root, cOld)
-        recoverPartitionedCompact(fs, root, pTmp, pOld)
-      case Some(b) =>
-        if (fs.exists(cOld) || fs.exists(pOld))
-          throw refuseHealUnderLease(path, family, leaseTokenOf(b))
-    }
   }
 
   /** Incremental duplicated-span extents — the persistent-state twin of
@@ -501,31 +469,19 @@ object Maintenance {
       checkDocIdReuse: Boolean = false
   ): DataFrame = {
     val fsPath = new HPath(statePath)
-    val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = DurableRoot.spanState(spark, statePath, "incrementalDupSpans")
+    val fs = root.fs
     // Single-writer fence around the WHOLE ingest (heal + probe +
     // fold): the staging dirs (`.__append_tmp`) are shared per state,
     // entry healing renames dirs a live writer may be mid-swap on, and
     // a concurrent compaction could delete segments out from under the
-    // probe — one lease serializes all of it (see withWriterLease).
+    // probe — one lease serializes all of it (see DurableRoot).
     // The returned extents are pinned (localCheckpoint) inside, so the
-    // lease releasing before the caller consumes them is safe.
-    withWriterLease(fs, statePath, leaseToken(appliedId), "incrementalDupSpans") {
-    // Heal any crash-stranded state BEFORE any read: the pre-partition
-    // protocol's whole-dir strand (`.__refresh_old`, kept for states
-    // created before the partitioned fold) and the partitioned
-    // protocol's tmp/old dirs.
-    recoverSwap(fs, fsPath, new HPath(s"$statePath.__refresh_old"))
-    recoverPartitionedFold(
-      fs,
-      fsPath,
-      new HPath(s"$statePath.__pfold_tmp"),
-      new HPath(s"$statePath.__pfold_old")
-    )
-    // BEFORE the probe: a crash mid-migration leaves an hp dir holding
-    // both bare files and seg= subdirs, which no reader can open — the
-    // idempotent re-run must finish the renames first. Also sweep
-    // staging stranded by a crashed append (pre-commit garbage).
-    ensureSegmented(fs, fsPath)
+    // lease releasing before the caller consumes them is safe. The
+    // write heals crash-stranded state BEFORE any read, a half-done
+    // seg-layout migration included; the sweeps below are writer-only:
+    // staging stranded by a crashed append is pre-commit garbage.
+    root.write(DurableRoot.leaseToken(appliedId)) {
     dropStaleStaging(fs, fsPath)
     deleteOrFail(fs, new HPath(s"$statePath.__append_tmp"))
     deleteOrFail(fs, new HPath(s"$statePath.__compact_seg_tmp"))
@@ -744,7 +700,7 @@ object Maintenance {
       }
     }
     extents
-    } // withWriterLease
+    } // root.write
   }
 
   /** Keyed snapshot upsert (MERGE-into-parquet): rows of `updates`
@@ -885,6 +841,7 @@ object Maintenance {
     * state table: keys…, `estimate` (long), `n` (exact row count).
     */
   def cardinalityEstimates(spark: SparkSession, statePath: String): DataFrame = {
+    DurableRoot.wholeSwap(spark, statePath, "cardinalityEstimates").healForRead()
     val state = spark.read.parquet(statePath)
     val keys = state.columns.filterNot(Set("sk", "n"))
     state.select(
@@ -921,19 +878,19 @@ object Maintenance {
       partial: DataFrame
   )(fold: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val fsPath = new org.apache.hadoop.fs.Path(statePath)
-    val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = DurableRoot.wholeSwap(spark, statePath, "foldState")
+    val fs = root.fs
     val tmp = new org.apache.hadoop.fs.Path(s"$statePath.__refresh_tmp")
     val old = new org.apache.hadoop.fs.Path(s"$statePath.__refresh_old")
-    // Single-writer fence FIRST (see withWriterLease): two concurrent
+    // Single-writer fence FIRST (see DurableRoot): two concurrent
     // whole-swap folds both read the old state and the last swap
     // silently discards the first batch's rows — the worst race in
-    // the repo, refused loudly instead.
-    withWriterLease(fs, statePath, leaseToken(appliedId), "foldState") {
-      // Restore state stranded by a crash between the swap's two renames
-      // BEFORE the marker/existence checks — otherwise a retry would see
-      // no state, skip the marker, and rebuild from this batch alone,
-      // silently discarding the accumulated rollup.
-      recoverSwap(fs, fsPath, old)
+    // the repo, refused loudly instead. The write restores state
+    // stranded by a crash between the swap's two renames BEFORE the
+    // marker/existence checks — otherwise a retry would see no state,
+    // skip the marker, and rebuild from this batch alone, silently
+    // discarding the accumulated rollup.
+    root.write(DurableRoot.leaseToken(appliedId)) {
       def markerOf(dir: org.apache.hadoop.fs.Path) =
         new org.apache.hadoop.fs.Path(dir, "_applied_id")
       if (appliedId.isDefined && fs.exists(fsPath) && readAppliedId(fs, fsPath) == appliedId)
@@ -1076,258 +1033,6 @@ object Maintenance {
     }
   }
 
-  /** Single-writer fence for durable state roots — the TreeState
-    * `.__writer` lease generalized to every state family here: two
-    * concurrent writers on one root interleave their swap renames,
-    * segment appends, and markers (the whole-swap [[foldState]] is
-    * worst — both read the old state, fold their own batch, and the
-    * LAST swap silently discards the first batch's rows). A writer
-    * takes the lease — a sibling `<state>.__writer` created with
-    * overwrite=false, holding its token — before any read or
-    * mutation, and releases it on exit (success OR failure; only a
-    * JVM death leaves it). A second writer with a DIFFERENT token
-    * refuses loudly; a crashed writer's retry carries the same token
-    * (the applied id) and re-enters. Two truly concurrent attempts
-    * with the SAME token are outside the contract (foreachBatch
-    * retries are serial by construction; adhoc single-shot callers
-    * are single-flight by definition).
-    */
-  private[operators] def withWriterLease[T](
-      fs: HFs,
-      statePath: String,
-      token: String,
-      family: String
-  )(body: => T): T = {
-    claimOrReenterLease(fs, statePath, token, family)
-    try body
-    finally deleteOrFail(fs, new HPath(s"$statePath.__writer"))
-  }
-
-  /** Lease file body (round 16): the token on line 1 — the ONLY line
-    * the fence compares — followed by holder host/pid/created-at audit
-    * metadata, the fields `lease_report` prints and `lease_break` ages
-    * against (a crashed holder's lease used to demand a hand-deleted
-    * file; the verbs make the runbook mechanical). r15-format leases
-    * (bare token, no metadata) stay readable: token parsing takes
-    * line 1, missing fields report as unknown.
-    */
-  private[graft] def leaseBody(token: String): String = {
-    val host =
-      try java.net.InetAddress.getLocalHost.getHostName
-      catch { case _: java.net.UnknownHostException => "unknown" }
-    s"$token\nhost=$host\npid=${ProcessHandle.current().pid()}\ncreated_at=${System.currentTimeMillis()}\n"
-  }
-
-  private[graft] def leaseTokenOf(body: String): String =
-    body.linesIterator.nextOption().map(_.trim).getOrElse("")
-
-  private[graft] def leaseFields(body: String): Map[String, String] =
-    body.linesIterator
-      .drop(1)
-      .flatMap(_.split("=", 2) match {
-        case Array(k, v) => Some(k.trim -> v.trim)
-        case _           => None
-      })
-      .toMap
-
-  /** Take (or re-enter) the single-writer lease on `statePath`.
-    *
-    * The claim is write-temp-then-RENAME (round 16; previously
-    * create(overwrite=false) + a second write): the lease file appears
-    * ATOMICALLY with its full body, so no crash window can leave an
-    * empty-token lease that wedges every later writer and reader with
-    * an unactionable holder ''. On HDFS-semantics stores a rename onto
-    * an existing destination fails, which makes the claim itself
-    * atomic; the fence is documented HDFS-semantics-ONLY — on stores
-    * whose rename overwrites (raw local fs) or is copy+delete (S3A
-    * without conditional writes) two racers can briefly both rename,
-    * so the claim is followed by a VERIFY read that refuses when a
-    * foreign token won. Should an empty/unparseable lease appear
-    * anyway (a pre-r16 crash, a truncated copy), it is stale BY
-    * PROTOCOL — no live r16 writer can own it — and is removed with a
-    * note rather than wedging the pipeline.
-    */
-  private[graft] def claimOrReenterLease(
-      fs: HFs,
-      statePath: String,
-      token: String,
-      family: String
-  ): Unit = {
-    val p = new HPath(s"$statePath.__writer")
-    readTextFile(fs, p) match {
-      case Some(b) if leaseTokenOf(b) == token => () // crashed attempt's retry: re-enter
-      case Some(b) if leaseTokenOf(b).isEmpty =>
-        System.err.println(
-          s"[$family] removing EMPTY writer lease at $p — stale by protocol (r16 leases " +
-            "appear atomically with their token; an empty file is a pre-r16 crash artifact)")
-        deleteOrFail(fs, p)
-        claimLease(fs, p, statePath, token, family)
-      case Some(b) =>
-        val f = leaseFields(b)
-        def fld(k: String) = f.getOrElse(k, "unknown")
-        throw new IllegalArgumentException(
-          s"$family: writer lease on $statePath is held by '${leaseTokenOf(b)}' " +
-            s"(host=${fld("host")}, pid=${fld("pid")}, created_at=${fld("created_at")}; " +
-            s"this attempt: '$token') — either a concurrent writer is live (wait for it) " +
-            "or a previous one crashed mid-operation (retry it under ITS token until it " +
-            "completes). Inspect with `--maintenance lease_report --state " + statePath +
-            "`; if the holder is confirmed dead, `--maintenance lease_break --state " +
-            statePath + "`")
-      case None => claimLease(fs, p, statePath, token, family)
-    }
-  }
-
-  private def claimLease(fs: HFs, p: HPath, statePath: String, token: String, family: String): Unit = {
-    def lostRace(cause: Throwable): Nothing =
-      throw new IllegalArgumentException(
-        s"$family: lost the writer-lease race on $statePath (attempt '$token') — " +
-          "a concurrent writer claimed it first; retry after it completes",
-        cause)
-    val tmp = new HPath(s"$statePath.__writer.claim.${java.util.UUID.randomUUID()}")
-    writeTextFile(fs, tmp, leaseBody(token))
-    val renamed =
-      try fs.rename(tmp, p)
-      catch {
-        case e @ (_: java.io.IOException | _: RuntimeException) =>
-          fs.delete(tmp, false); lostRace(e)
-      }
-    if (!renamed) { fs.delete(tmp, false); lostRace(null) }
-    // verify read: detects the rename-overwrites race on non-HDFS stores
-    if (!readTextFile(fs, p).map(leaseTokenOf).contains(token)) lostRace(null)
-  }
-
-  /** adhoc (id-less) lease tokens are UNIQUE PER ATTEMPT (round 16):
-    * the r15 constant 'fold:adhoc' meant any two concurrent id-less
-    * writers shared a token and both silently re-entered — the exact
-    * last-swap-wins race the fence exists to refuse, wearing a fence.
-    * The trade is deliberate: an id-less caller that CRASHES leaves a
-    * lease no retry can re-enter (there is no id to carry), and the
-    * runbook is `lease_break` — id-carrying callers keep crash-retry
-    * re-entry, which is why every scheduled/streaming path passes an
-    * applied id and adhoc is for single-shot human invocations only.
-    */
-  private[operators] def leaseToken(appliedId: Option[Long]): String =
-    appliedId.map(id => s"fold:$id").getOrElse(adhocToken("fold"))
-
-  /** [[withWriterLease]] for callers outside the operators package
-    * fencing on a streaming batch id — deterministic token, so a
-    * crashed batch's automatic replay re-enters its own stale lease.
-    */
-  private[graft] def withBatchWriterLease[T](
-      fs: HFs,
-      statePath: String,
-      batchId: Long,
-      family: String
-  )(body: => T): T =
-    withWriterLease(fs, statePath, leaseToken(Some(batchId)), family)(body)
-
-  private[operators] def adhocToken(kind: String): String =
-    s"adhoc:$kind:${java.util.UUID.randomUUID()}"
-
-  /** READER-side lease discipline, generalized from TreeState (r16,
-    * verdict item 5): healing renames state dirs, which is only safe
-    * with no writer mid-swap. With no lease on the root, a reader
-    * heals exactly as a writer would — a crashed whole-swap fold
-    * strands the TARGET renamed to `.__*_old`, so until r16 every
-    * serving read failed on "path does not exist" until the NEXT
-    * write happened to run entry healing: one crash became a serving
-    * outage. Under a LIVE lease, leftovers are ambiguous (a writer
-    * mid-swap or a crash), so a reader that finds something to heal
-    * refuses loudly instead of racing the writer's renames; with
-    * nothing stranded it reads normally (each swap rename is atomic —
-    * a concurrent read sees the pre- or post-swap state, both
-    * complete).
-    */
-  private[graft] def healWholeSwapForRead(
-      spark: SparkSession,
-      statePath: String,
-      family: String
-  ): Unit = {
-    val target = new HPath(statePath)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new HPath(s"$statePath.__refresh_old")
-    readTextFile(fs, new HPath(s"$statePath.__writer")) match {
-      case None => recoverSwap(fs, target, old)
-      case Some(b) =>
-        if (fs.exists(old)) throw refuseHealUnderLease(statePath, family, leaseTokenOf(b))
-    }
-  }
-
-  /** [[healWholeSwapForRead]] for the segmented span-hash state: the
-    * readability strands are the legacy whole-dir swap
-    * (`.__refresh_old`), the partitioned fold's bucket swaps
-    * (`.__pfold_tmp`/`old`), and a crashed seg-layout migration
-    * (mixed bare-files + `seg=` dirs no reader can open). Sibling
-    * append/compaction tmp dirs and `.spark-staging` entries are NOT
-    * touched here — they never block a read (dot-prefixed or outside
-    * the root), and a reader deleting them could race a writer that
-    * claimed the lease after our check.
-    */
-  private def healSpanStateForRead(spark: SparkSession, statePath: String, family: String): Unit = {
-    val root = new HPath(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val refreshOld = new HPath(s"$statePath.__refresh_old")
-    val pfoldTmp = new HPath(s"$statePath.__pfold_tmp")
-    val pfoldOld = new HPath(s"$statePath.__pfold_old")
-    readTextFile(fs, new HPath(s"$statePath.__writer")) match {
-      case None =>
-        recoverSwap(fs, root, refreshOld)
-        recoverPartitionedFold(fs, root, pfoldTmp, pfoldOld)
-        ensureSegmented(fs, root)
-      case Some(b) =>
-        if (fs.exists(refreshOld) || fs.exists(pfoldTmp) || fs.exists(pfoldOld))
-          throw refuseHealUnderLease(statePath, family, leaseTokenOf(b))
-    }
-  }
-
-  private def refuseHealUnderLease(statePath: String, family: String, holder: String) =
-    new IllegalArgumentException(
-      s"$family: state at $statePath has swap leftovers while writer lease '$holder' is " +
-        "held — a writer is live mid-swap (wait for it) or crashed (retry it under its " +
-        "token, or `--maintenance lease_break --state " + statePath + "` after confirming " +
-        "it is dead); refusing to heal under a lease")
-
-  /** Read-only lease inspection for the `lease_report` verb: (token,
-    * metadata fields) of the live lease, or None. */
-  def leaseReport(spark: SparkSession, statePath: String): Option[(String, Map[String, String])] = {
-    val p = new HPath(s"$statePath.__writer")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readTextFile(fs, p).map(b => (leaseTokenOf(b), leaseFields(b)))
-  }
-
-  /** Break a dead holder's writer lease — the loud, audited runbook
-    * verb for a JVM death (the lease is otherwise released in the
-    * holder's `finally`; only a crash leaves it). REFUSES while the
-    * lease is fresher than `minAgeMs`: a just-created lease is far
-    * more likely a LIVE writer than a crash, and breaking a live
-    * writer's lease re-opens the lost-batch race the fence closes.
-    * Leases without created-at metadata (r15 format, or a truncated
-    * body) are treated as old — they predate the metadata deploy.
-    * Returns the broken (token, fields) for the audit line.
-    */
-  def leaseBreak(
-      spark: SparkSession,
-      statePath: String,
-      minAgeMs: Long = 15 * 60 * 1000L
-  ): (String, Map[String, String]) = {
-    val p = new HPath(s"$statePath.__writer")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val body = readTextFile(fs, p).getOrElse(
-      throw new IllegalArgumentException(s"lease_break: no writer lease at $p"))
-    val fields = leaseFields(body)
-    fields.get("created_at").flatMap(_.toLongOption).foreach { created =>
-      val age = System.currentTimeMillis() - created
-      if (age < minAgeMs)
-        throw new IllegalArgumentException(
-          s"lease_break: lease on $statePath is only ${age / 1000}s old " +
-            s"(threshold ${minAgeMs / 1000}s) — a lease this fresh is far more likely a " +
-            "LIVE writer than a crash; wait for it (or re-run with a lower --min_age_sec " +
-            "only after confirming host/pid from lease_report is dead)")
-    }
-    deleteOrFail(fs, p)
-    (leaseTokenOf(body), fields)
-  }
-
   private[graft] def writeTextFile(fs: HFs, p: HPath, s: String): Unit = {
     val out = fs.create(p, true)
     try out.write(s.getBytes("UTF-8"))
@@ -1423,7 +1128,7 @@ object Maintenance {
     * aside-partitions (a full-mode crash after its dir swap) are
     * restored where the state is missing them.
     */
-  private def recoverPartitionedFold(fs: HFs, state: HPath, tmp: HPath, old: HPath): Unit =
+  private[operators] def recoverPartitionedFold(fs: HFs, state: HPath, tmp: HPath, old: HPath): Unit =
     if (fs.exists(tmp)) {
       if (fs.exists(new HPath(tmp, "_commit"))) rollForwardPartitioned(fs, state, tmp, old)
       else {
@@ -1609,7 +1314,7 @@ object Maintenance {
     * reads the hp dirs: a directory holding both data files and
     * partition subdirs is unreadable.
     */
-  private def ensureSegmented(fs: HFs, state: HPath): Unit =
+  private[operators] def ensureSegmented(fs: HFs, state: HPath): Unit =
     if (fs.exists(state) && fs.exists(new HPath(state, "_buckets")) &&
       !fs.exists(new HPath(state, "_segmented"))) {
       listHpDirs(fs, state).foreach { hp =>
@@ -1755,8 +1460,7 @@ object Maintenance {
     * attribution predicate is exact over raw segment rows.
     */
   def spanStateView(spark: SparkSession, statePath: String): DataFrame = {
-    // reader-side entry healing, lease-gated (see healWholeSwapForRead)
-    healSpanStateForRead(spark, statePath, "spanStateView")
+    DurableRoot.spanState(spark, statePath, "spanStateView").healForRead()
     spark.read
       .parquet(statePath)
       .groupBy(col("h"))
@@ -1803,7 +1507,8 @@ object Maintenance {
   ): (Int, Int) = {
     newBuckets.foreach(b => require(b > 0, "newBuckets must be positive"))
     val fsPath = new HPath(statePath)
-    val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = DurableRoot.spanState(spark, statePath, "compactSpanState")
+    val fs = root.fs
     val tmp = new HPath(s"$statePath.__pfold_tmp")
     val old = new HPath(s"$statePath.__pfold_old")
     // compaction is a writer too: it reads every segment and swaps the
@@ -1813,13 +1518,8 @@ object Maintenance {
     // bucket count => same logical operation, crash-retry re-enters);
     // a keep-buckets compaction is single-shot adhoc — r15's constant
     // 'compact:0' let two concurrent ones both "re-enter" (see
-    // leaseToken's rationale).
-    withWriterLease(
-      fs, statePath,
-      newBuckets.map(n => s"compact:$n").getOrElse(adhocToken("compact")),
-      "compactSpanState") {
-    recoverPartitionedFold(fs, fsPath, tmp, old)
-    ensureSegmented(fs, fsPath)
+    // DurableRoot.leaseToken's rationale).
+    root.write(newBuckets.map(n => s"compact:$n").getOrElse(DurableRoot.adhocToken("compact"))) {
     dropStaleStaging(fs, fsPath)
     require(
       fs.exists(new HPath(fsPath, "_buckets")),
@@ -1853,7 +1553,7 @@ object Maintenance {
     rollForwardPartitioned(fs, fsPath, tmp, old)
     val after = listHpDirs(fs, fsPath).length
     (if (nbOut != nb) after else multi, after)
-    } // withWriterLease
+    } // root.write
   }
 
   /** Sizing snapshot of a segmented span-hash state — the observable
@@ -1882,7 +1582,9 @@ object Maintenance {
   ): SpanStateReport = {
     require(targetTaskBytes > 0, "targetTaskBytes must be positive")
     val fsPath = new HPath(statePath)
-    val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = DurableRoot.spanState(spark, statePath, "spanStateReport")
+    root.healForRead()
+    val fs = root.fs
     require(
       fs.exists(new HPath(fsPath, "_buckets")),
       s"$statePath is not a partitioned span state (no _buckets pin)"
@@ -1931,7 +1633,7 @@ object Maintenance {
     val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new HPath(s"$statePath.__pfold_tmp")
     val old = new HPath(s"$statePath.__pfold_old")
-    recoverPartitionedFold(fs, fsPath, tmp, old)
+    // entry heal: the caller's DurableRoot.spanState write
     if (appliedId.isDefined && fs.exists(fsPath) && readAppliedId(fs, fsPath) == appliedId)
       return // retry of an applied batch: no-op
     val stateExists = fs.exists(fsPath)
@@ -2004,7 +1706,6 @@ object Maintenance {
       // tmp is pre-commit garbage, deleted on entry). Existing
       // segments are never read or rewritten; per-batch write cost is
       // the partial's size. The marker advances only after the append.
-      ensureSegmented(fs, fsPath) // states written before segmentation
       val segName = appliedId
         .map(id => s"b$id")
         .getOrElse("u" + java.util.UUID.randomUUID().toString.replace("-", "").take(12))

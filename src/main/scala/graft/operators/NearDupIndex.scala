@@ -125,8 +125,7 @@ object NearDupIndex {
       maxIndexFiles: Int = 64,
       appliedId: Option[Long] = None
   ): DataFrame = {
-    val leaseFs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = DurableRoot.leaseOnly(spark, indexPath, "NearDupIndex.update")
     // Single-writer fence (r16), same contract as incrementalDedup:
     // two concurrent updates sharing a doc_id both pass the
     // idempotence anti-join and double-index the signature, and two
@@ -136,10 +135,9 @@ object NearDupIndex {
     // re-enters its own stale lease; id-less single shots get a
     // unique adhoc token (crash runbook: lease_break + re-run — the
     // anti-join makes the re-run idempotent).
-    Maintenance.withWriterLease(
-      leaseFs, indexPath, Maintenance.leaseToken(appliedId), "NearDupIndex.update") {
+    root.write(DurableRoot.leaseToken(appliedId)) {
     val sigs = signatures(batch, idCol, textCol).localCheckpoint()
-    val indexExists = leaseFs.exists(new org.apache.hadoop.fs.Path(indexPath))
+    val indexExists = root.fs.exists(new org.apache.hadoop.fs.Path(indexPath))
     val inBatch = pairsBetween(sigs, sigs, threshold).filter(col("doc_a") < col("doc_b"))
     val out =
       if (indexExists)
@@ -161,6 +159,6 @@ object NearDupIndex {
       .parquet(indexPath)
     if (maxIndexFiles > 0) Maintenance.tierIndexFiles(spark, indexPath, maxIndexFiles)
     settled
-    } // withWriterLease
+    } // root.write
   }
 }

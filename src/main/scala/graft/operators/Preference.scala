@@ -556,11 +556,8 @@ object Preference {
     */
   def winMatrixFromState(spark: SparkSession, statePath: String): DataFrame = {
     // reader-side entry healing, lease-gated (r16): a crashed winIngest
-    // swap otherwise leaves the state unreadable until the next write;
-    // under a live lease, stranded dirs mean a writer is mid-swap and
-    // the reader refuses to race its renames
-    // (Maintenance.healWholeSwapForRead).
-    graft.operators.Maintenance.healWholeSwapForRead(spark, statePath, "winMatrixFromState")
+    // swap otherwise leaves the state unreadable until the next write
+    DurableRoot.wholeSwap(spark, statePath, "winMatrixFromState").healForRead()
     val Seq(promptCol, policyCol) =
       requireStateKeys(spark, statePath, 2, "winMatrixFromState", "winIngest")
     val st = spark.read.parquet(statePath)
@@ -898,9 +895,8 @@ object Preference {
     * never inferred from the schema.
     */
   def pairsFromState(spark: SparkSession, statePath: String): DataFrame = {
-    // reader-side entry healing, lease-gated (r16) — see
-    // winMatrixFromState / Maintenance.healWholeSwapForRead.
-    graft.operators.Maintenance.healWholeSwapForRead(spark, statePath, "pairsFromState")
+    // reader-side entry healing, lease-gated (r16) — see winMatrixFromState
+    DurableRoot.wholeSwap(spark, statePath, "pairsFromState").healForRead()
     val Seq(promptCol) =
       requireStateKeys(spark, statePath, 1, "pairsFromState", "pairIngest")
     val st = spark.read.parquet(statePath)

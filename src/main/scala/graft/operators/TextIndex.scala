@@ -61,8 +61,6 @@ object TextIndex {
     * so replays are idempotent (the [[NearDupIndex]] contract).
     */
   def append(spark: SparkSession, docs: DataFrame, indexPath: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Single-writer fence on the INDEX root (r16), covering the
     // idempotence anti-join and both writes: two concurrent appends
     // sharing a doc_id both pass the anti-join and double-index it
@@ -70,8 +68,8 @@ object TextIndex {
     // an append racing compactIndex can land files into dirs the
     // compaction then deletes. Adhoc token — appends are idempotent
     // by the anti-join, so the crash runbook is lease_break + re-run.
-    Maintenance.withWriterLease(
-      fs, indexPath, Maintenance.adhocToken("tidx-append"), "TextIndex.append") {
+    DurableRoot.textIndex(spark, indexPath, "TextIndex.append")
+      .write(DurableRoot.adhocToken("tidx-append")) {
       val existing = spark.read.parquet(s"$indexPath/docs").select("doc_id")
       val fresh = docs
         .select(col("doc_id"), col("text"))
@@ -111,14 +109,12 @@ object TextIndex {
       indexPath: String,
       targetFileBytes: Long = 128L * 1024 * 1024
   ): (Int, Int) = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Index-root fence (r16): excludes a concurrent append for the
     // whole two-phase pass — the sub-compacts additionally hold their
     // own sub-path leases (different lease files, no conflict), which
     // is what a reader's heal gate checks.
-    Maintenance.withWriterLease(
-      fs, indexPath, Maintenance.adhocToken("tidx-compact"), "TextIndex.compactIndex") {
+    DurableRoot.textIndex(spark, indexPath, "TextIndex.compactIndex")
+      .write(DurableRoot.adhocToken("tidx-compact")) {
       val nDocs = Maintenance.compact(spark, s"$indexPath/docs", targetFileBytes)
       val nPost = Maintenance.compactPartitioned(spark, s"$indexPath/postings", targetFileBytes)
       (nDocs, nPost)
@@ -138,36 +134,11 @@ object TextIndex {
       topK: Int = 10
   ): DataFrame = {
     require(terms.nonEmpty, "at least one term")
-    // Reader-side entry healing, lease-gated (r16, the TreeState
-    // protocol spread here): a crashed docs compact leaves `docs/`
-    // renamed to `.__compact_old` — every search fails on a missing
-    // path until the next compact happened to heal it; a crashed
-    // postings compaction leaves bucket dirs stranded in
-    // `.__pcompact_old` — searches silently LOSE the stranded
-    // buckets' rows, the family's worst failure mode. With no writer
-    // lease on the index root or the sub-path, heal; under a live
-    // lease with leftovers present, refuse loudly rather than race
-    // the writer's renames.
-    locally {
-      val fs = new org.apache.hadoop.fs.Path(indexPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Maintenance.readTextFile(
-        fs, new org.apache.hadoop.fs.Path(s"$indexPath.__writer")) match {
-        case None =>
-          Maintenance.healCompactForRead(spark, s"$indexPath/docs", "TextIndex.search")
-          Maintenance.healCompactForRead(spark, s"$indexPath/postings", "TextIndex.search")
-        case Some(b) =>
-          val stranded =
-            fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/docs.__compact_old")) ||
-              fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/postings.__pcompact_old"))
-          if (stranded)
-            throw new IllegalArgumentException(
-              s"TextIndex.search: index at $indexPath has swap leftovers while writer " +
-                s"lease '${Maintenance.leaseTokenOf(b)}' is held — a compaction is live " +
-                "mid-swap (wait for it) or crashed (`--maintenance lease_break --state " +
-                indexPath + "` after confirming it is dead); refusing to heal under a lease")
-      }
-    }
+    // Reader-side entry healing (DurableRoot.textIndex): a crashed
+    // docs compact leaves `docs/` renamed aside, so every search fails
+    // on a missing path; a crashed postings compaction strands bucket
+    // dirs, so searches silently LOSE their rows.
+    DurableRoot.textIndex(spark, indexPath, "TextIndex.search").healForRead()
     val sorted = terms.distinct.sorted
     val md = java.security.MessageDigest.getInstance("MD5")
     def bucketId(t: String): Long = {

@@ -68,68 +68,18 @@ object TreeState {
 
   private val COLS = Seq("conv_id", "path_id", "pos", "turn_id", "train")
 
-  /** Single-writer fence. Two concurrent folds on one state root (a
-    * `turns_stream` drain racing a manual `tree_state` verb — a
-    * double-fired scheduler at campaign scale) would interleave
-    * per-bucket swaps and `_seg_applied` markers from DIFFERENT
-    * applied ids; convergence is only proven for serial retries of ONE
-    * id. Writers (fold, reshard) therefore take a lease — a sibling
-    * `<state>.__writer` file created with overwrite=false, holding the
-    * writer's token — before any mutation, and release it on exit
-    * (success OR gate failure; only a JVM death leaves it behind). A
-    * SECOND writer with a different token refuses loudly. The
-    * documented crash-retry contract survives: a retry of a crashed
-    * fold carries the SAME applied id, so its token matches the stale
-    * lease and it re-enters (same for a reshard retry). Two truly
-    * concurrent attempts with the SAME token are outside the contract
-    * (foreachBatch retries are serial by construction). The lease
-    * lives OUTSIDE the root so a reshard's whole-root swap cannot
-    * drop it mid-operation, and so the first fold can fence before
-    * the root exists.
+  /** Single-writer fence ([[DurableRoot.treeState]]). Two concurrent
+    * folds on one state root (a `turns_stream` drain racing a manual
+    * `tree_state` verb — a double-fired scheduler at campaign scale)
+    * would interleave per-bucket swaps and `_seg_applied` markers from
+    * DIFFERENT applied ids; convergence is only proven for serial
+    * retries of ONE id. Writers (fold, reshard) therefore hold the
+    * root's `DurableRoot` lease, whose token is the applied id (a
+    * reshard's is its bucket count), so a crashed fold's retry
+    * re-enters; readers heal only when no lease is held.
     */
-  private def leasePath(statePath: String) = new org.apache.hadoop.fs.Path(s"$statePath.__writer")
-
-  private def acquireWriter(
-      fs: org.apache.hadoop.fs.FileSystem,
-      statePath: String,
-      token: String
-  ): Unit =
-    // Shared claim protocol (round 16, Maintenance.claimOrReenterLease):
-    // temp+rename atomic appearance with host/pid/created-at runbook
-    // metadata, empty-lease-is-stale healing, verify-read race
-    // detection — one implementation for every durable family.
-    Maintenance.claimOrReenterLease(fs, statePath, token, "TreeState")
-
-  private def releaseWriter(fs: org.apache.hadoop.fs.FileSystem, statePath: String): Unit =
-    Maintenance.deleteOrFail(fs, leasePath(statePath))
-
-  /** READER-side healing policy: healing renames state dirs, which is
-    * only safe with no writer mid-swap. With no lease on the root,
-    * heal exactly as writers do. Under a lease, leftovers are
-    * ambiguous — a LIVE writer mid-swap or a crashed one — so a reader
-    * that finds something to heal refuses loudly instead of racing the
-    * writer's renames; with nothing stranded it reads normally
-    * (concurrent reads during a fold see the pre- or post-swap bucket,
-    * both complete states).
-    */
-  private def healForRead(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      statePath: String
-  ): Unit =
-    Maintenance.readTextFile(fs, leasePath(statePath)) match {
-      case None => healAt(fs, root, statePath)
-      case Some(t) =>
-        val stranded =
-          fs.exists(new org.apache.hadoop.fs.Path(s"$statePath.__reshard_old")) ||
-            fs.exists(new org.apache.hadoop.fs.Path(s"$statePath.__fold_old"))
-        if (stranded)
-          throw new IllegalArgumentException(
-            s"TreeState: state at $statePath has swap leftovers while writer lease " +
-              s"'${Maintenance.leaseTokenOf(t)}' is held — a fold/reshard is live mid-swap " +
-              "(wait for it) or crashed (retry it under its token); refusing to heal under " +
-              "a lease")
-    }
+  private def durable(spark: SparkSession, statePath: String) =
+    DurableRoot.treeState(spark, statePath, "TreeState")
 
   /** Entry healing shared by EVERY state reader and writer: first a
     * reshard stranded between its whole-root renames (a vanished root
@@ -143,13 +93,13 @@ object TreeState {
     * next fold's healing renames the leftover backup into the
     * re-hashed root, corrupting bucket pruning.
     */
-  private def healAt(
+  private[operators] def healAt(
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path,
-      statePath: String
+      reshardOld: org.apache.hadoop.fs.Path,
+      foldOld: org.apache.hadoop.fs.Path
   ): Unit = {
-    Maintenance.recoverSwap(fs, root, new org.apache.hadoop.fs.Path(s"$statePath.__reshard_old"))
-    val foldOld = new org.apache.hadoop.fs.Path(s"$statePath.__fold_old")
+    Maintenance.recoverSwap(fs, root, reshardOld)
     if (fs.exists(foldOld)) {
       fs.listStatus(foldOld)
         .filter(st => st.isDirectory && st.getPath.getName.startsWith("cv="))
@@ -232,24 +182,12 @@ object TreeState {
     */
   def memberships(spark: SparkSession, statePath: String): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healForRead(fs, root, statePath)
+    val d = durable(spark, statePath)
+    d.healForRead()
+    val fs = d.fs
     // markers-only root (empty first batch): nothing for parquet
     // schema inference to read — serve the typed empty table. A
     // legacy bare-parquet root still reads as data.
-    val markersOnly = fs.exists(root) && !hasCvDirs(fs, root) &&
-      fs.listStatus(root).forall(st => !st.isDirectory && st.getPath.getName.startsWith("_"))
-    if (markersOnly) emptyMemberships(spark, readIdTypes(fs, root))
-    else spark.read.parquet(statePath).select(COLS.map(col): _*)
-  }
-
-  /** [[memberships]] for a caller already holding the writer lease
-    * (the fold's own return): reader-side lease checks would refuse
-    * OUR own live lease.
-    */
-  private def membershipsLocked(spark: SparkSession, statePath: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val markersOnly = fs.exists(root) && !hasCvDirs(fs, root) &&
       fs.listStatus(root).forall(st => !st.isDirectory && st.getPath.getName.startsWith("_"))
     if (markersOnly) emptyMemberships(spark, readIdTypes(fs, root))
@@ -271,12 +209,11 @@ object TreeState {
   def reshard(spark: SparkSession, statePath: String, newBuckets: Int): Unit = {
     require(newBuckets > 0 && newBuckets <= 4096, s"buckets must be in [1, 4096], got $newBuckets")
     val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val d = durable(spark, statePath)
+    val fs = d.fs
     val oldRoot = new org.apache.hadoop.fs.Path(s"$statePath.__reshard_old")
     val tmpRoot = new org.apache.hadoop.fs.Path(s"$statePath.__reshard_tmp")
-    acquireWriter(fs, statePath, s"reshard:$newBuckets")
-    try {
-      healAt(fs, root, statePath)
+    d.write(s"reshard:$newBuckets") {
       require(fs.exists(root), s"no TreeState at $statePath")
       require(
         Maintenance.readTextFile(fs, new org.apache.hadoop.fs.Path(root, "_buckets")).isDefined,
@@ -292,7 +229,7 @@ object TreeState {
           fs, new org.apache.hadoop.fs.Path(root, "_buckets"), newBuckets.toString)
         return
       }
-      membershipsLocked(spark, statePath)
+      memberships(spark, statePath)
         .withColumn("cv", pmod(hash(col("conv_id")), lit(newBuckets)))
         .repartition(col("cv"))
         .write
@@ -306,7 +243,7 @@ object TreeState {
       idTypes.foreach(t =>
         Maintenance.writeTextFile(fs, new org.apache.hadoop.fs.Path(tmpRoot, "_idtypes"), t))
       Maintenance.swapInto(fs, tmpRoot, root, oldRoot)
-    } finally releaseWriter(fs, statePath)
+    }
   }
 
   /** Metadata-only sizing report: (bucket, bytes) per `cv=` dir plus
@@ -315,8 +252,9 @@ object TreeState {
     */
   def report(spark: SparkSession, statePath: String): Seq[(Int, Long)] = {
     val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healForRead(fs, root, statePath)
+    val d = durable(spark, statePath)
+    d.healForRead()
+    val fs = d.fs
     fs.listStatus(root)
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("cv="))
       .map(st =>
@@ -384,25 +322,21 @@ object TreeState {
       col(parentCol).as("parent_id")
     )
     val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val d = durable(spark, statePath)
+    val fs = d.fs
     val tmp = new org.apache.hadoop.fs.Path(s"$statePath.__fold_tmp")
     val oldRoot = new org.apache.hadoop.fs.Path(s"$statePath.__fold_old")
-    // ── single-writer fence ───────────────────────────────────────
-    // Taken BEFORE healing and BEFORE clearing tmp: a concurrent
-    // writer's staging dir must never be clobbered, and healing's
-    // renames must never race a live swap. A crashed fold's retry
-    // carries the same applied id → same token → re-enters.
-    // adhoc (id-less) folds take a UNIQUE per-attempt token (r16): the
-    // constant 'fold:adhoc' let two concurrent id-less folds share a
-    // token and both silently re-enter — see Maintenance.leaseToken.
-    acquireWriter(fs, statePath, appliedId.map(id => s"fold:$id").getOrElse(Maintenance.adhocToken("fold")))
-    try {
-      // ── entry healing ─────────────────────────────────────────────
-      // A reshard stranded between its whole-root renames (a vanished
-      // root would otherwise read as "no state" and silently rebuild
-      // from this batch alone), then buckets stranded between a crashed
-      // fold swap's two renames — shared with every reader (healAt).
-      healAt(fs, root, statePath)
+    // ── single-writer fence, then entry healing ───────────────────
+    // The lease is taken BEFORE healing and BEFORE clearing tmp: a
+    // concurrent writer's staging dir must never be clobbered, and
+    // healing's renames must never race a live swap. A crashed fold's
+    // retry carries the same applied id → same token → re-enters;
+    // adhoc (id-less) folds take a UNIQUE per-attempt token (see
+    // DurableRoot.leaseToken). The heal restores a reshard stranded
+    // between its whole-root renames (a vanished root would otherwise
+    // read as "no state" and silently rebuild from this batch alone),
+    // then buckets stranded between a crashed fold swap's two renames.
+    d.write(DurableRoot.leaseToken(appliedId)) {
       val bucketsPin = new org.apache.hadoop.fs.Path(root, "_buckets")
       val exists = fs.exists(root)
       val k: Int =
@@ -428,7 +362,7 @@ object TreeState {
         Maintenance.readTextFile(fs, p).map(_.trim.toLong)
       val rootApplied = marker(new org.apache.hadoop.fs.Path(root, "_applied_id"))
       if (exists && appliedId.isDefined && rootApplied == appliedId)
-        return membershipsLocked(spark, statePath) // retry of an applied batch: no-op
+        return memberships(spark, statePath) // retry of an applied batch: no-op
       // Applied-id monotonicity: a replay of the LAST batch is the
       // no-op above; an id BELOW the state's marker is a misrouted or
       // out-of-order delivery (a double-fired scheduler re-sending
@@ -555,8 +489,8 @@ object TreeState {
     }
     appliedId.foreach(id =>
       Maintenance.writeTextFile(fs, new org.apache.hadoop.fs.Path(root, "_applied_id"), id.toString))
-    membershipsLocked(spark, statePath)
-    } finally releaseWriter(fs, statePath)
+    memberships(spark, statePath)
+    }
   }
 
   /** The incremental fold proper: `m` the current memberships of the

@@ -25,19 +25,17 @@ import org.apache.spark.sql.functions._
   * toward the smaller cent_id; assignment is a `max_by` partial
   * aggregate, collapsing N×K before any shuffle.
   *
-  * Concurrency (r16 reader/writer audit): MUTATIONS
-  * ([[appendAssigned]], [[rebalance]]) take the `indexPath.__writer`
-  * single-writer lease — concurrent appends sharing a vec_id would
-  * both pass the idempotence anti-join, and an append racing a
-  * rebalance's cluster-dir deletes would silently lose rows. READERS
-  * ([[probePairs]], [[query]], [[clusterStats]]) take nothing and
-  * heal nothing, by design: the index has no swap protocol to strand
-  * — writes are append-only and the rebalance is crash-ORDERED
-  * (promoted centroids land before member dirs move), so at every
-  * crash point a plain read sees a probeable index (worst case:
-  * degraded recall until the re-run), never a missing root. This is
-  * the family where "readers refuse to heal under a live lease" is
-  * satisfied vacuously — there is no reader-side healing to gate.
+  * Concurrency (r16 reader/writer audit): the index is a
+  * [[DurableRoot.leaseOnly]] root. MUTATIONS ([[appendAssigned]],
+  * [[rebalance]]) take its single-writer lease — concurrent appends
+  * sharing a vec_id would both pass the idempotence anti-join, and an
+  * append racing a rebalance's cluster-dir deletes would silently lose
+  * rows. READERS ([[probePairs]], [[query]], [[clusterStats]]) take
+  * nothing and heal nothing: the family declares no strand dirs and
+  * an empty heal, because writes are append-only and the rebalance is
+  * crash-ORDERED (promoted centroids land before member dirs move), so
+  * at every crash point a plain read sees a probeable index (worst
+  * case: degraded recall until the re-run), never a missing root.
   */
 object VectorIndex {
 
@@ -177,8 +175,6 @@ object VectorIndex {
   ): Int = {
     require(maxOverMedian >= 1.0, s"maxOverMedian must be >= 1, got $maxOverMedian")
     import spark.implicits._
-    val leaseFs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Single-writer fence (r16): a rebalance deletes whole cluster=
     // dirs before re-appending their members — racing a concurrent
     // append (or a second rebalance) it silently loses rows. The fence
@@ -187,8 +183,8 @@ object VectorIndex {
     // operator-scheduled single shots (crash runbook: lease_break,
     // then re-run — the crash-ordering below leaves the index
     // probeable and the re-run recomputes from surviving members).
-    Maintenance.withWriterLease(
-      leaseFs, indexPath, Maintenance.adhocToken("ivf-rebalance"), "VectorIndex.rebalance") {
+    DurableRoot.leaseOnly(spark, indexPath, "VectorIndex.rebalance")
+      .write(DurableRoot.adhocToken("ivf-rebalance")) {
     val stats = clusterStats(spark, indexPath).collect().map(r => (r.getLong(0), r.getLong(1)))
     if (stats.isEmpty) return 0
     val sorted = stats.map(_._2).sorted
@@ -285,7 +281,7 @@ object VectorIndex {
       .partitionBy("cluster")
       .parquet(s"$indexPath/assignments")
     over.length
-    } // withWriterLease
+    } // write
   }
 
   /** Append a batch of new vectors, assigned against the EXISTING
@@ -307,8 +303,6 @@ object VectorIndex {
     * away, so a replayed batch cannot double-append.
     */
   def appendAssigned(spark: SparkSession, assigned: DataFrame, indexPath: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Single-writer fence (r16), same contract as every durable family:
     // two concurrent appends that share a vec_id both pass the
     // anti-join and double-index it, and an append racing a rebalance
@@ -317,7 +311,8 @@ object VectorIndex {
     // applied id (idempotence is the anti-join), so a crashed append's
     // retry simply re-runs — but it must lease_break first, which is
     // the loud path we want for a crash mid-append.
-    Maintenance.withWriterLease(fs, indexPath, Maintenance.adhocToken("ivf-append"), "VectorIndex.appendAssigned") {
+    DurableRoot.leaseOnly(spark, indexPath, "VectorIndex.appendAssigned")
+      .write(DurableRoot.adhocToken("ivf-append")) {
       val existing = spark.read.parquet(s"$indexPath/assignments").select("vec_id")
       assigned
         .select(col("vec_id"), col("emb"), col("nrm"), col("cluster"))

@@ -2410,13 +2410,13 @@ object PipelineRunner {
       )
     },
     verb("lease_report", "who holds a state's writer lease")(req("state", "DIR")) { (opts, spark) =>
-      // Read-only writer-lease inspection (Maintenance.leaseReport):
+      // Read-only writer-lease inspection (DurableRoot.leaseReport):
       // the first half of the mechanical runbook for a crashed
       // holder. Prints the holder token + host/pid/created-at (with
       // age) so an operator can check whether the holder process is
       // actually dead before lease_break.
       val state = opts("state")
-      graft.operators.Maintenance.leaseReport(spark, state) match {
+      graft.operators.DurableRoot.leaseReport(spark, state) match {
         case None => println(s"[lease_report] no writer lease on $state")
         case Some((token, fields)) =>
           val age = fields.get("created_at").flatMap(_.toLongOption)
@@ -2433,13 +2433,13 @@ object PipelineRunner {
     verb("lease_break", "remove a dead holder's writer lease older than --min_age_sec")(
       req("state", "DIR"), opt("min_age_sec", "SEC", "900")) { (opts, spark) =>
       // Loud, audited removal of a DEAD holder's writer lease
-      // (Maintenance.leaseBreak) — refuses while the lease is
+      // (DurableRoot.leaseBreak) — refuses while the lease is
       // fresher than --min_age_sec (default 900: a fresh lease is
       // far more likely a live writer than a crash, and breaking a
       // live writer re-opens the lost-batch race the fence closes).
       val state = opts("state")
       val minAge = opts("min_age_sec").toLong * 1000L
-      val (token, fields) = graft.operators.Maintenance.leaseBreak(spark, state, minAge)
+      val (token, fields) = graft.operators.DurableRoot.leaseBreak(spark, state, minAge)
       println(
         s"[lease_break] BROKE writer lease '$token' on $state " +
           s"(host=${fields.getOrElse("host", "unknown")}, " +
@@ -2896,9 +2896,9 @@ object PipelineRunner {
       // IVF assignments layout, batch-keyed telemetry, ...):
       // Maintenance.compactPartitioned rewrites every dir above the
       // file-count threshold in one job and swaps dirs in two
-      // renames each (crash-healed on the next run's entry; fenced
-      // by a `<path>.__writer` lease since r16). NOTE the lease is
-      // on the GIVEN path — when the dir belongs to a composite
+      // renames each (a DurableRoot.compacted root: crash-healed on
+      // the next run's entry, fenced by its writer lease). NOTE the
+      // lease is on the GIVEN path — when the dir belongs to a composite
       // state whose ingest fences on its own root (the IVF index
       // leases `<index>`, not `<index>/assignments`), schedule this
       // verb in the ingest's quiet window or use the owner's

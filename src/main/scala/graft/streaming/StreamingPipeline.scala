@@ -331,18 +331,16 @@ object StreamingPipeline {
       batchId: Long,
       maxIndexParts: Int = 64
   ): Long = {
-    val leaseFs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = graft.operators.DurableRoot.leaseOnly(spark, indexPath, "dedupIngestBatch")
     // Single-writer fence (r16): two concurrent drains on one index
     // both probe pre-batch state and both accept a shared duplicate —
     // the silent double-accept the operator exists to prevent. Token
     // keyed by the batch id: foreachBatch's crash replay carries the
     // same id and re-enters its own stale lease (the batch-keyed
     // writes below are overwrite-convergent under it).
-    graft.operators.Maintenance.withBatchWriterLease(
-      leaseFs, indexPath, batchId, "dedupIngestBatch") {
+    root.write(graft.operators.DurableRoot.leaseToken(Some(batchId))) {
     val hashed = batch.withColumn("__h", md5(col("text")))
-    val indexExists = leaseFs.exists(new org.apache.hadoop.fs.Path(indexPath))
+    val indexExists = root.fs.exists(new org.apache.hadoop.fs.Path(indexPath))
     val fresh =
       if (indexExists) {
         val prior = spark.read
@@ -386,7 +384,7 @@ object StreamingPipeline {
     }
     if (maxIndexParts > 0) compactIngestIndex(spark, indexPath, batchId, maxIndexParts)
     obs.get("n").asInstanceOf[Long]
-    } // withBatchWriterLease
+    } // root.write
   }
 
   /** Size-TIERED self-compaction for the batch-keyed ingest index:

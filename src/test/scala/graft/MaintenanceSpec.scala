@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Maintenance
+import graft.operators.{DurableRoot, Maintenance}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
@@ -1546,20 +1546,20 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("lease runbook: body carries host/pid/created-at; report reads r16 and r15 formats") {
-    val body = Maintenance.leaseBody("fold:7")
-    assert(Maintenance.leaseTokenOf(body) == "fold:7")
-    val f = Maintenance.leaseFields(body)
+    val body = DurableRoot.leaseBody("fold:7")
+    assert(DurableRoot.leaseTokenOf(body) == "fold:7")
+    val f = DurableRoot.leaseFields(body)
     assert(f.contains("host") && f.contains("pid") && f.contains("created_at"), f.toString)
     assert(f("pid").toLongOption.nonEmpty && f("created_at").toLongOption.nonEmpty)
 
     val state = Files.createTempDirectory("graft-lease-report").toString + "/state"
-    assert(Maintenance.leaseReport(spark, state).isEmpty)
+    assert(DurableRoot.leaseReport(spark, state).isEmpty)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(state + ".__writer"), body)
-    val Some((token, fields)) = Maintenance.leaseReport(spark, state)
+    val Some((token, fields)) = DurableRoot.leaseReport(spark, state)
     assert(token == "fold:7" && fields("pid") == f("pid"))
     // r15 format (bare token): token parses, fields report empty
     java.nio.file.Files.writeString(java.nio.file.Paths.get(state + ".__writer"), "fold:9")
-    val Some((t15, f15)) = Maintenance.leaseReport(spark, state)
+    val Some((t15, f15)) = DurableRoot.leaseReport(spark, state)
     assert(t15 == "fold:9" && f15.isEmpty)
   }
 
@@ -1567,20 +1567,20 @@ class MaintenanceSpec extends AnyFunSuite {
     val state = Files.createTempDirectory("graft-lease-break").toString + "/state"
     val lease = java.nio.file.Paths.get(state + ".__writer")
     // fresh lease (just created): refused under the default threshold
-    java.nio.file.Files.writeString(lease, Maintenance.leaseBody("fold:1"))
-    val e = intercept[IllegalArgumentException](Maintenance.leaseBreak(spark, state))
+    java.nio.file.Files.writeString(lease, DurableRoot.leaseBody("fold:1"))
+    val e = intercept[IllegalArgumentException](DurableRoot.leaseBreak(spark, state))
     assert(e.getMessage.contains("LIVE writer"), e.getMessage)
     assert(java.nio.file.Files.exists(lease), "a refused break must not touch the lease")
     // the same lease under a zero threshold (operator confirmed the crash): broken
-    val (token, fields) = Maintenance.leaseBreak(spark, state, minAgeMs = 0L)
+    val (token, fields) = DurableRoot.leaseBreak(spark, state, minAgeMs = 0L)
     assert(token == "fold:1" && fields.contains("pid"))
     assert(!java.nio.file.Files.exists(lease))
     // r15-format lease (no created-at): treated as old — breakable
     java.nio.file.Files.writeString(lease, "fold:2")
-    assert(Maintenance.leaseBreak(spark, state)._1 == "fold:2")
+    assert(DurableRoot.leaseBreak(spark, state)._1 == "fold:2")
     assert(!java.nio.file.Files.exists(lease))
     // no lease at all: loud
-    val e2 = intercept[IllegalArgumentException](Maintenance.leaseBreak(spark, state))
+    val e2 = intercept[IllegalArgumentException](DurableRoot.leaseBreak(spark, state))
     assert(e2.getMessage.contains("no writer lease"), e2.getMessage)
   }
 
@@ -1589,7 +1589,7 @@ class MaintenanceSpec extends AnyFunSuite {
     val state = Files.createTempDirectory("graft-lease-msg").toString + "/rollup.parquet"
     val b = Seq(("a", 1L)).toDF("k", "v")
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(state + ".__writer"), Maintenance.leaseBody("fold:1"))
+      java.nio.file.Paths.get(state + ".__writer"), DurableRoot.leaseBody("fold:1"))
     val e = intercept[IllegalArgumentException] {
       Maintenance.refreshAggregate(spark, b, Seq("k"), Seq("v"), state, appliedId = Some(2L))
     }
@@ -1620,7 +1620,7 @@ class MaintenanceSpec extends AnyFunSuite {
     // unique per attempt, so it refuses loudly
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(state + ".__writer"),
-      Maintenance.leaseBody("adhoc:fold:11111111-2222-3333-4444-555555555555"))
+      DurableRoot.leaseBody("adhoc:fold:11111111-2222-3333-4444-555555555555"))
     val e = intercept[IllegalArgumentException] {
       Maintenance.refreshAggregate(spark, b, Seq("k"), Seq("v"), state, appliedId = None)
     }
@@ -1645,15 +1645,57 @@ class MaintenanceSpec extends AnyFunSuite {
     // the same strand under a LIVE lease: refuse (writer may be mid-swap)
     mv(state, s"$state.__refresh_old")
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$state.__writer"), Maintenance.leaseBody("fold:3"))
+      java.nio.file.Paths.get(s"$state.__writer"), DurableRoot.leaseBody("fold:3"))
     val e = intercept[IllegalArgumentException](Maintenance.spanStateView(spark, state))
     assert(e.getMessage.contains("refusing to heal under a lease"), e.getMessage)
     java.nio.file.Files.delete(java.nio.file.Paths.get(s"$state.__writer"))
     assert(Maintenance.spanStateView(spark, state).count() == n)
     // live lease + nothing stranded: plain reads proceed
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$state.__writer"), Maintenance.leaseBody("fold:4"))
+      java.nio.file.Paths.get(s"$state.__writer"), DurableRoot.leaseBody("fold:4"))
     assert(Maintenance.spanStateView(spark, state).count() == n)
+    // the sizing report reads the same root through the same heal: a
+    // strand it skipped read as "no _buckets pin" (or, for a bucket
+    // stranded in .__pfold_old, silently dropped out of the totals)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$state.__writer"))
+    val report = Maintenance.spanStateReport(spark, state)
+    mv(state, s"$state.__refresh_old")
+    assert(Maintenance.spanStateReport(spark, state) == report, "report must heal the strand")
+    mv(state, s"$state.__refresh_old")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$state.__writer"), DurableRoot.leaseBody("fold:5"))
+    val e2 = intercept[IllegalArgumentException](Maintenance.spanStateReport(spark, state))
+    assert(e2.getMessage.contains("refusing to heal under a lease"), e2.getMessage)
+  }
+
+  test("cardinalityEstimates heals a crashed swap; refuses to heal under a live lease") {
+    import spark.implicits._
+    val state = Files.createTempDirectory("graft-card-readlease").toString + "/card"
+    Maintenance.refreshCardinality(
+      spark, Seq(("a", 1L), ("a", 2L), ("b", 1L)).toDF("k", "t"), Seq("k"), "t", state, Some(1L))
+    def estimates = Maintenance.cardinalityEstimates(spark, state)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    val expected = Set(("a", 2L, 2L), ("b", 1L, 1L))
+    assert(estimates == expected)
+    def mv(a: String, b: String): Unit =
+      java.nio.file.Files.move(java.nio.file.Paths.get(a), java.nio.file.Paths.get(b))
+    // a refreshCardinality crash between the swap's two renames strands
+    // the state as .__refresh_old: the reader heals it when no lease
+    mv(state, s"$state.__refresh_old")
+    assert(estimates == expected, "reader must heal the strand")
+    assert(new java.io.File(state).exists() && !new java.io.File(s"$state.__refresh_old").exists())
+    // the same strand under a LIVE lease: refuse (writer may be mid-swap)
+    mv(state, s"$state.__refresh_old")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$state.__writer"), DurableRoot.leaseBody("fold:2"))
+    val e = intercept[IllegalArgumentException](Maintenance.cardinalityEstimates(spark, state))
+    assert(e.getMessage.contains("refusing to heal under a lease"), e.getMessage)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$state.__writer"))
+    assert(estimates == expected)
+    // live lease + nothing stranded: plain reads proceed
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$state.__writer"), DurableRoot.leaseBody("fold:3"))
+    assert(estimates == expected)
   }
 
   test("dedup index writers are fenced: adhoc refusal, batch-id re-entry on replay") {
@@ -1668,7 +1710,7 @@ class MaintenanceSpec extends AnyFunSuite {
     // two concurrent batches sharing a content hash would BOTH pass the
     // index probe and both land in the corpus
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(index + ".__writer"), Maintenance.leaseBody("adhoc:dedup:x"))
+      java.nio.file.Paths.get(index + ".__writer"), DurableRoot.leaseBody("adhoc:dedup:x"))
     val e = intercept[IllegalArgumentException](
       Maintenance.incrementalDedup(spark, b, "doc_id", "text", index))
     assert(e.getMessage.contains("writer lease"), e.getMessage)
@@ -1678,14 +1720,14 @@ class MaintenanceSpec extends AnyFunSuite {
     val corpus = s"$root/corpus"
     val sIndex = s"$root/singest"
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sIndex + ".__writer"), Maintenance.leaseBody("fold:0"))
+      java.nio.file.Paths.get(sIndex + ".__writer"), DurableRoot.leaseBody("fold:0"))
     val n = graft.streaming.StreamingPipeline
       .dedupIngestBatch(spark, b, corpus, sIndex, batchId = 0L)
     assert(n == 1L, "same-id replay must re-enter and complete")
     assert(!new java.io.File(sIndex + ".__writer").exists(), "lease released")
     // a DIFFERENT batch id against a live lease refuses
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sIndex + ".__writer"), Maintenance.leaseBody("fold:7"))
+      java.nio.file.Paths.get(sIndex + ".__writer"), DurableRoot.leaseBody("fold:7"))
     val e2 = intercept[IllegalArgumentException](
       graft.streaming.StreamingPipeline
         .dedupIngestBatch(spark, b, corpus, sIndex, batchId = 1L))
@@ -1697,7 +1739,7 @@ class MaintenanceSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-lease-compact").toString + "/data.parquet"
     Seq(("a", 1L), ("b", 2L)).toDF("k", "v").repartition(4).write.parquet(dir)
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir + ".__writer"), Maintenance.leaseBody("fold:3"))
+      java.nio.file.Paths.get(dir + ".__writer"), DurableRoot.leaseBody("fold:3"))
     val e = intercept[IllegalArgumentException](Maintenance.compact(spark, dir))
     assert(e.getMessage.contains("writer lease"), e.getMessage)
     java.nio.file.Files.delete(java.nio.file.Paths.get(dir + ".__writer"))

@@ -75,7 +75,7 @@ class NearDupIndexSpec extends AnyFunSuite {
     // doc_id would both pass the anti-join and double-index it)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(index + ".__writer"),
-      graft.operators.Maintenance.leaseBody("adhoc:neardup:someone"))
+      graft.operators.DurableRoot.leaseBody("adhoc:neardup:someone"))
     val e = intercept[IllegalArgumentException](NearDupIndex.update(spark, batch, index))
     assert(e.getMessage.contains("writer lease"), e.getMessage)
     java.nio.file.Files.delete(java.nio.file.Paths.get(index + ".__writer"))
@@ -83,7 +83,7 @@ class NearDupIndexSpec extends AnyFunSuite {
     // batch's replay re-enters the stale lease it left behind
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(index + ".__writer"),
-      graft.operators.Maintenance.leaseBody("fold:4"))
+      graft.operators.DurableRoot.leaseBody("fold:4"))
     NearDupIndex.update(spark, batch, index, appliedId = Some(4L)).collect()
     assert(!new java.io.File(index + ".__writer").exists())
     assert(spark.read.parquet(index).count() == 1L, "replay stays idempotent under the lease")

@@ -1419,7 +1419,7 @@ class PreferenceSpec extends AnyFunSuite {
     mv(state, s"$state.__refresh_old")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$state.__writer"),
-      graft.operators.Maintenance.leaseBody("fold:7"))
+      graft.operators.DurableRoot.leaseBody("fold:7"))
     val e = intercept[IllegalArgumentException](Preference.pairsFromState(spark, state))
     assert(e.getMessage.contains("refusing to heal under a lease"), e.getMessage)
     // lease cleared (writer finished or lease_break): the reader heals
@@ -1429,7 +1429,7 @@ class PreferenceSpec extends AnyFunSuite {
     // are atomic — a concurrent read sees a complete state either way)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$state.__writer"),
-      graft.operators.Maintenance.leaseBody("fold:8"))
+      graft.operators.DurableRoot.leaseBody("fold:8"))
     assert(Preference.pairsFromState(spark, state).count() == 1)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
@@ -1445,7 +1445,7 @@ class PreferenceSpec extends AnyFunSuite {
     mv(state, s"$state.__refresh_old")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$state.__writer"),
-      graft.operators.Maintenance.leaseBody("fold:7"))
+      graft.operators.DurableRoot.leaseBody("fold:7"))
     val e = intercept[IllegalArgumentException](Preference.winMatrixFromState(spark, state))
     assert(e.getMessage.contains("refusing to heal under a lease"), e.getMessage)
     java.nio.file.Files.delete(java.nio.file.Paths.get(s"$state.__writer"))

@@ -147,19 +147,26 @@ class SessionContractSpec extends AnyFunSuite {
     if (!child.waitFor(180, TimeUnit.SECONDS)) child.destroyForcibly().waitFor()
     def childLog = new String(Files.readAllBytes(log), "UTF-8").linesIterator.toSeq.takeRight(40).mkString("\n")
     assert(child.exitValue() == 0, s"the entry point failed:\n$childLog")
-    // The listing-slot cap follows the chosen master.
-    assert(Files.readString(probe) == "local[3] 3", s"session conf of the entry point:\n$childLog")
+    // The listing-slot cap and both shuffle widths follow the chosen
+    // master, not SPARK_GRAFT_CPUS.
+    assert(Files.readString(probe) == "local[3] 3 3 24", s"session conf of the entry point:\n$childLog")
   }
 }
 
-/** Writes the master and listing-slot cap its `SparkContext` starts with
-  * to the file named by the [[SubmitMasterProbe.OutProp]] property
-  * (installed through `spark.extraListeners`).
+/** Writes the master, listing-slot cap, shuffle partitions and AQE
+  * initial partition count its `SparkContext` starts with to the file
+  * named by the [[SubmitMasterProbe.OutProp]] property (installed
+  * through `spark.extraListeners`).
   */
 class SubmitMasterProbe(conf: SparkConf) extends SparkListener {
   Files.writeString(
     Paths.get(sys.props(SubmitMasterProbe.OutProp)),
-    s"${conf.get("spark.master")} ${conf.get("spark.sql.sources.parallelPartitionDiscovery.parallelism")}"
+    Seq(
+      "spark.master",
+      "spark.sql.sources.parallelPartitionDiscovery.parallelism",
+      "spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    ).map(conf.get).mkString(" ")
   )
 }
 

@@ -12,8 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * in `StreamingPipeline.drain`, every command-line flag is parsed
   * by `graft.pipeline.Cli`, every session is built on
   * `GraftSession`'s production conf, every native function is
-  * installed by `GraftExtensions`, and every CLI read schema is
-  * declared in `graft.schemas.Schemas`.
+  * installed by `GraftExtensions`, every CLI read schema is
+  * declared in `graft.schemas.Schemas`, and every durable state root
+  * takes its writer lease and reader heal through
+  * `graft.operators.DurableRoot`.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -86,6 +88,15 @@ class SourceGuardSpec extends AnyFunSuite {
       (name, pat) <- banned if pat.findFirstIn(text).isDefined
     } yield s"$file: $name"
     assert(hits.isEmpty, s"list the function in GraftExtensions; GraftSession installs it:\n${hits.mkString("\n")}")
+  }
+
+  test("the writer lease and the reader heal live only in DurableRoot") {
+    val durable = "graft/operators/DurableRoot.scala"
+    assert(sources.toMap.apply(durable).contains(".__writer"), s"$durable no longer names the lease file")
+    val lease = sources.collect { case (file, text) if file != durable && text.contains(".__writer") => s"$file: .__writer" }
+    val retired = "\\b(healWholeSwapForRead|healCompactForRead|healSpanStateForRead|withWriterLease)\\b".r
+    val names = sources.flatMap { case (file, text) => retired.findAllIn(text).map(n => s"$file: $n") }
+    assert(lease.isEmpty && names.isEmpty, s"declare the state family in DurableRoot and call write/healForRead:\n${(lease ++ names).mkString("\n")}")
   }
 
   test("PipelineRunner's verbs declare no inline StructType; read schemas live in Schemas") {

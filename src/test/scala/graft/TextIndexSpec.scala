@@ -143,7 +143,7 @@ class TextIndexSpec extends AnyFunSuite {
     mv(s"$idx/docs", s"$idx/docs.__compact_old")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$idx.__writer"),
-      graft.operators.Maintenance.leaseBody("adhoc:tidx-compact:x"))
+      graft.operators.DurableRoot.leaseBody("adhoc:tidx-compact:x"))
     val e = intercept[IllegalArgumentException](TextIndex.search(spark, idx, Seq("the")))
     assert(e.getMessage.contains("refusing to heal under a lease"), e.getMessage)
     java.nio.file.Files.delete(java.nio.file.Paths.get(s"$idx.__writer"))
@@ -155,7 +155,7 @@ class TextIndexSpec extends AnyFunSuite {
     val idx = freshIndex()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$idx.__writer"),
-      graft.operators.Maintenance.leaseBody("adhoc:tidx-append:someone-else"))
+      graft.operators.DurableRoot.leaseBody("adhoc:tidx-append:someone-else"))
     val e = intercept[IllegalArgumentException](
       TextIndex.append(spark, Seq((920000L, "hello world")).toDF("doc_id", "text"), idx))
     assert(e.getMessage.contains("writer lease"), e.getMessage)

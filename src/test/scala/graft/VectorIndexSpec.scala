@@ -443,7 +443,7 @@ class VectorIndexSpec extends AnyFunSuite {
     // rebalance's cluster-dir deletes silently loses rows
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$idx.__writer"),
-      graft.operators.Maintenance.leaseBody("adhoc:ivf-append:someone-else"))
+      graft.operators.DurableRoot.leaseBody("adhoc:ivf-append:someone-else"))
     val e = intercept[IllegalArgumentException](
       VectorIndex.append(spark, Seq((100002L, donor)).toDF("vec_id", "emb"), idx))
     assert(e.getMessage.contains("writer lease"), e.getMessage)
