@@ -358,7 +358,7 @@ object Maintenance {
       .partitionBy(partCol)
       .parquet(tmpRoot.toString)
     fs.mkdirs(oldRoot)
-    forEachBucketParallel(
+    Overlap.map(
       fs.listStatus(tmpRoot).filter(st => st.isDirectory && st.getPath.getName.contains("=")).map(_.getPath).toIndexedSeq
     ) { tmpDir =>
       val live = new HPath(root, tmpDir.getName)
@@ -619,7 +619,7 @@ object Maintenance {
               // touched bucket — already the probe's own cost scale —
               // issued on the bounded pool so wall-clock doesn't go
               // linear in touched buckets at round-trip latency.
-              val paths = mapBucketParallel(hps.map(hp => s"$statePath/hp=$hp")) { p =>
+              val paths = Overlap.map(hps.map(hp => s"$statePath/hp=$hp")) { p =>
                 val hp = new HPath(p)
                 metaInc()
                 val keep = fs.exists(hp) && {
@@ -1250,44 +1250,13 @@ object Maintenance {
 
   private def metaInc(): Unit = SpanStateMeta.inc()
 
-  /** Run independent per-bucket filesystem work on a bounded pool: the
-    * per-batch driver fan-out is O(touched buckets) CALLS by design,
-    * but issuing them serially makes wall-clock linear in bucket count
-    * at driver-loop latency — on an object store, thousands of serial
-    * round-trips. Hadoop `FileSystem` instances are thread-safe;
-    * per-bucket operations touch disjoint paths, so interleaving
-    * preserves the crash-protocol semantics (any prefix of buckets
-    * applied, in any order, converges on replay). Exceptions propagate
-    * unwrapped so callers see the original IO failure.
-    */
-  private def mapBucketParallel[A, B](items: Seq[A], threads: Int = 16)(f: A => B): Seq[B] =
-    if (items.length <= 1) items.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(threads, items.length))
-      try
-        items
-          .map { a =>
-            pool.submit(new java.util.concurrent.Callable[B] { def call(): B = f(a) })
-          }
-          .map { fut =>
-            try fut.get()
-            catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-          }
-      finally pool.shutdown()
-    }
-
-  private def forEachBucketParallel[A](items: Seq[A], threads: Int = 16)(f: A => Unit): Unit = {
-    mapBucketParallel(items, threads)(f)
-    ()
-  }
-
   /** Seed each tmp partition's `_segs` manifest (one entry: its single
     * fresh segment) so a full rewrite swaps in manifest-complete.
     * O(buckets) summary calls — a full-rewrite-schedule cost, never a
     * per-batch one.
     */
   private def writeFreshManifests(fs: HFs, tmp: HPath, segName: String): Unit =
-    forEachBucketParallel(listHpDirs(fs, tmp)) { hpDir =>
+    Overlap.map(listHpDirs(fs, tmp)) { hpDir =>
       metaInc()
       val b = fs.getContentSummary(new HPath(hpDir, s"seg=$segName")).getLength
       writeSegManifest(fs, hpDir, Map(segName -> b))
@@ -1380,7 +1349,7 @@ object Maintenance {
     // Per plan: (hp, manifest entries surviving the merge, victims
     // (name, bytes) that exist on disk, next c-index). Planned on the
     // bounded pool — per-bucket manifest reads are independent.
-    val plans = mapBucketParallel(dirty) { hp =>
+    val plans = Overlap.map(dirty) { hp =>
       val hpDir = new HPath(state, s"hp=$hp")
       val sizes = sizesByHp.getOrElse(hp, segSizesOf(fs, hpDir))
       if (sizes.size <= maxSegments) None
@@ -1436,7 +1405,7 @@ object Maintenance {
       .partitionBy("hp", "seg")
       .mode("overwrite")
       .parquet(tmpC.toString)
-    forEachBucketParallel(listHpDirs(fs, tmpC)) { hpDir =>
+    Overlap.map(listHpDirs(fs, tmpC)) { hpDir =>
       val stHp = new HPath(state, hpDir.getName)
       val segDst = new HPath(stHp, s"seg=$segName")
       metaInc()
@@ -1449,7 +1418,7 @@ object Maintenance {
       }
     }
     deleteOrFail(fs, tmpC)
-    forEachBucketParallel(victims)(v => deleteOrFail(fs, v))
+    Overlap.map(victims)(v => deleteOrFail(fs, v))
   }
 
   /** The semantic content of a span-hash state dir — one row per hash
@@ -1590,7 +1559,7 @@ object Maintenance {
       s"$statePath is not a partitioned span state (no _buckets pin)"
     )
     val nb = stateBucketsOf(fs, fsPath, 64)
-    val perBucket = mapBucketParallel(listHpDirs(fs, fsPath)) { hpDir =>
+    val perBucket = Overlap.map(listHpDirs(fs, fsPath)) { hpDir =>
       val sizes = segSizesOf(fs, hpDir)
       (sizes.values.sum, sizes.size)
     }
@@ -1737,7 +1706,7 @@ object Maintenance {
       val sizesByHp =
         new java.util.concurrent.ConcurrentHashMap[Int, Map[String, Long]]()
       beforeCommit()
-      forEachBucketParallel(listHpDirs(fs, tmpA)) { hpDir =>
+      Overlap.map(listHpDirs(fs, tmpA)) { hpDir =>
         val srcSeg = new HPath(hpDir, s"seg=$segName")
         metaInc()
         val segBytes = fs.getContentSummary(srcSeg).getLength

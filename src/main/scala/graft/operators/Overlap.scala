@@ -1,9 +1,13 @@
 package graft.operators
 
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+
 /** Driver-thread overlap of two independent pieces of Spark work: the
   * async sibling's jobs back-fill executors the sync sibling's small
   * sequential jobs leave idle (the scheduler runs concurrent jobs FIFO,
-  * so the sync side keeps priority).
+  * so the sync side keeps priority). [[map]] is the N-way form for
+  * per-bucket filesystem work; it is the only other place in `src/main`
+  * that starts driver threads.
   *
   * The async sibling runs on a FRESH daemon thread per call. Spark's
   * local properties are inheritable thread-locals (cloned at thread
@@ -68,4 +72,51 @@ private[graft] object Overlap {
     sibling.await()
     result.fold(e => throw e, a => (a, b))
   }
+
+  /** Thread bound of the N-way form ([[map]]). */
+  private val MaxThreads = 16
+
+  /** The N-way form: runs `f` over `items` on at most [[MaxThreads]]
+    * fresh daemon threads (created by the caller's thread, so they
+    * inherit its Spark local properties) and returns the results in
+    * item order. Meant for independent per-bucket filesystem work: a
+    * per-batch driver fan-out of O(buckets) round-trips, which issued
+    * serially makes wall-clock linear in bucket count at driver-loop
+    * latency. Hadoop `FileSystem` instances are thread-safe, and
+    * per-bucket operations on disjoint paths may interleave in any
+    * order without changing a crash protocol's outcome.
+    *
+    * Every item is settled before the call returns or rethrows: on the
+    * first failure (in item order, rethrown unwrapped) the items not
+    * yet started are cancelled and the running ones joined, so no
+    * bucket op outlives its caller's lease or scratch-pin scope.
+    */
+  def map[A, B](items: Seq[A])(f: A => B): Seq[B] =
+    if (items.length <= 1) items.map(f)
+    else {
+      val pool = Executors.newFixedThreadPool(
+        math.min(MaxThreads, items.length),
+        (r: Runnable) => {
+          val t = new Thread(r, s"graft-overlap-${ids.incrementAndGet()}")
+          t.setDaemon(true)
+          t
+        }
+      )
+      try {
+        val tasks = items.map(a => pool.submit(new Callable[B] { def call(): B = f(a) }))
+        try tasks.map(t => try t.get() catch { case e: ExecutionException => throw e.getCause })
+        catch {
+          case e: Throwable =>
+            tasks.foreach(_.cancel(false))
+            throw e
+        }
+      } finally {
+        pool.shutdown()
+        var interrupted = false
+        while (!pool.isTerminated)
+          try pool.awaitTermination(1, TimeUnit.MINUTES)
+          catch { case _: InterruptedException => interrupted = true }
+        if (interrupted) Thread.currentThread().interrupt()
+      }
+    }
 }

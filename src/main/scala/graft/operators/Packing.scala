@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.hadoop.fs.{Path => HPath}
 
 /** Sequence packing (GPT-style concat-then-chunk) as a first-class
@@ -38,7 +41,7 @@ object Packing {
       nShards: Int,
       base: Long = 0L
   ): DataFrame =
-    layoutFrom(df, idCol, size(split(col(textCol), "\\s+")).cast("long"), nShards, base)
+    layoutOf(df, idCol, tokens(textCol), None, nShards, Map(None -> base))
 
   /** [[layout]] with an EXPLICIT per-doc token count instead of the
     * whitespace count of a text column — the bridge from
@@ -55,78 +58,7 @@ object Packing {
       nShards: Int,
       base: Long = 0L
   ): DataFrame =
-    layoutFrom(df, idCol, col(weightCol).cast("long"), nShards, base)
-
-  private def layoutFrom(
-      df: DataFrame,
-      idCol: String,
-      nToks: Column,
-      nShards: Int,
-      base: Long
-  ): DataFrame = {
-    val spark = df.sparkSession
-    val prepared = df
-      .select(
-        col(idCol),
-        nToks.as("n_toks"),
-        h28(concat(lit("gs_"), col(idCol).cast("string"))).as("h")
-      )
-      .withColumn("shard", (col("h") % nShards).cast("int"))
-    // ROWS frame, not the default RANGE: RANGE gives window PEERS
-    // (equal (h, id)) one shared cum, so a duplicated id would produce
-    // overlapping start/end offsets — a silently corrupt manifest. With
-    // ROWS every row gets its own running total, and the duplicate-id
-    // precondition is enforced loudly below instead.
-    val w = Window
-      .partitionBy(col("shard"))
-      .orderBy(col("h"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // Pinned (Vocab.withIds' rule): the totals collect below and the
-    // caller's final action otherwise EACH execute the upstream —
-    // token counting / BPE metering / render chains for the weighted
-    // callers — plus the shard exchange and the running-sum window,
-    // twice per layout. The pin is slim metadata only (id, n_toks, h,
-    // shard, cum — the text never enters a layout), so one block-
-    // manager write buys the second full pass back at any scale.
-    val withCum = prepared.withColumn("cum", sum(col("n_toks")).over(w)).localCheckpoint()
-    // Pass 2: per-shard totals → driver prefix → broadcast offsets.
-    // Bounded collect: one row per shard (8 at test sf, thousands at
-    // scale — a few KB of longs). The same agg carries the unique-id
-    // audit (rows vs distinct ids per shard) so the interlock costs no
-    // extra job.
-    val totRows = withCum
-      .groupBy(col("shard"))
-      .agg(
-        max(col("cum")).as("tot"),
-        count(lit(1)).as("n"),
-        countDistinct(col(idCol)).as("nd")
-      )
-      .collect()
-    val dupShards = totRows.filter(r => r.getLong(2) != r.getLong(3)).map(_.getInt(0))
-    require(
-      dupShards.isEmpty,
-      s"duplicate $idCol values in batch (shards ${dupShards.mkString(",")}): a packing " +
-        "layout requires unique document ids — re-key the batch (e.g. by (url, crawl_ts))"
-    )
-    val totals = totRows
-      .map(r => (r.getInt(0), r.getLong(1)))
-      .sortBy(_._1)
-    val offsets = totals
-      .scanLeft((0, base, base)) { case ((_, acc, _), (s, tot)) => (s, acc + tot, acc) }
-      .drop(1)
-      .map { case (s, _, off) => (s, off) }
-    import spark.implicits._
-    val offDf = broadcast(offsets.toSeq.toDF("shard", "shard_off"))
-    withCum
-      .join(offDf, Seq("shard"))
-      .select(
-        col(idCol),
-        col("shard"),
-        (col("shard_off") + col("cum") - col("n_toks")).as("start_tok"),
-        col("n_toks"),
-        (col("shard_off") + col("cum")).as("end_tok")
-      )
-  }
+    layoutOf(df, idCol, col(weightCol).cast("long"), None, nShards, Map(None -> base))
 
   /** Group-stratified layout: each `groupCol` value (a source/domain)
     * is its OWN token stream starting at offset 0 — the shape mixture
@@ -148,109 +80,136 @@ object Packing {
       maxGroups: Int = 10000,
       bases: Map[Option[String], Long] = Map.empty,
       weightCol: Option[String] = None
+  ): DataFrame =
+    layoutOf(df, idCol, tokens(textCol, weightCol), Some(groupCol), nShards, bases, maxGroups)
+
+  /** Per-doc token count: the weight column when given, else the
+    * whitespace token count of the text.
+    */
+  private def tokens(textCol: String, weightCol: Option[String] = None): Column =
+    weightCol.fold(size(split(col(textCol), "\\s+")).cast("long"))(w => col(w).cast("long"))
+
+  /** The one layout body. A global stream is the stratified stream
+    * with every row in one group: `groupCol = None` partitions by shard
+    * alone and keys its base as `None` in `bases` (the key a NULL group
+    * value also takes — its string form is absent).
+    */
+  private def layoutOf(
+      df: DataFrame,
+      idCol: String,
+      nToks: Column,
+      groupCol: Option[String],
+      nShards: Int,
+      bases: Map[Option[String], Long],
+      maxGroups: Int = 10000
   ): DataFrame = {
-    val spark = df.sparkSession
-    val nToks = weightCol
-      .map(w => col(w).cast("long"))
-      .getOrElse(size(split(col(textCol), "\\s+")).cast("long"))
-    val prepared = df
+    val keys = groupCol.toSeq :+ "shard"
+    val withShard = df
       .select(
-        col(idCol),
-        col(groupCol),
-        nToks.as("n_toks"),
-        h28(concat(lit("gs_"), col(idCol).cast("string"))).as("h")
+        (col(idCol) +: groupCol.toSeq.map(col)) ++ Seq(
+          nToks.as("n_toks"),
+          h28(concat(lit("gs_"), col(idCol).cast("string"))).as("h")
+        ): _*
       )
       .withColumn("shard", (col("h") % nShards).cast("int"))
-    // ROWS frame + unique-id audit: same contract as [[layout]]. NULL
-    // group keys are a real partition (DuckDB/SQL PARTITION BY keeps
-    // one), carried through the totals agg (groupBy keeps nulls) and
-    // re-matched with a null-safe join below.
+    // ROWS frame, not the default RANGE: RANGE gives window PEERS
+    // (equal (h, id)) one shared cum, so a duplicated id would produce
+    // overlapping start/end offsets — a silently corrupt manifest. With
+    // ROWS every row gets its own running total, and the duplicate-id
+    // precondition is enforced loudly below instead. NULL group keys
+    // are a real partition (DuckDB/SQL PARTITION BY keeps one), carried
+    // through the totals agg (groupBy keeps nulls) and re-matched with
+    // a null-safe join below.
     val w = Window
-      .partitionBy(col(groupCol), col("shard"))
+      .partitionBy(keys.map(col): _*)
       .orderBy(col("h"), col(idCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // Pinned for the same reason as [[layoutFrom]]: the totals take()
-    // and the final join otherwise each run the upstream + the
-    // (group, shard) window; the pinned rows are slim metadata.
-    val withCum = prepared.withColumn("cum", sum(col("n_toks")).over(w)).localCheckpoint()
-    // Cardinality interlock: the driver prefix collects groups × shards
-    // rows. That is MBs of longs for domain-grained group columns
-    // (dozens..thousands of sources), but a caller who passes a
-    // DOC-grained column (url, doc_id) would collect one row per doc ×
-    // shard — an unbounded driver OOM. `take(limit+1)` bounds what ever
-    // reaches the driver, so the misuse fails loudly instead.
-    val totLimit = maxGroups.toLong * nShards
-    require(totLimit <= Int.MaxValue, s"maxGroups × nShards overflows Int: $totLimit")
-    val totRows = withCum
-      .groupBy(col(groupCol), col("shard"))
+    // Pinned (Vocab.withIds' rule): the totals collect below and the
+    // caller's final action otherwise EACH execute the upstream —
+    // token counting / BPE metering / render chains for the weighted
+    // callers — plus the shard exchange and the running-sum window,
+    // twice per layout. The pin is slim metadata only (id, group,
+    // n_toks, h, shard, cum — the text never enters a layout), so one
+    // block-manager write buys the second full pass back at any scale.
+    val withCum = withShard.withColumn("cum", sum(col("n_toks")).over(w)).localCheckpoint()
+    // Pass 2: per-(group, shard) totals → driver prefix → broadcast
+    // offsets. The same agg carries the unique-id audit (rows vs
+    // distinct ids per key) so the interlock costs no extra job.
+    val totals = withCum
+      .groupBy(keys.map(col): _*)
       .agg(
         max(col("cum")).as("tot"),
         count(lit(1)).as("n"),
         countDistinct(col(idCol)).as("nd")
       )
-      .take(totLimit.toInt + 1)
+    val totRows = groupCol match {
+      // One row per shard (a few KB of longs at thousands of shards).
+      case None => totals.collect()
+      case Some(g) =>
+        // Cardinality interlock: the driver prefix collects groups ×
+        // shards rows. That is MBs of longs for domain-grained group
+        // columns (dozens..thousands of sources), but a caller who
+        // passes a DOC-grained column (url, doc_id) would collect one
+        // row per doc × shard — an unbounded driver OOM. `take(limit+1)`
+        // bounds what ever reaches the driver, so the misuse fails
+        // loudly instead.
+        val totLimit = maxGroups.toLong * nShards
+        require(totLimit <= Int.MaxValue, s"maxGroups × nShards overflows Int: $totLimit")
+        val rows = totals.take(totLimit.toInt + 1)
+        require(
+          rows.length <= totLimit,
+          s"layoutBy collected > $maxGroups distinct '$g' groups: the driver prefix is " +
+            s"O(groups × shards) and meant for domain-grained group columns (source, language, " +
+            s"dataset), not doc-grained ones (url, doc_id). Raise maxGroups only if the " +
+            s"cardinality is genuinely bounded."
+        )
+        rows
+    }
+    val nk = keys.length
+    // The first key is the group, or the shard for a global stream.
+    val dupKeys = totRows.filter(r => r.getLong(nk + 1) != r.getLong(nk + 2)).map(_.get(0))
     require(
-      totRows.length <= totLimit,
-      s"layoutBy collected > $maxGroups distinct '$groupCol' groups: the driver prefix is " +
-        s"O(groups × shards) and meant for domain-grained group columns (source, language, " +
-        s"dataset), not doc-grained ones (url, doc_id). Raise maxGroups only if the " +
-        s"cardinality is genuinely bounded."
+      dupKeys.isEmpty,
+      s"duplicate $idCol values in batch (${if (groupCol.isEmpty) "shards" else "groups"} " +
+        s"${dupKeys.mkString(",")}): a packing layout requires unique document ids — re-key the " +
+        "batch (e.g. by (url, crawl_ts))"
     )
-    val dupGroups = totRows.filter(r => r.getLong(3) != r.getLong(4)).map(_.get(0))
-    require(
-      dupGroups.isEmpty,
-      s"duplicate $idCol values in batch (groups ${dupGroups.mkString(",")}): a packing " +
-        "layout requires unique document ids — re-key the batch (e.g. by (url, crawl_ts))"
-    )
-    val totals = totRows
-      .map(r => (r.get(0), r.getInt(1), r.getLong(2)))
-      .toIndexedSeq
-    val offsets = totals
-      .groupBy(_._1)
+    // Per-group base: 0 for the batch form; the group's running total
+    // for the incremental form (packIngest). Keys are the group's string
+    // form (None = the global stream or the null group).
+    val offsets = totRows.toIndexedSeq
+      .groupBy(_.toSeq.take(nk - 1))
       .toIndexedSeq
       .flatMap { case (g, rows) =>
-        // Per-group base: 0 for the batch form; the group's running
-        // total for the incremental form (packIngestBy). Keys are the
-        // group's string form (None = null group).
-        val base = bases.getOrElse(Option(g).map(_.toString), 0L)
-        rows
-          .sortBy(_._2)
-          .scanLeft((g, 0, base, base)) { case ((_, _, acc, _), (_, s, tot)) => (g, s, acc + tot, acc) }
-          .drop(1)
-          .map { case (_, s, _, off) => (g, s, off) }
+        val sorted = rows.sortBy(_.getInt(nk - 1))
+        val base = bases.getOrElse(g.headOption.flatMap(Option(_)).map(_.toString), 0L)
+        sorted.zip(sorted.scanLeft(base)(_ + _.getLong(nk))).map { case (r, off) =>
+          Row.fromSeq(g :+ r.getInt(nk - 1) :+ off)
+        }
       }
-    import spark.implicits._
     val offDf = broadcast(
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(offsets.map(t => org.apache.spark.sql.Row(t._1, t._2, t._3)), 1),
-        org.apache.spark.sql.types.StructType(
-          Seq(
-            df.schema(groupCol).copy(name = groupCol),
-            org.apache.spark.sql.types.StructField("shard", org.apache.spark.sql.types.IntegerType),
-            org.apache.spark.sql.types.StructField("shard_off", org.apache.spark.sql.types.LongType)
-          )
-        )
+      df.sparkSession.createDataFrame(
+        offsets.asJava,
+        StructType(keys.map(withCum.schema(_)) :+ StructField("shard_off", LongType))
       )
     )
     // Null-safe equality (<=>) on the group key: a plain equi-join
     // never matches NULL = NULL, so null-keyed docs would silently
     // vanish from the layout while a SQL PARTITION BY keeps them.
+    val on = keys
+      .map(k => if (groupCol.contains(k)) withCum(k) <=> offDf(k) else withCum(k) === offDf(k))
+      .reduce(_ && _)
     withCum
-      .join(
-        offDf,
-        withCum(groupCol) <=> offDf(groupCol) && withCum("shard") === offDf("shard")
-      )
+      .join(offDf, on)
       .select(
-        withCum(idCol),
-        withCum(groupCol),
-        withCum("shard"),
-        (offDf("shard_off") + withCum("cum") - withCum("n_toks")).as("start_tok"),
-        withCum("n_toks"),
-        (offDf("shard_off") + withCum("cum")).as("end_tok")
+        (idCol +: keys).map(withCum(_)) ++ Seq(
+          (offDf("shard_off") + withCum("cum") - withCum("n_toks")).as("start_tok"),
+          withCum("n_toks"),
+          (offDf("shard_off") + withCum("cum")).as("end_tok")
+        ): _*
       )
   }
 
-  /** The packing manifest over a layout: pack range per doc. */
   /** Token-budget mixture selection — the "data recipe executor":
     * given per-domain token budgets (a tiny (groupCol, budget) table —
     * the mixture weights of a training recipe, broadcast), select each
@@ -376,15 +335,20 @@ object Packing {
           "CASE WHEN max_toks * n_pairs = 0 THEN 0L " +
             "ELSE (1000 * pad_waste) div (max_toks * n_pairs) END"))
 
-  def manifest(lay: DataFrame, idCol: String, budget: Long): DataFrame =
+  /** The packing manifest over a layout: pack range per doc, keeping
+    * the layout's `groupCols` (a stratified layout's domain column —
+    * its pack ids are domain-pure by construction).
+    */
+  def manifest(lay: DataFrame, idCol: String, budget: Long, groupCols: Seq[String] = Nil): DataFrame =
     lay
       .select(
-        col(idCol),
-        col("shard"),
-        col("start_tok"),
-        col("n_toks"),
-        expr(s"start_tok div $budget").as("first_pack"),
-        expr(s"(end_tok - 1) div $budget").as("last_pack")
+        (col(idCol) +: groupCols.map(col)) ++ Seq(
+          col("shard"),
+          col("start_tok"),
+          col("n_toks"),
+          expr(s"start_tok div $budget").as("first_pack"),
+          expr(s"(end_tok - 1) div $budget").as("last_pack")
+        ): _*
       )
       .withColumn("n_packs", col("last_pack") - col("first_pack") + 1)
 
@@ -417,27 +381,6 @@ object Packing {
         (col("start_tok") >= col("pstart")).cast("int").as("doc_start")
       )
 
-  /** Pack contamination audit (q131's library form): map contaminated
-    * DOCUMENT ids onto the EMITTED pack space — per pack, how many
-    * contaminated docs overlap it and how many of its positions they
-    * occupy. Pure manifest arithmetic: the contaminated-ids join
-    * (broadcast — the decontamination report is eval-set-sized) prunes
-    * BEFORE the only explode (the doc's `sequence(first_pack,
-    * last_pack)`), so the row volume is O(contam docs ×
-    * packs-per-doc) at any corpus size; no text is read. Output:
-    * (pack_id, n_contam_docs, n_contam_tokens) — only CONTAMINATED
-    * packs appear (absence = clean).
-    *
-    * STRATIFIED manifests ([[packIngestBy]]) number packs PER DOMAIN:
-    * pack 5 of one source and pack 5 of another are different packs,
-    * so auditing them by `pack_id` alone conflates domains (and a
-    * pack_id-keyed mask would retire every domain's pack 5). Pass the
-    * manifest's group column(s) as `groupCols` — the audit (and the
-    * [[retirePacks]] mask built from it) is then keyed by
-    * (group…, pack_id). The `retire_packs` verb interlocks this:
-    * a manifest carrying columns beyond the global-stream shape is
-    * refused unless `--group_col` names them.
-    */
   /** Pack PROVENANCE — per-pack attribution of document attributes
     * (source, license, language, …): for every (pack, attr values)
     * combination, how many documents with those attributes contribute
@@ -482,6 +425,27 @@ object Packing {
       )
   }
 
+  /** Pack contamination audit (q131's library form): map contaminated
+    * DOCUMENT ids onto the EMITTED pack space — per pack, how many
+    * contaminated docs overlap it and how many of its positions they
+    * occupy. Pure manifest arithmetic: the contaminated-ids join
+    * (broadcast — the decontamination report is eval-set-sized) prunes
+    * BEFORE the only explode (the doc's `sequence(first_pack,
+    * last_pack)`), so the row volume is O(contam docs ×
+    * packs-per-doc) at any corpus size; no text is read. Output:
+    * (pack_id, n_contam_docs, n_contam_tokens) — only CONTAMINATED
+    * packs appear (absence = clean).
+    *
+    * STRATIFIED manifests ([[packIngest]] with a `groupCol`) number packs PER DOMAIN:
+    * pack 5 of one source and pack 5 of another are different packs,
+    * so auditing them by `pack_id` alone conflates domains (and a
+    * pack_id-keyed mask would retire every domain's pack 5). Pass the
+    * manifest's group column(s) as `groupCols` — the audit (and the
+    * [[retirePacks]] mask built from it) is then keyed by
+    * (group…, pack_id). The `retire_packs` verb interlocks this:
+    * a manifest carrying columns beyond the global-stream shape is
+    * refused unless `--group_col` names them.
+    */
   def contamAudit(
       man: DataFrame,
       contamIds: DataFrame,
@@ -747,38 +711,6 @@ object Packing {
       )
   }
 
-  /** Incremental packing: lay out ONE batch after everything already
-    * packed, against a persistent offset state. Batch K's tokens start
-    * at the state's running total (batch-major stream order: the
-    * within-batch order is the shuffle order, batches append in
-    * arrival order), so already-emitted pack ids are immutable — a
-    * loader can consume pack k the moment `k < total_after/budget`.
-    *
-    * State = `stateDir/bases/applied_id=<id>/` parquet rows
-    * (applied_id, base, total_after) — O(1) rows per applied batch,
-    * bytes-tiny. Replay convergence: an appliedId that already has a
-    * base row REUSES it (recompute-identical manifest); one that
-    * doesn't derives base = max(total_after) over prior rows and then
-    * records itself. Both crash windows converge: manifest-written/
-    * base-lost replays derive the same base (the batch's own row is
-    * absent either way); base-written/manifest-lost replays read the
-    * recorded base. Single-applier discipline as the rest of the
-    * ingest family (one crawl loop owns a state).
-    *
-    * The state SELF-COMPACTS: past `compactEvery` per-batch dirs, all
-    * known rows (previous consolidation + every per-batch dir) are
-    * rewritten as one versioned `compact_v<n>` dir BEFORE the
-    * per-batch dirs and older versions are deleted. A base, once
-    * recorded, never changes, so every crash point leaves a superset
-    * of AGREEING rows — and the state read stays O(1) files however
-    * long the crawl runs. (Measured: without this, per-batch wall
-    * drifts up with crawl age from the base-file open fan-out alone —
-    * CurateStress pack mode.) Both layouts are read via EXPLICIT path
-    * lists (never a root glob), so they coexist without name games.
-    *
-    * Returns the batch's manifest (caller sinks it; the ingest CLI
-    * writes `out/pack_batch=<id>`).
-    */
   /** Pin the packing budget to a state/manifest dir as a `_budget`
     * sidecar: first writer records it, every later writer (and any
     * consumer passing an explicit budget) must agree — a mismatched
@@ -809,6 +741,53 @@ object Packing {
     Maintenance.readTextFile(fs, new HPath(root, "_budget")).map(_.trim.toLong)
   }
 
+  /** Incremental packing: lay out ONE batch after everything already
+    * packed, against a persistent offset state. Batch K's tokens start
+    * at the state's running total (batch-major stream order: the
+    * within-batch order is the shuffle order, batches append in
+    * arrival order), so already-emitted pack ids are immutable — a
+    * loader can consume pack k the moment `k < total_after/budget`.
+    *
+    * With `groupCol` the same protocol runs per domain (MIXTURE-
+    * STRATIFIED packing): every group value keeps its own append-only
+    * token stream (domain-pure pack spaces, as [[layoutBy]]/q113), an
+    * unseen domain starts at 0 whenever it first appears, and the
+    * manifest keeps the group column. `groupCol` must be string-typed:
+    * state keys are compared by string form across sessions, and
+    * domains (source, language, dataset) are strings — a loud require
+    * beats a silent representation drift. `maxGroups` bounds the
+    * batch's domain set as [[layoutBy]]'s interlock does.
+    *
+    * State = `stateDir/bases/applied_id=<id>/` parquet rows
+    * (base, total_after) — one row per applied batch, an empty batch
+    * recording (base, base) — or, stratified,
+    * `stateDir/bases_by/applied_id=<id>/` rows (grp, base, total_after),
+    * one per domain the batch touched; either way ONE atomic dir per
+    * batch, bytes-tiny. Replay convergence: an appliedId that already
+    * has rows REUSES them (recompute-identical manifest; a replayed
+    * batch with a domain its recording lacks fails loudly — that is
+    * changed batch content, not a crash); one that doesn't derives each
+    * base as max(total_after) over its stream's prior rows and then
+    * records itself. Both crash windows converge: manifest-written/
+    * base-lost replays derive the same base (the batch's own rows are
+    * absent either way); base-written/manifest-lost replays read the
+    * recorded base. Single-applier discipline as the rest of the
+    * ingest family (one crawl loop owns a state).
+    *
+    * The state SELF-COMPACTS: past `compactEvery` per-batch dirs, all
+    * known rows (previous consolidation + every per-batch dir) are
+    * rewritten as one versioned `compact_v<n>` dir BEFORE the
+    * per-batch dirs and older versions are deleted. A base, once
+    * recorded, never changes, so every crash point leaves a superset
+    * of AGREEING rows — and the state read stays O(1) files however
+    * long the crawl runs. (Measured: without this, per-batch wall
+    * drifts up with crawl age from the base-file open fan-out alone —
+    * CurateStress pack mode.) Both layouts are read via EXPLICIT path
+    * lists (never a root glob), so they coexist without name games.
+    *
+    * Returns the batch's manifest (caller sinks it; the ingest CLI
+    * writes `out/pack_batch=<id>`).
+    */
   def packIngest(
       spark: SparkSession,
       batch: DataFrame,
@@ -819,125 +798,40 @@ object Packing {
       budget: Long = 2048L,
       nShards: Int = 8,
       compactEvery: Int = 64,
-      weightCol: Option[String] = None
+      weightCol: Option[String] = None,
+      groupCol: Option[String] = None,
+      maxGroups: Int = 10000
   ): DataFrame = {
     require(appliedId >= 0L, "appliedId must be non-negative")
-    recordBudget(spark, stateDir, budget)
-    val basesRoot = new HPath(stateDir, "bases")
-    val fs = basesRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ownDir = new HPath(basesRoot, s"applied_id=$appliedId")
-    def readRows(): Seq[(Long, Long, Long)] = baseRows(spark, stateDir)
-    val priorBases = readRows()
-    val base = priorBases.find(_._1 == appliedId) match {
-      case Some((_, b, _)) => b // replay: the recorded base, bit-identical rerun
-      case None            => priorBases.map(_._3).maxOption.getOrElse(0L)
+    groupCol.foreach { g =>
+      require(
+        batch.schema(g).dataType == StringType,
+        s"stratified packIngest groups by the string form of '$g'; cast it to string explicitly"
+      )
     }
-    // Optional weight column (e.g. frozen-BPE counts from
-    // Bpe.segmentCountsFrozen): the stream is metered in those tokens
-    // instead of whitespace tokens — layoutWeighted's contract. The
-    // metric must stay FIXED for the life of a state (a frozen model
-    // version, not a retraining one): offsets are cumulative, so a
-    // drifting metric would re-meter history.
-    val lay = (weightCol match {
-      case Some(w) => layoutWeighted(batch, idCol, w, nShards, base)
-      case None    => layout(batch, idCol, textCol, nShards, base)
-    }).localCheckpoint()
-    val batchTotal = lay
-      .agg(coalesce(max(col("end_tok")), lit(base)))
-      .collect()
-      .head
-      .getLong(0)
-    // Record (idempotent overwrite of the batch's OWN partition) only
-    // after the layout is pinned; any crash before this line replays
-    // to the same base.
-    import spark.implicits._
-    Seq((base, batchTotal))
-      .toDF("base", "total_after")
-      .coalesce(1)
-      .write
-      .mode("overwrite")
-      .parquet(ownDir.toString)
-    // Self-compaction: new consolidated version FIRST (all rows, own
-    // included), then per-batch dirs, then older versions — every
-    // crash point keeps the full agreeing row set readable.
-    val dirsNow = batchDirs(fs, basesRoot)
-    if (dirsNow.length > compactEvery) {
-      val versions = compactVersions(fs, basesRoot)
-      val next = versions.lastOption.map(_._1 + 1).getOrElse(1)
-      val allRows = readRows()
-      allRows
-        .toDF("applied_id", "base", "total_after")
-        .coalesce(1)
-        .write
-        .mode("overwrite")
-        .parquet(new HPath(basesRoot, s"compact_v$next").toString)
-      dirsNow.foreach(d => fs.delete(new HPath(d), true))
-      versions.foreach { case (_, p) => fs.delete(p, true) }
-    }
-    manifest(lay, idCol, budget)
-  }
-
-  /** Incremental MIXTURE-STRATIFIED packing — [[packIngest]]'s state
-    * protocol applied per domain: every `groupCol` value keeps its own
-    * append-only token stream (domain-pure pack spaces, as
-    * [[layoutBy]]/q113), and each batch lays its docs out after
-    * everything its domain already packed. Completes the packing
-    * matrix: batch/incremental × global/stratified.
-    *
-    * State = `stateDir/bases_by/applied_id=<id>/` rows
-    * (applied_id, grp, base, total_after) — one row per domain the
-    * batch touched, written as ONE atomic dir per batch. Same replay
-    * contract as [[packIngest]], now per domain: a recorded base never
-    * changes; a replayed appliedId reuses its own rows (and fails
-    * loudly if the replayed batch contains a domain its recording
-    * lacks — that is changed batch content, not a crash); an unseen
-    * domain starts at 0 whenever it first appears. Same
-    * self-compaction (consolidate-then-delete, versioned) — rows here
-    * are O(domains touched) per batch instead of O(1), still
-    * bytes-tiny under the `maxGroups` interlock.
-    *
-    * `groupCol` must be string-typed: state keys are compared by
-    * string form across sessions, and domains (source, language,
-    * dataset) are strings — a loud require beats a silent
-    * representation drift.
-    */
-  def packIngestBy(
-      spark: SparkSession,
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      groupCol: String,
-      stateDir: String,
-      appliedId: Long,
-      budget: Long = 2048L,
-      nShards: Int = 8,
-      maxGroups: Int = 10000,
-      compactEvery: Int = 64,
-      weightCol: Option[String] = None
-  ): DataFrame = {
-    require(appliedId >= 0L, "appliedId must be non-negative")
-    require(
-      batch.schema(groupCol).dataType == org.apache.spark.sql.types.StringType,
-      s"packIngestBy groups by the string form of '$groupCol'; cast it to string explicitly"
-    )
     recordBudget(spark, stateDir, budget)
-    val basesRoot = new HPath(stateDir, "bases_by")
-    val fs = basesRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ownDir = new HPath(basesRoot, s"applied_id=$appliedId")
-    val prior = baseRowsBy(spark, stateDir)
+    val root = basesRoot(stateDir, groupCol.isDefined)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val prior = baseRows(spark, stateDir, groupCol.isDefined)
     val own = prior.filter(_._1 == appliedId)
-    // Batch group set (bounded by the same interlock as layoutBy's
-    // driver prefix — this collect is what sizes the state write too).
-    val groupRows = batch.select(col(groupCol)).distinct().take(maxGroups + 1)
-    require(
-      groupRows.length <= maxGroups,
-      s"packIngestBy batch has > $maxGroups distinct '$groupCol' domains — domain-grained " +
-        "group columns only (see layoutBy's interlock)"
-    )
-    val groups: Seq[Option[String]] =
-      groupRows.toIndexedSeq.map(r => Option(r.getString(0)))
+    // The batch's streams: the one global stream (recorded even when
+    // the batch is empty), or its domain set — bounded by the same
+    // interlock as layoutBy's driver prefix; this collect is what sizes
+    // the state write too.
+    val groups: Seq[Option[String]] = groupCol match {
+      case None => Seq(None)
+      case Some(g) =>
+        val rows = batch.select(col(g)).distinct().take(maxGroups + 1)
+        require(
+          rows.length <= maxGroups,
+          s"stratified packIngest batch has > $maxGroups distinct '$g' domains — domain-grained " +
+            "group columns only (see layoutBy's interlock)"
+        )
+        rows.toIndexedSeq.map(r => Option(r.getString(0)))
+    }
     val bases: Map[Option[String], Long] =
       if (own.nonEmpty) {
+        // replay: the recorded bases, bit-identical rerun
         val recorded = own.map(r => r._2 -> r._3).toMap
         val missing = groups.filterNot(recorded.contains)
         require(
@@ -950,83 +844,86 @@ object Packing {
         val latest = prior.groupBy(_._2).map { case (g, rows) => g -> rows.map(_._4).max }
         groups.map(g => g -> latest.getOrElse(g, 0L)).toMap
       }
-    val lay = layoutBy(batch, idCol, textCol, groupCol, nShards, maxGroups, bases, weightCol)
+    // Optional weight column (e.g. frozen-BPE counts from
+    // Bpe.segmentCountsFrozen): the stream is metered in those tokens
+    // instead of whitespace tokens — layoutWeighted's contract. The
+    // metric must stay FIXED for the life of a state (a frozen model
+    // version, not a retraining one): offsets are cumulative, so a
+    // drifting metric would re-meter history.
+    val lay = layoutOf(batch, idCol, tokens(textCol, weightCol), groupCol, nShards, bases, maxGroups)
       .localCheckpoint()
-    // Per-domain totals after this batch: max(end_tok) per group —
-    // bounded (≤ maxGroups rows), and doubling as the state rows.
-    val totals = lay
-      .groupBy(col(groupCol))
-      .agg(max(col("end_tok")).as("total_after"))
+    // Per-stream totals after this batch: max(end_tok) per group —
+    // bounded (≤ maxGroups rows); a stream with no docs stays at its
+    // base.
+    val ends = lay
+      .groupBy(groupCol.toSeq.map(col): _*)
+      .agg(max(col("end_tok")))
       .collect()
-      .toIndexedSeq
-      .map(r => (Option(r.getString(0)), r.getLong(1)))
+      .collect {
+        case r if !r.isNullAt(r.length - 1) => groupCol.flatMap(_ => Option(r.getString(0))) -> r.getLong(r.length - 1)
+      }
+      .toMap
+    // Record (idempotent overwrite of the batch's OWN partition) only
+    // after the layout is pinned; any crash before this line replays
+    // to the same bases. The global state rows carry no grp column.
     import spark.implicits._
-    totals
-      .map { case (g, tot) => (g.orNull, bases(g), tot) }
-      .toDF("grp", "base", "total_after")
-      .coalesce(1)
-      .write
-      .mode("overwrite")
-      .parquet(ownDir.toString)
-    val dirsNow = batchDirs(fs, basesRoot)
+    def writeRows(rows: DataFrame, dir: HPath): Unit =
+      (if (groupCol.isEmpty) rows.drop("grp") else rows).coalesce(1).write.mode("overwrite").parquet(dir.toString)
+    writeRows(
+      groups.map(g => (g, bases(g), ends.getOrElse(g, bases(g)))).toDF("grp", "base", "total_after"),
+      new HPath(root, s"applied_id=$appliedId")
+    )
+    // Self-compaction: new consolidated version FIRST (all rows, own
+    // included), then per-batch dirs, then older versions — every
+    // crash point keeps the full agreeing row set readable.
+    val dirsNow = batchDirs(fs, root)
     if (dirsNow.length > compactEvery) {
-      val versions = compactVersions(fs, basesRoot)
+      val versions = compactVersions(fs, root)
       val next = versions.lastOption.map(_._1 + 1).getOrElse(1)
-      baseRowsBy(spark, stateDir)
-        .map(t => (t._1, t._2.orNull, t._3, t._4))
-        .toDF("applied_id", "grp", "base", "total_after")
-        .coalesce(1)
-        .write
-        .mode("overwrite")
-        .parquet(new HPath(basesRoot, s"compact_v$next").toString)
-      dirsNow.foreach(d => fs.delete(new HPath(d), true))
-      versions.foreach { case (_, p) => fs.delete(p, true) }
-    }
-    // The manifest projection with the domain kept (no join — lay
-    // already carries it); pack ids are domain-pure by construction.
-    lay
-      .select(
-        col(idCol),
-        col(groupCol),
-        col("shard"),
-        col("start_tok"),
-        col("n_toks"),
-        expr(s"start_tok div $budget").as("first_pack"),
-        expr(s"(end_tok - 1) div $budget").as("last_pack")
+      writeRows(
+        baseRows(spark, stateDir, groupCol.isDefined).toDF("applied_id", "grp", "base", "total_after"),
+        new HPath(root, s"compact_v$next")
       )
-      .withColumn("n_packs", col("last_pack") - col("first_pack") + 1)
+      dirsNow.foreach(d => Maintenance.deleteOrFail(fs, new HPath(d)))
+      versions.foreach { case (_, p) => Maintenance.deleteOrFail(fs, p) }
+    }
+    manifest(lay, idCol, budget, groupCol.toSeq)
   }
 
-  /** All (applied_id, grp, base, total_after) rows of a stratified
-    * offset state (consolidated + per-batch dirs; duplicates agree,
-    * one row per (id, grp) kept).
+  /** An offset state's root: `bases/` for the global stream,
+    * `bases_by/` for the stratified one.
     */
-  private[graft] def baseRowsBy(
+  private def basesRoot(stateDir: String, grouped: Boolean): HPath =
+    new HPath(stateDir, if (grouped) "bases_by" else "bases")
+
+  /** All (applied_id, grp, base, total_after) rows of an offset state,
+    * consolidated + per-batch layouts merged (duplicates agree — a
+    * recorded base is immutable; one row per (id, grp) kept). The
+    * global state's rows have `grp = None`.
+    */
+  private[graft] def baseRows(
       spark: SparkSession,
-      stateDir: String
+      stateDir: String,
+      grouped: Boolean = false
   ): Seq[(Long, Option[String], Long, Long)] = {
-    val basesRoot = new HPath(stateDir, "bases_by")
-    val fs = basesRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = batchDirs(fs, basesRoot)
+    val root = basesRoot(stateDir, grouped)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def rows(df: DataFrame): Seq[(Long, Option[String], Long, Long)] =
+      df.select(
+          col("applied_id").cast("long"),
+          if (grouped) col("grp") else lit(null).cast("string"),
+          col("base"),
+          col("total_after")
+        )
+        .collect()
+        .toIndexedSeq
+        .map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2), r.getLong(3)))
+    val dirs = batchDirs(fs, root)
     val fromDirs =
       if (dirs.isEmpty) Seq.empty
-      else
-        spark.read
-          .option("basePath", basesRoot.toString)
-          .parquet(dirs: _*)
-          .select(col("applied_id").cast("long"), col("grp"), col("base"), col("total_after"))
-          .collect()
-          .toIndexedSeq
-          .map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2), r.getLong(3)))
-    val fromCompact = compactVersions(fs, basesRoot).lastOption match {
-      case None => Seq.empty
-      case Some((_, p)) =>
-        spark.read
-          .parquet(p.toString)
-          .select(col("applied_id").cast("long"), col("grp"), col("base"), col("total_after"))
-          .collect()
-          .toIndexedSeq
-          .map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2), r.getLong(3)))
+      else rows(spark.read.option("basePath", root.toString).parquet(dirs: _*))
+    val fromCompact = compactVersions(fs, root).lastOption.toSeq.flatMap { case (_, p) =>
+      rows(spark.read.parquet(p.toString))
     }
     (fromDirs ++ fromCompact).distinctBy(t => (t._1, t._2))
   }
@@ -1056,37 +953,6 @@ object Packing {
         .toIndexedSeq
         .sortBy(_._1)
 
-  /** All (applied_id, base, total_after) rows of an offset state,
-    * consolidated + per-batch layouts merged (duplicates agree — a
-    * recorded base is immutable; one row per id kept).
-    */
-  private[graft] def baseRows(spark: SparkSession, stateDir: String): Seq[(Long, Long, Long)] = {
-    val basesRoot = new HPath(stateDir, "bases")
-    val fs = basesRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = batchDirs(fs, basesRoot)
-    val fromDirs =
-      if (dirs.isEmpty) Seq.empty
-      else
-        spark.read
-          .option("basePath", basesRoot.toString)
-          .parquet(dirs: _*)
-          .select(col("applied_id").cast("long"), col("base"), col("total_after"))
-          .collect()
-          .toIndexedSeq
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val fromCompact = compactVersions(fs, basesRoot).lastOption match {
-      case None => Seq.empty
-      case Some((_, p)) =>
-        spark.read
-          .parquet(p.toString)
-          .select(col("applied_id"), col("base"), col("total_after"))
-          .collect()
-          .toIndexedSeq
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    }
-    (fromCompact ++ fromDirs).groupBy(_._1).map(_._2.head).toIndexedSeq
-  }
-
   /** The batch ids whose token ranges overlap `[lo, hi)` — the offset
     * state IS the partition-pruning index over the batch-keyed
     * manifest dirs.
@@ -1098,7 +964,7 @@ object Packing {
       hi: Long
   ): Seq[Long] =
     baseRows(spark, stateDir)
-      .filter { case (_, b, t) => b < hi && t > lo }
+      .filter { case (_, _, b, t) => b < hi && t > lo }
       .map(_._1)
       .sorted
 

@@ -678,13 +678,11 @@ object PipelineRunner {
     val shards = opts("shards").toInt
     val (batchDf, wcol) = withBpeWeights(spark, spark.read.parquet(batchPath), opts.get("bpe_model"))
     val packing = graft.operators.Packing
-    val manifest = group match {
-      case Some(g) =>
-        packing.packIngestBy(spark, batchDf, "doc_id", "text", g, state, applied, budget, shards, weightCol = wcol)
-      case None =>
-        packing.packIngest(spark, batchDf, "doc_id", "text", state, applied, budget, shards, weightCol = wcol)
-    }
-    manifest.write.mode("overwrite").parquet(s"$out/pack_batch=$applied")
+    packing
+      .packIngest(spark, batchDf, "doc_id", "text", state, applied, budget, shards, weightCol = wcol, groupCol = group)
+      .write
+      .mode("overwrite")
+      .parquet(s"$out/pack_batch=$applied")
     // manifest root carries the same budget sidecar as the state,
     // so manifest-only consumers (pack_boundaries) can validate too
     packing.recordBudget(spark, out, budget)
@@ -704,17 +702,12 @@ object PipelineRunner {
     val ckpt = opts("checkpoint")
     val budget = opts("budget").toLong
     val shards = opts("shards").toInt
-    val stratified = opts.verb.name == "pack_stream_by"
-    (if (stratified)
-       graft.streaming.StreamingPipeline.packIngestStreamBy(
-         spark, raw, state, out, ckpt, Schemas.documentIngestBy, opts("group_col"), budget, shards
-       )
-     else
-       graft.streaming.StreamingPipeline.packIngestStream(
-         spark, raw, state, out, ckpt, Schemas.documentIngest, budget, shards
-       ))
+    val group = if (opts.verb.name == "pack_stream_by") Some(opts("group_col")) else None
+    val schema = if (group.isDefined) Schemas.documentIngestBy else Schemas.documentIngest
+    graft.streaming.StreamingPipeline
+      .packIngestStream(spark, raw, state, out, ckpt, schema, budget, shards, group)
       .awaitTermination()
-    println(s"[maintenance] ${if (stratified) "stratified " else ""}pack stream drained $raw into $out")
+    println(s"[maintenance] ${if (group.isDefined) "stratified " else ""}pack stream drained $raw into $out")
   }
 
   // decontaminate, decontam_fuzzy and decontam_semantic share one body:
@@ -779,7 +772,7 @@ object PipelineRunner {
     * a `contaminated` column are filtered — or any bare doc_id parquet),
     * the --group_col columns and the budget.
     *
-    * Stratified interlock: packIngestBy manifests number packs PER
+    * Stratified interlock: stratified packIngest manifests number packs PER
     * DOMAIN — auditing by pack_id alone would conflate domains and a
     * pack_id-keyed mask would retire every domain's pack k. Any column
     * beyond the global-stream manifest shape must be named as the
@@ -978,7 +971,8 @@ object PipelineRunner {
       req("batch", "DIR"), req("state", "DIR"), req("out", "DIR"), req("applied_id", "N"),
       opt("budget", "N", "2048"), opt("shards", "N", "8"), opt("bpe_model", "DIR"))(packIngestVerb),
     // Incremental STRATIFIED packing: same contract per domain
-    // (Packing.packIngestBy — per-domain append-only pack spaces).
+    // (Packing.packIngest with --group_col — per-domain append-only
+    // pack spaces).
     // Batch parquet shape: (doc_id, <group_col>, text).
     verb("pack_ingest_by", "pack_ingest with one append-only pack space per --group_col value")(
       req("batch", "DIR"), req("state", "DIR"), req("out", "DIR"), req("applied_id", "N"),
@@ -1107,7 +1101,8 @@ object PipelineRunner {
       req("raw", "DIR"), req("state", "DIR"), req("out", "DIR"), req("checkpoint", "DIR"),
       opt("budget", "N", "2048"), opt("shards", "N", "8"))(packStreamVerb),
     // Streaming stratified packing over arriving document JSON
-    // files (StreamingPipeline.packIngestStreamBy). JSON shape:
+    // files (StreamingPipeline.packIngestStream with --group_col).
+    // JSON shape:
     // {"doc_id": long, "source": string, "text": string}.
     verb("pack_stream_by", "pack_ingest_by per arriving document JSON file")(
       req("raw", "DIR"), req("state", "DIR"), req("out", "DIR"), req("checkpoint", "DIR"),

@@ -2026,7 +2026,7 @@ object TextQueries {
   }
 
   /** Incremental STRATIFIED packing steady state
-    * ([[graft.operators.Packing.packIngestBy]]), the q112 composition
+    * ([[graft.operators.Packing.packIngest]] with a group column), the q112 composition
     * per domain: batch 0 (evens) populates every source's offset
     * state, batch 1 (odds) lays each source out after its own running
     * total — domain-pure pack spaces that grow append-only per source.
@@ -2040,10 +2040,10 @@ object TextQueries {
       try {
         val state = root.resolve("packstate").toString
         graft.operators.Packing
-          .packIngestBy(spark, d.filter(col("doc_id") % 2 === 0), "doc_id", "text", "source", state, 0L)
+          .packIngest(spark, d.filter(col("doc_id") % 2 === 0), "doc_id", "text", state, 0L, groupCol = Some("source"))
           .count()
         graft.operators.Packing
-          .packIngestBy(spark, d.filter(col("doc_id") % 2 === 1), "doc_id", "text", "source", state, 1L)
+          .packIngest(spark, d.filter(col("doc_id") % 2 === 1), "doc_id", "text", state, 1L, groupCol = Some("source"))
           .collect()
           .toIndexedSeq
           .map(r =>

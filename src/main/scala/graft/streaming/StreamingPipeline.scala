@@ -923,6 +923,12 @@ object StreamingPipeline {
     * touch nothing (no state row, no output partition). Typically fed
     * by `curate_stream`'s accepted output — curation emits clean docs,
     * packing turns them into training sequences.
+    *
+    * With `groupCol` the packing is MIXTURE-STRATIFIED: every source's
+    * pack space grows append-only independently (per-domain offset
+    * state), so a training schedule can draw pack counts per domain
+    * while the crawl still ingests; replay of a batch reuses its
+    * recorded per-domain bases.
     */
   def packIngestStream(
       spark: SparkSession,
@@ -932,10 +938,11 @@ object StreamingPipeline {
       checkpoint: String,
       docSchema: StructType,
       budget: Long = 2048L,
-      nShards: Int = 8
+      nShards: Int = 8,
+      groupCol: Option[String] = None
   ): org.apache.spark.sql.streaming.StreamingQuery =
     drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint)(
-      packBatch(spark, statePath, outDir, budget, nShards))
+      packBatch(spark, statePath, outDir, budget, nShards, groupCol))
 
   /** [[packIngestStream]]'s and [[packCuratedStream]]'s batch body. */
   private def packBatch(
@@ -943,55 +950,23 @@ object StreamingPipeline {
       statePath: String,
       outDir: String,
       budget: Long,
-      nShards: Int
+      nShards: Int,
+      groupCol: Option[String] = None
   ): (DataFrame, Long) => Unit =
     batchKeyed(outDir, "pack") { (batch, batchId) =>
       graft.operators.Packing
         .packIngest(
           spark,
-          batch.select(col("doc_id"), col("text")),
+          batch.select((("doc_id" +: groupCol.toSeq) :+ "text").map(col): _*),
           "doc_id",
           "text",
           statePath,
           batchId,
           budget,
-          nShards
+          nShards,
+          groupCol = groupCol
         )
     }
-
-  /** Streaming MIXTURE-STRATIFIED packing: [[packIngestStream]] with
-    * per-domain offset state ([[graft.operators.Packing.packIngestBy]]
-    * per micro-batch) — every source's pack space grows append-only
-    * independently, so a training schedule can draw pack counts per
-    * domain while the crawl still ingests. Batch ids key the state
-    * ([[drain]]'s contract): replay of a batch reuses its recorded
-    * per-domain bases.
-    */
-  def packIngestStreamBy(
-      spark: SparkSession,
-      rawDir: String,
-      statePath: String,
-      outDir: String,
-      checkpoint: String,
-      docSchema: StructType,
-      groupCol: String = "source",
-      budget: Long = 2048L,
-      nShards: Int = 8
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint)(batchKeyed(outDir, "pack") { (batch, batchId) =>
-      graft.operators.Packing
-        .packIngestBy(
-          spark,
-          batch.select(col("doc_id"), col(groupCol), col("text")),
-          "doc_id",
-          "text",
-          groupCol,
-          statePath,
-          batchId,
-          budget,
-          nShards
-        )
-    })
 
   /** Streaming fertility-drift telemetry — the production form of the
     * q123 monitor: per arriving document file, per-source whitespace vs

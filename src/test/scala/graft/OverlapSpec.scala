@@ -1,7 +1,7 @@
 package graft
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicBoolean
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import graft.operators.Overlap
 import org.apache.spark.sql.SparkSession
@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The driver-thread overlap helper's contract: the async sibling is
   * always joined before the call returns or rethrows, its error
   * surfaces only after the sync sibling completes, and it runs under
-  * the caller's Spark local properties.
+  * the caller's Spark local properties. The N-way form settles every
+  * item the same way.
   */
 class OverlapSpec extends AnyFunSuite {
 
@@ -104,5 +105,33 @@ class OverlapSpec extends AnyFunSuite {
     // and nothing leaks back: a later call sees the caller's current state
     val (after, _) = Overlap.both(Option(sc.getLocalProperty("spark.job.description")))(_ => ())
     assert(after.isEmpty)
+  }
+
+  test("the N-way form cancels unstarted items and joins running ones before it rethrows") {
+    val n = 40
+    val started = new AtomicInteger(0)
+    val running = new AtomicInteger(0)
+    val siblingsUp = new CountDownLatch(3)
+    val err = intercept[IllegalStateException] {
+      Overlap.map(0 until n) { i =>
+        if (i == 0) {
+          // fail only once slow siblings are mid-flight
+          assert(siblingsUp.await(60, TimeUnit.SECONDS))
+          throw new IllegalStateException("item 0 failed")
+        }
+        started.incrementAndGet()
+        running.incrementAndGet()
+        siblingsUp.countDown()
+        try Thread.sleep(500)
+        finally running.decrementAndGet()
+        i
+      }
+    }
+    assert(err.getMessage == "item 0 failed", "the failure surfaces unwrapped")
+    assert(running.get == 0, "no sibling may still be running once the call has thrown")
+    val settled = started.get
+    assert(settled < n - 1, s"items not yet started must be cancelled ($settled of ${n - 1} ran)")
+    Thread.sleep(700)
+    assert(started.get == settled, "a cancelled item must never start after the call")
   }
 }

@@ -231,7 +231,7 @@ class PackingSpec extends AnyFunSuite {
       .baseRows(spark, st)
       .find(_._1 == 0L)
       .get
-      ._3
+      ._4
     val fromPack = total0 / B // the straddling pack
     val got = Packing
       .materializePacks(spark, st, mdir, allDocs, "doc_id", "text", fromPack, fromPack + 2, B)
@@ -241,7 +241,7 @@ class PackingSpec extends AnyFunSuite {
     assert(got == expected(fromPack * B, (fromPack + 2) * B), "straddling window mismatch")
     assert(got.map(_._3).size > 1, "window must draw docs from both batches")
     // state-driven pruning: a window inside batch 2 must name only batch 2
-    val base2 = Packing.baseRows(spark, st).find(_._1 == 2L).get._2
+    val base2 = Packing.baseRows(spark, st).find(_._1 == 2L).get._3
     val inner = (base2 / B) + 1
     assert(
       Packing.overlappingBatches(spark, st, inner * B, (inner + 1) * B) == Seq(2L),
@@ -633,7 +633,7 @@ class PackingSpec extends AnyFunSuite {
   test("packIngestBy: each domain tiles its own stream; new domains start at 0") {
     val root = Files.createTempDirectory("graft-packby").toString
     val st = s"$root/st"
-    val b0 = Packing.packIngestBy(spark, srcCorpus(0 until 40), "doc_id", "text", "src", st, 0L)
+    val b0 = Packing.packIngest(spark, srcCorpus(0 until 40), "doc_id", "text", st, 0L, groupCol = Some("src"))
     val m0 = byRows(b0)
     // per-domain totals after batch 0
     val tot0 = m0.groupBy(_._1._1).map { case (s, rows) => s -> rows.values.map(_._2).sum }
@@ -644,7 +644,7 @@ class PackingSpec extends AnyFunSuite {
     // batch 1 introduces a brand-new domain alongside the old ones
     val b1docs = srcCorpus(40 until 80)
       .withColumn("src", when(col("doc_id") >= 70, lit("fresh")).otherwise(col("src")))
-    val b1 = Packing.packIngestBy(spark, b1docs, "doc_id", "text", "src", st, 1L)
+    val b1 = Packing.packIngest(spark, b1docs, "doc_id", "text", st, 1L, groupCol = Some("src"))
     val m1 = byRows(b1)
     m1.groupBy(_._1._1).foreach { case (s, rows) =>
       val start = rows.values.map(_._1).min
@@ -665,19 +665,19 @@ class PackingSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-packby-replay").toString
     val st = s"$root/st"
     val b0 = srcCorpus(0 until 30)
-    val first = byRows(Packing.packIngestBy(spark, b0, "doc_id", "text", "src", st, 0L))
-    byRows(Packing.packIngestBy(spark, srcCorpus(30 until 60), "doc_id", "text", "src", st, 1L))
-    val replayed = byRows(Packing.packIngestBy(spark, b0, "doc_id", "text", "src", st, 0L))
+    val first = byRows(Packing.packIngest(spark, b0, "doc_id", "text", st, 0L, groupCol = Some("src")))
+    byRows(Packing.packIngest(spark, srcCorpus(30 until 60), "doc_id", "text", st, 1L, groupCol = Some("src")))
+    val replayed = byRows(Packing.packIngest(spark, b0, "doc_id", "text", st, 0L, groupCol = Some("src")))
     assert(replayed == first, "replay after a later batch must reproduce the original manifest")
   }
 
   test("packIngestBy replay with a domain missing from its recording fails loudly") {
     val root = Files.createTempDirectory("graft-packby-chg").toString
     val st = s"$root/st"
-    Packing.packIngestBy(spark, srcCorpus(0 until 30), "doc_id", "text", "src", st, 0L).count()
+    Packing.packIngest(spark, srcCorpus(0 until 30), "doc_id", "text", st, 0L, groupCol = Some("src")).count()
     val changed = srcCorpus(0 until 30).withColumn("src", lit("other"))
     val e = intercept[IllegalArgumentException](
-      Packing.packIngestBy(spark, changed, "doc_id", "text", "src", st, 0L).count()
+      Packing.packIngest(spark, changed, "doc_id", "text", st, 0L, groupCol = Some("src")).count()
     )
     assert(e.getMessage.contains("changed batch content"))
   }
@@ -685,13 +685,13 @@ class PackingSpec extends AnyFunSuite {
   test("packIngestBy crash window: a lost base recording replays to the same layout") {
     val root = Files.createTempDirectory("graft-packby-crash").toString
     val st = s"$root/st"
-    Packing.packIngestBy(spark, srcCorpus(0 until 30), "doc_id", "text", "src", st, 0L).count()
+    Packing.packIngest(spark, srcCorpus(0 until 30), "doc_id", "text", st, 0L, groupCol = Some("src")).count()
     val b1 = srcCorpus(30 until 60)
-    val first = byRows(Packing.packIngestBy(spark, b1, "doc_id", "text", "src", st, 1L))
+    val first = byRows(Packing.packIngest(spark, b1, "doc_id", "text", st, 1L, groupCol = Some("src")))
     // crash after manifest, before/losing the base recording
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$st/bases_by/applied_id=1"), true)
-    val replayed = byRows(Packing.packIngestBy(spark, b1, "doc_id", "text", "src", st, 1L))
+    val replayed = byRows(Packing.packIngest(spark, b1, "doc_id", "text", st, 1L, groupCol = Some("src")))
     assert(replayed == first, "base derivation must converge across the crash window")
   }
 
@@ -700,15 +700,15 @@ class PackingSpec extends AnyFunSuite {
     val st = s"$root/st"
     val manifests = (0 until 7).map { k =>
       byRows(
-        Packing.packIngestBy(
+        Packing.packIngest(
           spark,
           srcCorpus(k * 10 until (k + 1) * 10),
           "doc_id",
           "text",
-          "src",
           st,
           k.toLong,
-          compactEvery = 2
+          compactEvery = 2,
+          groupCol = Some("src")
         )
       )
     }
@@ -727,6 +727,51 @@ class PackingSpec extends AnyFunSuite {
         case _                      =>
       }
     }
+  }
+
+  test("a stratified empty batch records a zero-row dir, advances no domain, and replays as a no-op") {
+    val root = Files.createTempDirectory("graft-packby-empty").toString
+    val st = s"$root/st"
+    def ingest(ids: Range, id: Long) =
+      Packing.packIngest(spark, srcCorpus(ids), "doc_id", "text", st, id, groupCol = Some("src"))
+    val tot0 = byRows(ingest(0 until 30, 0L)).groupBy(_._1._1).map { case (s, rows) =>
+      s -> rows.values.map(_._2).sum
+    }
+    assert(ingest(0 until 0, 1L).count() == 0)
+    val own = s"$st/bases_by/applied_id=1"
+    assert(new java.io.File(own).isDirectory, "the empty batch must record its own dir")
+    assert(spark.read.parquet(own).count() == 0, "the empty batch's dir must hold no rows")
+    val state = Packing.baseRows(spark, st, grouped = true).toSet
+    assert(ingest(0 until 0, 1L).count() == 0)
+    assert(Packing.baseRows(spark, st, grouped = true).toSet == state, "replaying the empty batch changes nothing")
+    byRows(ingest(30 until 60, 2L)).groupBy(_._1._1).foreach { case (s, rows) =>
+      assert(rows.values.map(_._1).min == tot0(s), s"$s must resume at its batch-0 total ${tot0(s)}")
+    }
+  }
+
+  test("a global ingest is the one-group stratified ingest: same manifests and offset state") {
+    val root = Files.createTempDirectory("graft-pack-onegroup").toString
+    val (global, grouped) = (s"$root/global", s"$root/grouped")
+    // two batches, then a replay of the first
+    Seq(0L -> (0 until 40), 1L -> (40 until 90), 0L -> (0 until 40)).foreach { case (id, ids) =>
+      val g = Packing.packIngest(spark, corpus(ids), "doc_id", "text", global, id)
+      val s = Packing
+        .packIngest(spark, corpus(ids).withColumn("g", lit("all")), "doc_id", "text", grouped, id, groupCol = Some("g"))
+        .drop("g")
+      assert(g.columns.toSeq == s.columns.toSeq)
+      assert(g.collect().toSet == s.collect().toSet, s"batch $id: manifests differ")
+    }
+    val gRows = Packing.baseRows(spark, global)
+    val sRows = Packing.baseRows(spark, grouped, grouped = true)
+    assert(gRows.forall(_._2.isEmpty) && sRows.forall(_._2.contains("all")))
+    def offsets(rows: Seq[(Long, Option[String], Long, Long)]) = rows.map(r => (r._1, r._3, r._4)).sorted
+    assert(offsets(gRows) == offsets(sRows) && gRows.length == 2, s"$gRows vs $sRows")
+    // and the batch layout equals the stratified one on a constant group
+    val docs = corpus(0 until 80)
+    val lay = Packing.layout(docs, "doc_id", "text", nShards = 4)
+    val layBy = Packing.layoutBy(docs.withColumn("g", lit("all")), "doc_id", "text", "g", nShards = 4).drop("g")
+    assert(lay.columns.toSeq == layBy.columns.toSeq)
+    assert(lay.collect().toSet == layBy.collect().toSet)
   }
 
   test("layoutWeighted keeps the duplicate-id interlock") {

@@ -34,7 +34,12 @@ class SourceGuardSpec extends AnyFunSuite {
   }
 
   test("no driver-thread Future or global execution context outside Overlap") {
-    val banned = Seq("ExecutionContext.global" -> "ExecutionContext\\.global".r, "Future {" -> "\\bFuture\\s*\\{".r)
+    val banned = Seq(
+      "ExecutionContext.global" -> "ExecutionContext\\.global".r,
+      "Future {" -> "\\bFuture\\s*\\{".r,
+      "Executors." -> "\\bExecutors\\.".r,
+      "new Thread(" -> "\\bnew\\s+Thread\\s*\\(".r
+    )
     val hits = for {
       (file, text) <- sources if file != "graft/operators/Overlap.scala"
       (name, pat) <- banned if pat.findFirstIn(text).isDefined
