@@ -5,9 +5,10 @@ import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
 /** Driver-thread overlap of two independent pieces of Spark work: the
   * async sibling's jobs back-fill executors the sync sibling's small
   * sequential jobs leave idle (the scheduler runs concurrent jobs FIFO,
-  * so the sync side keeps priority). [[map]] is the N-way form for
-  * per-bucket filesystem work; it is the only other place in `src/main`
-  * that starts driver threads.
+  * so the sync side keeps priority). [[map]] is the N-way form, for
+  * per-bucket filesystem work and for EP1's four concurrent dimension
+  * writes (`Pipeline.runFullBatch`); it is the only other place in
+  * `src/main` that starts driver threads.
   *
   * The async sibling runs on a FRESH daemon thread per call. Spark's
   * local properties are inheritable thread-locals (cloned at thread
@@ -79,12 +80,14 @@ private[graft] object Overlap {
   /** The N-way form: runs `f` over `items` on at most [[MaxThreads]]
     * fresh daemon threads (created by the caller's thread, so they
     * inherit its Spark local properties) and returns the results in
-    * item order. Meant for independent per-bucket filesystem work: a
+    * item order. Meant for independent per-bucket filesystem work (a
     * per-batch driver fan-out of O(buckets) round-trips, which issued
     * serially makes wall-clock linear in bucket count at driver-loop
-    * latency. Hadoop `FileSystem` instances are thread-safe, and
-    * per-bucket operations on disjoint paths may interleave in any
-    * order without changing a crash protocol's outcome.
+    * latency) and for independent table writes whose small jobs leave
+    * cores idle when run one after another. Hadoop `FileSystem`
+    * instances are thread-safe, and per-bucket operations on disjoint
+    * paths may interleave in any order without changing a crash
+    * protocol's outcome.
     *
     * Every item is settled before the call returns or rethrows: on the
     * first failure (in item order, rethrown unwrapped) the items not

@@ -765,8 +765,10 @@ object Packing {
     * one per domain the batch touched; either way ONE atomic dir per
     * batch, bytes-tiny. Replay convergence: an appliedId that already
     * has rows REUSES them (recompute-identical manifest; a replayed
-    * batch with a domain its recording lacks fails loudly — that is
-    * changed batch content, not a crash); one that doesn't derives each
+    * batch with a domain its recording lacks, or whose recomputed
+    * stream end differs from a recorded `total_after`, fails loudly
+    * before any write — that is changed batch content, not a crash);
+    * one that doesn't derives each
     * base as max(total_after) over its stream's prior rows and then
     * records itself. Both crash windows converge: manifest-written/
     * base-lost replays derive the same base (the batch's own rows are
@@ -863,6 +865,17 @@ object Packing {
         case r if !r.isNullAt(r.length - 1) => groupCol.flatMap(_ => Option(r.getString(0))) -> r.getLong(r.length - 1)
       }
       .toMap
+    // A replay must end every recorded stream where its recording did:
+    // reusing the recorded bases for a batch that now carries more (or
+    // fewer) tokens would lay them over the next batch's range.
+    own.foreach { case (_, g, base, totalAfter) =>
+      val end = ends.getOrElse(g, base)
+      require(
+        end == totalAfter,
+        s"replay of appliedId=$appliedId ends stream ${g.getOrElse("NULL")} at $end, recorded $totalAfter " +
+          "— changed batch content, not a crash replay"
+      )
+    }
     // Record (idempotent overwrite of the batch's OWN partition) only
     // after the layout is pinned; any crash before this line replays
     // to the same bases. The global state rows carry no grp column.

@@ -132,6 +132,22 @@ class PackingSpec extends AnyFunSuite {
     assert(replayed == first, "replay must not move batch 1's offsets")
   }
 
+  test("replay of an applied id with more documents is refused before it records anything") {
+    val root = Files.createTempDirectory("graft-pack-replay-grown").toString
+    val st = s"$root/st"
+    Packing.packIngest(spark, corpus(0 until 20), "doc_id", "text", st, 0L).count()
+    Packing.packIngest(spark, corpus(20 until 40), "doc_id", "text", st, 1L).count()
+    Packing.packIngest(spark, corpus(40 until 60), "doc_id", "text", st, 2L).count()
+    val state = Packing.baseRows(spark, st).toSet
+    // applied id 1 replayed with ten extra documents: its recorded base
+    // would lay the extra tokens over batch 2's range
+    val e = intercept[IllegalArgumentException](
+      Packing.packIngest(spark, corpus(20 until 50), "doc_id", "text", st, 1L).count()
+    )
+    assert(e.getMessage.contains("changed batch content"), e.getMessage)
+    assert(Packing.baseRows(spark, st).toSet == state, "a refused replay must leave the offset state as it was")
+  }
+
   test("crash window: base row lost after manifest — replay derives the same base") {
     val root = Files.createTempDirectory("graft-pack-crash").toString
     Packing.packIngest(spark, corpus(0 until 25), "doc_id", "text", s"$root/st", 0L).count()

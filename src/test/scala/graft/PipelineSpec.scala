@@ -3,7 +3,7 @@ package graft
 import graft.pipeline.Pipeline
 import graft.schemas.Schemas
 import graft.transforms.Transforms._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path}
@@ -88,6 +88,53 @@ class PipelineSpec extends AnyFunSuite {
 
   lazy val ran: Unit = Pipeline.runFullBatch(spark, dirs._1, dirs._2)
   def table(name: String): DataFrame = { ran; Pipeline.readTable(spark, dirs._2, name) }
+
+  private def jobDescription(js: SparkListenerJobStart): Option[String] =
+    Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+
+  /** Runs `body` with `listener` registered and returns once every event
+    * its jobs posted has been delivered: the listener bus delivers
+    * events in order, so once a marker job's start is seen, every
+    * earlier event has been seen too.
+    */
+  private def listening[T](listener: SparkListener)(body: => T): T = {
+    val sc = spark.sparkContext
+    val marker = "pipeline-spec: listener drained"
+    val markerSeen = new CountDownLatch(1)
+    val markerListener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (jobDescription(js).contains(marker)) markerSeen.countDown()
+    }
+    sc.addSparkListener(listener)
+    sc.addSparkListener(markerListener)
+    try {
+      val result = body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "listener events not delivered")
+      result
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.removeSparkListener(markerListener)
+    }
+  }
+
+  /** Runs `body` with `file://` resolved to [[RenameRefusingFs]]. */
+  private def withRenameRefusingFs[T](body: => T): T = {
+    val hc = spark.sparkContext.hadoopConfiguration
+    val impl = hc.get("fs.file.impl")
+    hc.set("fs.file.impl", classOf[RenameRefusingFs].getName)
+    hc.setBoolean("fs.file.impl.disable.cache", true)
+    try body
+    finally {
+      if (impl == null) hc.unset("fs.file.impl") else hc.set("fs.file.impl", impl)
+      hc.unset("fs.file.impl.disable.cache")
+    }
+  }
+
+  /** The ids of the RDDs the session holds persisted or checkpointed. */
+  private def pinnedRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   // --- specs ---------------------------------------------------------
 
@@ -177,32 +224,63 @@ class PipelineSpec extends AnyFunSuite {
     val out = in.resolveSibling("transformed").toString + "/"
 
     val sc = spark.sparkContext
-    val marker = "pipeline-spec: listener drained"
     val listingTasks = new ConcurrentLinkedQueue[Int]()
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val desc = Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-        if (desc.exists(_.startsWith("Listing leaf files"))) listingTasks.add(js.stageInfos.map(_.numTasks).sum)
-        if (desc.contains(marker)) markerSeen.countDown()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      Pipeline.runFullBatch(spark, in.toString + "/", out)
-      // Listener events arrive in order: once the marker job's start is
-      // seen, every listing job's start has been seen too.
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      assert(markerSeen.await(60, TimeUnit.SECONDS), "listener events not delivered")
-    } finally sc.removeSparkListener(listener)
+    listening(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (jobDescription(js).exists(_.startsWith("Listing leaf files")))
+          listingTasks.add(js.stageInfos.map(_.numTasks).sum)
+    })(Pipeline.runFullBatch(spark, in.toString + "/", out))
 
     val tasks = listingTasks.asScala.toSeq
     assert(tasks.nonEmpty, "expected a listing job for 40 song files")
     assert(tasks.forall(_ <= sc.defaultParallelism), s"listing tasks per job $tasks exceed ${sc.defaultParallelism} slots")
     assert(Pipeline.readTable(spark, out, "songs_table").count() == 40)
     assert(Pipeline.readTable(spark, out, "artists_table").count() == 7)
+  }
+
+  test("EP1 parses each JSON source once per reload and releases its pins") {
+    val in = Files.createTempDirectory("graft-one-scan").resolve("raw")
+    // line-delimited song files: 100 songs by 10 artists in 4 files
+    val songs = (0 until 100).map { i =>
+      val a = i % 10
+      s"""{"artist_id":"AR$a","artist_latitude":null,"artist_longitude":null,"artist_location":"L$a","artist_name":"Artist $a","song_id":"SO$i","title":"Song $i","duration":${100.0 + i},"year":${2000 + i % 5}}"""
+    }
+    songs.grouped(25).zipWithIndex.foreach { case (part, f) =>
+      val dir = in.resolve(s"song_data/A/B/C$f")
+      Files.createDirectories(dir)
+      Files.writeString(dir.resolve(s"TR$f.json"), part.mkString("\n"))
+    }
+    val events = (0 until 200).map(i => logLine(s"${i % 13}", t0 + i * 1000.0, s"Song ${i % 100}", s"Artist ${i % 10}", 100.0 + i % 100))
+    val logDir = in.resolve("log_data/2018/11")
+    Files.createDirectories(logDir)
+    Files.writeString(logDir.resolve("events.json"), events.mkString("\n"))
+    val out = in.resolveSibling("transformed").toString + "/"
+
+    val records = new java.util.concurrent.atomic.LongAdder
+    val pinnedBefore = pinnedRdds
+    listening(new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null) records.add(te.taskMetrics.inputMetrics.recordsRead)
+    })(Pipeline.runFullBatch(spark, in.toString + "/", out))
+    assert(pinnedRdds == pinnedBefore, "the reload's pins must not outlive it")
+
+    // One parse of each source, plus the songplays barrier's read-back
+    // of songs and artists. A read of a pin counts one record per cached
+    // batch, a handful here; a second parse of either source adds at
+    // least its 100 records.
+    val readBack = Seq("songs_table", "artists_table").map(Pipeline.readTable(spark, out, _).count()).sum
+    val once = songs.length + events.length + readBack
+    val read = records.sum
+    assert(read >= once && read - once < songs.length / 2, s"records read $read, one scan of each source reads $once")
+    assert(Pipeline.readTable(spark, out, "songplays_table").filter("song_id is not null").count() == events.length)
+  }
+
+  test("EP1 releases its pins when a write fails") {
+    val out = Files.createTempDirectory("graft-ep1-fail").toString + "/"
+    val pinnedBefore = pinnedRdds
+    // task commit renames its attempt dir: every write fails
+    withRenameRefusingFs(intercept[Exception](Pipeline.runFullBatch(spark, dirs._1, out)))
+    assert(pinnedRdds == pinnedBefore, "a failed reload must release its pins")
   }
 
   test("incremental job: coalesce(1) single part + month partitioning") {
@@ -257,16 +335,9 @@ class PipelineSpec extends AnyFunSuite {
     val rawDir = java.nio.file.Paths.get(root, "raw")
     Files.createDirectories(rawDir)
     Files.writeString(rawDir.resolve("bad.json"), "{this is not json at all")
-    val hc = spark.sparkContext.hadoopConfiguration
-    val impl = hc.get("fs.file.impl")
-    hc.set("fs.file.impl", classOf[RenameRefusingFs].getName)
-    hc.setBoolean("fs.file.impl.disable.cache", true)
-    val e =
-      try intercept[java.io.IOException](Pipeline.runIncrementalQuarantined(spark, root, "bad.json", failFast = true))
-      finally {
-        if (impl == null) hc.unset("fs.file.impl") else hc.set("fs.file.impl", impl)
-        hc.unset("fs.file.impl.disable.cache")
-      }
+    val e = withRenameRefusingFs(
+      intercept[java.io.IOException](Pipeline.runIncrementalQuarantined(spark, root, "bad.json", failFast = true))
+    )
     assert(e.getMessage.contains(s"${root}raw/bad.json") && e.getMessage.contains(s"${root}failed/bad.json"), e.getMessage)
     assert(e.getSuppressed.nonEmpty, "the read failure rides along as suppressed")
     assert(Files.exists(rawDir.resolve("bad.json")), "the file the FS refused to move is still in raw/")
@@ -281,6 +352,30 @@ class PipelineSpec extends AnyFunSuite {
     assert(ok)
     assert(Files.exists(rawDir.resolve("events.json")))
     assert(!Files.exists(java.nio.file.Paths.get(root, "failed", "events.json")))
+  }
+
+  test("a poisoned EP2 file touches neither table and leaves no overlap thread running") {
+    val root = Files.createTempDirectory("graft-quar-overlap").toString + "/"
+    val rawDir = java.nio.file.Paths.get(root, "raw")
+    Files.createDirectories(rawDir)
+    Files.writeString(rawDir.resolve("good.json"), logJson.mkString("\n"))
+    Files.writeString(rawDir.resolve("poisoned.json"), (logJson :+ logJson.head.take(40)).mkString("\n"))
+    def partFiles(): Map[String, Seq[Byte]] =
+      Seq("users_table", "time_table").flatMap { t =>
+        val dir = java.nio.file.Paths.get(root, "transformed", s"$t.parquet")
+        Files.walk(dir).iterator().asScala.filter(_.getFileName.toString.startsWith("part-")).map { f =>
+          dir.relativize(f).toString -> Files.readAllBytes(f).toSeq
+        }
+      }.toMap
+
+    assert(Pipeline.runIncrementalQuarantined(spark, root, "good.json", failFast = true))
+    val good = partFiles()
+    assert(good.size == 2, s"one part file per table expected, got ${good.keys}")
+    assert(!Pipeline.runIncrementalQuarantined(spark, root, "poisoned.json", failFast = true))
+    assert(partFiles() == good, "the poisoned run changed a table")
+    assert(Files.exists(java.nio.file.Paths.get(root, "failed", "poisoned.json")), "poisoned file moved to failed/")
+    val running = Thread.getAllStackTraces.keySet.asScala.filter(t => t.isAlive && t.getName.startsWith("graft-overlap-"))
+    assert(running.isEmpty, s"overlap threads outlived the run: ${running.map(_.getName)}")
   }
 
   test("case-insensitive resolution: userID resolves against userId column") {
