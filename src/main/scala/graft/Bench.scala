@@ -8,6 +8,8 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
+      // As GraftSession: TIMESTAMP(NANOS) event archives read as BIGINT nanos
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Per-execution eager shuffle-file removal
       // (spark.sql.classic.shuffleDependency.fileCleanup.enabled) was
       // TRIED for the r15 driver residual and measured HARMFUL, so it

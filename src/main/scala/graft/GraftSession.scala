@@ -27,6 +27,12 @@ import org.apache.spark.sql.SparkSession
   * a `file://` instance created in this JVM before the first session
   * (from a plain `new Configuration()`) stays the stock one.
   *
+  * Parquet `TIMESTAMP(NANOS)` columns read as epoch-nanos `BIGINT`
+  * (`spark.sql.legacy.parquet.nanosAsLong`) on every session it builds,
+  * for every read: footer conversion in [[graft.sources.Parquet]] and
+  * Spark's own inference both follow it. It is set once here, so how
+  * such a column reads never depends on which query ran first.
+  *
   * Every session it builds carries [[graft.functions.GraftExtensions]]:
   * the native `graft_*` functions and the range-join optimizer rule
   * (a no-op until `spark.graft.rangeJoin.bucketWidth` is set). The
@@ -77,6 +83,9 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.parquet.compression.codec", "snappy")
+      // Spark refuses TIMESTAMP(NANOS) columns (old events archives)
+      // without it; CoreQueries.normalizeEventTs converts the BIGINT.
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // S11 parity: fewer GCS metadata ops on commit when running
       // against gs:// paths (no-op on local FS).
       .config("spark.hadoop.fs.gs.implicit.dir.repair.enable", "false")

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.sources.Parquet
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -442,8 +444,7 @@ object Bpe {
     val serveFrom =
       try resolve()
       catch { case _: java.io.FileNotFoundException => resolve() }
-    spark.read
-      .parquet(new HPath(serveFrom, "merges").toString)
+    Parquet.read(spark, new HPath(serveFrom, "merges").toString)
       .orderBy(col("merge_rank"))
       .collect()
       .toIndexedSeq

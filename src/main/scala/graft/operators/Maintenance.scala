@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.sources.Parquet
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -95,7 +97,7 @@ object Maintenance {
       val bytes = fs.getContentSummary(fsPath).getLength
       val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
 
-      spark.read.parquet(path).repartition(nFiles).write.mode("overwrite").parquet(tmp.toString)
+      Parquet.read(spark, path).repartition(nFiles).write.mode("overwrite").parquet(tmp.toString)
       swapInto(fs, tmp, fsPath, old)
 
       fs.listStatus(fsPath).count(_.getPath.getName.endsWith(".parquet"))
@@ -154,7 +156,7 @@ object Maintenance {
     val indexExists = root.fs.exists(new org.apache.hadoop.fs.Path(indexPath))
     val fresh =
       if (indexExists) {
-        val index = spark.read.parquet(indexPath)
+        val index = Parquet.read(spark, indexPath)
         if (bloomFpp > 0.0) {
           // Bloom pre-filter (Spark's runtime-filter pattern as a library
           // op): rows whose hash is DEFINITELY not in the corpus skip the
@@ -549,7 +551,7 @@ object Maintenance {
         org.apache.spark.sql.types.IntegerType,
         org.apache.spark.sql.types.LongType
       )
-      val stateDf = spark.read.parquet(statePath)
+      val stateDf = Parquet.read(spark, statePath)
       Seq(idCol -> batch.schema(idCol).dataType, "mn_doc" -> stateDf.schema("mn_doc").dataType)
         .foreach { case (c, t) =>
           require(
@@ -637,7 +639,7 @@ object Maintenance {
                 // children are seg= partition dirs; only the listed
                 // leaf dirs are read (the prune stays physical).
                 Some(spark.read.option("basePath", statePath).parquet(paths: _*))
-            case None => Some(spark.read.parquet(statePath))
+            case None => Some(Parquet.read(spark, statePath))
           }
       st match {
         case Some(state) =>
@@ -842,7 +844,7 @@ object Maintenance {
     */
   def cardinalityEstimates(spark: SparkSession, statePath: String): DataFrame = {
     DurableRoot.wholeSwap(spark, statePath, "cardinalityEstimates").healForRead()
-    val state = spark.read.parquet(statePath)
+    val state = Parquet.read(spark, statePath)
     val keys = state.columns.filterNot(Set("sk", "n"))
     state.select(
       keys.map(col) :+
@@ -894,9 +896,9 @@ object Maintenance {
       def markerOf(dir: org.apache.hadoop.fs.Path) =
         new org.apache.hadoop.fs.Path(dir, "_applied_id")
       if (appliedId.isDefined && fs.exists(fsPath) && readAppliedId(fs, fsPath) == appliedId)
-        return spark.read.parquet(statePath) // retry of an applied batch: no-op
+        return Parquet.read(spark, statePath) // retry of an applied batch: no-op
       val merged =
-        if (fs.exists(fsPath)) fold(spark.read.parquet(statePath), partial)
+        if (fs.exists(fsPath)) fold(Parquet.read(spark, statePath), partial)
         else partial
       merged.write.mode("overwrite").parquet(tmp.toString)
       appliedId.foreach { id =>
@@ -905,7 +907,7 @@ object Maintenance {
         finally out.close()
       }
       swapInto(fs, tmp, fsPath, old)
-      spark.read.parquet(statePath)
+      Parquet.read(spark, statePath)
     }
   }
 
@@ -1430,8 +1432,7 @@ object Maintenance {
     */
   def spanStateView(spark: SparkSession, statePath: String): DataFrame = {
     DurableRoot.spanState(spark, statePath, "spanStateView").healForRead()
-    spark.read
-      .parquet(statePath)
+    Parquet.read(spark, statePath)
       .groupBy(col("h"))
       .agg(min(col("mn_doc")).as("mn_doc"), max(col("mx_doc")).as("mx_doc"))
   }
@@ -1625,7 +1626,7 @@ object Maintenance {
       // Whole-layout transition (first write / legacy unpartitioned
       // migration): the two-phase tmp + commit + swap protocol. The
       // merged state lands as one `seg=base0` segment per partition.
-      val merged = if (!stateExists) partial else fold(spark.read.parquet(statePath), partial)
+      val merged = if (!stateExists) partial else fold(Parquet.read(spark, statePath), partial)
       // Writer tasks ∝ bytes (floored at the cluster's parallelism for
       // the unknown-size first write), never one-per-bucket — a 100 TB
       // legacy migration must not hand each task state/buckets bytes.
@@ -1736,7 +1737,7 @@ object Maintenance {
   def schemaDiff(spark: SparkSession, oldPath: String, newPath: String): DataFrame = {
     import spark.implicits._
     def fields(p: String): Map[String, String] =
-      spark.read.parquet(p).schema.fields.map(f => f.name -> f.dataType.catalogString).toMap
+      Parquet.read(spark, p).schema.fields.map(f => f.name -> f.dataType.catalogString).toMap
     val o = fields(oldPath)
     val n = fields(newPath)
     val rows =

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.sources.Parquet
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -141,12 +143,12 @@ object NearDupIndex {
     val inBatch = pairsBetween(sigs, sigs, threshold).filter(col("doc_a") < col("doc_b"))
     val out =
       if (indexExists)
-        pairsBetween(sigs, spark.read.parquet(indexPath), threshold).unionByName(inBatch)
+        pairsBetween(sigs, Parquet.read(spark, indexPath), threshold).unionByName(inBatch)
       else inBatch
     val settled = out.localCheckpoint() // settle BEFORE the index grows
     val toAppend =
       if (indexExists)
-        sigs.join(spark.read.parquet(indexPath).select("doc_id"), Seq("doc_id"), "left_anti")
+        sigs.join(Parquet.read(spark, indexPath).select("doc_id"), Seq("doc_id"), "left_anti")
       else sigs
     // ~136 B per (doc_id, 16-minima sig) row → one file per ~1M rows,
     // sized from the already-settled signature count (an upper bound

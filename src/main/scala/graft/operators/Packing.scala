@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.sources.Parquet
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -936,7 +938,7 @@ object Packing {
       if (dirs.isEmpty) Seq.empty
       else rows(spark.read.option("basePath", root.toString).parquet(dirs: _*))
     val fromCompact = compactVersions(fs, root).lastOption.toSeq.flatMap { case (_, p) =>
-      rows(spark.read.parquet(p.toString))
+      rows(Parquet.read(spark, p.toString))
     }
     (fromDirs ++ fromCompact).distinctBy(t => (t._1, t._2))
   }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.sources.Parquet
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -560,7 +562,7 @@ object Preference {
     DurableRoot.wholeSwap(spark, statePath, "winMatrixFromState").healForRead()
     val Seq(promptCol, policyCol) =
       requireStateKeys(spark, statePath, 2, "winMatrixFromState", "winIngest")
-    val st = spark.read.parquet(statePath)
+    val st = Parquet.read(spark, statePath)
     matrixFromBest(st, promptCol, policyCol)
   }
 
@@ -899,7 +901,7 @@ object Preference {
     DurableRoot.wholeSwap(spark, statePath, "pairsFromState").healForRead()
     val Seq(promptCol) =
       requireStateKeys(spark, statePath, 1, "pairsFromState", "pairIngest")
-    val st = spark.read.parquet(statePath)
+    val st = Parquet.read(spark, statePath)
     st.select(
       col(promptCol),
       col("chosen_id"),

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.sources.Parquet
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -155,8 +157,8 @@ object QualityModel {
     val serveFrom =
       try resolve()
       catch { case _: java.io.FileNotFoundException => resolve() }
-    val pair = spark.read.parquet(new HPath(serveFrom, "pair").toString)
-    val uni = spark.read.parquet(new HPath(serveFrom, "uni").toString)
+    val pair = Parquet.read(spark, new HPath(serveFrom, "pair").toString)
+    val uni = Parquet.read(spark, new HPath(serveFrom, "uni").toString)
     bigrams(batch, idCol, textCol)
       .join(pair, Seq("w1", "w2"), "left")
       .join(uni, Seq("w1"), "left")

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.sources.Parquet
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -111,7 +113,7 @@ object Scale {
     // [[contentDigest]] for why sum, not xor): bitrot or a partial
     // copy that preserves counts and key ranges still moves the sum,
     // and [[verifyExport]] checks all three from the landed files.
-    val landedRaw = spark.read.parquet(path)
+    val landedRaw = Parquet.read(spark, path)
     val dataCols = digestCols(landedRaw)
     val landed = landedRaw
       .groupBy(col("shard"))
@@ -135,7 +137,7 @@ object Scale {
     fs.delete(new org.apache.hadoop.fs.Path(fin), true)
     if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(fin)))
       throw new java.io.IOException(s"manifest rename failed: $tmp -> $fin")
-    spark.read.parquet(fin)
+    Parquet.read(spark, fin)
   }
 
   /** The digest's column set: every data column whose type xxhash64
@@ -212,7 +214,7 @@ object Scale {
     * [[exportShards]] to upgrade.
     */
   def verifyExport(spark: SparkSession, path: String): DataFrame = {
-    val manifest = spark.read.parquet(s"$path.__manifest")
+    val manifest = Parquet.read(spark, s"$path.__manifest")
     require(
       !manifest.columns.contains("content_xor"),
       s"$path.__manifest carries the retired xor content digest, which is " +
@@ -224,7 +226,7 @@ object Scale {
       s"$path.__manifest is not a digest-bearing exportShards manifest " +
         "(re-export with the current exportShards to add content_digest)"
     )
-    val landedRaw = spark.read.parquet(path)
+    val landedRaw = Parquet.read(spark, path)
     val dataCols = digestCols(landedRaw)
     // counts + digest are column-order-free and the digest covers
     // every hashable data column (key ranges included), so the

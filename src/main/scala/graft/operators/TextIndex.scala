@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.sources.Parquet
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -70,7 +72,7 @@ object TextIndex {
     // by the anti-join, so the crash runbook is lease_break + re-run.
     DurableRoot.textIndex(spark, indexPath, "TextIndex.append")
       .write(DurableRoot.adhocToken("tidx-append")) {
-      val existing = spark.read.parquet(s"$indexPath/docs").select("doc_id")
+      val existing = Parquet.read(spark, s"$indexPath/docs").select("doc_id")
       val fresh = docs
         .select(col("doc_id"), col("text"))
         .join(existing, Seq("doc_id"), "left_anti")
@@ -146,7 +148,7 @@ object TextIndex {
       java.lang.Long.parseLong(hex, 16) % nBuckets
     }
     val buckets = sorted.map(bucketId).distinct
-    val postingsRaw = spark.read.parquet(s"$indexPath/postings")
+    val postingsRaw = Parquet.read(spark, s"$indexPath/postings")
     // Match the inferred partition-value type exactly (see VectorIndex:
     // a column-side cast would sit above the scan and defeat pruning).
     val typedBuckets: Seq[Any] = postingsRaw.schema("bucket").dataType match {
@@ -158,7 +160,7 @@ object TextIndex {
       .filter(col("bucket").isin(typedBuckets: _*))
       .filter(col("token").isin(sorted: _*))
       .select("token", "doc_id", "tf")
-    val docsT = spark.read.parquet(s"$indexPath/docs")
+    val docsT = Parquet.read(spark, s"$indexPath/docs")
     val stats = docsT.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
     val dfreq = postings.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val wideAggs = sorted.zipWithIndex.map { case (t, i) =>

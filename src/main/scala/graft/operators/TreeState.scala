@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.sources.Parquet
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -191,7 +193,7 @@ object TreeState {
     val markersOnly = fs.exists(root) && !hasCvDirs(fs, root) &&
       fs.listStatus(root).forall(st => !st.isDirectory && st.getPath.getName.startsWith("_"))
     if (markersOnly) emptyMemberships(spark, readIdTypes(fs, root))
-    else spark.read.parquet(statePath).select(COLS.map(col): _*)
+    else Parquet.read(spark, statePath).select(COLS.map(col): _*)
   }
 
   /** Re-partition an existing state under a NEW bucket count — the
@@ -404,7 +406,7 @@ object TreeState {
         // IS what defines the state's types).
         val (convT, turnT) =
           if (hasCvDirs(fs, root)) {
-            val st = spark.read.parquet(statePath).schema
+            val st = Parquet.read(spark, statePath).schema
             (st("conv_id").dataType, st("turn_id").dataType)
           } else (b.schema("conv_id").dataType, b.schema("turn_id").dataType)
         writeIdTypes(fs, root, convT, turnT)
@@ -440,8 +442,7 @@ object TreeState {
       val hasData = hasCvDirs(fs, root)
       val mTouched =
         if (hasData)
-          spark.read
-            .parquet(statePath)
+          Parquet.read(spark, statePath)
             .filter(col("cv").isin(pending.map(Int.box): _*))
             .select(COLS.map(col): _*)
         else

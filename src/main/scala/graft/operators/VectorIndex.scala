@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.sources.Parquet
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -193,7 +195,7 @@ object VectorIndex {
     val over = stats.filter(_._2 > cap)
     if (over.isEmpty) return 0
     val overIds = over.map(_._1).toSeq
-    val asgnRaw = spark.read.parquet(s"$indexPath/assignments")
+    val asgnRaw = Parquet.read(spark, s"$indexPath/assignments")
     val typedOver: Seq[Any] = asgnRaw.schema("cluster").dataType match {
       case org.apache.spark.sql.types.IntegerType => overIds.map(_.toInt)
       case org.apache.spark.sql.types.LongType    => overIds
@@ -202,7 +204,7 @@ object VectorIndex {
     val members = asgnRaw
       .filter(col("cluster").isin(typedOver: _*))
       .select(col("vec_id"), col("emb"), col("nrm"), col("cluster").cast("long").as("cluster"))
-    val centsAll = spark.read.parquet(s"$indexPath/centroids")
+    val centsAll = Parquet.read(spark, s"$indexPath/centroids")
     // Per-cluster split parameters come from the already-collected
     // histogram — no second pass over the data.
     val sizeDf = over.toSeq.map { case (c, n) =>
@@ -290,7 +292,7 @@ object VectorIndex {
     * anti-joined away, so a replayed batch cannot double-append.
     */
   def append(spark: SparkSession, batch: DataFrame, indexPath: String): Unit = {
-    val cent = spark.read.parquet(s"$indexPath/centroids")
+    val cent = Parquet.read(spark, s"$indexPath/centroids")
     val fresh = withNorm(batch.select(col("vec_id"), col("emb")))
     appendAssigned(spark, assignTo(fresh, cent), indexPath)
   }
@@ -313,7 +315,7 @@ object VectorIndex {
     // the loud path we want for a crash mid-append.
     DurableRoot.leaseOnly(spark, indexPath, "VectorIndex.appendAssigned")
       .write(DurableRoot.adhocToken("ivf-append")) {
-      val existing = spark.read.parquet(s"$indexPath/assignments").select("vec_id")
+      val existing = Parquet.read(spark, s"$indexPath/assignments").select("vec_id")
       assigned
         .select(col("vec_id"), col("emb"), col("nrm"), col("cluster"))
         .join(existing, Seq("vec_id"), "left_anti")
@@ -442,7 +444,7 @@ object VectorIndex {
     */
   def assignBatch(spark: SparkSession, batch: DataFrame, indexPath: String): DataFrame = {
     val v = withNorm(batch.select(col("vec_id"), col("emb")))
-    assignTo(v, spark.read.parquet(s"$indexPath/centroids"))
+    assignTo(v, Parquet.read(spark, s"$indexPath/centroids"))
   }
 
   /** Batch-vs-index near-duplicate pairs — the incremental SemDeDup
@@ -480,7 +482,7 @@ object VectorIndex {
   ): DataFrame = {
     // Bounded collect: distinct probed clusters <= K centroids.
     val probed = assigned.select("cluster").distinct().collect().map(_.getLong(0))
-    val asgnRaw = spark.read.parquet(s"$indexPath/assignments")
+    val asgnRaw = Parquet.read(spark, s"$indexPath/assignments")
     val typedProbes: Seq[Any] = asgnRaw.schema("cluster").dataType match {
       case org.apache.spark.sql.types.IntegerType => probed.map(_.toInt).toSeq
       case org.apache.spark.sql.types.LongType    => probed.toSeq
@@ -511,8 +513,7 @@ object VectorIndex {
     * vectors themselves.
     */
   def clusterStats(spark: SparkSession, indexPath: String): DataFrame =
-    spark.read
-      .parquet(s"$indexPath/assignments")
+    Parquet.read(spark, s"$indexPath/assignments")
       .groupBy(col("cluster").cast("long").as("cluster"))
       .agg(count(lit(1)).as("n"))
 
@@ -531,7 +532,7 @@ object VectorIndex {
       nProbe: Int = 1
   ): DataFrame = {
     require(topK > 0 && nProbe > 0, "topK and nProbe must be positive")
-    val cent = spark.read.parquet(s"$indexPath/centroids")
+    val cent = Parquet.read(spark, s"$indexPath/centroids")
     val q = withNorm(queries.select(col("vec_id").as("query_id"), col("emb")))
       .select(col("query_id"), col("emb").as("q_emb"), col("nrm").as("q_nrm"))
     val wProbe = Window.partitionBy(col("query_id")).orderBy(col("c_cos").desc, col("cent_id").asc)
@@ -544,7 +545,7 @@ object VectorIndex {
     // Bounded collect: the distinct probed clusters gate the scan so
     // parquet partition pruning skips every unprobed cluster directory.
     val probedClusters = probes.select("cluster").distinct().collect().map(_.getLong(0))
-    val asgnRaw = spark.read.parquet(s"$indexPath/assignments")
+    val asgnRaw = Parquet.read(spark, s"$indexPath/assignments")
     // Hive partition-value inference may type `cluster=` dirs as INT; the
     // probe literals must match that type EXACTLY — a cast on the column
     // side would sit above the scan and defeat partition pruning.

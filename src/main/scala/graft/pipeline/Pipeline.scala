@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.operators.Overlap
 import graft.schemas.Schemas
+import graft.sources.Parquet
 import graft.transforms.Transforms._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -76,8 +77,8 @@ object Pipeline {
       ) { case (df, name, byYear) => overwrite(df, s"$output$name.parquet", byYear) }
 
       // Materialization barrier: fact is built from on-disk dims.
-      val songs = spark.read.parquet(s"${output}songs_table.parquet")
-      val artists = spark.read.parquet(s"${output}artists_table.parquet")
+      val songs = Parquet.read(spark, s"${output}songs_table.parquet")
+      val artists = Parquet.read(spark, s"${output}artists_table.parquet")
       overwrite(songplaysTable(events, songs, artists, time), s"${output}songplays_table.parquet", byYear = true)
     } finally {
       songData.unpersist(blocking = true)
@@ -220,7 +221,7 @@ object Pipeline {
 
   /** Convenience: read one of the produced tables back. */
   def readTable(spark: SparkSession, output: String, name: String): DataFrame =
-    spark.read.parquet(s"$output$name.parquet")
+    Parquet.read(spark, s"$output$name.parquet")
 
   /** Write with ZERO-extra-scan row accounting: `observe` piggybacks
     * the count on the write job itself, so the pipeline can record
@@ -269,7 +270,7 @@ object Pipeline {
     require(shards > 0, "shards must be positive")
     require(minKeepTokens >= 1, "minKeepTokens must be >= 1")
     require(gateMilliBits >= 0, "gateMilliBits must be nonnegative")
-    val docs = spark.read.parquet(s"$dataDir/documents.parquet")
+    val docs = Parquet.read(spark, s"$dataDir/documents.parquet")
     // Surprisal gate with a CONFIGURABLE threshold (milli-bits of
     // average bigram surprisal; integer compare, engine-portable).
     // The 4400 default is exactly q106's published keep rule
@@ -584,7 +585,7 @@ object PipelineRunner {
       Array("--maintenance", "build_vocab", "--docs", docs, "--out", s"$root/vocab"),
       spark
     ) }
-    val man = spark.read.parquet(s"$root/manifests")
+    val man = Parquet.read(spark, s"$root/manifests")
     val lastRow = man.agg(org.apache.spark.sql.functions.max("last_pack")).head()
     val nPacks = if (lastRow.isNullAt(0)) 0L else lastRow.getLong(0) + 1L
     timedStage(capstone, "pack_export") { run(
@@ -702,7 +703,7 @@ object PipelineRunner {
     val group = if (opts.verb.name == "pack_ingest_by") Some(opts("group_col")) else None
     val budget = opts("budget").toLong
     val shards = opts("shards").toInt
-    val (batchDf, wcol) = withBpeWeights(spark, spark.read.parquet(batchPath), opts.get("bpe_model"))
+    val (batchDf, wcol) = withBpeWeights(spark, Parquet.read(spark, batchPath), opts.get("bpe_model"))
     val packing = graft.operators.Packing
     packing
       .packIngest(spark, batchDf, "doc_id", "text", state, applied, budget, shards, weightCol = wcol, groupCol = group)
@@ -744,8 +745,8 @@ object PipelineRunner {
     val name = opts.verb.name
     val out = opts("out")
     val threshold = opts("threshold").toDouble
-    val train = spark.read.parquet(opts("train"))
-    val evalDf = spark.read.parquet(opts("eval"))
+    val train = Parquet.read(spark, opts("train"))
+    val evalDf = Parquet.read(spark, opts("eval"))
     val dedup = graft.operators.Dedup
     val (key, unit, reported, report) = name match {
       case "decontaminate" =>
@@ -812,11 +813,11 @@ object PipelineRunner {
     import org.apache.spark.sql.functions.col
     val manifests = opts("manifests")
     val budget = resolveBudget(spark, manifests, opts)
-    val contamDf = spark.read.parquet(opts("contam"))
+    val contamDf = Parquet.read(spark, opts("contam"))
     val ids =
       if (contamDf.columns.contains("contaminated")) contamDf.filter(col("contaminated")).select(col("doc_id"))
       else contamDf.select(col("doc_id"))
-    val man = spark.read.parquet(manifests)
+    val man = Parquet.read(spark, manifests)
     val groupCols = opts.get("group_col").map(_.split(",").toSeq).getOrElse(Nil)
     val globalShape =
       Set("doc_id", "shard", "start_tok", "n_toks", "first_pack", "last_pack", "n_packs", "pack_batch")
@@ -970,7 +971,7 @@ object PipelineRunner {
       graft.operators.Maintenance
         .incrementalDupSpans(
           spark,
-          spark.read.parquet(batchPath),
+          Parquet.read(spark, batchPath),
           "doc_id",
           "text",
           state,
@@ -1015,7 +1016,7 @@ object PipelineRunner {
       val retain = opts("retain").toInt
       graft.operators.QualityModel.build(
         spark,
-        spark.read.parquet(s"$data/documents.parquet"),
+        Parquet.read(spark, s"$data/documents.parquet"),
         "doc_id",
         "text",
         model,
@@ -1041,7 +1042,7 @@ object PipelineRunner {
       val dmc = opts("driver_max_chars").toLong
       graft.operators.Bpe.buildModel(
         spark,
-        spark.read.parquet(s"$data/documents.parquet"),
+        Parquet.read(spark, s"$data/documents.parquet"),
         "text",
         model,
         merges,
@@ -1061,7 +1062,7 @@ object PipelineRunner {
       val model = opts("model")
       val out = opts("out")
       graft.operators.Bpe
-        .segmentCountsFrozen(spark.read.parquet(batchPath), "doc_id", "text", model)
+        .segmentCountsFrozen(Parquet.read(spark, batchPath), "doc_id", "text", model)
         .write
         .mode("overwrite")
         .parquet(out)
@@ -1085,7 +1086,7 @@ object PipelineRunner {
       val minKeep = opts("min_keep_tokens").toInt
       val (nIn, nOut) = Pipeline.curateIngest(
         spark,
-        spark.read.parquet(batchPath),
+        Parquet.read(spark, batchPath),
         model,
         spanState,
         index,
@@ -1207,7 +1208,7 @@ object PipelineRunner {
           spark,
           state,
           manifests,
-          spark.read.parquet(docsPath),
+          Parquet.read(spark, docsPath),
           "doc_id",
           "text",
           from,
@@ -1268,8 +1269,7 @@ object PipelineRunner {
         .contamAudit(man, ids, "doc_id", budget, groupCols)
       val mask = graft.operators.Packing.retirePacks(audit, budget, threshold, groupCols)
       val n = Pipeline.writeCounted(mask, out)
-      val retired = spark.read
-        .parquet(out)
+      val retired = Parquet.read(spark, out)
         .filter(org.apache.spark.sql.functions.col("retired"))
         .count()
       println(
@@ -1306,7 +1306,7 @@ object PipelineRunner {
       val out = opts("out")
       val parts = opts("parts").toInt
       val vocab = graft.operators.Vocab
-        .build(spark.read.parquet(docsPath).select(org.apache.spark.sql.functions.col("text")), "text", parts)
+        .build(Parquet.read(spark, docsPath).select(org.apache.spark.sql.functions.col("text")), "text", parts)
       val n = Pipeline.writeCounted(vocab, out)
       println(s"[maintenance] vocab: $n tokens from $docsPath into $out")
     },
@@ -1338,7 +1338,7 @@ object PipelineRunner {
           spark,
           state,
           manifests,
-          spark.read.parquet(docsPath),
+          Parquet.read(spark, docsPath),
           "doc_id",
           "text",
           from,
@@ -1347,7 +1347,7 @@ object PipelineRunner {
           mask = maskDf
         )
         .localCheckpoint() // one computation serves the OOV probe AND the export
-      val vocabDf = spark.read.parquet(vocabPath)
+      val vocabDf = Parquet.read(spark, vocabPath)
       // OOV interlock: a token the frozen vocab doesn't know would
       // otherwise VANISH from the export (inner-join drop), leaving
       // only a silent hole in the positions array — with a vocab
@@ -1390,8 +1390,7 @@ object PipelineRunner {
       // landing. Intervals for retired (withheld) packs are dropped:
       // they have no exported row to mask.
       opts.get("loss_masks").foreach { lm =>
-        val windowed = spark.read
-          .parquet(lm)
+        val windowed = Parquet.read(spark, lm)
           .filter(org.apache.spark.sql.functions.col("pack_id") >= from &&
             org.apache.spark.sql.functions.col("pack_id") < to)
         val shipped = maskDf match {
@@ -1405,8 +1404,7 @@ object PipelineRunner {
           case None => windowed
         }
         val nm = Pipeline.writeCounted(shipped, s"$out/_loss_masks")
-        val tot = spark.read
-          .parquet(s"$out/_loss_masks")
+        val tot = Parquet.read(spark, s"$out/_loss_masks")
           .agg(
             org.apache.spark.sql.functions.coalesce(
               org.apache.spark.sql.functions.sum("n_mask_tokens"),
@@ -1493,9 +1491,9 @@ object PipelineRunner {
               spark
             )
             import org.apache.spark.sql.functions.{col => cc}
-            val kept = spark.read.parquet(s"$root/dsir_scores").select(cc("doc_id"))
+            val kept = Parquet.read(spark, s"$root/dsir_scores").select(cc("doc_id"))
             Pipeline.writeCounted(
-              spark.read.parquet(s"$root/clean").join(kept, Seq("doc_id"), "left_semi"),
+              Parquet.read(spark, s"$root/clean").join(kept, Seq("doc_id"), "left_semi"),
               s"$root/selected"
             )
           }
@@ -1526,20 +1524,19 @@ object PipelineRunner {
       }
       // Release audit manifest — every number re-derived from what
       // actually LANDED on disk.
-      val nIn = spark.read.parquet(s"$data/documents.parquet").count()
-      val nCurated = spark.read.parquet(s"$root/curated").count()
-      val nContam = spark.read
-        .parquet(s"$root/decontam_report")
+      val nIn = Parquet.read(spark, s"$data/documents.parquet").count()
+      val nCurated = Parquet.read(spark, s"$root/curated").count()
+      val nContam = Parquet.read(spark, s"$root/decontam_report")
         .filter(c("contaminated"))
         .count()
-      val nClean = spark.read.parquet(s"$root/clean").count()
-      val nVocab = spark.read.parquet(s"$root/vocab").count()
+      val nClean = Parquet.read(spark, s"$root/clean").count()
+      val nVocab = Parquet.read(spark, s"$root/vocab").count()
       val totToks = man.agg(sm(c("n_toks"))).head().getLong(0)
-      val landedPacks = spark.read.parquet(s"$root/shards").agg(cnt(lit(1))).head().getLong(0)
+      val landedPacks = Parquet.read(spark, s"$root/shards").agg(cnt(lit(1))).head().getLong(0)
       // with the DSIR stage, the packed-corpus count rides along so a
       // surprising selection cut is visible in the audit
       val selectedField = opts.get("dsir_target") match {
-        case Some(_) => s""" "dsir_selected": ${spark.read.parquet(s"$root/selected").count()},"""
+        case Some(_) => s""" "dsir_selected": ${Parquet.read(spark, s"$root/selected").count()},"""
         case None    => ""
       }
       val manifestJson =
@@ -1594,7 +1591,7 @@ object PipelineRunner {
       val turnCol = opts("turn_col")
       val roleCol = opts("role_col")
       val contentCol = opts("content_col")
-      val turns = spark.read.parquet(turnsPath)
+      val turns = Parquet.read(spark, turnsPath)
       val nBadWs = turns
         .filter(col(contentCol).rlike("(^\\s)|(\\s$)") || col(contentCol) === "")
         .count()
@@ -1642,7 +1639,7 @@ object PipelineRunner {
             ) }
           }
           (s"$root/path_turns", "doc_id", "turn_key", "role", "content",
-            spark.read.parquet(s"$root/path_turns"))
+            Parquet.read(spark, s"$root/path_turns"))
         } else (turnsPath, convCol, turnCol, roleCol, contentCol, turns)
       val rendered = chainTurns
         .groupBy(col(chainConv).as("doc_id"))
@@ -1670,7 +1667,7 @@ object PipelineRunner {
       }
       // Ship the role masks WITH the landing (underscore dir —
       // parquet readers of shards/ ignore it).
-      val masks = spark.read.parquet(s"$root/role_masks")
+      val masks = Parquet.read(spark, s"$root/role_masks")
       Pipeline.writeCounted(masks, s"$root/shards/_role_masks")
       // Audit manifest — every number from landed data. Turn counts
       // are over the ORIGINAL turn store (in tree mode the path
@@ -1678,18 +1675,17 @@ object PipelineRunner {
       // equal the original train-role turns' token total — the
       // single-loss invariant the e2e spec checks).
       val nTurns = turns.count()
-      val nDocs = spark.read.parquet(s"$root/rendered").count()
+      val nDocs = Parquet.read(spark, s"$root/rendered").count()
       val nConvs = if (treeMode) turns.select(col(convCol)).distinct().count() else nDocs
       val nTrainTurns = turns.filter(col(roleCol) === trainRole).count()
       val totToks = man.agg(sum(col("n_toks"))).head().getLong(0)
-      val maskedToks = spark.read
-        .parquet(s"$root/shards/_role_masks")
+      val maskedToks = Parquet.read(spark, s"$root/shards/_role_masks")
         .agg(org.apache.spark.sql.functions
           .coalesce(sum(col("n_mask_tokens")), lit(0L)))
         .head()
         .getLong(0)
-      val nVocab = spark.read.parquet(s"$root/vocab").count()
-      val landedPacks = spark.read.parquet(s"$root/shards").count()
+      val nVocab = Parquet.read(spark, s"$root/vocab").count()
+      val landedPacks = Parquet.read(spark, s"$root/shards").count()
       writeManifest(
         spark,
         root,
@@ -1722,7 +1718,7 @@ object PipelineRunner {
       val width = opts("hex_width").toInt
       val sched = graft.operators.Packing
         .epochOrder(
-          spark.read.parquet(manifests),
+          Parquet.read(spark, manifests),
           epochs,
           seed,
           width,
@@ -1742,7 +1738,7 @@ object PipelineRunner {
       // below ignores it as metadata while resolveBudget honors it.
       val budget = resolveBudget(spark, manifests, opts)
       val b = graft.operators.Packing
-        .boundaries(spark.read.parquet(manifests), "doc_id", budget)
+        .boundaries(Parquet.read(spark, manifests), "doc_id", budget)
       val n = Pipeline.writeCounted(b, out)
       println(s"[maintenance] pack boundaries: $n segment rows from $manifests into $out")
     },
@@ -1758,7 +1754,7 @@ object PipelineRunner {
       val step = opts("step").toLong
       val batch = opts("batch").toLong
       val slice = graft.operators.Packing
-        .resumeSlice(spark.read.parquet(schedDir), step, batch)
+        .resumeSlice(Parquet.read(spark, schedDir), step, batch)
       val n = Pipeline.writeCounted(slice, out)
       println(
         s"[maintenance] resume slice: $n remaining schedule rows after step $step " +
@@ -1777,7 +1773,7 @@ object PipelineRunner {
       val groupCol = opts("group_col")
       val alpha = opts("alpha").toDouble
       val w = graft.operators.Packing.temperatureWeights(
-        spark.read.parquet(manifests),
+        Parquet.read(spark, manifests),
         groupCol,
         org.apache.spark.sql.functions.col("n_toks"),
         alpha
@@ -1798,7 +1794,7 @@ object PipelineRunner {
       val weightCol = opts("weight_col")
       val budget = opts("budget").toLong
       val q = graft.operators.Packing.apportionBudget(
-        spark.read.parquet(weightsPath),
+        Parquet.read(spark, weightsPath),
         groupCol,
         weightCol,
         budget
@@ -1820,14 +1816,14 @@ object PipelineRunner {
       val weightCol = opts("weight_col")
       val budgetCol = opts("budget_col")
       val q = graft.operators.Packing.apportionBudgetBy(
-        spark.read.parquet(weightsPath),
+        Parquet.read(spark, weightsPath),
         phaseCol,
         groupCol,
         weightCol,
         budgetCol
       )
       val n = Pipeline.writeCounted(q, out)
-      val phases = spark.read.parquet(out).select(phaseCol).distinct().count()
+      val phases = Parquet.read(spark, out).select(phaseCol).distinct().count()
       println(
         s"[maintenance] apportioned $phases phase budget(s) over $n ($phaseCol, $groupCol) quotas into $out"
       )
@@ -1842,7 +1838,7 @@ object PipelineRunner {
       val out = opts("out")
       val budget = resolveBudget(spark, manifests, opts)
       val eff = graft.operators.Packing.packEfficiency(
-        spark.read.parquet(manifests),
+        Parquet.read(spark, manifests),
         budget,
         opts.get("group_col").toSeq
       )
@@ -1866,8 +1862,8 @@ object PipelineRunner {
         .toSeq
       val budget = resolveBudget(spark, manifests, opts)
       val prov = graft.operators.Packing.provenance(
-        spark.read.parquet(manifests),
-        spark.read.parquet(attrsPath),
+        Parquet.read(spark, manifests),
+        Parquet.read(spark, attrsPath),
         "doc_id",
         budget,
         attrCols
@@ -1890,15 +1886,14 @@ object PipelineRunner {
       val perMille = opts("heldout_per_mille").toInt
       val seed = opts("seed")
       val sp = graft.operators.Dedup.leakageFreeSplit(
-        spark.read.parquet(docsPath),
-        spark.read.parquet(pairsPath),
+        Parquet.read(spark, docsPath),
+        Parquet.read(spark, pairsPath),
         "doc_id",
         perMille,
         seed
       )
       val n = Pipeline.writeCounted(sp, out)
-      val nHeld = spark.read
-        .parquet(out)
+      val nHeld = Parquet.read(spark, out)
         .filter(org.apache.spark.sql.functions.col("split") === "heldout")
         .count()
       println(
@@ -1924,14 +1919,13 @@ object PipelineRunner {
         .filter(_.nonEmpty)
         .toSeq
       val diff = graft.operators.Maintenance.snapshotDiff(
-        spark.read.parquet(oldPath),
-        spark.read.parquet(newPath),
+        Parquet.read(spark, oldPath),
+        Parquet.read(spark, newPath),
         idCol,
         cols
       )
       val n = Pipeline.writeCounted(diff, out)
-      val byStatus = spark.read
-        .parquet(out)
+      val byStatus = Parquet.read(spark, out)
         .groupBy("status")
         .count()
         .collect()
@@ -1953,7 +1947,7 @@ object PipelineRunner {
         .map(_.trim.toLong)
         .toSeq
       val sweep = graft.operators.Packing.efficiencySweep(
-        spark.read.parquet(manifests),
+        Parquet.read(spark, manifests),
         budgets,
         opts.get("group_col").toSeq
       )
@@ -1973,14 +1967,13 @@ object PipelineRunner {
       val out = opts("out")
       val scoreCol = opts("score_col")
       val best = graft.operators.Dedup.keepBestOfCluster(
-        spark.read.parquet(docsPath),
-        spark.read.parquet(pairsPath),
+        Parquet.read(spark, docsPath),
+        Parquet.read(spark, pairsPath),
         "doc_id",
         scoreCol
       )
       val n = Pipeline.writeCounted(best, out)
-      val nKeep = spark.read
-        .parquet(out)
+      val nKeep = Parquet.read(spark, out)
         .filter(org.apache.spark.sql.functions.col("keep"))
         .count()
       println(
@@ -2006,7 +1999,7 @@ object PipelineRunner {
       val promptCol = opts("prompt_col")
       val idCol = opts("id_col")
       val scoreCol = opts("score_col")
-      val resp0 = spark.read.parquet(respPath)
+      val resp0 = Parquet.read(spark, respPath)
       val nResp = resp0.count()
       // optional stage 0: within-prompt response dedup (identical
       // sampled completions collapse to the argmax-score survivor
@@ -2026,7 +2019,7 @@ object PipelineRunner {
           val range = opts("dispute_range").toLong
           val ratingScoreCol = opts("rating_score_col")
           val triage = graft.operators.Preference
-            .raterAgreement(spark.read.parquet(rp), idCol, ratingScoreCol, range)
+            .raterAgreement(Parquet.read(spark, rp), idCol, ratingScoreCol, range)
           val disputed = triage.filter(col("disputed")).select(col(idCol))
           val nD = disputed.count()
           (respD.join(disputed, Seq(idCol), "left_anti"), nD)
@@ -2049,7 +2042,7 @@ object PipelineRunner {
           graft.operators.Preference.purgePairs(
             pairs0,
             Seq("chosen_id", "rejected_id"),
-            spark.read.parquet(cp),
+            Parquet.read(spark, cp),
             opts.get("contam_id_col").getOrElse(idCol)
           )
         case None => pairs0
@@ -2126,7 +2119,7 @@ object PipelineRunner {
       graft.operators.Preference
         .winIngest(
           spark,
-          spark.read.parquet(batchPath),
+          Parquet.read(spark, batchPath),
           promptCol,
           policyCol,
           scoreCol,
@@ -2155,7 +2148,7 @@ object PipelineRunner {
       val matrix = (opts.get("state"), opts.get("matrix")) match {
         case (Some(s), None) =>
           graft.operators.Preference.winMatrixFromState(spark, s)
-        case (None, Some(m)) => spark.read.parquet(m)
+        case (None, Some(m)) => Parquet.read(spark, m)
         case _ => sys.error("exactly one of --state <dir> or --matrix <parquet> required")
       }
       val ratings = graft.operators.Preference
@@ -2186,8 +2179,8 @@ object PipelineRunner {
       val textCol = opts("text_col")
       val buckets = opts("buckets").toInt
       val w = graft.operators.Importance.ngramImportanceWeightsFrom(
-        spark.read.parquet(dataPath),
-        spark.read.parquet(targetPath),
+        Parquet.read(spark, dataPath),
+        Parquet.read(spark, targetPath),
         textCol,
         buckets
       )
@@ -2226,10 +2219,10 @@ object PipelineRunner {
         case (None, None)    => 1024
       }
       val scored = graft.operators.Importance.importanceScores(
-        spark.read.parquet(dataPath),
+        Parquet.read(spark, dataPath),
         idCol,
         textCol,
-        spark.read.parquet(weightsPath),
+        Parquet.read(spark, weightsPath),
         buckets
       )
       val result = opts.get("k") match {
@@ -2293,7 +2286,7 @@ object PipelineRunner {
         .map(_.trim.toLong)
         .toSeq
       val curve = graft.operators.Vocab
-        .coverageCurve(spark.read.parquet(docsPath), textCol, targets)
+        .coverageCurve(Parquet.read(spark, docsPath), textCol, targets)
       val landed = opts.get("out") match {
         case Some(o) => Pipeline.writeCounted(curve, o)
         case None =>
@@ -2335,7 +2328,7 @@ object PipelineRunner {
         case None => "ws"
       }
       graft.operators.Chunking.recordSpace(spark, out, space)
-      val docsDf = spark.read.parquet(docsPath)
+      val docsDf = Parquet.read(spark, docsPath)
       val chunks = modelOpt match {
         case Some(m) =>
           graft.operators.Chunking.bpeChunksFrozen(docsDf, idCol, textCol, m, window, stride)
@@ -2369,7 +2362,7 @@ object PipelineRunner {
       val parentCol = opts("parent_col")
       val maxDepth = opts("max_depth").toInt
       val paths = graft.operators.ConvTree
-        .treePaths(spark.read.parquet(turnsPath), convCol, turnCol, parentCol, maxDepth,
+        .treePaths(Parquet.read(spark, turnsPath), convCol, turnCol, parentCol, maxDepth,
           opts("max_conv_rows").toInt)
       val n = Pipeline.writeCounted(paths, out)
       println(s"[maintenance] tree_paths: $n path-membership row(s) to $out")
@@ -2396,7 +2389,7 @@ object PipelineRunner {
       val maxDepth = opts("max_depth").toInt
       val folded = graft.operators.TreeState.fold(
         spark,
-        spark.read.parquet(batchPath),
+        Parquet.read(spark, batchPath),
         convCol, turnCol, parentCol,
         state,
         opts.get("applied_id").map(_.toLong),
@@ -2527,7 +2520,7 @@ object PipelineRunner {
       // shuffle is inserted (the standing small-local-files
       // discipline; measured 58-134 s -> ~7 s on the 200k-triple
       // store-scale soak).
-      val tripleScan = spark.read.parquet(s"$root/triples")
+      val tripleScan = Parquet.read(spark, s"$root/triples")
       val tripleSplits = tripleScan.rdd.getNumPartitions
       println(s"[dpo_release] triples scan: $tripleSplits split(s)")
       val triples =
@@ -2558,7 +2551,7 @@ object PipelineRunner {
         val badConv = opts("bad_conv_col")
         val badTurn = opts("bad_turn_col")
         val bad = broadcast(
-          spark.read.parquet(b)
+          Parquet.read(spark, b)
             .select(col(badConv).as("conv_id"), col(badTurn).as("__bad_id"))
             .distinct()
         )
@@ -2577,7 +2570,7 @@ object PipelineRunner {
       val cleaned = opts.get("eval").fold(afterBad) { e =>
         graft.operators.Dedup.purgeAnyOf(
           afterBad,
-          spark.read.parquet(e),
+          Parquet.read(spark, e),
           Seq("conv_id", "parent_id"),
           tripleTextCols,
           opts("eval_text_col"),
@@ -2589,7 +2582,7 @@ object PipelineRunner {
           val n = timedStage("dpo_release", "pair_decontam") {
             Pipeline.writeCounted(cleaned, s"$root/clean")
           }
-          (spark.read.parquet(s"$root/clean"), n)
+          (Parquet.read(spark, s"$root/clean"), n)
         } else (metered, nPairs)
       // stage split for the audit: only needed when BOTH purges ran
       // (one extra broadcast-anti count; otherwise derived free)
@@ -2666,8 +2659,8 @@ object PipelineRunner {
       }
       // turns_in is a parquet-footer count of the input store —
       // metadata-cheap (no data pages read), documented as such.
-      val nTurns = spark.read.parquet(turnsPath).count()
-      val landed = spark.read.parquet(s"$root/shards").count()
+      val nTurns = Parquet.read(spark, turnsPath).count()
+      val landed = Parquet.read(spark, s"$root/shards").count()
       writeManifest(
         spark,
         root,
@@ -2707,7 +2700,7 @@ object PipelineRunner {
       val contentCol = opts("content_col")
       val scoreCol = opts("score_col")
       val respRole = opts("resp_role")
-      val turnsDf = spark.read.parquet(turnsPath)
+      val turnsDf = Parquet.read(spark, turnsPath)
       // --paths_state serves the prompt render from the durable
       // TreeState memberships instead of re-running the closure.
       val result =
@@ -2771,11 +2764,11 @@ object PipelineRunner {
         case Some(st) =>
           graft.operators.ConvTree.renderPathsFrom(
             graft.operators.TreeState.memberships(spark, st),
-            spark.read.parquet(turnsPath),
+            Parquet.read(spark, turnsPath),
             convCol, turnCol, roleCol, contentCol, trainRole)
         case None =>
           graft.operators.ConvTree.renderPaths(
-            spark.read.parquet(turnsPath),
+            Parquet.read(spark, turnsPath),
             convCol, turnCol, parentCol, roleCol, contentCol, trainRole, maxDepth)
       }
       val pathIds = graft.operators.Vocab
@@ -2821,14 +2814,14 @@ object PipelineRunner {
       val packsPath = opts("packs")
       val vocabPath = opts("vocab")
       val out = opts("out")
-      val packsAll = spark.read.parquet(packsPath)
+      val packsAll = Parquet.read(spark, packsPath)
       val packs = (opts.get("from").map(_.toLong), opts.get("to").map(_.toLong)) match {
         case (Some(f), Some(t)) => packsAll.filter(col("pack_id") >= f && col("pack_id") < t)
         case (None, None)       => packsAll
         case _ => sys.error("--from and --to must be passed together")
       }
       val decoded = graft.operators.Vocab
-        .decodePacks(packs, spark.read.parquet(vocabPath))
+        .decodePacks(packs, Parquet.read(spark, vocabPath))
       val n = Pipeline.writeCounted(decoded, out)
       println(s"[maintenance] decode_packs: $n pack(s) decoded to $out")
     },
@@ -2850,7 +2843,7 @@ object PipelineRunner {
       val contentCol = opts("content_col")
       val trainRole = opts("train_role")
       val iv = graft.operators.Preference.roleMaskIntervals(
-        spark.read.parquet(turnsPath),
+        Parquet.read(spark, turnsPath),
         convCol,
         turnCol,
         roleCol,
@@ -2864,7 +2857,7 @@ object PipelineRunner {
           // conversations were packed under a different key name
           // (pack_ingest emits doc_id-keyed manifests).
           val manIdCol = opts("man_id_col")
-          val manDf0 = spark.read.parquet(mp)
+          val manDf0 = Parquet.read(spark, mp)
           val manDf =
             if (manIdCol == "conv_id") manDf0
             else manDf0.withColumnRenamed(manIdCol, "conv_id")

@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.sources.Parquet
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -24,13 +26,14 @@ import org.apache.spark.sql.functions._
 object CoreQueries {
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(spark, s"$dir/$name.parquet")
 
   /** Normalizes the events `ts` column to a session-TZ TIMESTAMP
     * regardless of how the parquet was written. Generators have shipped
     * it three ways:
     *   - TIMESTAMP(NANOS), which Spark's vectorized reader rejects —
-    *     read as long (`nanosAsLong`) and convert with integral `div`
+    *     read as long (`nanosAsLong`, which
+    *     [[graft.GraftSession]] sets) and convert with integral `div`
     *     (a double division would lose precision: epoch-nanos ≈ 1.7e18
     *     > 2^53). DuckDB performs the same ns→µs truncation when
     *     casting, so oracles agree.
@@ -60,10 +63,8 @@ object CoreQueries {
         )
     }
 
-  private[graft] def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventTs(spark.read.parquet(s"$dir/events.parquet"))
-  }
+  private[graft] def events(spark: SparkSession, dir: String): DataFrame =
+    normalizeEventTs(Parquet.read(spark, s"$dir/events.parquet"))
 
   private def cents(c: Column): Column = floor(c * 100)
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.multimodal.Multimodal
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,7 +11,7 @@ import org.apache.spark.sql.functions._
 object MultimodalQueries {
 
   private def assets(spark: SparkSession, dir: String): DataFrame =
-    Multimodal.assetsFromDocuments(spark.read.parquet(s"$dir/documents.parquet"))
+    Multimodal.assetsFromDocuments(Parquet.read(spark, s"$dir/documents.parquet"))
 
   /** Decode + frame-sample: per-asset metadata with the sampled frame
     * count (explode → count back — exercises the lateral view).
@@ -47,7 +48,7 @@ object MultimodalQueries {
     * future non-ASCII corpus fails loudly instead of silently.
     */
   def q67MultimodalPatches(spark: SparkSession, dir: String): DataFrame = {
-    val d = spark.read.parquet(s"$dir/documents.parquet")
+    val d = Parquet.read(spark, s"$dir/documents.parquet")
     val payload = encode(col("text"), "UTF-8")
     d.select(
       col("doc_id"),
@@ -77,8 +78,7 @@ object MultimodalQueries {
     // slices text characters, Spark slices payload bytes — identical
     // only for ASCII. Carry the precondition in-band (q67's rule) so a
     // non-ASCII corpus fails on an explicit flag, not a hash mismatch.
-    val asciiOk = spark.read
-      .parquet(s"$dir/documents.parquet")
+    val asciiOk = Parquet.read(spark, s"$dir/documents.parquet")
       .agg(
         bool_and(
           length(encode(col("text"), "UTF-8")) === length(col("text"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Preference
+import graft.sources.Parquet
 
 /** Post-training (SFT / RLHF) preference-data queries over the
   * synthetic tables: the documents table stands in for a scored
@@ -17,7 +18,7 @@ import graft.operators.Preference
 object PreferenceQueries {
 
   private def docs(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/documents.parquet")
+    val raw = Parquet.read(spark, s"$dir/documents.parquet")
     val want = spark.sparkContext.defaultParallelism
     if (raw.rdd.getNumPartitions < want) raw.repartition(want) else raw
   }
@@ -90,7 +91,7 @@ object PreferenceQueries {
     */
   def q150TurnFlatten(spark: SparkSession, dir: String): DataFrame =
     Preference.flattenTurns(
-      spark.read.parquet(s"$dir/events.parquet"),
+      Parquet.read(spark, s"$dir/events.parquet"),
       convCol = "user_id",
       tsCol = "ts",
       tieCol = "event_id",
@@ -231,7 +232,7 @@ object PreferenceQueries {
       .parquet(landing)
     org.apache.commons.io.FileUtils
       .deleteDirectory(java.nio.file.Paths.get(statePath).toFile)
-    spark.read.parquet(landing)
+    Parquet.read(spark, landing)
   }
 
   /** SFT role masks in the TRAINED tokenizer's token space
@@ -359,7 +360,7 @@ object PreferenceQueries {
       .parquet(landing)
     org.apache.commons.io.FileUtils
       .deleteDirectory(java.nio.file.Paths.get(statePath).toFile)
-    spark.read.parquet(landing)
+    Parquet.read(spark, landing)
   }
 
   /** Bradley-Terry arena ratings

@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.sources.Parquet
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -37,7 +39,7 @@ object TextQueries {
     * finer.)
     */
   private def docs(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/documents.parquet")
+    val raw = Parquet.read(spark, s"$dir/documents.parquet")
     val want = spark.sparkContext.defaultParallelism
     if (raw.rdd.getNumPartitions < want) raw.repartition(want) else raw
   }
@@ -307,12 +309,12 @@ object TextQueries {
     // the durable mode covers every memoized table, not just the inputs.
     val pairsPath = s"$statePath/pairs"
     nearDupPairs(spark, dir).write.mode("overwrite").parquet(pairsPath)
-    featureMemo.put((sessionKey(spark), dir, "pairs"), spark.read.parquet(pairsPath))
+    featureMemo.put((sessionKey(spark), dir, "pairs"), Parquet.read(spark, pairsPath))
     // Fourth shared feature: the duplicated-position table feeding the
     // span-extent family (q101/q102/q104).
     val posPath = s"$statePath/dup_positions"
     dupPositionsDf(spark, dir).write.mode("overwrite").parquet(posPath)
-    featureMemo.put((sessionKey(spark), dir, "dup_positions"), spark.read.parquet(posPath))
+    featureMemo.put((sessionKey(spark), dir, "dup_positions"), Parquet.read(spark, posPath))
     (shPath, tokPath)
   }
 
@@ -327,16 +329,16 @@ object TextQueries {
   def pointFeaturesAt(spark: SparkSession, dir: String, statePath: String): Unit = {
     val sk = sessionKey(spark)
     featureMemo.invalidate(sk, dir)
-    featureMemo.put((sk, dir, "shingles"), spark.read.parquet(s"$statePath/shingles"))
-    featureMemo.put((sk, dir, "tokens"), spark.read.parquet(s"$statePath/tokens"))
+    featureMemo.put((sk, dir, "shingles"), Parquet.read(spark, s"$statePath/shingles"))
+    featureMemo.put((sk, dir, "tokens"), Parquet.read(spark, s"$statePath/tokens"))
     val pairsPath = s"$statePath/pairs"
     val fs = org.apache.hadoop.fs.FileSystem
       .get(java.net.URI.create(pairsPath), spark.sparkContext.hadoopConfiguration)
     if (fs.exists(new org.apache.hadoop.fs.Path(pairsPath)))
-      featureMemo.put((sk, dir, "pairs"), spark.read.parquet(pairsPath))
+      featureMemo.put((sk, dir, "pairs"), Parquet.read(spark, pairsPath))
     val posPath = s"$statePath/dup_positions"
     if (fs.exists(new org.apache.hadoop.fs.Path(posPath)))
-      featureMemo.put((sk, dir, "dup_positions"), spark.read.parquet(posPath))
+      featureMemo.put((sk, dir, "dup_positions"), Parquet.read(spark, posPath))
   }
 
   /** Parameterized near-dup pair builder over the inverted shingle
@@ -1342,33 +1344,33 @@ object TextQueries {
   def q89IncrementalDistinct(spark: SparkSession, dir: String): DataFrame = {
     val inst = docs(spark, dir)
       .select(col("doc_id"), col("lang"), explode(tokens(col("text"))).as("token"))
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft-card")
-      .resolve("state")
-      .toString
     val even = inst.filter(col("doc_id") % 2 === 0)
     val odd = inst.filter(col("doc_id") % 2 === 1)
-    graft.operators.Maintenance
-      .refreshCardinality(spark, even, Seq("lang"), "token", statePath, Some(1L))
-    graft.operators.Maintenance
-      .refreshCardinality(spark, odd, Seq("lang"), "token", statePath, Some(2L))
-    // replay of an applied batch — exactly-once means this is a no-op
-    graft.operators.Maintenance
-      .refreshCardinality(spark, odd, Seq("lang"), "token", statePath, Some(2L))
     // The estimate table is ONE ROW PER LANGUAGE (bounded, like the
     // per-file stats index) — materialize it and drop the scratch
-    // state dir now, instead of leaking a /tmp dir per invocation and
-    // handing consumers a lazy plan over deleted files. (The demo
-    // query pins state to a driver-local tmp path because the driver
-    // contract runs local[*]; the Maintenance API itself takes any
-    // Hadoop-FS path — a cluster deployment passes a shared one.)
-    val estRows = graft.operators.Maintenance
-      .cardinalityEstimates(spark, statePath)
-      .select(col("lang"), col("estimate"), col("n"))
-      .collect()
-      .toIndexedSeq
-    org.apache.commons.io.FileUtils
-      .deleteDirectory(java.nio.file.Paths.get(statePath).getParent.toFile)
+    // state dir (its writer lease included) on every exit, instead of
+    // leaking a /tmp dir per invocation and handing consumers a lazy
+    // plan over deleted files. (The demo query pins state to a
+    // driver-local tmp path because the driver contract runs local[*];
+    // the Maintenance API itself takes any Hadoop-FS path — a cluster
+    // deployment passes a shared one.)
+    val root = java.nio.file.Files.createTempDirectory("graft-card")
+    val estRows =
+      try {
+        val statePath = root.resolve("state").toString
+        graft.operators.Maintenance
+          .refreshCardinality(spark, even, Seq("lang"), "token", statePath, Some(1L))
+        graft.operators.Maintenance
+          .refreshCardinality(spark, odd, Seq("lang"), "token", statePath, Some(2L))
+        // replay of an applied batch — exactly-once means this is a no-op
+        graft.operators.Maintenance
+          .refreshCardinality(spark, odd, Seq("lang"), "token", statePath, Some(2L))
+        graft.operators.Maintenance
+          .cardinalityEstimates(spark, statePath)
+          .select(col("lang"), col("estimate"), col("n"))
+          .collect()
+          .toIndexedSeq
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
     val est = {
       import spark.implicits._
       estRows.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toDF("lang", "estimate", "n")
@@ -1728,8 +1730,7 @@ object TextQueries {
           .curateIngest(spark, evens, model, spans, index, out, 0L, spanStateBuckets = 8)
         graft.pipeline.Pipeline
           .curateIngest(spark, odds, model, spans, index, out, 1L, spanStateBuckets = 8)
-        spark.read
-          .parquet(s"$out/ingest_batch=1")
+        Parquet.read(spark, s"$out/ingest_batch=1")
           .select(col("doc_id"), col("text"))
           .collect()
           .toIndexedSeq

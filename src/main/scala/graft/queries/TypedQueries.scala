@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.sources.Parquet
+
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -46,8 +48,7 @@ object TypedQueries {
     */
   def q68TypedAgg(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val ds = spark.read
-      .parquet(s"$dir/lineitem.parquet")
+    val ds = Parquet.read(spark, s"$dir/lineitem.parquet")
       .select("l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice")
       .as[LiRow]
     ds.groupByKey(r => (r.l_returnflag, r.l_linestatus))

@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.sources.Parquet
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -29,8 +31,7 @@ object VectorQueries {
 
   /** Embeddings with the L2 norm precomputed per vector. */
   private def emb(spark: SparkSession, dir: String): DataFrame = {
-    spark.read
-      .parquet(s"$dir/embeddings.parquet")
+    Parquet.read(spark, s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("emb"))
       .withColumn("nrm", sqrt(dot(col("emb"), col("emb"))))
   }
@@ -453,8 +454,7 @@ object VectorQueries {
     * smaller cent_id), and candidates exclude only the query itself.
     */
   def q96IvfIndexProbe(spark: SparkSession, dir: String): DataFrame = {
-    val vectors = spark.read
-      .parquet(s"$dir/embeddings.parquet")
+    val vectors = Parquet.read(spark, s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
     val root = java.nio.file.Files.createTempDirectory("graft-q96")
     val rows =
@@ -493,8 +493,7 @@ object VectorQueries {
     * scratch dirs are deleted after materialization.
     */
   def q97SemanticDedupIngest(spark: SparkSession, dir: String): DataFrame = {
-    val vectors = spark.read
-      .parquet(s"$dir/embeddings.parquet")
+    val vectors = Parquet.read(spark, s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
     val root = java.nio.file.Files.createTempDirectory("graft-q97")
     val rows =
@@ -507,8 +506,7 @@ object VectorQueries {
           .semanticDedupIngestBatch(spark, vectors.filter(col("vec_id") % 5 === 3), idxPath, dropsPath, 0L, minCos = 0.35)
         graft.streaming.StreamingPipeline
           .semanticDedupIngestBatch(spark, vectors.filter(col("vec_id") % 5 === 4), idxPath, dropsPath, 1L, minCos = 0.35)
-        spark.read
-          .parquet(dropsPath)
+        Parquet.read(spark, dropsPath)
           .select(col("ingest_batch").cast("long").as("ingest_batch"), col("vec_id"), col("dup_of"), col("cosine"))
           .collect()
           .toIndexedSeq
@@ -776,7 +774,7 @@ object VectorQueries {
     * real replicas.
     */
   def q135SemanticDecontam(spark: SparkSession, dir: String): DataFrame = {
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
+    val e = Parquet.read(spark, s"$dir/embeddings.parquet")
     val isEval = col("vec_id") % 10 === 0
     graft.operators.Dedup
       .decontamSemantic(e.filter(!isEval), e.filter(isEval), "vec_id", "embedding", threshold = 0.4)

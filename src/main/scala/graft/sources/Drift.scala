@@ -150,14 +150,14 @@ object Drift {
     // (StructType equality is metadata-sensitive; DDL is not).
     val byVersion: Seq[(String, Seq[String])] =
       if (subdirs.isEmpty)
-        Seq(spark.read.parquet(root).schema.toDDL -> Seq(root))
+        Seq(Parquet.read(spark, root).schema.toDDL -> Seq(root))
       else
         subdirs.toSeq
           .map { name =>
             val ddl = nullableDdl(
               manifest
                 .get(name)
-                .getOrElse(spark.read.parquet(s"$root/$name").schema)
+                .getOrElse(Parquet.read(spark, s"$root/$name").schema)
             )
             (ddl, s"$root/$name")
           }
@@ -220,7 +220,7 @@ object Drift {
           !name.exists(c => c == '\t' || c == '\n' || c == '\r'),
           s"batch dir name '$name' contains manifest delimiters"
         )
-        s"$name\t${spark.read.parquet(s"$root/$name").schema.toDDL}"
+        s"$name\t${Parquet.read(spark, s"$root/$name").schema.toDDL}"
       }
     val tmp = new HPath(rootPath, s"$ManifestFile.tmp")
     val out = fs.create(tmp, true)

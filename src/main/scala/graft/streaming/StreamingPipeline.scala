@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.sources.Parquet
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -88,24 +90,16 @@ object StreamingPipeline {
 
   /** File-source stream over an events parquet directory. */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema =
-      try {
-        val s = spark.read.parquet(dir).schema
-        if (s.fieldNames.contains("ts")) s else eventsRawSchema
-      } catch {
-        // Only the missing/empty-directory shape falls back to the
-        // default schema (a stream may start before its first file
-        // lands — Spark raises AnalysisException for both "path does
-        // not exist" and "unable to infer schema"). Anything else
-        // (transient FS/permission failures) must SURFACE here, not
-        // silently start the stream with a possibly-wrong ts type.
-        case _: org.apache.spark.sql.AnalysisException => eventsRawSchema
-      }
+    // A missing or still-empty dir (a stream may start before its first
+    // file lands) takes the default schema; any other FS failure
+    // surfaces here rather than start the stream with a possibly-wrong
+    // ts type.
+    val schema = Parquet.schemaOf(spark, dir).filter(_.fieldNames.contains("ts")).getOrElse(eventsRawSchema)
     graft.queries.CoreQueries.normalizeEventTs(
       spark.readStream.schema(schema).parquet(dir)
     )
   }
+
 
   /** Windowed aggregation with a watermark: 5-minute tumbling windows
     * per event_type; late data beyond 10 minutes is dropped.
@@ -343,8 +337,7 @@ object StreamingPipeline {
     val indexExists = root.fs.exists(new org.apache.hadoop.fs.Path(indexPath))
     val fresh =
       if (indexExists) {
-        val prior = spark.read
-          .parquet(indexPath)
+        val prior = Parquet.read(spark, indexPath)
           .filter(col("ingest_batch").cast("long") =!= batchId)
           .select("__h")
         hashed.join(prior, Seq("__h"), "left_anti")
@@ -1028,7 +1021,7 @@ object StreamingPipeline {
       threshold: Double = 0.5
   ): org.apache.spark.sql.streaming.StreamingQuery = {
     val evalSet = graft.operators.Dedup
-      .evalShingles(spark.read.parquet(evalPath), "text")
+      .evalShingles(Parquet.read(spark, evalPath), "text")
       .localCheckpoint()
     drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint)(batchKeyed(outDir, "ingest") { (batch, _) =>
       graft.operators.Dedup
@@ -1064,7 +1057,7 @@ object StreamingPipeline {
       bandRows: Int = 4
   ): org.apache.spark.sql.streaming.StreamingQuery = {
     val evalSets = graft.operators.Dedup
-      .shingleSets(spark.read.parquet(evalPath), "doc_id", "text")
+      .shingleSets(Parquet.read(spark, evalPath), "doc_id", "text")
       .localCheckpoint()
     drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint)(batchKeyed(outDir, "ingest") { (batch, _) =>
       graft.operators.Dedup
@@ -1097,7 +1090,7 @@ object StreamingPipeline {
       threshold: Double = 0.5
   ): org.apache.spark.sql.streaming.StreamingQuery = {
     val probe = graft.operators.Dedup
-      .semanticProbe(spark.read.parquet(evalPath), "vec_id", "embedding", threshold)
+      .semanticProbe(Parquet.read(spark, evalPath), "vec_id", "embedding", threshold)
     val source = spark.readStream.schema(graft.schemas.Schemas.embeddingIngest).json(rawDir)
     drain(source, checkpoint)(batchKeyed(outDir, "ingest") { (batch, _) =>
       probe(batch.select(col("vec_id"), col("embedding")))
@@ -1269,7 +1262,7 @@ object StreamingPipeline {
             "guess the hash modulus — freeze the weights with dsir_weights"
         )
       )
-    val weights = spark.read.parquet(weightsPath)
+    val weights = Parquet.read(spark, weightsPath)
     drain(spark.readStream.schema(docSchema).json(rawDir), checkpoint)(batchKeyed(outDir, "score") { (batch, _) =>
       graft.operators.Importance.importanceScores(batch, "doc_id", "text", weights, buckets)
     })

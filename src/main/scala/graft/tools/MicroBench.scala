@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.sources.Parquet
+
 import org.apache.spark.sql.functions._
 
 /** Microbenchmark: native codegen expressions vs the interpreted
@@ -11,8 +13,7 @@ object MicroBench {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = graft.GraftSession.local("graft-microbench")
 
-    val e = spark.read
-      .parquet(s"$dir/embeddings.parquet")
+    val e = Parquet.read(spark, s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       .crossJoin(spark.range(0, 50).toDF("rep"))
       .persist()
@@ -94,8 +95,7 @@ object MicroBench {
     val j2 = time("l2: graft_l2 native")(
       e2.select(sum(graft.functions.GraftFunctions.graft_l2(col("emb"), col("emb2")))).collect()
     )
-    val docs = spark.read
-      .parquet(s"$dir/documents.parquet")
+    val docs = Parquet.read(spark, s"$dir/documents.parquet")
       .crossJoin(spark.range(0, 20).toDF("rep"))
       .persist()
     docs.count()

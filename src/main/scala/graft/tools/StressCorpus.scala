@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.sources.Parquet
+
 import org.apache.spark.sql.functions._
 
 /** Builds the stress corpus behind SCALE.md's measured-scale-up
@@ -26,7 +28,7 @@ object StressCorpus {
     val Array(src, out, rest @ _*) = args
     val reps = rest.headOption.map(_.toInt).getOrElse(20)
     val spark = graft.GraftSession.local("graft-stress-corpus")
-    val docs = spark.read.parquet(s"$src/documents.parquet")
+    val docs = Parquet.read(spark, s"$src/documents.parquet")
     docs
       .crossJoin(spark.range(0, reps).toDF("rep"))
       .select(
@@ -48,7 +50,7 @@ object StressCorpus {
       .write
       .mode("overwrite")
       .parquet(s"$out/documents.parquet")
-    println(s"[stress] wrote ${spark.read.parquet(s"$out/documents.parquet").count()} docs to $out")
+    println(s"[stress] wrote ${Parquet.read(spark, s"$out/documents.parquet").count()} docs to $out")
     spark.stop()
   }
 }

@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.sources.Parquet
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,7 +33,7 @@ object VectorStress {
       println(f"[vstress] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
       r
     }
-    val srcEmb = spark.read.parquet(s"$src/embeddings.parquet")
+    val srcEmb = Parquet.read(spark, s"$src/embeddings.parquet")
     // New ids are old*(reps+1)+rep, so the ingest slice (rep = reps)
     // never collides with the corpus (reps 0..reps-1).
     def replicate(repFrom: Int, repTo: Int): DataFrame =
@@ -63,7 +65,7 @@ object VectorStress {
     // build timing, and the build reads a durable source (the 100 TB
     // shape).
     replicate(0, reps).write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-    val corpus = spark.read.parquet(s"$out/embeddings.parquet")
+    val corpus = Parquet.read(spark, s"$out/embeddings.parquet")
     val n = corpus.count()
     val stride = math.max(1L, math.sqrt(n.toDouble).toLong)
     println(s"[vstress] corpus $n vectors, centroid stride $stride (~${n / stride} clusters)")

@@ -15,7 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * installed by `GraftExtensions`, every CLI read schema is
   * declared in `graft.schemas.Schemas`, and every durable state root
   * takes its writer lease and reader heal through
-  * `graft.operators.DurableRoot`.
+  * `graft.operators.DurableRoot`, and every parquet read that declares
+  * no schema resolves it through `graft.sources.Parquet`.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -109,5 +110,36 @@ class SourceGuardSpec extends AnyFunSuite {
     val text = sources.toMap.apply(pipeline)
     val hits = "\\bStructType\\s*\\(".r.findAllMatchIn(text).map(m => text.take(m.start).count(_ == '\n') + 1).toSeq
     assert(hits.isEmpty, s"declare the schema in graft.schemas.Schemas: $pipeline lines ${hits.mkString(", ")}")
+  }
+
+  test("a parquet read with no schema goes through graft.sources.Parquet") {
+    // `read`, then any `.option(...)`/`.schema(...)` steps, then `.parquet(`.
+    val chain = "\\bread((?:\\s*\\.\\s*\\w+\\((?:[^()]|\\([^()]*\\))*\\))*?)\\s*\\.\\s*parquet\\(".r
+    def args(text: String, open: Int): String = {
+      var depth = 1
+      var i = open
+      while (depth > 0) {
+        if (text(i) == '(') depth += 1 else if (text(i) == ')') depth -= 1
+        i += 1
+      }
+      text.substring(open, i - 1)
+    }
+    def topLevelComma(s: String): Boolean =
+      s.foldLeft((0, false)) { case ((d, hit), c) =>
+        (if (c == '(') d + 1 else if (c == ')') d - 1 else d, hit || (c == ',' && d == 0))
+      }._2
+    // Reads that need Spark's own resolution: a declared schema, the
+    // union of every footer, a base path, or several paths.
+    def declared(steps: String, paths: String): Boolean =
+      steps.contains("schema(") || steps.contains("\"mergeSchema\"") || steps.contains("\"basePath\"") ||
+        paths.contains(": _*") || topLevelComma(paths)
+    val reader = "graft/sources/Parquet.scala"
+    val plain = for {
+      (file, text) <- sources
+      m <- chain.findAllMatchIn(text) if !declared(m.group(1), args(text, m.end))
+    } yield file -> (text.take(m.start).count(_ == '\n') + 1)
+    assert(plain.count(_._1 == reader) == 1, s"$reader must hold the one plain read: $plain")
+    val hits = plain.filterNot(_._1 == reader)
+    assert(hits.isEmpty, s"read parquet with graft.sources.Parquet.read:\n${hits.map { case (f, l) => s"$f:$l" }.mkString("\n")}")
   }
 }
