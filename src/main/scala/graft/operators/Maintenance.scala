@@ -44,7 +44,7 @@ object Maintenance {
     * is garbage from a crash after the second rename; drop it so the
     * upcoming `rename(target, old)` cannot fail on collision.
     */
-  private[operators] def recoverSwap(fs: HFs, target: HPath, old: HPath): Unit =
+  private[graft] def recoverSwap(fs: HFs, target: HPath, old: HPath): Unit =
     if (fs.exists(old)) {
       if (!fs.exists(target)) renameOrFail(fs, old, target)
       else if (!fs.delete(old, true))
@@ -56,7 +56,7 @@ object Maintenance {
     * that point `target` is already the new state, and a leftover `old`
     * is cleaned by [[recoverSwap]] on the next run.
     */
-  private[operators] def swapInto(fs: HFs, tmp: HPath, target: HPath, old: HPath): Unit =
+  private[graft] def swapInto(fs: HFs, tmp: HPath, target: HPath, old: HPath): Unit =
     if (fs.exists(target)) {
       renameOrFail(fs, target, old)
       renameOrFail(fs, tmp, target)

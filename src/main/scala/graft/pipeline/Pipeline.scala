@@ -1,9 +1,10 @@
 package graft.pipeline
 
-import graft.operators.Overlap
+import graft.operators.{Maintenance, Overlap}
 import graft.schemas.Schemas
 import graft.sources.Parquet
 import graft.transforms.Transforms._
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
@@ -59,9 +60,9 @@ object Pipeline {
   def runFullBatch(spark: SparkSession, input: String, output: String): Unit = {
     val songData = spark.read.schema(Schemas.songData).json(s"${input}song_data/*/*/*/*.json")
     val logData = spark.read.schema(Schemas.logData).json(s"${input}log_data/*/*/*.json")
-    val events = withStartTime(nextSongEvents(logData)).select(
-      "ts", "userId", "firstName", "lastName", "gender", "level", "song", "artist", "length", "sessionId",
-      "location", "userAgent", "start_time"
+    val events = nextSongEvents(logData).select(
+      Seq("ts", "userId", "firstName", "lastName", "gender", "level", "song", "artist", "length", "sessionId",
+        "location", "userAgent").map(col) :+ startTime: _*
     )
     try {
       songData.persist(StorageLevel.MEMORY_AND_DISK)
@@ -90,12 +91,15 @@ object Pipeline {
     * file, producing users + time tables only (reference
     * `sparkify_etl_1.py` / `_2.py`).
     *
-    * @param singleFileOutput  `coalesce(1)` per table for single-part
-    *                          loads (the `_2.py` variant). `coalesce`
-    *                          (shuffle-free) rather than `repartition`,
-    *                          as in the reference; at large scale prefer
-    *                          `singleFileOutput=false` and let AQE size
-    *                          output files.
+    * @param singleFileOutput  one part file per table (the `_2.py`
+    *                          variant's `coalesce(1)` loads). The events
+    *                          are coalesced to one partition before
+    *                          either table is built, so each table is
+    *                          one job of one task with no shuffle — and
+    *                          ONE task parses the whole file. For large
+    *                          files prefer `singleFileOutput=false`: the
+    *                          parse spreads over the cores and AQE sizes
+    *                          the output files.
     * @param partitionTimeByMonth hive `month=MM/` layout (the `_1.py` /
     *                          partition-aware load variant).
     * @param dynamicPartitionOverwrite replace only the month partitions
@@ -127,6 +131,10 @@ object Pipeline {
     )
   }
 
+  /** Sibling dirs of an EP2 table's swap commit ([[writeUsersAndTime]]). */
+  private val SwapTmp = ".__load_tmp"
+  private val SwapOld = ".__load_old"
+
   /** The EP2 users + time table writes over one batch of NextSong
     * events — [[runIncremental]]'s per-file run and
     * `StreamingPipeline.incrementalTables`' per-batch drain share them.
@@ -134,12 +142,23 @@ object Pipeline {
     * [[runIncremental]]'s.
     *
     * The two writes share no output and run concurrently (the two
-    * sides of one [[graft.operators.Overlap.both]]): each is a few
+    * sides of one [[graft.operators.Overlap.both]]): each is one or two
     * small jobs, so the run is bound by job launch and commit, not by
     * compute. Both parse `events`' source themselves; pinning the
-    * events was measured no faster here and held more memory. When the
-    * source fails to parse, both writes fail and the call rethrows
-    * only after both have ended.
+    * events was measured slower here and held more memory.
+    *
+    * Commit: Spark's STATIC overwrite deletes its target before its
+    * job runs, so no static overwrite targets a table. Users always,
+    * and time unless `dynamicPartitionOverwrite`, are written to a sibling
+    * `<table>.__load_tmp`; once both writes have ended, each is swapped
+    * in with [[graft.operators.Maintenance.swapInto]]'s two renames. A
+    * source that fails to parse, or a failed write or task commit,
+    * therefore leaves both tables as they were: the tmp dirs are
+    * deleted and the call rethrows after both writes have ended. A
+    * dynamic time overwrite keeps Spark's own staged commit, which
+    * replaces only this batch's months at job commit. On entry,
+    * [[graft.operators.Maintenance.recoverSwap]] restores a table a
+    * crash left stranded in `<table>.__load_old`.
     */
   private[graft] def writeUsersAndTime(
       events: DataFrame,
@@ -148,26 +167,38 @@ object Pipeline {
       partitionTimeByMonth: Boolean,
       dynamicPartitionOverwrite: Boolean
   ): Unit = {
-    val users = usersTable(events)
-    val usersOut = if (singleFileOutput) users.coalesce(1) else users
-    val time = timeTable(withStartTime(events))
+    val usersPath = s"${output}users_table.parquet"
+    val timePath = s"${output}time_table.parquet"
+    val fs = new HPath(output).getFileSystem(events.sparkSession.sparkContext.hadoopConfiguration)
+    Seq(usersPath, timePath).foreach(t => Maintenance.recoverSwap(fs, new HPath(t), new HPath(t + SwapOld)))
+    val staged = if (dynamicPartitionOverwrite) Seq(usersPath) else Seq(usersPath, timePath)
+    def dest(t: String) = if (staged.contains(t)) t + SwapTmp else t
+    // One partition before the window and the distinct: it satisfies
+    // both, so neither table plans an exchange.
+    val source = if (singleFileOutput) events.coalesce(1) else events
+    val time = timeTable(withStartTime(source))
     // At-scale month-partitioned mode clusters by the partition column
-    // like the full-batch writes (one file per month, not per task);
-    // singleFileOutput already collapses to one file and skips it.
-    val timeOut =
-      if (singleFileOutput) time.coalesce(1)
-      else if (partitionTimeByMonth) clusteredBy(time, "month")
-      else time
+    // like the full-batch writes (one file per month, not per task).
+    val timeOut = if (!singleFileOutput && partitionTimeByMonth) clusteredBy(time, "month") else time
     val writer = timeOut.write
       .mode("overwrite")
       .option(
         "partitionOverwriteMode",
         if (dynamicPartitionOverwrite) "dynamic" else "static"
       )
-    Overlap.both(usersOut.write.mode("overwrite").parquet(s"${output}users_table.parquet")) { _ =>
-      (if (partitionTimeByMonth) writer.partitionBy("month") else writer)
-        .parquet(s"${output}time_table.parquet")
+    try
+      Overlap.both(usersTable(source).write.mode("overwrite").parquet(dest(usersPath))) { _ =>
+        (if (partitionTimeByMonth) writer.partitionBy("month") else writer).parquet(dest(timePath))
+      }
+    catch {
+      case e: Throwable =>
+        staged.foreach { t =>
+          try fs.delete(new HPath(t + SwapTmp), true)
+          catch { case d: Throwable => e.addSuppressed(d) }
+        }
+        throw e
     }
+    staged.foreach(t => Maintenance.swapInto(fs, new HPath(t + SwapTmp), new HPath(t), new HPath(t + SwapOld)))
   }
 
   /** Incremental run with the reference DAG's failure path (reference

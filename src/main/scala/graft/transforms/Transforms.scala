@@ -1,6 +1,6 @@
 package graft.transforms
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -53,7 +53,7 @@ object Transforms {
     */
   def usersTable(events: DataFrame): DataFrame =
     events
-      .withColumn("max_ts_user", max("ts").over(Window.partitionBy("userId")))
+      .select(col("*"), max("ts").over(Window.partitionBy("userId")).as("max_ts_user"))
       .filter(
         col("ts") === col("max_ts_user") &&
           col("userId") =!= "" &&
@@ -79,10 +79,12 @@ object Transforms {
     * `floor`, identical for all real (positive) timestamps.
     */
   def withStartTime(events: DataFrame): DataFrame =
-    events.withColumn(
-      "start_time",
-      timestamp_seconds(floor(col("ts") / 1000).cast("long"))
-    )
+    events.select(col("*"), startTime)
+
+  /** The `start_time` column of [[withStartTime]], for a projection
+    * that names its other columns itself.
+    */
+  val startTime: Column = timestamp_seconds(floor(col("ts") / 1000).cast("long")).as("start_time")
 
   /** Time dimension: distinct second-truncated timestamps with derived
     * calendar parts (reference `sparkify_etl.py:153-162`). Input must
@@ -90,13 +92,15 @@ object Transforms {
     */
   def timeTable(eventsWithStartTime: DataFrame): DataFrame =
     eventsWithStartTime
-      .withColumn("hour", hour(col("start_time")))
-      .withColumn("day", dayofmonth(col("start_time")))
-      .withColumn("week", weekofyear(col("start_time")))
-      .withColumn("month", month(col("start_time")))
-      .withColumn("year", year(col("start_time")))
-      .withColumn("weekday", dayofweek(col("start_time")))
-      .select("start_time", "hour", "day", "week", "month", "year", "weekday")
+      .select(
+        col("start_time"),
+        hour(col("start_time")).as("hour"),
+        dayofmonth(col("start_time")).as("day"),
+        weekofyear(col("start_time")).as("week"),
+        month(col("start_time")).as("month"),
+        year(col("start_time")).as("year"),
+        dayofweek(col("start_time")).as("weekday")
+      )
       .distinct()
 
   /** Songplays fact table (reference `sparkify_etl.py:172-206`).
@@ -147,8 +151,8 @@ object Transforms {
         col("location"),
         col("userAgent").as("user_agent"),
         col("year"),
-        col("month")
+        col("month"),
+        monotonically_increasing_id().as("songplay_id")
       )
-      .withColumn("songplay_id", monotonically_increasing_id())
   }
 }

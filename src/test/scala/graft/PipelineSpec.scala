@@ -92,6 +92,8 @@ class PipelineSpec extends AnyFunSuite {
   private def jobDescription(js: SparkListenerJobStart): Option[String] =
     Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
 
+  private val listenerMarker = "pipeline-spec: listener drained"
+
   /** Runs `body` with `listener` registered and returns once every event
     * its jobs posted has been delivered: the listener bus delivers
     * events in order, so once a marker job's start is seen, every
@@ -99,17 +101,16 @@ class PipelineSpec extends AnyFunSuite {
     */
   private def listening[T](listener: SparkListener)(body: => T): T = {
     val sc = spark.sparkContext
-    val marker = "pipeline-spec: listener drained"
     val markerSeen = new CountDownLatch(1)
     val markerListener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (jobDescription(js).contains(marker)) markerSeen.countDown()
+        if (jobDescription(js).contains(listenerMarker)) markerSeen.countDown()
     }
     sc.addSparkListener(listener)
     sc.addSparkListener(markerListener)
     try {
       val result = body
-      sc.setJobDescription(marker)
+      sc.setJobDescription(listenerMarker)
       try sc.parallelize(Seq(1), 1).count()
       finally sc.setJobDescription(null)
       assert(markerSeen.await(60, TimeUnit.SECONDS), "listener events not delivered")
@@ -376,6 +377,93 @@ class PipelineSpec extends AnyFunSuite {
     assert(Files.exists(java.nio.file.Paths.get(root, "failed", "poisoned.json")), "poisoned file moved to failed/")
     val running = Thread.getAllStackTraces.keySet.asScala.filter(t => t.isAlive && t.getName.startsWith("graft-overlap-"))
     assert(running.isEmpty, s"overlap threads outlived the run: ${running.map(_.getName)}")
+  }
+
+  /** `output`'s users and time part files, keyed by path relative to
+    * the table dir, and the names of every entry beside the tables.
+    */
+  private def tableState(output: String): (Map[String, Seq[Byte]], Set[String]) = {
+    val parts = Seq("users_table", "time_table").flatMap { t =>
+      val dir = java.nio.file.Paths.get(output, s"$t.parquet")
+      if (!Files.exists(dir)) Nil
+      else
+        Files.walk(dir).iterator().asScala.filter(_.getFileName.toString.startsWith("part-")).map { f =>
+          s"$t/${dir.relativize(f)}" -> Files.readAllBytes(f).toSeq
+        }.toSeq
+    }.toMap
+    (parts, new java.io.File(output).list().toSet)
+  }
+
+  private val tableDirs = Set("users_table.parquet", "time_table.parquet")
+
+  test("a failed EP2 write or commit leaves both tables as the previous run wrote them") {
+    val out = Files.createTempDirectory("graft-ep2-refused").toString + "/"
+    val file = dirs._1 + "log_data/2018/11/events.json"
+    Pipeline.runIncremental(spark, file, out, partitionTimeByMonth = true)
+    val (good, beside) = tableState(out)
+    // one users part file, one time part file in each of two months
+    assert(good.size == 3 && beside == tableDirs, s"$beside: ${good.keys}")
+    // task commit renames its attempt dir: both writes fail
+    withRenameRefusingFs(intercept[Exception](Pipeline.runIncremental(spark, file, out, partitionTimeByMonth = true)))
+    val (after, left) = tableState(out)
+    assert(after == good, s"the failed run changed a table: ${after.keys} vs ${good.keys}")
+    assert(left == tableDirs, s"a tmp or old dir was left beside the tables: $left")
+  }
+
+  test("EP2 restores a table stranded in its swap dir before a poisoned file fails") {
+    val root = Files.createTempDirectory("graft-ep2-strand").toString + "/"
+    val rawDir = java.nio.file.Paths.get(root, "raw")
+    Files.createDirectories(rawDir)
+    Files.writeString(rawDir.resolve("good.json"), logJson.mkString("\n"))
+    Files.writeString(rawDir.resolve("poisoned.json"), (logJson :+ logJson.head.take(40)).mkString("\n"))
+    val out = s"${root}transformed/"
+    assert(Pipeline.runIncrementalQuarantined(spark, root, "good.json", failFast = true))
+    val (good, _) = tableState(out)
+    // a crash between a swap's two renames: the table sits in its old dir
+    tableDirs.foreach(t => Files.move(java.nio.file.Paths.get(out, t), java.nio.file.Paths.get(out, s"$t.__load_old")))
+    assert(!Pipeline.runIncrementalQuarantined(spark, root, "poisoned.json", failFast = true))
+    val (after, beside) = tableState(out)
+    assert(after == good, s"the stranded tables were not restored unchanged: ${after.keys} vs ${good.keys}")
+    assert(beside == tableDirs, s"$beside")
+  }
+
+  test("single-file EP2 runs two jobs and plans no exchange; the multi-file mode writes the same rows") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val file = dirs._1 + "log_data/2018/11/events.json"
+    val helper = new AdaptiveSparkPlanHelper {}
+    def exchanges(p: SparkPlan): Seq[SparkPlan] = helper.collect(p) { case e: Exchange => e }
+    /** Runs one EP2 run; returns its job count and each write's exchanges. */
+    def run(out: String, singleFileOutput: Boolean): (Int, Seq[Seq[SparkPlan]]) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val writes = new ConcurrentLinkedQueue[SparkPlan]
+      val qel = new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          if (qe.executedPlan.toString.contains("InsertIntoHadoopFsRelationCommand")) writes.add(qe.executedPlan)
+        override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+      }
+      spark.listenerManager.register(qel)
+      try
+        listening(new SparkListener {
+          override def onJobStart(js: SparkListenerJobStart): Unit =
+            if (!jobDescription(js).contains(listenerMarker)) jobs.incrementAndGet()
+        })(Pipeline.runIncremental(spark, file, out, singleFileOutput = singleFileOutput))
+      finally spark.listenerManager.unregister(qel)
+      (jobs.get, writes.asScala.toSeq.map(exchanges))
+    }
+    val single = Files.createTempDirectory("graft-ep2-single").toString + "/"
+    val multi = Files.createTempDirectory("graft-ep2-multi").toString + "/"
+    val (jobs, singleWrites) = run(single, singleFileOutput = true)
+    assert(jobs == 2, s"one job per table expected, got $jobs")
+    assert(singleWrites.size == 2 && singleWrites.forall(_.isEmpty), s"single-file writes must not shuffle: $singleWrites")
+    val (_, multiWrites) = run(multi, singleFileOutput = false)
+    assert(multiWrites.size == 2 && multiWrites.forall(_.nonEmpty), s"multi-file writes keep their exchange: $multiWrites")
+    Seq("users_table", "time_table").foreach { t =>
+      def rows(out: String) = Pipeline.readTable(spark, out, t).collect().map(_.toString).sorted.toSeq
+      assert(rows(single) == rows(multi), s"$t differs between the modes")
+    }
   }
 
   test("case-insensitive resolution: userID resolves against userId column") {

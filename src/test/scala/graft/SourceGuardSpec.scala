@@ -13,10 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * by `graft.pipeline.Cli`, every session is built on
   * `GraftSession`'s production conf, every native function is
   * installed by `GraftExtensions`, every CLI read schema is
-  * declared in `graft.schemas.Schemas`, and every durable state root
+  * declared in `graft.schemas.Schemas`, every durable state root
   * takes its writer lease and reader heal through
-  * `graft.operators.DurableRoot`, and every parquet read that declares
-  * no schema resolves it through `graft.sources.Parquet`.
+  * `graft.operators.DurableRoot`, every parquet read that declares
+  * no schema resolves it through `graft.sources.Parquet`, and every
+  * star-schema transform step is one projection.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -110,6 +111,14 @@ class SourceGuardSpec extends AnyFunSuite {
     val text = sources.toMap.apply(pipeline)
     val hits = "\\bStructType\\s*\\(".r.findAllMatchIn(text).map(m => text.take(m.start).count(_ == '\n') + 1).toSeq
     assert(hits.isEmpty, s"declare the schema in graft.schemas.Schemas: $pipeline lines ${hits.mkString(", ")}")
+  }
+
+  test("the star-schema transforms build each step as one projection, with no withColumn") {
+    val transforms = "graft/transforms/Transforms.scala"
+    val text = sources.toMap.apply(transforms)
+    val hits = "\\.\\s*withColumn\\s*\\(".r.findAllMatchIn(text).map(m => text.take(m.start).count(_ == '\n') + 1).toSeq
+    // each withColumn re-analyses the whole plan under it
+    assert(hits.isEmpty, s"fold the column into the step's select: $transforms lines ${hits.mkString(", ")}")
   }
 
   test("a parquet read with no schema goes through graft.sources.Parquet") {
